@@ -146,7 +146,7 @@ def _free_session_state(spark) -> None:
     spark.catalog.clearCache()
     jmap = spark.sparkContext._jsc.getPersistentRDDs()
     for rid in list(jmap.keySet().toArray()):
-        jmap.get(rid).unpersist(False)
+        jmap.get(rid).unpersist(True)
 
 
 def _run_noop(spark, name: str, sf_dir: str) -> float:

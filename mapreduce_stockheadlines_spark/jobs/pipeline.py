@@ -589,12 +589,9 @@ def curate(
         docs = (
             docs.checkpoint() if reliable_checkpoint else docs.localCheckpoint()
         )
-        ratios = SA.dsir_log_ratios(
-            docs, None, "doc_id", "text", n_buckets=dsir_buckets,
+        _ratios, scored = SA.dsir_fit_scores(
+            docs, "doc_id", "text", n_buckets=dsir_buckets,
             target_filter=F.col("source") == dsir_target_source,
-        )
-        scored = SA.dsir_scores(
-            docs, ratios, "doc_id", "text", n_buckets=dsir_buckets
         )
         scored = (
             scored.checkpoint() if reliable_checkpoint

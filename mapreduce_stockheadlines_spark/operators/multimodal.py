@@ -2662,6 +2662,27 @@ VIDEO_META_PARSERS = {
 }
 
 
+def _decode_audio(content, mime: str, strict: bool):
+    """The audio tier's ONE decode-or-fallback, shared by
+    ``decode_media`` and ``audio_profile``: ``(sample_rate, n_channels,
+    samples)``, or None where the caller falls back to its digest
+    stand-in. ``detect_mime`` routes ANY RIFF/WAVE blob here, but only
+    16-bit integer PCM decodes — float32/24-bit/ADPCM WAVs are VALID
+    files this tier cannot read, and corrupt or NULL content must not
+    kill the task either; strict mode re-raises instead."""
+    try:
+        return AUDIO_DECODERS[mime](content)
+    except (ValueError, struct.error, TypeError):
+        if strict:
+            raise
+        return None
+
+
+def _pcm_frames(samples: np.ndarray) -> int:
+    """PCM frame count (per channel), clamped to the int32 column."""
+    return int(min(samples.shape[0], 2**31 - 1))
+
+
 def _fake_decode(content: bytes) -> tuple[int, int, int, list[float]]:
     """Deterministic fake decoder (this container has no codec libs).
 
@@ -2708,27 +2729,16 @@ def decode_media(df: DataFrame, strict: bool = False) -> DataFrame:
                     raise
                 return _fake_decode(content)
             return px.shape[1], px.shape[0], 1, _pixel_feature(px)
-        audio = AUDIO_DECODERS.get(mime)
-        if audio is not None:
+        if mime in AUDIO_DECODERS:
             # audio rows overload the image columns, documented mapping:
             # width = sample_rate, height = n_channels, n_frames = PCM
-            # frames (per channel), feature = _audio_feature.
-            # detect_mime routes ANY RIFF/WAVE blob here, but only
-            # 16-bit integer PCM decodes — float32/24-bit/ADPCM WAVs are
-            # VALID files this tier cannot read, so non-strict mode must
-            # fall back to the stub rather than kill the task
-            try:
-                rate, nch, samples = audio(content)
-            except (ValueError, struct.error):
-                if strict:
-                    raise
+            # frames (per channel), feature = _audio_feature
+            decoded = _decode_audio(content, mime, strict)
+            if decoded is None:
                 return _fake_decode(content)
-            return (
-                rate,
-                nch,
-                int(min(samples.shape[0], 2**31 - 1)),
-                _audio_feature(rate, samples),
-            )
+            rate, nch, samples = decoded
+            feature = _audio_feature(rate, samples)
+            return rate, nch, _pcm_frames(samples), feature
         video = VIDEO_META_PARSERS.get(mime)
         if video is not None and not strict:
             # metadata tier: container box-walk gives REAL width/height/
@@ -3106,48 +3116,21 @@ def _audio_phash64(samples: np.ndarray) -> int:
 
 def audio_phash(df: DataFrame, strict: bool = False) -> DataFrame:
     """(media_id, mime, phash) for audio rows — the WAV-tier sibling of
-    ``image_phash``: decodable audio (RIFF 16-bit PCM) hashes its
-    SPECTROGRAM, so re-encoded/volume-shifted copies collide; other
-    mimes (or corrupt/float/ADPCM WAVs in non-strict mode) fall back to
-    the digest stand-in. Feed to ``audio_neardup_pairs``."""
+    ``image_phash`` and a projection of ``audio_profile``: decodable
+    audio (RIFF 16-bit PCM) hashes its SPECTROGRAM, so re-encoded/
+    volume-shifted copies collide; other mimes (or corrupt/NULL/float/
+    ADPCM WAVs in non-strict mode) fall back to the digest stand-in.
+    Feed to ``audio_neardup_pairs``."""
+    return audio_profile(df, strict).select("media_id", "mime", "phash")
 
-    def hash_one(content, mime) -> int:
-        audio = AUDIO_DECODERS.get(mime)
-        if audio is not None:
-            try:
-                _rate, _nch, samples = audio(content)
-                return _audio_phash64(samples)
-            except (ValueError, struct.error, TypeError):
-                if strict:
-                    raise
-                return _fake_phash(content)
-        if strict:
-            raise NotImplementedError(
-                f"audio phash of mime {mime!r} requires codec libraries "
-                "not available in this environment"
-            )
-        return _fake_phash(content)
 
-    def hash_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "mime": pdf["mime"],
-                    "phash": np.array(
-                        [
-                            hash_one(c, m)
-                            for c, m in zip(pdf["content"], pdf["mime"])
-                        ],
-                        dtype=np.int64,
-                    ),
-                }
-            )
-
-    return df.select("media_id", "content", "mime").mapInPandas(
-        hash_batches, "media_id long, mime string, phash long"
-    )
-
+_SPECTRAL_COLS = (
+    "spec_centroid_hz",
+    "spec_bandwidth_hz",
+    "spec_rolloff_hz",
+    "spec_flatness",
+    "dominant_hz",
+)
 
 AUDIO_PROFILE_SCHEMA = (
     "media_id long, mime string, n_bytes long, width int, height int, "
@@ -3158,47 +3141,43 @@ AUDIO_PROFILE_SCHEMA = (
 
 
 def audio_profile(df: DataFrame, strict: bool = False) -> DataFrame:
-    """The full audio surface from ONE decode: the decode tier's
-    columns (width = sample_rate, height = n_channels, n_frames,
-    8-dim time-domain ``feature`` — the documented audio overload of
-    ``decode_media``), the 5 spectral columns of
-    ``audio_spectral_features`` AND the spectrogram ``phash`` of
-    ``audio_phash``, in a single Arrow pass that parses the PCM
-    samples once (guide §4 — the three-operator composition decoded
-    the same bytes three times; round 13: x13's audio chain ran 4
-    Arrow passes over the same planted WAVs). Column-for-column equal
-    to the composition — same kernels (``_audio_feature``,
-    ``_audio_spectral``, ``_audio_phash64``), same fallbacks
-    (undecodable/corrupt audio: digest-fake feature, NULL spectral,
-    digest phash; pinned in tests). Use the individual operators when
-    only one family is needed — this op pays all three kernels per
-    row."""
+    """The full audio surface from ONE decode, in one Arrow pass: the
+    decode tier's columns (width = sample_rate, height = n_channels,
+    n_frames, 8-dim time-domain ``feature`` — the documented audio
+    overload of ``decode_media``, through the same ``_decode_audio``
+    fallback), the 5 spectral columns (``_audio_spectral``) and the
+    spectrogram ``phash`` (``_audio_phash64``). ``audio_phash`` and
+    ``audio_spectral_features`` are projections of it.
+
+    Fallbacks (undecodable/corrupt/NULL audio, non-audio mimes in
+    non-strict mode): digest-fake decode columns, NULL spectral columns
+    — they are TYPED physical quantities (Hz), so a digest fake would
+    masquerade as a measurement — and the digest phash. A decodable
+    WAV with an empty data chunk has nothing to hash and also takes the
+    digest phash. Strict mode raises instead."""
 
     def profile_one(content, mime):
-        audio = AUDIO_DECODERS.get(mime)
-        if audio is not None:
-            try:
-                rate, nch, samples = audio(content)
-            except (ValueError, struct.error, TypeError):
-                if strict:
-                    raise
-                fw, fh, fn, ff = _fake_decode(content)
-                return fw, fh, fn, ff, None, _fake_phash(content)
-            return (
-                rate,
-                nch,
-                int(min(samples.shape[0], 2**31 - 1)),
-                _audio_feature(rate, samples),
-                _audio_spectral(rate, samples),
-                _audio_phash64(samples),
-            )
-        if strict:
+        decoded = None
+        if mime in AUDIO_DECODERS:
+            decoded = _decode_audio(content, mime, strict)
+        elif strict:
             raise NotImplementedError(
                 f"audio profile of mime {mime!r} requires codec "
                 "libraries not available in this environment"
             )
-        fw, fh, fn, ff = _fake_decode(content)
-        return fw, fh, fn, ff, None, _fake_phash(content)
+        if decoded is None:
+            return (*_fake_decode(content), None, _fake_phash(content))
+        rate, nch, samples = decoded
+        return (
+            rate,
+            nch,
+            _pcm_frames(samples),
+            _audio_feature(rate, samples),
+            _audio_spectral(rate, samples),
+            _audio_phash64(samples)
+            if samples.size or strict
+            else _fake_phash(content),
+        )
 
     def profile_batches(
         batches: Iterator[pd.DataFrame],
@@ -3214,28 +3193,13 @@ def audio_profile(df: DataFrame, strict: bool = False) -> DataFrame:
                 "n_bytes": pdf["content"]
                 .map(lambda b: 0 if b is None else len(b))
                 .astype("int64"),
-                "width": pd.Series(
-                    [r[0] for r in rows], index=pdf.index
-                ).astype("int32"),
-                "height": pd.Series(
-                    [r[1] for r in rows], index=pdf.index
-                ).astype("int32"),
-                "n_frames": pd.Series(
-                    [r[2] for r in rows], index=pdf.index
-                ).astype("int32"),
-                "feature": pd.Series(
-                    [r[3] for r in rows], index=pdf.index
-                ),
             }
-            for i, name in enumerate(
-                (
-                    "spec_centroid_hz",
-                    "spec_bandwidth_hz",
-                    "spec_rolloff_hz",
-                    "spec_flatness",
-                    "dominant_hz",
-                )
-            ):
+            for i, name in enumerate(("width", "height", "n_frames")):
+                out[name] = pd.Series(
+                    [r[i] for r in rows], index=pdf.index
+                ).astype("int32")
+            out["feature"] = pd.Series([r[3] for r in rows], index=pdf.index)
+            for i, name in enumerate(_SPECTRAL_COLS):
                 out[name] = [
                     (None if r[4] is None else r[4][i]) for r in rows
                 ]
@@ -3302,57 +3266,13 @@ def _audio_spectral(rate: int, samples: np.ndarray) -> list[float]:
 
 def audio_spectral_features(df: DataFrame, strict: bool = False) -> DataFrame:
     """Frequency-domain audio features per blob — the spectral
-    complement of the 8-dim time-domain feature the decode tier emits:
-    (media_id, mime, spec_centroid_hz, spec_bandwidth_hz,
-    spec_rolloff_hz, spec_flatness, dominant_hz). Decodable audio
-    (RIFF 16-bit PCM) computes them from one bounded rfft
-    (``_audio_spectral``); non-audio mimes and undecodable WAV
-    variants get NULLs in non-strict mode — these columns are TYPED
-    physical quantities (Hz), so a digest fake would masquerade as a
-    measurement (contrast the dimensionless fake feature vector, where
-    the stub is the documented pipeline-shape contract); strict mode
-    raises. One Arrow pass, bytes never shuffle."""
-
-    def one(content, mime):
-        audio = AUDIO_DECODERS.get(mime)
-        if audio is not None:
-            try:
-                rate, _nch, samples = audio(content)
-                return _audio_spectral(rate, samples)
-            except (ValueError, struct.error, TypeError):
-                if strict:
-                    raise
-                return None
-        if strict:
-            raise NotImplementedError(
-                f"spectral features of mime {mime!r} require codec "
-                "libraries not available in this environment"
-            )
-        return None
-
-    cols = [
-        "spec_centroid_hz",
-        "spec_bandwidth_hz",
-        "spec_rolloff_hz",
-        "spec_flatness",
-        "dominant_hz",
-    ]
-
-    def batches_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [one(c, m) for c, m in zip(pdf["content"], pdf["mime"])]
-            out = {
-                "media_id": pdf["media_id"],
-                "mime": pdf["mime"],
-            }
-            for i, name in enumerate(cols):
-                out[name] = [
-                    (None if f is None else f[i]) for f in feats
-                ]
-            yield pd.DataFrame(out)
-
-    return df.select("media_id", "mime", "content").mapInPandas(
-        batches_fn,
-        "media_id long, mime string, "
-        + ", ".join(f"{c} double" for c in cols),
+    complement of the 8-dim time-domain feature the decode tier emits,
+    as a projection of ``audio_profile``: (media_id, mime,
+    spec_centroid_hz, spec_bandwidth_hz, spec_rolloff_hz,
+    spec_flatness, dominant_hz). Decodable audio (RIFF 16-bit PCM)
+    computes them from one bounded rfft (``_audio_spectral``);
+    non-audio mimes and undecodable WAV variants get NULLs in
+    non-strict mode; strict mode raises. Bytes never shuffle."""
+    return audio_profile(df, strict).select(
+        "media_id", "mime", *_SPECTRAL_COLS
     )

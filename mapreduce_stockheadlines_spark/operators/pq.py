@@ -50,7 +50,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vectors import as_double
-from .similarity import _collect_query_side, _nonempty_vecs
+from .similarity import _collect_query_side, _head_vecs, _nonempty_vecs
 
 ADC_FP_DP = 4  # fixed-point decimals for ADC lookup-table entries
 
@@ -114,18 +114,13 @@ def pq_train(
             )
         x0 = x0[:ksub]
     else:
-        init_pdf = (
-            corpus.select(F.col(id_col), as_double(vec_col).alias("v"))
-            .orderBy(id_col)
-            .limit(ksub)
-            .toPandas()
-        )
-        if len(init_pdf) < ksub:
+        head = _head_vecs(corpus, id_col, vec_col, ksub)
+        if len(head) < ksub:
             raise ValueError(
                 f"pq_train: need at least ksub={ksub} vectors, "
-                f"got {len(init_pdf)}"
+                f"got {len(head)}"
             )
-        x0 = _raw_matrix(init_pdf["v"])
+        x0 = _raw_matrix(head)
     dim = x0.shape[1]
     if dim % m:
         raise ValueError(f"pq_train: dim {dim} not divisible by m={m}")

@@ -528,82 +528,53 @@ def dsir_features(
 
 def dsir_log_ratios(
     raw_df: DataFrame,
-    target_df: DataFrame | None,
+    target_df: DataFrame,
     id_col: str,
     text_col: str,
     n_buckets: int = 65536,
     alpha: float = 1.0,
     salt: str = "dsir",
-    *,
-    target_filter: Column | None = None,
 ) -> DataFrame:
     """Per-bucket fixed-point log importance ratio table:
     ``ratio_fp = round(1e6 * (ln p_target(b) - ln p_raw(b)))`` with
-    add-``alpha`` smoothing. The result is bounded by ``n_buckets``
-    rows, so downstream scoring broadcasts it. Buckets never seen in
-    the raw corpus can't be probed by raw docs, so the raw census is
-    the driving side. Counts are integers and the arithmetic is fixed
-    before quantization, so the table is identical whichever path
-    builds it.
-
-    Two shapes, same semantics:
-    - ``target_df`` given: TWO bucket censuses (one agg each — the
-      corpora are never joined row-to-row), for a target corpus that is
-      a separate table (e.g. a curated Wikipedia dump vs a crawl).
-    - ``target_filter`` given (keyword-only, mutually exclusive): the
-      target is a SUBSET of ``raw_df`` selected by a boolean Column —
-      both censuses fold in ONE corpus pass via a conditional count,
-      halving the scan/explode work. Prefer this when it applies.
+    add-``alpha`` smoothing, for a target corpus that is a separate
+    table (e.g. a curated Wikipedia dump vs a crawl): TWO bucket
+    censuses, one agg each — the corpora are never joined row-to-row.
+    The result is bounded by ``n_buckets`` rows, so downstream scoring
+    broadcasts it. Buckets never seen in the raw corpus can't be probed
+    by raw docs, so the raw census is the driving side. Counts are
+    integers and the arithmetic is fixed before quantization, so the
+    table is identical whichever path builds it. When the target is a
+    SUBSET of the raw corpus, ``dsir_fit_scores`` fits and scores from
+    one staged corpus pass instead.
 
     Scale: a census is one partial-aggregated groupBy over the feature
     stream; the totals are scalar aggregates (bounded driver collect,
     same contract as token_budget_filter's histogram)."""
-    if (target_df is None) == (target_filter is None):
-        raise ValueError(
-            "dsir_log_ratios: pass exactly one of target_df / target_filter"
-        )
-    # Both branches materialize their <= n_buckets-row censuses ONCE
-    # (eager localCheckpoint): the totals collects below and every
-    # downstream consumer (the ratio broadcast inside dsir_scores)
-    # would otherwise each re-run a corpus-wide explode+census — the
-    # exact duplication the fused branch exists to avoid. After the
-    # barrier the whole function costs one corpus pass per input
-    # corpus however many times the ratio table is read.
-    if target_filter is not None:
-        rawc = (
-            _dsir_feature_stream(
-                raw_df, {"_t": target_filter}, text_col, n_buckets, salt
-            )
-            .groupBy("bucket")
-            .agg(
-                F.count(F.lit(1)).alias("_rc"),
-                F.count_if(F.col("_t")).alias("_tc"),
-            )
-            .localCheckpoint()
-        )
-        # target ⊆ raw by construction, so the census's conditional
-        # count IS the full target mass
-        totals = rawc.agg(F.sum("_rc"), F.sum("_tc")).collect()[0]
-        tr, tt = totals[0] or 0, totals[1] or 0
-    else:
-        tgtc = (
-            dsir_features(target_df, id_col, text_col, n_buckets, salt)
-            .groupBy("bucket")
-            .agg(F.count(F.lit(1)).alias("_tc"))
-            .localCheckpoint()
-        )
-        rawc = (
-            dsir_features(raw_df, id_col, text_col, n_buckets, salt)
-            .groupBy("bucket")
-            .agg(F.count(F.lit(1)).alias("_rc"))
-            .join(tgtc, "bucket", "left")
-            .localCheckpoint()
-        )
-        tr = rawc.agg(F.sum("_rc")).collect()[0][0] or 0
-        # the FULL target mass — target-only buckets (present in the
-        # target corpus, absent from raw) still count toward the
-        # normalizer even though no raw doc can probe them
-        tt = tgtc.agg(F.sum("_tc")).collect()[0][0] or 0
+    # materialize the <= n_buckets-row censuses ONCE (eager
+    # localCheckpoint): the totals collects below and every downstream
+    # consumer (the ratio broadcast inside dsir_scores) would otherwise
+    # each re-run a corpus-wide explode+census. After the barrier the
+    # whole function costs one corpus pass per input corpus however
+    # many times the ratio table is read.
+    tgtc = (
+        dsir_features(target_df, id_col, text_col, n_buckets, salt)
+        .groupBy("bucket")
+        .agg(F.count(F.lit(1)).alias("_tc"))
+        .localCheckpoint()
+    )
+    rawc = (
+        dsir_features(raw_df, id_col, text_col, n_buckets, salt)
+        .groupBy("bucket")
+        .agg(F.count(F.lit(1)).alias("_rc"))
+        .join(tgtc, "bucket", "left")
+        .localCheckpoint()
+    )
+    tr = rawc.agg(F.sum("_rc")).collect()[0][0] or 0
+    # the FULL target mass — target-only buckets (present in the
+    # target corpus, absent from raw) still count toward the
+    # normalizer even though no raw doc can probe them
+    tt = tgtc.agg(F.sum("_tc")).collect()[0][0] or 0
     return _dsir_ratio_table(rawc, tr, tt, alpha, n_buckets)
 
 
@@ -685,24 +656,17 @@ def dsir_fit_scores(
     *,
     target_filter: Column,
 ) -> tuple[DataFrame, DataFrame]:
-    """``dsir_log_ratios(target_filter=)`` + ``dsir_scores`` over ONE
-    staged feature stream; returns ``(ratios, scored)``.
+    """DSIR fit + score for a target that is a SUBSET of ``raw_df``,
+    selected by the boolean Column ``target_filter``; returns
+    ``(ratios, scored)`` — the same tables as ``dsir_log_ratios(raw,
+    raw.filter(target_filter))`` + ``dsir_scores`` (pinned in tests).
 
-    The two-call composition explodes + tokenizes + hashes the full
-    corpus TWICE for the same (id, bucket) occurrence stream — once to
-    fold the bucket censuses, once to probe the ratio table. Here the
-    stream is materialized once (localCheckpoint — a within-query
-    barrier, narrow int rows, never the text) and both stages read it:
-    the fit aggregates it, the probe joins it (guide §2.4 remove
-    redundant passes — the x08 staged-chars recipe applied across the
-    fit/score boundary). At corpus scale that halves the dominant
-    tokenize/explode CPU for identical output: both stages consume the
-    same occurrence rows, so ratios and scores are bit-equal to the
-    two-call path (pinned in tests).
-
-    ``target_filter`` only (the fused-census branch): a separate
+    The (id, bucket) occurrence stream is tokenized + hashed ONCE and
+    materialized (localCheckpoint — a within-query barrier, narrow int
+    rows, never the text); both censuses fold from it in one pass via a
+    conditional count, and the probe joins the same rows. A separate
     ``target_df`` tokenizes a different corpus, so there is no shared
-    stream to stage — use the two-call composition there."""
+    stream to stage — use ``dsir_log_ratios`` + ``dsir_scores`` there."""
     stream = _dsir_feature_stream(
         raw_df,
         {id_col: F.col(id_col), "_t": target_filter},
@@ -710,9 +674,10 @@ def dsir_fit_scores(
         n_buckets,
         salt,
     ).localCheckpoint()
-    # census + totals: same arithmetic as dsir_log_ratios' fused branch
-    # (counts are integers, so WHERE they are folded from cannot change
-    # them); the census is bounded by n_buckets rows
+    # census + totals: target ⊆ raw by construction, so the census's
+    # conditional count IS the full target mass (counts are integers,
+    # so WHERE they are folded from cannot change them); the census is
+    # bounded by n_buckets rows
     census = (
         stream.groupBy("bucket")
         .agg(

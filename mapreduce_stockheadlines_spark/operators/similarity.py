@@ -68,6 +68,22 @@ def _nonempty_vecs(df: DataFrame, vec_col: str) -> DataFrame:
     return df.filter(F.col(vec_col).isNotNull() & (F.size(vec_col) > 0))
 
 
+def _head_vecs(df: DataFrame, id_col: str, vec_col: str, n: int) -> pd.Series:
+    """The n lowest-``id_col`` non-empty vectors as double arrays, in id
+    order — the deterministic Lloyd init every trainer here and in
+    ``pq`` shares, and the corpus head a caller collects once to hand
+    several trainers as ``init_vecs``. One TakeOrdered pass; NULL/empty
+    vectors are dropped first, so a caller's shared head and a
+    trainer's own init cannot disagree."""
+    return (
+        _nonempty_vecs(df, vec_col)
+        .select(F.col(id_col), as_double(vec_col).alias("v"))
+        .orderBy(id_col)
+        .limit(n)
+        .toPandas()["v"]
+    )
+
+
 def _collect_query_side(
     queries: DataFrame, id_col: str, vec_col: str, max_query_rows: int, op: str
 ) -> pd.DataFrame:
@@ -314,13 +330,7 @@ def kmeans_centroids(
         arr = np.asarray(init_vecs, dtype=np.float64)[:k]
         cent = _to_matrix(pd.Series(list(arr)))
     else:
-        init_pdf = (
-            corpus.select(F.col(id_col), as_double(vec_col).alias("v"))
-            .orderBy(id_col)
-            .limit(k)
-            .toPandas()
-        )
-        cent = _to_matrix(init_pdf["v"])
+        cent = _to_matrix(_head_vecs(corpus, id_col, vec_col, k))
     dim = cent.shape[1]
     vecs = corpus.select(as_double(vec_col).alias("cv"))
 
@@ -604,13 +614,7 @@ def ivf_topk(
             corpus, id_col, vec_col, k=n_centroids, n_iters=train_iters
         )
     else:
-        cent_pdf = (
-            corpus.select(F.col(id_col), as_double(vec_col).alias("v"))
-            .orderBy(id_col)
-            .limit(n_centroids)
-            .toPandas()
-        )
-        cent_mat = _to_matrix(cent_pdf["v"])
+        cent_mat = _to_matrix(_head_vecs(corpus, id_col, vec_col, n_centroids))
     bc = spark.sparkContext.broadcast(cent_mat)
 
     def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

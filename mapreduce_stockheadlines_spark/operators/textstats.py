@@ -1195,6 +1195,21 @@ def url_stats(
     input (the ``pq_encode(keep_cols=)`` pattern; round 13: x24's
     domain cap re-derived the whole extraction just to pair ``domains``
     with ``n_chars``)."""
+    # keep_cols validation (the pq_encode checks): a kept column that
+    # collides with the id or a stats output would produce ambiguous
+    # duplicates; a missing one, a confusing late analysis error
+    reserved = {id_col, "n_urls", "domains", "url_char_ratio"}
+    for kc in keep_cols:
+        if kc in reserved:
+            raise ValueError(
+                f"url_stats: keep_cols entry {kc!r} collides with a "
+                f"reserved output/input column ({sorted(reserved)})"
+            )
+        if kc not in df.columns:
+            raise ValueError(
+                f"url_stats: keep_cols entry {kc!r} not in the input "
+                f"schema ({sorted(df.columns)})"
+            )
     urls = F.regexp_extract_all(F.col(text_col), F.lit(URL_PATTERN), 0)
     hosts = extract_url_hosts(text_col)
     url_len = F.aggregate(

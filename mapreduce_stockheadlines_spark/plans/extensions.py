@@ -1543,8 +1543,8 @@ FROM c ORDER BY doc_id
 # amplitude A1 = _X13_AMPS[media_id % 8], k2 in 9..15 at A1/2 — the
 # 4:1 power ratio the spectral forms assume; samples rounded to EVEN
 # ints so the half-volume twin divides exactly). The Spark side runs the
-# REAL decode + rfft feature path (audio_spectral_features) and the
-# REAL spectrogram pHash (audio_phash); the oracle recomputes the
+# REAL decode + rfft feature path and the REAL spectrogram pHash (both
+# columns of audio_profile); the oracle recomputes the
 # expectations in closed form from the generation parameters:
 #   centroid = (f1·A1² + f2·A2²)/(A1²+A2²) = 32·(4k1+k2)/5 Hz
 #   bandwidth = |f1−f2|·sqrt(w1·w2)        = 64·(k2−k1)/5 Hz
@@ -3688,15 +3688,13 @@ def x27_quantize_embeddings(
     # (guide §2.6 via _overlap) — every trainer is partitioning-
     # invariant by the quantized contract, so results are
     # bit-identical. stage_secs walls OVERLAP (the _probe caveat).
-    from ..functions.vectors import as_double as _as_double
+    # _head_vecs is the trainers' own init collect, NULL/empty vectors
+    # dropped, so the shared head is exactly what each would collect.
+    from ..operators.similarity import _head_vecs, _nonempty_vecs
 
-    _head_pdf = (
-        emb.select("vec_id", _as_double("embedding").alias("v"))
-        .orderBy("vec_id")
-        .limit(4)
-        .toPandas()
-    )
-    head = np.array(list(_head_pdf["v"]), dtype="float64")  # (4, dim)
+    head = np.array(
+        list(_head_vecs(emb, "vec_id", "embedding", 4)), dtype="float64"
+    )  # (4, dim)
     q0 = head[0]
 
     def _pq_stage():
@@ -3843,8 +3841,8 @@ def x27_quantize_embeddings(
             int(c) for c in PQO.ivf_probe_cells(qn[None, :], coarse, 2)[0]
         ]
         serv = PQO.ivfpq_topk(
-            emb.orderBy("vec_id").limit(1), emb, coarse, rcb, k=10,
-            n_probe=2,
+            _nonempty_vecs(emb, "embedding").orderBy("vec_id").limit(1),
+            emb, coarse, rcb, k=10, n_probe=2,
         ).select(
             F.col("neighbor_id").alias("vec_id"),
             F.col("adc_fp").alias("ivfpq_adc_fp"),

@@ -25,16 +25,6 @@ def write_text_single(df: DataFrame, path: str, mode: str = "overwrite") -> None
     df.coalesce(1).write.mode(mode).text(path)
 
 
-def write_csv(df: DataFrame, path: str, mode: str = "overwrite",
-              header: bool = True) -> None:
-    df.write.mode(mode).option("header", str(header).lower()).csv(path)
-
-
-def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """JSON-lines sink (one object per line — splittable at scale)."""
-    df.write.mode(mode).json(path)
-
-
 def write_orc(df: DataFrame, path: str, mode: str = "overwrite",
               partition_by: list[str] | None = None) -> None:
     """ORC sink with the same partition layout semantics as parquet."""

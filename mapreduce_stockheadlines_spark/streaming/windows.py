@@ -50,23 +50,6 @@ def tumbling_counts(
     )
 
 
-def sliding_counts(
-    events: DataFrame,
-    window: str = "10 minutes",
-    slide: str = "5 minutes",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window, slide).alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .select(F.col("w.start").alias("bucket_start"), "n_events", "sum_value")
-    )
-
-
 def session_counts(
     events: DataFrame, gap: str = "10 minutes", watermark: str = "10 minutes"
 ) -> DataFrame:

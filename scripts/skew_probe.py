@@ -432,8 +432,7 @@ def main() -> None:
     # broadcasts; the per-doc fold exchanges on doc_id, one row each).
     from mapreduce_stockheadlines_spark.operators.sampling import (
         dsir_features,
-        dsir_log_ratios,
-        dsir_scores,
+        dsir_fit_scores,
     )
 
     hot_docs = docs.select(
@@ -446,8 +445,8 @@ def main() -> None:
         feats.repartition(32, "bucket"),
         "x-dsir census naive exchange (bucket)      ",
     )
-    ratios = dsir_log_ratios(
-        hot_docs, None, "doc_id", "text", n_buckets=4096,
+    ratios, sc = dsir_fit_scores(
+        hot_docs, "doc_id", "text", n_buckets=4096,
         target_filter=F.col("source") == "src0",
     )
     n_cells = ratios.count()
@@ -455,7 +454,6 @@ def main() -> None:
         feats.groupBy("bucket").count().agg(F.max("count")).collect()[0][0]
         / feats.count()
     )
-    sc = dsir_scores(hot_docs, ratios, "doc_id", "text", n_buckets=4096)
     print(
         f"x-dsir: hottest bucket holds {hot_share:.1%} of the feature "
         f"stream, yet the census output is {n_cells} cells (<= 4096 "

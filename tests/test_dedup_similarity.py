@@ -3563,15 +3563,13 @@ def test_audio_spectral_features_tone_and_noise(spark):
         ).collect()
 
 
-def test_audio_profile_matches_three_operator_composition(spark):
-    """audio_profile (round 13: one decode for the decode/spectral/
-    phash families — x13's single-pass audio shape) must be column-
-    for-column equal to the decode_media + audio_spectral_features +
-    audio_phash composition, including the non-audio/corrupt fallbacks
-    (digest-fake feature, NULL spectral, digest phash)."""
+def test_audio_profile_matches_decode_media(spark):
+    """audio_profile's decode-tier columns must equal decode_media's
+    audio tier row for row — both go through ONE decode-or-fallback
+    helper — including the corrupt, NULL-content, empty-data and
+    non-audio rows (digest-fake decode columns, NULL spectral columns,
+    digest phash; a NULL WAV must fall back, not kill the task)."""
     import numpy as np
-
-    from mapreduce_stockheadlines_spark.operators import multimodal as M
 
     rate = 8000
     t = np.arange(2048) / rate
@@ -3580,37 +3578,29 @@ def test_audio_profile_matches_three_operator_composition(spark):
         (1, bytearray(_mono_wav_bytes(tone)), M.MIME_WAV),
         (2, bytearray(b"RIFFgarbage-not-a-wav"), M.MIME_WAV),  # corrupt
         (3, bytearray(b"\x89PNG fake"), "image/png"),  # non-audio mime
+        (4, None, M.MIME_WAV),  # NULL content
+        (5, bytearray(_mono_wav_bytes(tone[:0])), M.MIME_WAV),  # no samples
     ]
     df = spark.createDataFrame(
         rows, "media_id long, content binary, mime string"
     )
     prof = {r.media_id: r for r in M.audio_profile(df).collect()}
     dec = {r.media_id: r for r in M.decode_media(df).collect()}
-    spec = {r.media_id: r for r in M.audio_spectral_features(df).collect()}
-    ph = {r.media_id: r for r in M.audio_phash(df).collect()}
-    for mid in (1, 2, 3):
-        p = prof[mid]
-        assert (p.n_bytes, p.width, p.height, p.n_frames) == (
-            dec[mid].n_bytes,
-            dec[mid].width,
-            dec[mid].height,
-            dec[mid].n_frames,
+    for mid in prof:
+        p, d = prof[mid], dec[mid]
+        assert (p.n_bytes, p.width, p.height, p.n_frames, p.feature) == (
+            d.n_bytes, d.width, d.height, d.n_frames, d.feature
         ), mid
-        assert p.feature == dec[mid].feature, mid
-        assert (
-            p.spec_centroid_hz,
-            p.spec_bandwidth_hz,
-            p.spec_rolloff_hz,
-            p.spec_flatness,
-            p.dominant_hz,
-        ) == (
-            spec[mid].spec_centroid_hz,
-            spec[mid].spec_bandwidth_hz,
-            spec[mid].spec_rolloff_hz,
-            spec[mid].spec_flatness,
-            spec[mid].dominant_hz,
+    assert sorted(prof) == [1, 2, 3, 4, 5]
+    assert (prof[1].width, prof[1].n_frames) == (rate, 2048)
+    assert (prof[5].width, prof[5].n_frames) == (rate, 0)
+    for mid in (2, 3, 4):
+        assert prof[mid].spec_centroid_hz is None, mid
+        assert prof[mid].phash == M._fake_phash(
+            None if rows[mid - 1][1] is None else bytes(rows[mid - 1][1])
         ), mid
-        assert p.phash == ph[mid].phash, mid
+    assert prof[1].dominant_hz > 0 and prof[5].spec_centroid_hz == 0.0
+    assert prof[5].phash == M._fake_phash(bytes(rows[4][1]))
 
 
 def test_audio_spectral_features_degenerate_inputs(spark):

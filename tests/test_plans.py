@@ -246,6 +246,22 @@ def test_plan_guard_passes_shipped_queries(spark, sf_dir):
         assert not violations, f"{name}: {violations}"
 
 
+def test_plan_guard_smoke_on_shared_stage_queries(spark, sf_dir):
+    """Default-run smoke of the slow full-registry sweep above, over the
+    three queries whose builders share one staged input across several
+    consumers: x13 (one audio decode), x27 (one corpus head for every
+    trainer) and x32 (one DSIR feature stream for fit and score)."""
+    from mapreduce_stockheadlines_spark.plans.guard import check_plan
+
+    for name in (
+        "x13_multimodal_pipeline",
+        "x27_quantize_embeddings",
+        "x32_sampling",
+    ):
+        violations = check_plan(ALL_QUERIES[name].builder(spark, sf_dir))
+        assert not violations, f"{name}: {violations}"
+
+
 def test_plan_guard_catches_staged_hof_inlining(spark, sf_dir):
     """VERDICT r11 #1: the staged-HOF pushdown-inlining trap as
     machinery. A predicate on a staged expensive-HOF column gets pushed

@@ -52,6 +52,27 @@ def test_pq_train_deterministic_across_partitionings(spark):
     assert np.array_equal(cb1, cb3)
     # quantized contract: every trained coordinate is on the 7dp grid
     assert np.array_equal(cb1, np.round(cb1, 7))
+    # NULL/empty vectors among the lowest ids carry no geometry: the
+    # trainers' own init and a caller's shared head (x27 collects it
+    # once for pq_train AND kmeans_centroids) both skip them
+    from mapreduce_stockheadlines_spark.operators import similarity as S
+
+    dirty = df.unionByName(
+        spark.createDataFrame(
+            [(-2, None), (-1, [])], "vec_id long, embedding array<double>"
+        )
+    )
+    head = np.array(list(S._head_vecs(dirty, "vec_id", "embedding", 4)))
+    assert head.shape == (4, 8)
+    assert np.array_equal(PQ.pq_train(dirty, m=2, ksub=4, n_iters=2), cb1)
+    assert np.array_equal(
+        PQ.pq_train(dirty, m=2, ksub=4, n_iters=2, init_vecs=head), cb1
+    )
+    assert np.array_equal(
+        S.kmeans_centroids(dirty, k=4, n_iters=2, quantize_dp=7,
+                           init_vecs=head),
+        S.kmeans_centroids(df, k=4, n_iters=2, quantize_dp=7),
+    )
 
 
 def test_pq_encode_codes_and_reconstruction(spark):

@@ -1,10 +1,10 @@
-"""Unit/property tests for rank pipeline (O10-O15) and relational wrappers."""
+"""Unit/property tests for the rank pipeline (O10-O15), global id
+assignment, and the set-operation semantics q12 relies on."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from mapreduce_stockheadlines_spark.operators import relational as R
 from mapreduce_stockheadlines_spark.operators.rank import (
     count_by_key,
     count_rank_format,
@@ -34,64 +34,31 @@ def test_count_rank_format_line(spark):
     assert lines == ["1: MS, 3", "2: GS, 1"]
 
 
-def test_topk(spark):
-    df = spark.createDataFrame([(i,) for i in range(100)], ["x"])
-    top = R.topk(df, [F.desc("x")], 5)
-    assert [r.x for r in top.collect()] == [99, 98, 97, 96, 95]
-
-
 def test_set_ops(spark):
+    """q12's other two legs: UNION ALL keeps every row, INTERSECT is
+    DISTINCT, and the multiset EXCEPT ALL removes one left copy per
+    right copy."""
     a = spark.createDataFrame([(1,), (2,), (2,), (3,)], ["x"])
     b = spark.createDataFrame([(2,), (3,), (4,)], ["x"])
-    assert R.union_all(a, b).count() == 7
-    assert sorted(r.x for r in R.intersect(a, b).collect()) == [2, 3]
-    assert sorted(r.x for r in R.except_(a, b).collect()) == [1, 2]
+    assert a.unionByName(b).count() == 7
+    assert sorted(r.x for r in a.intersect(b).collect()) == [2, 3]
+    assert sorted(r.x for r in a.exceptAll(b).collect()) == [1, 2]
 
 
 def test_except_semantics(spark):
-    """SQL EXCEPT with a duplicated left row: the row must vanish entirely
-    when it appears on the right — exceptAll(b).distinct() would keep it
-    (left multiplicity 3 minus right 1 leaves survivors), which only
-    coincides with EXCEPT when the left side is unique (round-1 q12 bug)."""
+    """SQL EXCEPT with a duplicated left row: the row must vanish
+    entirely when it appears on the right — exceptAll(b).distinct()
+    would keep it (left multiplicity 3 minus right 1 leaves survivors),
+    which only coincides with EXCEPT when the left side is unique
+    (round-1 q12 bug)."""
     a = spark.createDataFrame([(1,), (2,), (2,), (2,), (3,)], ["x"])
     b = spark.createDataFrame([(2,), (9,)], ["x"])
-    assert sorted(r.x for r in R.except_distinct(a, b).collect()) == [1, 3]
+    assert sorted(r.x for r in a.subtract(b).collect()) == [1, 3]
     # the multiset variant, by contrast, keeps the surplus copies
-    assert sorted(r.x for r in R.except_(a, b).collect()) == [1, 2, 2, 3]
+    assert sorted(r.x for r in a.exceptAll(b).collect()) == [1, 2, 2, 3]
     # and the round-1 construction is demonstrably NOT set-EXCEPT here
     wrong = a.exceptAll(b.distinct()).distinct()
     assert sorted(r.x for r in wrong.collect()) == [1, 2, 3]
-
-
-def test_joins(spark):
-    left = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], ["id", "v"])
-    right = spark.createDataFrame([(2,), (3,), (4,)], ["id"])
-    assert R.join(left, right, "id").count() == 2
-    assert R.semi_join(left, right, "id").count() == 2
-    assert sorted(r.id for r in R.anti_join(left, right, "id").collect()) == [1]
-    # semi + anti partition the left side
-    assert (
-        R.semi_join(left, right, "id").count()
-        + R.anti_join(left, right, "id").count()
-        == left.count()
-    )
-
-
-def test_aggregate_alias_discipline(spark):
-    df = spark.createDataFrame([("a", 1.0), ("a", 2.0), ("b", 3.0)], ["k", "v"])
-    out = R.aggregate(
-        df, ["k"], {"n": F.count(F.lit(1)), "sum_v": F.round(F.sum("v"), 2)}
-    )
-    assert set(out.columns) == {"k", "n", "sum_v"}
-    got = {r.k: (r.n, r.sum_v) for r in out.collect()}
-    assert got == {"a": (2, 3.0), "b": (1, 3.0)}
-
-
-def test_having(spark):
-    df = spark.createDataFrame([("a",)] * 5 + [("b",)] * 2, ["k"])
-    g = df.groupBy("k").agg(F.count(F.lit(1)).alias("cnt"))
-    out = R.having(g, F.col("cnt") > 3)
-    assert [r.k for r in out.collect()] == ["a"]
 
 
 def test_assign_global_ids_dense_and_bucket_invariant(spark, sf_dir):

@@ -61,9 +61,10 @@ def test_json_reader(spark, tmp_path):
 
 
 def test_sink_round_trips(spark, tmp_path):
-    """Every sink format round-trips through its reader; partitioned
-    parquet lays out partition directories and the partition filter is
-    pruned at the scan (PartitionFilters), not applied post-read."""
+    """Partitioned parquet round-trips through its reader, lays out
+    partition directories, and the partition filter is pruned at the
+    scan (PartitionFilters), not applied post-read; JSON-lines and
+    header CSV round-trip through their readers."""
     import io
     import os
     from contextlib import redirect_stdout
@@ -74,11 +75,7 @@ def test_sink_round_trips(spark, tmp_path):
         read_csv_proper,
         read_parquet,
     )
-    from mapreduce_stockheadlines_spark.sources.sinks import (
-        write_csv,
-        write_json,
-        write_parquet,
-    )
+    from mapreduce_stockheadlines_spark.sources.sinks import write_parquet
 
     df = spark.createDataFrame(
         [(1, "a", "x"), (2, "b", "y"), (3, "c", "y")], "id long, v string, p string"
@@ -99,12 +96,12 @@ def test_sink_round_trips(spark, tmp_path):
     assert pruned.count() == 2
 
     js = str(tmp_path / "js")
-    write_json(df, js)
+    df.write.json(js)
     back = read_json(spark, js).select("id", "v", "p")
     assert sorted((r.id, r.v, r.p) for r in back.collect()) == rows
 
     cs = str(tmp_path / "cs")
-    write_csv(df, cs)
+    df.write.option("header", "true").csv(cs)
     import pyspark.sql.types as T
 
     schema = T.StructType(

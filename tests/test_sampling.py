@@ -543,11 +543,12 @@ def test_dsir_scores_rank_target_like_docs(spark):
     assert again == by_id
 
 
-def test_dsir_fit_scores_matches_two_call_composition(spark, sf_dir):
-    """The fused single-stream path (round 13: one staged feature
-    stream shared by fit and probe — guide §2.4) must produce
-    bit-identical ratios AND scores to the two-call composition it
-    replaces in x32; the equality is the license for the optimization."""
+def _dsir_subset_both_paths(spark, sf_dir):
+    """(ratios, scores) twice over the same src0 subset target: first
+    the two-census reference (``dsir_log_ratios`` with the subset as a
+    separate ``target_df``, then ``dsir_scores``), then the single-stream
+    ``dsir_fit_scores`` (one staged feature stream shared by both
+    censuses and the probe)."""
     from mapreduce_stockheadlines_spark.operators.sampling import (
         dsir_fit_scores,
     )
@@ -558,18 +559,21 @@ def test_dsir_fit_scores_matches_two_call_composition(spark, sf_dir):
     tf = F.col("source") == "src0"
     nb = 4096
     ratios0 = dsir_log_ratios(
-        raw, None, "doc_id", "text", n_buckets=nb, target_filter=tf
+        raw, raw.filter(tf), "doc_id", "text", n_buckets=nb
     )
     scored0 = dsir_scores(raw, ratios0, "doc_id", "text", n_buckets=nb)
     ratios1, scored1 = dsir_fit_scores(
         raw, "doc_id", "text", n_buckets=nb, target_filter=tf
     )
-    assert sorted(map(tuple, ratios1.collect())) == sorted(
-        map(tuple, ratios0.collect())
-    )
-    assert sorted(map(tuple, scored1.collect())) == sorted(
-        map(tuple, scored0.collect())
-    )
+    return (ratios0, scored0), (ratios1, scored1)
+
+
+def test_dsir_fit_scores_matches_two_call_composition(spark, sf_dir):
+    """The single-stream subset path must produce bit-identical scores
+    to the two-census reference — integer counts, so exact equality."""
+    (_, scored0), (_, scored1) = _dsir_subset_both_paths(spark, sf_dir)
+    want = sorted(map(tuple, scored0.collect()))
+    assert sorted(map(tuple, scored1.collect())) == want and want
 
 
 def test_dsir_scores_match_duckdb(spark, sf_dir):
@@ -690,31 +694,14 @@ def test_dsir_resample_is_score_biased_when_gap_dominates(spark):
 
 
 def test_dsir_ratios_fused_subset_path_equals_two_census_path(spark, sf_dir):
-    """target_filter (one conditional-count corpus pass) must produce
-    the IDENTICAL ratio table as target_df (two censuses) when the
-    target is the same subset — integer counts, so exact equality."""
-    dsir_log_ratios, _, _ = _dsir_modules()
-    docs = table(spark, sf_dir, "documents")
-    raw = docs.filter(F.col("text").isNotNull())
-    two = sorted(
-        (r.bucket, r.ratio_fp)
-        for r in dsir_log_ratios(
-            raw, raw.filter(F.col("source") == "src0"), "doc_id", "text",
-            n_buckets=4096,
-        ).collect()
-    )
-    one = sorted(
-        (r.bucket, r.ratio_fp)
-        for r in dsir_log_ratios(
-            raw, None, "doc_id", "text", n_buckets=4096,
-            target_filter=F.col("source") == "src0",
-        ).collect()
-    )
+    """The fused subset path (one conditional-count pass in
+    ``dsir_fit_scores``) must produce the IDENTICAL ratio table as two
+    censuses over a separate ``target_df`` when the target is the same
+    subset — integer counts, so exact equality."""
+    (ratios0, _), (ratios1, _) = _dsir_subset_both_paths(spark, sf_dir)
+    two = sorted(map(tuple, ratios0.collect()))
+    one = sorted(map(tuple, ratios1.collect()))
     assert one == two and len(one) > 100
-    import pytest
-
-    with pytest.raises(ValueError):
-        dsir_log_ratios(raw, None, "doc_id", "text")
 
 
 def test_curate_cli_dsir(spark, tmp_path, sf_dir):

@@ -982,8 +982,8 @@ def test_curated_ingest_dsir_gate_with_pretrained_ratios(spark, tmp_path):
         "doc_id long, text string, is_target boolean",
     )
     ratios = SA.dsir_log_ratios(
-        fit, None, "doc_id", "text", n_buckets=4096,
-        target_filter=F.col("is_target"),
+        fit, fit.filter(F.col("is_target")), "doc_id", "text",
+        n_buckets=4096,
     )
     art = str(tmp_path / "dsir")
     SA.save_dsir_ratios(ratios, art, n_buckets=4096)

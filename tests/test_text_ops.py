@@ -609,18 +609,29 @@ def test_domain_frequency_cap_flag_mode_matches_filter_mode(spark):
         (6, None, 99),
         (7, None, 0),
     ]
-    df = spark.createDataFrame(rows, "doc_id long, dom string, score long")
-    survivors = sorted(
-        r.doc_id
-        for r in domain_frequency_cap(
-            df, "doc_id", "dom", cap=2, order_col="score"
-        ).collect()
+    # skewed input: hot.com owns 30 of 100 rows (the hot-key shape the
+    # salted window exists for), plus NULL-domain rows among the rest
+    skewed = (
+        [(100 + i, "hot.com", i % 7) for i in range(30)]
+        + [(200 + i, f"d{i % 20}.com", i) for i in range(60)]
+        + [(300 + i, None, i) for i in range(10)]
     )
-    flagged = domain_frequency_cap(
-        df, "doc_id", "dom", cap=2, order_col="score", flag_col="ok"
-    ).collect()
-    assert sorted(r.doc_id for r in flagged) == [1, 2, 3, 4, 5, 6, 7]
-    assert sorted(r.doc_id for r in flagged if r.ok) == survivors
+    for data, cap in ((rows, 2), (skewed, 5)):
+        df = spark.createDataFrame(data, "doc_id long, dom string, score long")
+        survivors = sorted(
+            r.doc_id
+            for r in domain_frequency_cap(
+                df, "doc_id", "dom", cap=cap, order_col="score"
+            ).collect()
+        )
+        flagged = domain_frequency_cap(
+            df, "doc_id", "dom", cap=cap, order_col="score", flag_col="ok"
+        ).collect()
+        assert sorted(r.doc_id for r in flagged) == sorted(r[0] for r in data)
+        assert sorted(r.doc_id for r in flagged if r.ok) == survivors
+    # the cap bit: hot.com keeps exactly cap rows, NULL domains all stay
+    assert sum(1 for d in survivors if 100 <= d < 130) == 5
+    assert all(d in survivors for d in range(300, 310))
 
 
 def test_references_blocked_domain_matches_join_form(spark):
@@ -682,6 +693,37 @@ def test_url_stats_keep_cols_passthrough(spark):
     }
     assert (out[0].n_chars, out[1].n_chars) == (7, 9)
     assert out[0].domains == ["example.com"]
+
+
+def _url_stats_keep(spark, keep_cols):
+    from mapreduce_stockheadlines_spark.operators.textstats import url_stats
+
+    df = spark.createDataFrame(
+        [(0, "x https://a.example.com/p", 7)],
+        "doc_id long, text string, n_chars long",
+    )
+    return url_stats(df, "doc_id", "text", keep_cols=keep_cols)
+
+
+def test_url_stats_keep_cols_rejects_id_col(spark):
+    import pytest
+
+    with pytest.raises(ValueError, match="collides"):
+        _url_stats_keep(spark, ("doc_id",))
+
+
+def test_url_stats_keep_cols_rejects_output_column(spark):
+    import pytest
+
+    with pytest.raises(ValueError, match="collides"):
+        _url_stats_keep(spark, ("domains",))
+
+
+def test_url_stats_keep_cols_rejects_missing_column(spark):
+    import pytest
+
+    with pytest.raises(ValueError, match="not in the input"):
+        _url_stats_keep(spark, ("nope",))
 
 
 def test_gopher_rules_hand_values(spark):
