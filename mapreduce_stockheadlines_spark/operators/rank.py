@@ -24,6 +24,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from ..session import local_frame
 
 
 def count_by_key(df: DataFrame, key: str, count_col: str = "cnt") -> DataFrame:
@@ -56,8 +59,6 @@ def ranked(df: DataFrame, key: str, count_col: str = "cnt",
         top = df.orderBy(F.desc(count_col), F.asc(key)).limit(limit)
         w = Window.orderBy(F.desc(count_col), F.asc(key))
         return top.withColumn(rank_col, F.row_number().over(w).cast("int"))
-    from pyspark.sql import types as T
-
     cnt = F.col(count_col)
     tier = (
         F.when(cnt > 255, -F.floor(F.log2(cnt)))
@@ -103,10 +104,13 @@ def bucketed_row_number(
     of a greater bucket, and ``order_by`` resolves order within a
     bucket. Bucket columns must be simple orderable types (int/str):
     the per-bucket counts are collected (≤ ``max_buckets`` rows,
-    enforced loudly) and cumulated driver-side in Python-tuple sort
-    order, which matches Spark's ASC NULLS-less ordering for those
-    types; the offset table broadcasts back and the heavy data moves
-    exactly once (the bucket-hash exchange feeding the window).
+    enforced loudly) and cumulated driver-side in Spark's ASC order —
+    NULLs first, then Python value order, which is Spark's for those
+    types (strings compare by code point, as UTF-8 bytes do). The offset
+    table is JVM-local (``LocalTableScan``, no Python worker) and joins
+    back null-safely, so NULL-bucket rows keep their rows and ids; the
+    heavy data moves exactly once (the bucket-hash exchange feeding the
+    window).
     """
     counts = (
         df.groupBy(*bucket_cols).agg(F.count(F.lit(1)).alias("n")).collect()
@@ -117,22 +121,25 @@ def bucketed_row_number(
             f"max_buckets={max_buckets} — the offset table is driver-held; "
             "coarsen the bucket expression"
         )
-    keyed = sorted((tuple(r[c] for c in bucket_cols), r["n"]) for r in counts)
+    keyed = sorted(
+        ((tuple(r[c] for c in bucket_cols), r["n"]) for r in counts),
+        key=lambda kn: tuple((v is not None, v) for v in kn[0]),
+    )
     rows = []
     running = 0
     for key, n in keyed:
         rows.append(key + (running,))
         running += n
-    from pyspark.sql import types as T
-
     schema = T.StructType(
         list(df.select(*bucket_cols).schema)
         + [T.StructField("_offset", T.LongType(), False)]
     )
-    offsets = df.sparkSession.createDataFrame(rows, schema)
+    offsets = F.broadcast(local_frame(df.sparkSession, rows, schema))
     w = Window.partitionBy(*bucket_cols).orderBy(*order_by)
+    on = [df[c].eqNullSafe(offsets[c]) for c in bucket_cols]
     return (
-        df.join(F.broadcast(offsets), bucket_cols)
+        df.join(offsets, on)
+        .drop(*[offsets[c] for c in bucket_cols])
         .withColumn(
             id_col,
             (F.col("_offset") + F.row_number().over(w)).cast("long"),

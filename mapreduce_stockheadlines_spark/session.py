@@ -11,7 +11,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
@@ -62,6 +63,23 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows, schema: T.StructType) -> DataFrame:
+    """A small driver-held table as a JVM ``LocalRelation``.
+
+    ``createDataFrame`` over a Python list plans as ``Scan ExistingRDD``,
+    a Python RDD that starts Python workers to unpickle its rows; an Arrow
+    table below ``spark.sql.execution.arrow.localRelationThreshold``
+    (48 MB by default) is decoded on the driver and plans as
+    ``LocalTableScan``, so the side table costs no Python worker."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def enable_runtime_filtering(

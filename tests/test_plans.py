@@ -443,15 +443,18 @@ def test_plans_md_regenerated_at_head():
     residual volatile counters) and fails if the committed PLANS.md is
     stale. A plans/ change without `python scripts/dump_plans.py` goes
     red here instead of relying on the builder remembering."""
+    import os
     import subprocess
     import sys
 
-    # no env overrides: the dump was produced at the default local[32]
-    # session config and plan shapes (scan splits, shuffle partitions)
-    # depend on it
+    # the dump was produced at the default local[32] session config and
+    # plan shapes (scan splits, shuffle partitions) depend on it, so the
+    # core-count override a caller may export must not reach the dump
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_CPUS"}
     proc = subprocess.run(
         [sys.executable, "scripts/dump_plans.py", "--verify"],
         cwd="/root/repo",
+        env=env,
         capture_output=True,
         text=True,
         timeout=900,

@@ -34,6 +34,39 @@ def test_count_rank_format_line(spark):
     assert lines == ["1: MS, 3", "2: GS, 1"]
 
 
+def test_bucketed_row_number_null_buckets_sort_first(spark):
+    """NULL bucket keys take Spark's ASC position (NULLS FIRST) and keep
+    their rows: ids equal a plain global ``row_number`` over
+    ``(bucket ASC, order_by)``, for one and for two bucket columns."""
+    from pyspark.sql import Window
+
+    from mapreduce_stockheadlines_spark.operators.rank import (
+        bucketed_row_number,
+    )
+
+    df = spark.range(40).select(
+        F.col("id").alias("v"),
+        F.when(F.col("id") % 4 == 0, None)
+        .otherwise(F.col("id") % 3).cast("int").alias("b"),
+        F.when(F.col("id") % 5 == 0, None)
+        .otherwise(F.substring(F.lit("xyz"), (F.col("id") % 3 + 1).cast("int"), 1))
+        .alias("s"),
+    )
+    order = [F.col("v").desc()]
+    for cols in (["b"], ["b", "s"]):
+        w = Window.orderBy(*[F.col(c).asc() for c in cols], *order)
+        want = {r.v: r.rn for r in df.select(
+            "v", F.row_number().over(w).alias("rn")).collect()}
+        got = {r.v: r.rn for r in bucketed_row_number(
+            df, cols, order, "rn").collect()}
+        assert got == want, cols
+    # keys sort NULL-first even when NULL is the only bucket
+    only_null = df.filter(F.col("b").isNull())
+    got = sorted(r.rn for r in bucketed_row_number(
+        only_null, ["b"], order, "rn").collect())
+    assert got == list(range(1, only_null.count() + 1))
+
+
 def test_set_ops(spark):
     """q12's other two legs: UNION ALL keeps every row, INTERSECT is
     DISTINCT, and the multiset EXCEPT ALL removes one left copy per

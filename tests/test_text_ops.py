@@ -8,6 +8,7 @@ from mapreduce_stockheadlines_spark.functions.text import (
     clean_text,
     explode_tokens,
     load_stopwords_file,
+    normalized_text,
     remove_stopwords,
     stopwords_df,
     tokens_array,
@@ -28,6 +29,82 @@ def test_tokens_array_drops_empties(spark):
     assert rows[0].a == ["a", "b", "c"]
     assert rows[1].a == []
     assert rows[2].a == []
+
+
+# Adversarial inputs for the equivalence pin below: NULL, empty and
+# whitespace-only text, digits and punctuation, case mappings that leave
+# ASCII or change length (dotted capital I, Kelvin sign, sharp s, the fi
+# ligature), combining marks, surrogate-pair emoji and full-width letters.
+_ADVERSARIAL_TEXT = (
+    None,
+    "",
+    "   ",
+    "\t\n \r\n\t",
+    "2024-01-02 10:30 +5.5% $AAPL, (Q3)!!",
+    "İstanbul İİ",
+    "\u212a\u212aK kelvin",
+    "Straße STRASSE ß",
+    "\ufb01nance \ufb01",
+    "cafe\u0301 e\u0300 a\u0308b",
+    "stocks \U0001f4c8\U0001f680 up\U0001f600",
+    "\uff21\uff22\uff23 abc \uff41",
+    "Mixed CASE and\u00a0nbsp\u2003em-space",
+)
+
+
+def test_text_kernels_match_reference_forms_on_adversarial_unicode(spark):
+    """``clean_text`` runs the lowercased-domain class ``[^a-z ]`` and
+    ``tokens_array`` drops empties with ``array_remove``; both must equal
+    the reference forms (``[^a-zA-Z ]`` after ``lower``, WordCount.java:53,
+    and the ``filter(length > 0)`` higher-order function) element for
+    element, and ``normalized_text`` must equal the reference cleaning
+    collapsed and trimmed."""
+    df = spark.createDataFrame(
+        list(enumerate(_ADVERSARIAL_TEXT)), "id int, t string"
+    )
+    ref_clean = F.regexp_replace(F.lower("t"), "[^a-zA-Z ]", " ")
+    ref_tokens = F.filter(F.split(ref_clean, r"\s+"), lambda x: F.length(x) > 0)
+    ref_norm = F.trim(F.regexp_replace(ref_clean, " +", " "))
+    rows = df.select(
+        "id",
+        clean_text("t").alias("c"), ref_clean.alias("rc"),
+        tokens_array("t").alias("a"), ref_tokens.alias("ra"),
+        normalized_text("t").alias("n"), ref_norm.alias("rn"),
+    ).orderBy("id").collect()
+    assert len(rows) == len(_ADVERSARIAL_TEXT)
+    for r in rows:
+        assert r.c == r.rc, (r.id, r.c, r.rc)
+        assert r.a == r.ra, (r.id, r.a, r.ra)
+        assert r.n == r.rn, (r.id, r.n, r.rn)
+    got = {r.id: r.a for r in rows}
+    assert got[0] is None and rows[0].c is None and rows[0].n is None
+    assert got[1] == got[2] == got[3] == []
+    assert got[6] == ["kkk", "kelvin"]  # the Kelvin sign lowercases to ASCII k
+    assert got[10] == ["stocks", "up"]
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_side_tables_plan_in_the_jvm(spark):
+    """The built-in side tables never start a Python worker: the
+    stop-word table and ``ranked``'s bucket-offset table plan as
+    ``LocalTableScan``, not as a Python RDD (``Scan ExistingRDD``)."""
+    from mapreduce_stockheadlines_spark.operators.rank import ranked
+
+    stop = stopwords_df(spark)
+    assert "LocalTableScan" in _plan(stop)
+    assert "ExistingRDD" not in _plan(stop)
+    counted = spark.range(50).select(
+        F.concat(F.lit("k"), (F.col("id") % 7).cast("string")).alias("k"),
+        (F.col("id") % 5 + 1).alias("cnt"),
+    )
+    r = ranked(counted, "k")
+    plan = _plan(r)
+    assert "LocalTableScan" in plan
+    assert "ExistingRDD" not in plan
+    assert sorted(x.rank for x in r.collect()) == list(range(1, 51))
 
 
 def test_explode_tokens_one_row_per_token(spark):
