@@ -1,23 +1,14 @@
-"""Arrow-vectorized UDF extension points (§2.2 UDF surface).
+"""Arrow-vectorized scalar pandas UDF (§2.2 UDF surface).
 
 The engine's rule is built-ins first — every core operator is pure
-Catalyst — but a complete engine needs the user extension surface. These
-are the two remaining pandas-UDF flavors not already exercised elsewhere
-(mapInPandas: operators/multimodal.py, packing.py, similarity.py;
-applyInPandasWithState: streaming/stateful.py):
-
-- SCALAR pandas UDF (Arrow batch in, Arrow batch out, one row per row);
-- GROUPED_AGG pandas UDF (a user-defined aggregate usable inside
-  ``groupBy().agg`` and unpartitioned windows).
-
-Both move data JVM→Python in Arrow columnar batches — ~10-100x the
-throughput of row-at-a-time Python UDFs — and both aggregate/transform
-with numpy inside the batch.
+Catalyst — but Unicode normalization has no Spark builtin, so
+``normalize_unicode`` moves text JVM→Python in Arrow columnar batches
+(~10-100x the throughput of row-at-a-time Python UDFs) and normalizes
+inside the batch.
 """
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 
 from pyspark.sql import Column
@@ -28,131 +19,6 @@ from pyspark.sql.functions import pandas_udf
 # pandas_udf registration needs a live SparkSession, so the udf objects
 # are built on first use (import of this module must stay session-free).
 _CACHE: dict[str, object] = {}
-
-
-def normalize_vec(col: Column | str) -> Column:
-    """Unit-L2-normalize an embedding column (the standard prep before
-    cosine ANN: normalized vectors reduce cosine to a dot product).
-    Vectorized scalar pandas UDF: each Arrow batch becomes one numpy
-    matrix; zero vectors pass through unchanged (norm clamped to 1)."""
-    if "normalize_vec" not in _CACHE:
-
-        @pandas_udf("array<float>")
-        def _normalize(vecs: pd.Series) -> pd.Series:
-            mat = np.vstack(vecs.to_numpy())
-            norms = np.linalg.norm(mat, axis=1, keepdims=True)
-            out = mat / np.maximum(norms, 1e-30)
-            return pd.Series(list(out.astype(np.float32)))
-
-        _CACHE["normalize_vec"] = _normalize
-    return _CACHE["normalize_vec"](col)
-
-
-def weighted_mean(value_col: Column | str, weight_col: Column | str) -> Column:
-    """User-defined aggregate: sum(v*w)/sum(w) over the group (e.g. a
-    token-count-weighted mean quality per source — the corpus-level
-    number that an unweighted mean misstates when doc lengths vary).
-    GROUPED_AGG pandas UDF: partial batches aggregate Python-side, but
-    grouping/shuffle stay in the JVM."""
-    if "weighted_mean" not in _CACHE:
-
-        @pandas_udf("double")
-        def _wmean(values: pd.Series, weights: pd.Series) -> float:
-            w = weights.to_numpy(dtype="float64")
-            v = values.to_numpy(dtype="float64")
-            tot = w.sum()
-            return float((v * w).sum() / tot) if tot > 0 else float("nan")
-
-        _CACHE["weighted_mean"] = _wmean
-    return _CACHE["weighted_mean"](value_col, weight_col)
-
-
-def weighted_mean_expr(value_col: str, weight_col: str) -> Column:
-    """The same weighted mean as a pure-codegen expression — the engine
-    default; ``weighted_mean`` exists for aggregation logic a built-in
-    composition cannot express."""
-    num = F.sum(F.col(value_col) * F.col(weight_col))
-    den = F.sum(weight_col)
-    return num / den
-
-
-def sentence_spans(df, id_col: str, text_col: str):
-    """One row per sentence: (id, sent_idx, sentence, n_chars) — the
-    Python UDTF flavor (Spark 4 table functions), completing the UDF
-    taxonomy: scalar/grouped-agg pandas UDF (above), mapInPandas
-    (multimodal/packing/similarity), applyInPandasWithState
-    (streaming/stateful) and now a LATERAL-correlated table function.
-
-    The UDTF registers once per session and applies via SQL LATERAL
-    correlation, so each input row fans out to a variable number of
-    output rows inside the JVM plan (Generate-like), with only the
-    eval() body in Python. For THIS particular logic the codegen twin
-    below is the engine default (same contract as
-    weighted_mean/weighted_mean_expr): a UDTF earns its Python cost
-    only when the per-row expansion logic cannot be expressed as
-    built-ins."""
-    from pyspark.sql.functions import udtf
-
-    if "sentence_udtf" not in _CACHE:
-
-        @udtf(returnType="sent_idx int, sentence string, n_chars int")
-        class _SentenceSplit:
-            def eval(self, text):
-                import re
-
-                if text is None:
-                    return
-                idx = 0
-                for part in re.split(r"(?<=[.!?])\s+", text):
-                    part = part.strip()
-                    if part:
-                        yield idx, part, len(part)
-                        idx += 1
-
-        _CACHE["sentence_udtf"] = _SentenceSplit
-    spark = df.sparkSession
-    spark.udtf.register("_engine_sentence_split", _CACHE["sentence_udtf"])
-    # unique per-call view name: a fixed name would race across threads
-    # sharing one session (B's createOrReplaceTempView landing between
-    # A's registration and A's sql() would fan out B's rows)
-    import uuid
-
-    view = f"_sentence_spans_in_{uuid.uuid4().hex}"
-    df.select(id_col, text_col).createOrReplaceTempView(view)
-    try:
-        return spark.sql(
-            f"SELECT i.`{id_col}`, s.sent_idx, s.sentence, s.n_chars "
-            f"FROM {view} i, "
-            f"LATERAL _engine_sentence_split(i.`{text_col}`) s"
-        )
-    finally:
-        # the returned plan is already resolved; the view need not outlive
-        # this call
-        spark.catalog.dropTempView(view)
-
-
-def sentence_spans_expr(df, id_col: str, text_col: str):
-    """The same sentence fan-out as pure codegen — posexplode over a
-    lookbehind-regex split with trim + empty filter. Semantically
-    identical to the UDTF (pinned in tests, incl. Unicode whitespace);
-    this is the hot-path form.
-
-    Unicode parity details: Python's ``\\s`` is Unicode-aware while
-    Java's defaults to ASCII, so the split and the edge-trim both carry
-    the ``(?U)`` (UNICODE_CHARACTER_CLASS) flag — a non-breaking space
-    after a period (common in web text) must split in BOTH forms, and
-    ``F.trim`` (space-only) would diverge from Python ``str.strip``."""
-    sents = F.filter(
-        F.transform(
-            F.split(F.col(text_col), r"(?U)(?<=[.!?])\s+"),
-            lambda s: F.regexp_replace(s, r"(?U)^\s+|\s+$", ""),
-        ),
-        lambda s: F.length(s) > 0,
-    )
-    return df.select(
-        F.col(id_col),
-        F.posexplode(sents).alias("sent_idx", "sentence"),
-    ).withColumn("n_chars", F.length("sentence").cast("int"))
 
 
 def normalize_unicode(

@@ -1103,8 +1103,9 @@ def main(argv: list[str] | None = None) -> None:
         # not used at xxhash64's full signed range. Collision math at
         # that width: n^2/2^43 ≈ 1e6 colliding PAIRS at 3B docs ≈ 0.03%
         # of the corpus (a collision conflates two docs in doc_id-keyed
-        # joins); a deployment that can't accept that switches to
-        # assign_global_ids' bucketed rank for collision-free longs.
+        # joins); a deployment that can't accept that switches to a
+        # bucketed rank (rank.bucketed_row_number) for collision-free
+        # longs.
         docs = (
             warc_text_docs(spark, args.warc_dir)
             .withColumn("text", strip_html("text"))

@@ -57,7 +57,7 @@ def corpus_report(
     that bounded head, adding ZERO further corpus passes."""
     # the Gopher/C4 kept booleans (the documented LAST column of each
     # rule builder) ride the SAME cached projection via extra_cols —
-    # as a separate gopher_c4_filter() pass they re-scanned the corpus
+    # as a separate rule projection they re-scanned the corpus
     # through ~15 regexes for two rate rows (ADVICE r8)
     rule_base = TS._rule_base(
         F.col(text_col) if isinstance(text_col, str) else text_col

@@ -49,7 +49,6 @@ from ..functions.text import tokens_array
 __all__ = [
     "word_census",
     "train_bpe",
-    "bpe_vocabulary",
     "piece_id_map",
     "encode_word_types",
     "apply_bpe",
@@ -174,19 +173,6 @@ def piece_id_map(
     return ids
 
 
-def bpe_vocabulary(
-    spark: SparkSession,
-    merges: list[tuple[str, str]],
-    alphabet: list[str],
-) -> DataFrame:
-    """``piece_id_map`` as a (piece, piece_id) DataFrame."""
-    ids = piece_id_map(merges, alphabet)
-    return spark.createDataFrame(
-        sorted(ids.items(), key=lambda kv: kv[1]),
-        "piece string, piece_id int",
-    )
-
-
 def _encode_word(word: str, ranks: dict[tuple[str, str], int]) -> list[str]:
     """Segment one word: repeatedly merge the lowest-rank adjacent pair
     (all occurrences, left-to-right) until none remains in the table.
@@ -212,7 +198,7 @@ def encode_word_types(
     piece_ids: dict[str, int] | None = None,
 ) -> DataFrame:
     """Encode DISTINCT word types: (word, pieces array<string>) plus,
-    when ``piece_ids`` is given (a ``bpe_vocabulary`` mapping),
+    when ``piece_ids`` is given (a ``piece_id_map`` mapping),
     (..., ids array<int>) with unknown pieces → 0.
 
     Arrow-batched scalar pandas UDF with a per-batch memo (the input is

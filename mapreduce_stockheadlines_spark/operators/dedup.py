@@ -128,11 +128,21 @@ def minhash_signatures_multi(
     for shingle_n=None, else 'shingle{n}'.
 
     ``include_oph=True`` appends the one-permutation MinHash signature
-    (``oph0..oph{k-1}`` — see ``minhash_signature_oph``) computed per
-    (doc, mode) in the SAME scan and aggregation: the OPH bucket mins
-    are just ``num_hashes`` more conditional-MIN aggregates over the
-    same exploded gram stream, so pinning both signature families costs
-    zero extra passes over the corpus."""
+    (``oph0..oph{k-1}``) computed per (doc, mode) in the SAME scan and
+    aggregation: the OPH bucket mins are just ``num_hashes`` more
+    conditional-MIN aggregates over the same exploded gram stream, so
+    pinning both signature families costs zero extra passes over the
+    corpus.
+
+    One-permutation MinHash (Li/Owen/Zhang 2012) with rotation
+    densification (Shrivastava/Li 2014) hashes each gram ONCE instead of
+    ``num_hashes`` times: the gram is routed to bucket ``h mod k`` and
+    each bucket keeps its min; empty buckets borrow the nearest
+    following non-empty bucket's value plus ``t·2^60`` (t = rotation
+    distance). ``portable`` mode hashes via md5 ('oph:'-salted, first
+    15 hex chars as a 60-bit BIGINT) so an independent engine
+    re-derives signatures bit-for-bit; ``native`` uses one xxhash64
+    masked to the same 60-bit domain."""
     if include_oph and num_hashes > 8:
         raise ValueError(
             "minhash_signatures_multi: include_oph needs num_hashes <= 8 "
@@ -172,7 +182,7 @@ def minhash_signatures_multi(
 # every other rotation distance (Shrivastava/Li's construction requires the
 # offset to clear the hash domain). With num_hashes <= 8 the largest
 # possible value, 7*2^60 + (2^60 - 1) = 2^63 - 1, fits int64 exactly —
-# minhash_signature_oph guards that bound.
+# minhash_signatures_multi guards that bound.
 _OPH_ROT = 1 << 60
 
 
@@ -201,62 +211,6 @@ def _oph_dense(num_hashes: int, prefix: str = "mh") -> list:
         ).alias(f"{prefix}{i}")
         for i in range(num_hashes)
     ]
-
-
-def minhash_signature_oph(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_hashes: int = 8,
-    shingle_n: int | None = None,
-    hash_mode: str = "portable",
-) -> DataFrame:
-    """One-permutation MinHash (Li/Owen/Zhang 2012) with rotation
-    densification (Shrivastava/Li 2014): ONE hash evaluation per token
-    instead of ``num_hashes`` — the token is hashed once, routed to
-    bucket ``h mod k``, and each bucket keeps its min; empty buckets
-    borrow the nearest following non-empty bucket's value plus
-    ``t·2^60`` (t = rotation distance) — the offset exceeds the 60-bit
-    hash universe, so borrowed values are structurally (not merely
-    probabilistically) distinct from genuine ones and from other
-    rotations, as in Shrivastava/Li. ``num_hashes`` is capped at 8 so
-    the largest densified value, 7·2^60 + (2^60−1) = 2^63−1, fits
-    int64 exactly. At corpus
-    scale this cuts signature-build hashing cost by ``num_hashes``×
-    while keeping the same (doc, mh0..mhk-1) schema —
-    ``signature_bands`` / ``lsh_candidate_pairs`` /
-    ``signature_agreement`` compose unchanged.
-
-    Same aggregation shape as ``minhash_signature``: one groupBy with k
-    conditional MINs (no per-hash row replication — the token stream is
-    1/k the classic builder's). Identical texts get identical
-    signatures (densification is a pure function of the bucket mins);
-    agreement remains an unbiased Jaccard estimator on non-empty
-    buckets and a slightly-biased one through rotations — the standard
-    OPH trade, property-pinned in tests. ``portable`` mode hashes via
-    md5 ('oph:'-salted, first 15 hex chars as a 60-bit BIGINT) so an
-    independent engine re-derives signatures bit-for-bit;
-    ``native`` uses one xxhash64 (sign-masked to the same 60-bit
-    domain so bucketing and rotation offsets behave identically)."""
-    if num_hashes > 8:
-        raise ValueError(
-            "minhash_signature_oph: num_hashes > 8 would overflow int64 "
-            "under the 2^60 rotation offset "
-            f"((k-1)*2^60 + max_hash needs k <= 8; got {num_hashes})"
-        )
-    if shingle_n is not None:
-        toks = doc_shingles(df, id_col, text_col, n=shingle_n, distinct=False)
-    else:
-        toks = doc_tokens(df, id_col, text_col, distinct=False)
-    h = _oph_hash(hash_mode)
-    b = F.pmod(h, F.lit(num_hashes)).cast("int")
-    raw = toks.groupBy(id_col).agg(
-        *[
-            F.min(F.when(b == i, h)).alias(f"_m{i}")
-            for i in range(num_hashes)
-        ]
-    )
-    return raw.select(id_col, *_oph_dense(num_hashes, prefix="mh"))
 
 
 def signature_bands(
@@ -810,31 +764,6 @@ def edit_distance_pairs(
     if max_distance is not None:
         out = out.filter(F.col("edit_distance") <= max_distance)
     return out
-
-
-def incremental_dedup(
-    new_df: DataFrame,
-    seen: DataFrame | None,
-    id_col: str,
-    text_col: str,
-) -> tuple[DataFrame, DataFrame]:
-    """Continuous-ingest exact dedup: drop rows of ``new_df`` whose content
-    hash already exists in the historical index ``seen`` (one column,
-    ``text_hash``), then dedup within the batch itself.
-
-    Returns (surviving rows, updated index). The probe is an anti-join on
-    the fixed-width digest — with a bucketed/partitioned index table the
-    join co-locates by digest and never rescans historical TEXT, which is
-    the property that keeps day-N ingest cost proportional to day-N data,
-    not corpus size."""
-    hashed = new_df.withColumn(
-        "text_hash", F.md5(F.col(text_col).cast("binary"))
-    )
-    fresh = hashed if seen is None else hashed.join(seen, "text_hash", "left_anti")
-    survivors = exact_dedup(fresh, ["text_hash"], [id_col])
-    new_index = survivors.select("text_hash")
-    new_index = new_index if seen is None else seen.unionByName(new_index)
-    return survivors.drop("text_hash"), new_index
 
 
 def line_dedup(

@@ -1,7 +1,6 @@
-"""Embedding-column hygiene operators: int8 quantization /
-dequantization, and PCA dimensionality reduction (fit / project /
-explained-variance — one moment-partial corpus pass, driver-side d x d
-eigensolve, Arrow-batched projection).
+"""Embedding-column hygiene operators: int8 quantization, and PCA
+dimensionality reduction (fit / project — one moment-partial corpus
+pass, driver-side d x d eigensolve, Arrow-batched projection).
 
 Storage arithmetic is the whole game at corpus scale: a 100 TB corpus
 with 768-dim float32 embeddings carries ~3 KB/vector; symmetric int8
@@ -60,22 +59,6 @@ def quantize_embeddings(
         vec_d, lambda x: F.round(x / F.col(scale_col)).cast("tinyint")
     )
     return df.withColumn(scale_col, sc).withColumn(out_col, codes)
-
-
-def dequantize_embeddings(
-    df: DataFrame,
-    qvec_col: str,
-    scale_col: str,
-    out_col: str = "vec",
-) -> DataFrame:
-    """Inverse map: ``vec_i = q_i * scale`` as ``array<double>`` (the lossy
-    reconstruction — feed it to the exact rescore stage of a two-phase
-    ANN, the IVF/LSH pattern in operators/similarity.py)."""
-    sc = F.col(scale_col)
-    return df.withColumn(
-        out_col,
-        F.transform(F.col(qvec_col), lambda q: q.cast("double") * sc),
-    )
 
 
 def quantization_error(
@@ -284,35 +267,6 @@ def pca_project(
             yield pdf
 
     return df.mapInPandas(project, schema)
-
-
-def pca_explained_variance(df: DataFrame, vec_col: str, k: int) -> float:
-    """Fraction of total (centered) variance a k-component PCA captures
-    — the 'is k big enough' diagnostic: sum of the top-k eigenvalues
-    over the covariance trace, from ONE moment pass (the eigenvalues
-    are free once the covariance is in hand — projecting the corpus to
-    measure this, as a naive implementation would, costs two extra
-    corpus passes for a number the d x d eigensolve already knows).
-    Fitting and diagnosing together? ``pca_fit(...,
-    return_variance=True)`` shares the single pass."""
-    _, _, explained = pca_fit(df, vec_col, k=k, return_variance=True)
-    return explained
-
-
-def truncate_dims(
-    df: DataFrame, vec_col: str, d: int, out_col: str | None = None
-) -> DataFrame:
-    """Matryoshka-style prefix truncation (Kusupati et al. 2022, MRL):
-    keep the first ``d`` dimensions. MRL-trained embeddings order
-    information front-to-back, so serving at a prefix cuts index
-    storage and scan bandwidth dim/d× for a measured recall cost
-    (pair with ``similarity.topk_eval`` for the measurement). Pure
-    codegen slice — zero Python, zero shuffle; cosine over prefixes
-    renormalizes implicitly, so no renormalization pass is needed for
-    ranking."""
-    if d < 1:
-        raise ValueError(f"truncate_dims: d must be >= 1, got {d}")
-    return df.withColumn(out_col or vec_col, F.slice(F.col(vec_col), 1, d))
 
 
 def fixed_query_cosine(

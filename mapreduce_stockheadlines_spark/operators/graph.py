@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["pagerank", "domain_authority", "hits"]
+__all__ = ["pagerank", "hits"]
 
 
 def pagerank(
@@ -134,62 +134,6 @@ def pagerank(
         if (it + 1) % checkpoint_interval == 0 or it == n_iters - 1:
             ranks = _ckpt(ranks)
     return ranks.select("node", F.round("rank", 8).alias("rank"))
-
-
-def domain_authority(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    damping: float = 0.85,
-    n_iters: int = 10,
-    max_domains_per_doc: int = 32,
-) -> DataFrame:
-    """(domain, rank): PageRank authority of registered domains over the
-    CO-CITATION graph — domains referenced by the same document link to
-    each other (both directions), the standard proxy when actual
-    hyperlink targets are not in the corpus. High-authority domains
-    anchor quality weighting; junk link farms cite each other in
-    isolated low-mass cliques.
-
-    Shape: ``textstats.url_stats`` extracts each doc's distinct
-    registered domains (codegen regex + PSL); docs are capped at
-    ``max_domains_per_doc`` (a link-spam page citing 10k domains would
-    otherwise emit a 10k² clique — the cap bounds per-doc edge fan-out
-    quadratically, and such pages are exactly the ones that should not
-    confer authority); the per-doc clique explode is the only
-    edge-generation pass, then ``pagerank`` runs on the domain-sized
-    graph. Docs with <2 domains contribute no edges but their single
-    domains still join the node set via a self-free union."""
-    from .textstats import url_stats
-
-    per_doc = url_stats(docs, id_col, text_col).select(
-        id_col, F.slice("domains", 1, max_domains_per_doc).alias("_ds")
-    )
-    pairs = per_doc.select(
-        F.explode("_ds").alias("src"), F.col("_ds")
-    ).select("src", F.explode("_ds").alias("dst")).filter(
-        F.col("src") != F.col("dst")
-    )
-    singles = (
-        per_doc.filter(F.size("_ds") == 1)
-        .select(F.explode("_ds").alias("node"))
-        .distinct()
-    )
-    if pairs.isEmpty():
-        n = singles.count()
-        return (
-            singles.withColumn("rank", F.round(F.lit(1.0 / n), 8))
-            if n
-            else singles.withColumn("rank", F.lit(0.0))
-        )
-    ranked = pagerank(pairs, damping=damping, n_iters=n_iters)
-    # isolated single-domain docs: attach with the dangling-floor rank
-    # ((1-d)/N over the LINKED graph's N would misstate mass; report 0.0
-    # — "no co-citation evidence" — and let callers threshold on > 0)
-    lonely = singles.join(
-        ranked.select(F.col("node")), "node", "left_anti"
-    ).withColumn("rank", F.lit(0.0))
-    return ranked.unionByName(lonely).withColumnRenamed("node", "domain")
 
 
 def hits(

@@ -28,11 +28,9 @@ the broadcast array — no shuffle, no join; Python never hashes, it
 only indexes. A JVM-only twin (``bloom_lookup_join``: explode +
 broadcast join + ``bool_and``) is pinned equal for plans that must
 stay Python-free; it costs the k-rows-per-doc groupBy the Arrow path
-avoids. Bitmaps are EXACTLY mergeable (``bit_or``), so per-period
-bloom artifacts compose like the HLL sketches in
-``operators/sketches.py`` (union-of-blooms == bloom-of-union, pinned
-exactly, not tolerance-gated) and pair with ``sources/versioned.py``
-for atomically-published artifact history.
+avoids. Bitmaps are mergeable cell by cell (``bit_or``), so
+per-period bloom artifacts pair with ``sources/versioned.py`` for
+atomically-published artifact history.
 
 Sizing: FPR ~= (1 - e^(-k*n/m))^k. With k=5 and m = 10 bits/key the
 rate is ~0.9%; the default m of 2^23 bits (1 MB) covers ~840 K keys at
@@ -110,22 +108,6 @@ def bloom_build(
         F.explode(F.array(*bloom_positions(value_col, m_bits, k, salt))).alias("pos")
     )
     return _cells(pos_rows).groupBy("word_idx").agg(F.bit_or("mask").alias("bits"))
-
-
-def bloom_union(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Merge two bitmaps built with the same (m, k, salt): full-outer
-    ``bit_or`` by word. Exactly mergeable — union-of-blooms ==
-    bloom-of-union (pinned), so per-period artifacts fold like the HLL
-    sketches, at KB..MB cost."""
-    both = a.select("word_idx", F.col("bits").alias("_a")).join(
-        b.select("word_idx", F.col("bits").alias("_b")), "word_idx", "full_outer"
-    )
-    return both.select(
-        "word_idx",
-        F.coalesce("_a", F.lit(0))
-        .bitwiseOR(F.coalesce("_b", F.lit(0)))
-        .alias("bits"),
-    )
 
 
 def _bitmap_array(bloom_df: DataFrame, m_bits: int) -> np.ndarray:

@@ -462,63 +462,6 @@ def sentence_chunk_cols_from(
     return n_col, fp_col
 
 
-def sentence_chunk_summary_cols(
-    src,
-    chunk_tokens: int = 512,
-    boundary_pattern: str = SENTENCE_BOUNDARY,
-    n_alias: str = "n_sent_chunks",
-    fp_alias: str = "sent_chunk_fp8",
-) -> tuple:
-    """Scalar (per-doc, zero-shuffle) summary of ``chunk_by_sentences``
-    — the self-contained two-column form. NOTE: this form repeats the
-    fold expression per output column (no staging is possible from
-    inside a column-tuple builder); projection hosts that care about
-    the 2× fold cost should use ``sentence_chunk_fold_col`` staged
-    through a bound column + ``sentence_chunk_cols_from`` (what x08
-    does since round 11)."""
-    fold = sentence_chunk_fold_col(src, chunk_tokens, boundary_pattern)
-    return sentence_chunk_cols_from(fold, n_alias, fp_alias)
-
-
-def cdc_cut_cols_from(
-    grams_col,
-    divisor: int = 64,
-    rem: int = 0,
-    min_size: int = 16,
-    n_alias: str = "n_cdc_chunks",
-    fp_alias: str = "cdc_fp8",
-) -> tuple:
-    """Content-defined chunking (Rabin rolling-hash boundaries — LBFS,
-    Muthitacharoen et al. SOSP'01; the min-size guard is FastCDC's
-    refinement) over a BOUND rolling-hash gram column (the winnow
-    ``_wgrams`` staging — textstats.winnow_gram_col; one gram array
-    feeds both operators): position ``i`` (1-based gram index) is a cut
-    CANDIDATE when ``hash_i % divisor == rem``, and the greedy walk
-    accepts a candidate only when it is at least ``min_size`` positions
-    past the previous accepted cut. Chunk boundaries therefore move
-    with CONTENT, not offsets — an insertion early in a document shifts
-    every fixed-width chunk but only the one CDC chunk it lands in,
-    which is what makes CDC the dedup-stable chunking for training-data
-    pipelines (dedup keys survive edits).
-
-    Registry shape: ``n_cdc_chunks`` = accepted cuts + 1 (the tail
-    chunk; 0 for gram-less docs) and ``cdc_fp8`` = 8-hex md5 of the
-    comma-prefixed accepted-cut-position list (pins the exact boundary
-    SET, not just the count; NULL for gram-less docs). All exact
-    integer arithmetic on the winnow hash contract, so a DuckDB twin
-    re-derives every boundary bit-for-bit (the greedy walk unrolls as
-    plain CTE steps — min-gap selection has no closed window form).
-
-    This convenience form repeats the walk expression once per output
-    column (a column-tuple builder cannot stage); projection hosts
-    should stage ``cdc_cuts_col`` through a bound column and project
-    with ``cdc_cols_from`` — ONE O(n) candidate scan + walk per row
-    (the sentence_chunk_fold_col pattern; what x08 does).
-    """
-    cuts = cdc_cuts_col(grams_col, divisor, rem, min_size)
-    return cdc_cols_from(cuts, n_alias, fp_alias)
-
-
 def cdc_cols_from(
     staged_cuts,
     n_alias: str = "n_cdc_chunks",
@@ -557,41 +500,6 @@ def cdc_cols_from(
         cuts.isNotNull(), F.substring(F.md5(csv), 1, 8)
     ).alias(fp_alias)
     return n_col, fp_col
-
-
-def cdc_chunk_summary(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = 5,
-    divisor: int = 64,
-    rem: int = 0,
-    min_size: int = 16,
-) -> DataFrame:
-    """(id, n_cdc_chunks, cdc_fp8) — the standalone operator form:
-    stages normalization, char codes, the rolling-hash gram array AND
-    the cut-position walk through bound columns (the winnow staging
-    requirement plus the round-12 staged-chars fast path — see
-    winnow_gram_from_chars; one greedy walk per row) and projects the
-    summary from the staged cuts."""
-    from .textstats import (
-        _winnow_norm,
-        winnow_char_col,
-        winnow_gram_from_chars,
-    )
-
-    return (
-        df.select(
-            F.col(id_col).alias("id"),
-            _winnow_norm(F.col(text_col)).alias("_wn"),
-        )
-        .select("id", winnow_char_col("_wn").alias("_wc"))
-        .select("id", winnow_gram_from_chars("_wc", k).alias("_wg"))
-        .select(
-            "id", cdc_cuts_col("_wg", divisor, rem, min_size).alias("_cuts")
-        )
-        .select("id", *cdc_cols_from("_cuts"))
-    )
 
 
 def cdc_cuts_col(

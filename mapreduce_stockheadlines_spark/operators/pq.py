@@ -48,8 +48,10 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions.vectors import as_double
+from ..session import local_frame
 from .similarity import _collect_query_side, _head_vecs, _nonempty_vecs
 
 ADC_FP_DP = 4  # fixed-point decimals for ADC lookup-table entries
@@ -601,13 +603,17 @@ def ivfpq_topk(
     norms[norms == 0.0] = 1.0
     q_mat = q_raw / norms
     probe_order = ivf_probe_cells(q_mat, cmat, n_probe)
-    probes = spark.createDataFrame(
+    probes = local_frame(
+        spark,
         [
             (int(qid), int(c))
             for qid, row in zip(q_ids, probe_order)
             for c in row
         ],
-        "query_id long, cell int",
+        T.StructType([
+            T.StructField("query_id", T.LongType()),
+            T.StructField("cell", T.IntegerType()),
+        ]),
     )
     # per-(query, probed cell) residual LUTs, fixed-point
     luts: dict[tuple[int, int], np.ndarray] = {}
@@ -1025,27 +1031,3 @@ def _opq_pca_init(
         counts[j] += 1
     order = [i for j in range(m) for i in rows[j]]
     return np.ascontiguousarray(comps[order])
-
-
-def opq_encode(
-    corpus: DataFrame,
-    rotation: np.ndarray,
-    codebooks: np.ndarray,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_vec: np.ndarray | None = None,
-) -> DataFrame:
-    """``pq_encode`` in the rotated space: rotate (one Arrow pass),
-    encode, and — with ``query_vec`` — ADC against the ROTATED query
-    (rotation is orthonormal, so rotated-space L2 equals original-space
-    L2 and the ADC semantics carry over unchanged)."""
-    rr = np.asarray(rotation, dtype="float64")
-    rotated = rotate_vectors(corpus, rr, id_col, vec_col)
-    qv = (
-        rr @ np.asarray(query_vec, dtype="float64")
-        if query_vec is not None
-        else None
-    )
-    return pq_encode(
-        rotated, codebooks, id_col=id_col, vec_col="vr", query_vec=qv
-    )

@@ -1,130 +1,13 @@
-"""Table profiling: ANALYZE-style per-column statistics and histograms.
-
-The engine's answer to `ANALYZE TABLE` / DuckDB `SUMMARIZE` — the first
-thing run against a new 100 TB drop to decide partitioning, skew handling
-and quality gates. Everything is expressed as ONE global aggregation over
-one scan (partial aggregation map-side, a single merged row, then an
-in-plan unpivot), so profiling cost equals scan cost regardless of column
-count.
-
-``exact_distinct=False`` (default) uses ``approx_count_distinct``
-(HyperLogLog++, constant memory per column — the only sane choice at
-scale). ``exact_distinct=True`` uses COUNT(DISTINCT) — Spark plans one
-Expand over the input per distinct column, multiplying shuffled rows by
-the column count; fine for small tables and for oracle pinning, flagged
-in the docstring so nobody reaches for it at scale.
+"""Corpus profiling: the embedding-column sanity profile and token-
+distribution drift (Jensen-Shannon divergence) between corpora — the
+first checks run against a new drop before partitioning, quality gates
+or mixing. Each is one scan feeding one aggregation.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-_NUMERIC = (
-    T.ByteType,
-    T.ShortType,
-    T.IntegerType,
-    T.LongType,
-    T.FloatType,
-    T.DoubleType,
-    T.DecimalType,
-)
-
-
-def profile_table(
-    df: DataFrame,
-    cols: list[str] | None = None,
-    exact_distinct: bool = False,
-) -> DataFrame:
-    """One row per profiled column: ``n_rows``, ``n_null``, ``n_distinct``
-    (nulls excluded), ``min_value``/``max_value`` (stringified for a
-    uniform schema), ``mean`` (numeric columns only, 4dp).
-
-    One scan, one aggregate, no shuffle beyond the single-row final agg;
-    the per-column unpivot is a constant-size projection of that row.
-    """
-    cols = cols or df.columns
-    schema = {f.name: f.dataType for f in df.schema.fields}
-    aggs: list[Column] = [F.count(F.lit(1)).alias("_n")]
-    for c in cols:
-        aggs.append(F.count(c).alias(f"_nn_{c}"))
-        if exact_distinct:
-            aggs.append(F.count_distinct(F.col(c)).alias(f"_nd_{c}"))
-        else:
-            aggs.append(F.approx_count_distinct(c).alias(f"_nd_{c}"))
-        aggs.append(F.min(c).cast("string").alias(f"_min_{c}"))
-        aggs.append(F.max(c).cast("string").alias(f"_max_{c}"))
-        if isinstance(schema[c], _NUMERIC):
-            aggs.append(F.round(F.avg(c), 4).cast("double").alias(f"_avg_{c}"))
-    one = df.agg(*aggs)
-    structs = [
-        F.struct(
-            F.lit(c).alias("column"),
-            F.col("_n").cast("bigint").alias("n_rows"),
-            (F.col("_n") - F.col(f"_nn_{c}")).cast("bigint").alias("n_null"),
-            F.col(f"_nd_{c}").cast("bigint").alias("n_distinct"),
-            F.col(f"_min_{c}").alias("min_value"),
-            F.col(f"_max_{c}").alias("max_value"),
-            (
-                F.col(f"_avg_{c}")
-                if isinstance(schema[c], _NUMERIC)
-                else F.lit(None).cast("double")
-            ).alias("mean"),
-        )
-        for c in cols
-    ]
-    return one.select(F.explode(F.array(*structs)).alias("p")).select("p.*")
-
-
-def numeric_histogram(df: DataFrame, col: str, n_bins: int = 10) -> DataFrame:
-    """Exact equal-width histogram of a numeric column: ``bin`` (0-based),
-    ``lo``/``hi`` bounds, ``n``. Empty bins are emitted with n=0, so the
-    output is always exactly ``n_bins`` rows (the shape plotting and
-    drift-checks want).
-
-    Two passes: a min/max aggregate (single row, broadcast back as a
-    scalar subquery via crossJoin of a 1-row frame — no driver collect),
-    then one groupBy on the bin id. The max value is clamped into the
-    last bin (standard closed-right convention).
-    """
-    c = F.col(col).cast("double")
-    bounds = df.agg(
-        F.min(c).alias("_lo"), F.max(c).alias("_hi"), F.count(c).alias("_cnt")
-    )
-    with_bounds = df.select(c.alias("_v")).filter(F.col("_v").isNotNull()).crossJoin(
-        F.broadcast(bounds)
-    )
-    width = (F.col("_hi") - F.col("_lo")) / n_bins
-    raw_bin = F.when(width > 0, F.floor((F.col("_v") - F.col("_lo")) / width)).otherwise(
-        F.lit(0)
-    )
-    bin_id = F.least(raw_bin.cast("int"), F.lit(n_bins - 1))
-    counted = (
-        with_bounds.select(
-            bin_id.alias("bin"), F.col("_lo"), F.col("_hi")
-        )
-        .groupBy("bin", "_lo", "_hi")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    )
-    # dense bin axis: 0..n_bins-1 left-joined so empty bins appear with n=0
-    axis = (
-        bounds.select(
-            F.explode(F.sequence(F.lit(0), F.lit(n_bins - 1))).alias("bin"),
-            "_lo",
-            "_hi",
-        )
-    )
-    width_a = (F.col("_hi") - F.col("_lo")) / n_bins
-    return (
-        axis.join(counted, ["bin", "_lo", "_hi"], "left")
-        .select(
-            "bin",
-            F.round(F.col("_lo") + F.col("bin") * width_a, 6).alias("lo"),
-            F.round(F.col("_lo") + (F.col("bin") + 1) * width_a, 6).alias("hi"),
-            F.coalesce("n", F.lit(0)).cast("bigint").alias("n"),
-        )
-    )
 
 
 def profile_embeddings(

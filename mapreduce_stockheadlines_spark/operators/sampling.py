@@ -34,14 +34,6 @@ def hash_fraction(key: Column | str, salt: str = "") -> Column:
     )
 
 
-def deterministic_sample(
-    df: DataFrame, key: str, fraction: float, salt: str = ""
-) -> DataFrame:
-    """Keep ~``fraction`` of rows, chosen by key hash. Same input → same
-    sample, on any cluster, any partitioning, any engine with md5."""
-    return df.filter(hash_fraction(key, salt) < F.lit(fraction))
-
-
 def train_test_split(
     df: DataFrame, key: str, test_fraction: float = 0.1, salt: str = "split"
 ) -> tuple[DataFrame, DataFrame]:
@@ -53,25 +45,6 @@ def train_test_split(
         df.filter(h >= F.lit(test_fraction)),
         df.filter(h < F.lit(test_fraction)),
     )
-
-
-def weighted_source_mix(
-    df: DataFrame, source_col: str, key: str,
-    weights: dict[str, float], salt: str = "mix",
-) -> DataFrame:
-    """Per-source downsampling to target mixture weights (the 'sample
-    Wikipedia at 3x, common-crawl at 0.3x' step of pretraining mixes,
-    for weights ≤ 1; upsampling is a separate explode-by-epochs concern).
-    Unlisted sources are dropped. One narrow filter — no shuffle, no
-    per-source scans."""
-    rate = None
-    for src, w in sorted(weights.items()):
-        cond = F.col(source_col) == src
-        rate = F.when(cond, F.lit(float(w))) if rate is None else rate.when(
-            cond, F.lit(float(w))
-        )
-    rate = rate.otherwise(F.lit(0.0)) if rate is not None else F.lit(0.0)
-    return df.filter(hash_fraction(key, salt) < rate)
 
 
 def deterministic_shuffle(df: DataFrame, key: str, salt: str = "shuffle") -> DataFrame:
@@ -129,10 +102,10 @@ def stratified_sample(
     Cost: one hash shuffle on the stratum column + a per-stratum sort
     (a row_number window). A stratum is one window partition — the usual
     trade of exact stratification; for a pathologically hot stratum,
-    fall back to ``deterministic_sample`` within it (approximate) or
+    fall back to a ``hash_fraction`` filter within it (approximate) or
     pre-split the stratum key. Growth caveat: adding rows to a stratum
     re-ranks it, so membership is stable only for a fixed snapshot —
-    use ``deterministic_sample`` when grow-stability matters more than
+    filter on ``hash_fraction`` when grow-stability matters more than
     exact counts.
     """
     from pyspark.sql import Window
@@ -149,27 +122,6 @@ def stratified_sample(
         .withColumn("_q", quota)
         .filter(F.col("_rn") <= F.col("_q"))
         .drop("_rn", "_q")
-    )
-
-
-def group_split(
-    df: DataFrame, group_col: str, test_fraction: float = 0.1, salt: str = "gsplit"
-) -> tuple[DataFrame, DataFrame]:
-    """Leakage-safe (train, test): the hash is taken over the GROUP key,
-    so every row of a group lands on the same side. This is the split
-    that near-duplicate-aware pipelines need — split on the doc id and
-    two near-identical documents straddle the boundary, leaking test
-    content into training; split on the dedup cluster representative
-    (``neardup_clusters``'s ``rep``), the URL domain, or the author, and
-    the whole correlated group moves together.
-
-    Same guarantees as ``train_test_split`` (deterministic, partition-
-    invariant, grow-stable, no shuffle — a narrow filter on a hash of
-    the group column)."""
-    h = hash_fraction(group_col, salt)
-    return (
-        df.filter(h >= F.lit(test_fraction)),
-        df.filter(h < F.lit(test_fraction)),
     )
 
 
@@ -264,10 +216,10 @@ def epoch_upsample(
     expected multiplicity is exactly ``w_s`` and whether a PARTICULAR
     row gets the extra epoch is a pure function of (salt, key), never of
     partitioning or corpus growth (the determinism contract shared by
-    every sampler here). Weights < 1 degenerate to
-    ``weighted_source_mix`` semantics (0 or 1 copies); unlisted sources
-    get ``default_weight`` — 0.0 (dropped, same as there) when the
-    weight dict is the whole mixture spec, 1.0 when it only names the
+    every sampler here). Weights < 1 degenerate to a per-source
+    downsample (0 or 1 copies); unlisted sources get
+    ``default_weight`` — 0.0 (dropped) when the weight dict is the
+    whole mixture spec, 1.0 when it only names the
     sources to boost (the CLI's reading: listing wiki=2.3 should not
     silently erase every other source). Adds an ``epoch`` column (0-based copy
     index) — feed ``deterministic_shuffle`` a per-copy salt or key
@@ -412,11 +364,11 @@ def temperature_mix(
     any partitioning, any engine with md5 (DuckDB-pinned row-for-row
     in pytest). One honest DIFFERENCE from the fixed-fraction siblings:
     the keep-RATES derive from the live per-source counts, so unlike
-    ``deterministic_sample``/``train_test_split`` this mix is NOT
-    growth-stable — adding data shifts every source's rate and can flip
-    an existing row's membership. Freeze the mixture of a growing
-    corpus by computing rates once and applying them via
-    ``weighted_source_mix`` on later refreshes. Scale shape: ONE
+    ``train_test_split`` this mix is NOT growth-stable — adding data
+    shifts every source's rate and can flip an existing row's
+    membership. Freeze the mixture of a growing corpus by computing
+    rates once and applying them via ``epoch_upsample`` on later
+    refreshes. Scale shape: ONE
     aggregation for the per-source census (driver gets <= |sources|
     rows), rates fold into a single CASE filter — no shuffle of the
     corpus, no join."""
@@ -776,7 +728,7 @@ def doremi_weights(
     update ``w_s ∝ w_s · exp(lr · excess_s)``, so domains the mixture
     covers worst gain mass. Returns ``(weights, history)`` with the
     weight dict after every round; the final dict feeds
-    ``weighted_source_mix`` / ``epoch_upsample`` directly.
+    ``epoch_upsample`` directly.
 
     Documented deviation from the paper: the proxy is the add-k
     smoothed JOINT bigram mixture ``p_mix(g) = Σ_s w_s · p_s(g)`` over

@@ -33,8 +33,10 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions.vectors import as_double, dot
+from ..session import local_frame
 
 
 def _to_matrix(series: pd.Series) -> np.ndarray:
@@ -650,13 +652,17 @@ def ivf_topk(
     probe_order = np.argsort(
         -np.round(q_mat @ cent_mat.T, 4), axis=1, kind="stable"
     )[:, :n_probe]
-    probes = spark.createDataFrame(
+    probes = local_frame(
+        spark,
         [
             (int(qid), int(c))
             for qid, row in zip(q_ids, probe_order)
             for c in row
         ],
-        "query_id long, cluster int",
+        T.StructType([
+            T.StructField("query_id", T.LongType()),
+            T.StructField("cluster", T.IntegerType()),
+        ]),
     )
     bq = spark.sparkContext.broadcast(
         {int(qid): q_mat[i] for i, qid in enumerate(q_ids)}
@@ -941,63 +947,6 @@ def semantic_dedup(
     )
     return dedup_by_pairs(
         emb, pairs, id_col, reliable_checkpoint=reliable_checkpoint
-    )
-
-
-def lsh_bucketed_pairs_multi(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    n_planes: int = 8,
-    n_tables: int = 2,
-    threshold: float = 0.8,
-    block_rows: int = 4096,
-) -> DataFrame:
-    """Multi-table hyperplane LSH: the standard recall knob for
-    ``lsh_bucketed_pairs``. A single table misses a near-dup pair
-    whenever ANY of its ``n_planes`` hyperplanes separates the two
-    vectors (miss probability (1 - (1-θ/π)^p) per table); ``n_tables``
-    independent tables (seed-varied hyperplanes) make the miss
-    probability the PRODUCT of per-table misses — e.g. a pair a single
-    8-plane table catches with 0.7 probability survives 2 tables with
-    0.91, 3 with 0.97.
-
-    Cost shape: the corpus replicates ``n_tables``× into the ONE
-    bucket-hash exchange (bucket keys are table-prefixed so tables never
-    mix), and each (table, bucket) decomposes into the same bounded
-    sub-block tasks as the single-table path. The trailing ``distinct``
-    IS required here — a pair can surface in several tables (contrast
-    the single-table path's duplicate-free-by-construction stream, see
-    ``lsh_bucketed_pairs``); it shuffles only the pair stream, which is
-    output-sized, not corpus-sized."""
-    # ONE corpus scan: every table's bucket is computed in the same
-    # projection and a single explode replicates rows n_tables× — a
-    # per-table select + union would re-read and re-decode the source
-    # once per table for identical output
-    bucket_cols = []
-    for t in range(n_tables):
-        planes = _hyperplanes(dim, n_planes, seed=42 + 1000 * t)
-        bucket_col = (
-            lsh_bucket_arrow(planes)(as_double(vec_col))
-            if n_planes >= LSH_ARROW_MIN_PLANES
-            else lsh_bucket(as_double(vec_col), planes)
-        )
-        bucket_cols.append(
-            F.concat(F.lit(f"{t}:"), bucket_col.cast("string"))
-        )
-    bucketed = emb.select(
-        F.col(id_col).cast("long").alias("id"),
-        as_double(vec_col).alias("v"),
-        F.explode(F.array(*bucket_cols)).alias("bucket"),
-    )
-    # dedup on PAIR IDENTITY, not (pair, sim): the same pair scored in
-    # two tables sits in differently-composed sub-matrices, and a
-    # last-ulp BLAS difference at a 4dp boundary could emit two sims —
-    # distinct() on all columns would then keep both rows
-    return (
-        _within_group_pairs(bucketed, threshold, block_rows, "bucket")
-        .dropDuplicates(["id_a", "id_b"])
     )
 
 

@@ -50,27 +50,6 @@ def distinct_sketches(
     )
 
 
-def merge_sketches(
-    sketches: DataFrame, group_cols: list[str]
-) -> DataFrame:
-    """Collapse an artifact table over the grouping you still care
-    about (e.g. drop the period column to union all periods): output
-    group_cols + ``distinct_estimate`` (+ summed n_rows). The rows
-    merged here are KB-sized sketches — this is the query that replaces
-    a full-history rescan."""
-    merged = sketches.groupBy(*group_cols).agg(
-        F.hll_union_agg("sketch").alias("sketch"),
-        F.sum("n_rows").alias("n_rows"),
-    )
-    return merged.select(
-        *group_cols,
-        F.hll_sketch_estimate("sketch").cast("bigint").alias(
-            "distinct_estimate"
-        ),
-        "n_rows",
-    )
-
-
 def upsert_sketches(
     existing: DataFrame | None,
     incoming: DataFrame,
@@ -112,10 +91,9 @@ def upsert_sketches(
 # salted-md5 position primitive as the Bloom gate
 # (membership.bloom_positions), so DuckDB re-derives the entire
 # counter table AND every estimate bit-for-bit — the strongest pin the
-# sketch family has. Counters ADD, so sketches merge exactly:
-# cms_merge(build(A), build(B)) == build(A UNION ALL B) row-for-row
-# (pinned), which makes per-period CMS artifacts fold like the HLL
-# ones and pair with sources/versioned.py history.
+# sketch family has. Counters ADD, so per-period CMS artifacts fold by
+# summing cells (the streaming census sink does) and pair with
+# sources/versioned.py history.
 #
 # Guarantees: estimate >= true count always (only hash collisions
 # inflate, never deflate — pinned against an exact census); overshoot
@@ -152,21 +130,6 @@ def cms_build(
     )
     return cells.groupBy(*group_cols, "d", "w").agg(
         F.count(F.lit(1)).alias("cnt")
-    )
-
-
-def cms_merge(
-    a: DataFrame, b: DataFrame, group_cols: list[str] | None = None
-) -> DataFrame:
-    """Fold two counter tables built with the same (depth, width,
-    salt): counters add, so this is EXACTLY build-of-union (pinned) —
-    use it as the upsert for per-period CMS artifacts (a fresh period
-    is just ``cms_merge(existing, incoming)``)."""
-    group_cols = list(group_cols or [])
-    return (
-        a.unionByName(b)
-        .groupBy(*group_cols, "d", "w")
-        .agg(F.sum("cnt").alias("cnt"))
     )
 
 
@@ -208,10 +171,9 @@ def cms_estimate(
 # default 8 bits), derived with INTEGER ops only (msb = length of the
 # binary string — no libm, no floats), so DuckDB re-derives the entire
 # bucket table AND every quantile answer bit-for-bit, the same
-# strongest-pin contract as the CMS. Counts ADD, so sketches merge
-# exactly: qsk_merge(build(A), build(B)) == build(A UNION ALL B)
-# row-for-row (pinned), making per-period quantile artifacts fold like
-# the HLL/CMS ones and pair with sources/versioned.py history.
+# strongest-pin contract as the CMS. Counts ADD, so per-period
+# quantile artifacts fold by summing buckets like the CMS ones and pair
+# with sources/versioned.py history.
 #
 # Contract: values are integer-valued measures (token counts, byte
 # sizes, latencies — cast to BIGINT; fixed-point-scale fractional
@@ -255,20 +217,6 @@ def qsk_build(
     return rows.select(
         *group_cols, _qsk_bucket(prec_bits).alias("qb")
     ).groupBy(*group_cols, "qb").agg(F.count(F.lit(1)).alias("cnt"))
-
-
-def qsk_merge(
-    a: DataFrame, b: DataFrame, group_cols: list[str] | None = None
-) -> DataFrame:
-    """Fold two bucket tables built with the same prec_bits: counts
-    add, so this is EXACTLY build-of-union (pinned) — the upsert for
-    per-period quantile artifacts."""
-    group_cols = list(group_cols or [])
-    return (
-        a.unionByName(b)
-        .groupBy(*group_cols, "qb")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
 
 
 def qsk_quantiles(

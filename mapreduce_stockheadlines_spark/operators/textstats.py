@@ -59,7 +59,12 @@ def marker_hits(text: Column | str, markers: tuple[str, ...]) -> Column:
 
 
 def _lang_id_cols(text_col: str) -> list[Column]:
-    """pred_lang + marker_score as raw column expressions."""
+    """Marker-word language ID as raw column expressions (pred_lang +
+    marker_score): score each language by marker hits, pick the argmax
+    (ties broken by language code ASC via the ordered CASE chain). A
+    real system would use char n-gram profiles; the *operator shape*
+    (per-doc scoring + deterministic argmax, all codegen) is the
+    contract."""
     scores = {lang: marker_hits(text_col, ms) for lang, ms in LANG_MARKERS.items()}
     best = None
     for lang in sorted(scores):  # asc language code = deterministic tiebreak
@@ -77,15 +82,6 @@ def _lang_id_cols(text_col: str) -> list[Column]:
         F.when(score > 0, pred).otherwise(F.lit("unknown")).alias("pred_lang"),
         score.cast("int").alias("marker_score"),
     ]
-
-
-def lang_id(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Marker-word language ID: score each language by marker hits, pick the
-    argmax (ties broken by language code ASC via the ordered CASE chain).
-    A real system would use char n-gram profiles; the *operator shape*
-    (per-doc scoring + deterministic argmax, all codegen) is the contract.
-    """
-    return df.select(id_col, *_lang_id_cols(text_col))
 
 
 _STOPWORD_REGEX = r"\b(" + "|".join(STOPWORDS) + r")\b"
@@ -278,28 +274,6 @@ def c4_rules_cols(
     ]
 
 
-def gopher_c4_filter(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    gopher: dict | None = None,
-    c4: dict | None = None,
-) -> DataFrame:
-    """Per-doc Gopher + C4 rule evaluation in ONE zero-shuffle
-    projection — the named-rule companion to the composite
-    ``quality_score`` gate. ``gopher``/``c4`` override the respective
-    rule set's thresholds by keyword. The word array and line count
-    are built once and shared by both rule sets (Spark does not CSE
-    HOF trees)."""
-    text = F.col(text_col) if isinstance(text_col, str) else text_col
-    base = _rule_base(text)
-    return df.select(
-        id_col,
-        *gopher_rules_cols(text_col, _base=base, **(gopher or {})),
-        *c4_rules_cols(text_col, _base=base, **(c4 or {})),
-    )
-
-
 def text_stats(
     df: DataFrame,
     id_col: str,
@@ -309,13 +283,15 @@ def text_stats(
     include_token_counts: bool = False,
     extra_cols: list[Column] | None = None,
 ) -> DataFrame:
-    """lang_id + quality_score (+ optionally fingerprint and raw
-    ws/BPE-ish token counts) fused into ONE projection over one scan.
+    """Marker-word language ID + quality_score (+ optionally the
+    whitespace-normalized md5 fingerprint and raw ws/BPE-ish token
+    counts) fused into ONE projection over one scan.
 
     All components are pure column expressions, so computing them together
-    costs a single pass with zero shuffle; the naive formulation —
-    ``lang_id(df).join(quality_score(df), id)`` — scans the table twice
-    and hash-shuffles both sides for the join, for identical output.
+    costs a single pass with zero shuffle; the naive formulation — a
+    language-ID projection joined to ``quality_score(df)`` on id — scans
+    the table twice and hash-shuffles both sides for the join, for
+    identical output.
 
     ``extra_cols``: additional aliased column expressions to fuse into
     the same projection — the extension point for callers adding more
@@ -343,40 +319,6 @@ def fingerprint_cols(text_col: str) -> list[Column]:
         F.substring(fp, 1, 8).alias("fp8"),
         F.length(norm).cast("bigint").alias("norm_len"),
     ]
-
-
-def fingerprint(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Document fingerprint: md5 of whitespace-normalized lowercase text
-    (stable under reflow), plus an 8-hex-char short key for banding."""
-    return df.select(id_col, *fingerprint_cols(text_col))
-
-
-def char_entropy_col(text_col, alias: str = "char_entropy_fp6") -> Column:
-    """Shannon entropy of the lowercased character distribution, in
-    1e-6-nat fixed point (BIGINT): ``-Σ_c round(10⁶ · p_c · ln p_c)``
-    over the doc's distinct characters, ``p_c = n_c / n``. The classic
-    cheap junk detector the length/punct/stopword trio misses both
-    tails of: looping/repetitive text compresses the distribution
-    (low entropy), encrypted/base64/random noise flattens it (high) —
-    normal prose sits in a stable band (~2.8-3.1 nats for English).
-
-    Cross-engine contract: counts are integers, ``p`` is one DOUBLE
-    divide, and each term is rounded to fixed point BEFORE the sum, so
-    the sum is an exact order-free integer fold (summation order
-    differs between Spark's first-occurrence array_distinct walk and
-    DuckDB's group-by — a float sum would flip last digits). ln's
-    libm last-ulp divergence cannot move a 1e-6 rounding except within
-    ~1e-19 of a boundary (the x29 js_contrib argument). Empty/NULL
-    docs are NULL (no distribution — the loud-null convention).
-
-    Scalar codegen (split/array_sort/aggregate) — the per-doc cost is
-    O(n log n) and alphabet-independent: one sort, one run-length fold.
-    Hosts embedding this in a wide projection should use
-    ``char_array_col`` + ``char_entropy_from_chars`` and stage the char
-    array through a bound column (the winnow_gram_col lesson — the
-    fused form re-split the array once per alphabet symbol, a measured
-    12.2→8.2 s difference on the x08 bench line)."""
-    return char_entropy_from_chars(char_array_col(text_col), alias)
 
 
 def char_array_col(text_col) -> Column:
@@ -451,11 +393,6 @@ def char_entropy_from_chars(
         lambda acc: acc["acc"] + flush(acc),
     )
     return F.when(n > 0, -ent).alias(alias)
-
-
-def char_entropy(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, char_entropy_fp6) — the operator form of the column."""
-    return df.select(id_col, char_entropy_col(text_col))
 
 
 # Winnowing (Schleimer/Wilkerson/Aiken SIGMOD'03 — the MOSS algorithm):
@@ -597,24 +534,6 @@ def winnow_cols_from(sel_col) -> tuple[Column, Column]:
         ),
     ).alias("winnow_fp8")
     return n_col, fp
-
-
-def winnow_fingerprint_summary(
-    df: DataFrame, id_col: str, text_col: str, k: int = 5, w: int = 4
-) -> DataFrame:
-    """(id, n_winnow, winnow_fp8) — the staged composition of the
-    column builders above (norm -> chars -> grams -> selection, every
-    stage a bound column; the round-12 staged-chars fast path)."""
-    return (
-        df.select(
-            F.col(id_col).alias("id"),
-            _winnow_norm(F.col(text_col)).alias("_wn"),
-        )
-        .select("id", winnow_char_col("_wn").alias("_wc"))
-        .select("id", winnow_gram_from_chars("_wc", k).alias("_wg"))
-        .select("id", winnow_sel_col("_wg", w).alias("_ws"))
-        .select("id", *winnow_cols_from("_ws"))
-    )
 
 
 def winnow_fingerprints(

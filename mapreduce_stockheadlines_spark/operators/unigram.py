@@ -369,26 +369,19 @@ def unigram_piece_id_map(model: dict[str, int]) -> dict[str, int]:
     return {p: i + 1 for i, p in enumerate(singles + multis)}
 
 
-def unigram_vocabulary(spark, model: dict[str, int]) -> DataFrame:
-    """``unigram_piece_id_map`` as a (piece, piece_id, logp_fp) frame —
-    the persistable artifact form."""
+def save_unigram(spark, model: dict[str, int], path: str) -> None:
+    """Persist a trained unigram table as a parquet artifact (the
+    ``save_bpe`` deployment shape: train once, encode many corpora):
+    ``<path>/pieces`` carries (piece, piece_id, logp_fp), the
+    ``unigram_piece_id_map`` ids in id order."""
     ids = unigram_piece_id_map(model)
-    return spark.createDataFrame(
+    spark.createDataFrame(
         sorted(
             ((p, i, model[p]) for p, i in ids.items()),
             key=lambda row: row[1],
         ),
         "piece string, piece_id int, logp_fp long",
-    )
-
-
-def save_unigram(spark, model: dict[str, int], path: str) -> None:
-    """Persist a trained unigram table as a parquet artifact (the
-    ``save_bpe`` deployment shape: train once, encode many corpora):
-    ``<path>/pieces`` carries (piece, piece_id, logp_fp)."""
-    unigram_vocabulary(spark, model).write.mode("overwrite").parquet(
-        f"{path}/pieces"
-    )
+    ).write.mode("overwrite").parquet(f"{path}/pieces")
 
 
 def load_unigram(spark, path: str) -> dict[str, int]:

@@ -17,6 +17,7 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions.text import STOPWORDS
 from ..operators import dedup as D
@@ -30,6 +31,7 @@ from ..operators import similarity as S
 from ..operators import packing as PK
 from ..operators import skew as SK
 from ..operators import textstats as TS
+from ..session import local_frame
 from .catalog import parallel_table, table
 from .core import QuerySpec
 
@@ -731,7 +733,7 @@ def x08_text_stats(
     docs = parallel_table(spark, sf, "documents")
     # round-10 zero-slot promotion: SENTENCE chunking
     # (operators/packing.chunk_by_sentences semantics as a scalar
-    # aggregate fold — sentence_chunk_summary_cols). The corpus text
+    # aggregate fold — sentence_chunk_fold_col). The corpus text
     # carries no sentence terminators at any shipped SF, so the chunk
     # source is DECORATED: a period after every 5th word (varying
     # per-doc sentence structure) plus a fixed suffix exercising every
@@ -813,7 +815,7 @@ def x08_text_stats(
     # source (see above) — projected from the ONE staged fold (_schunk)
     sent_chunk_cols = [*PK.sentence_chunk_cols_from(F.col("_schunk"))]
     # round-10 zero-slot promotion #4: character-distribution Shannon
-    # entropy (textstats.char_entropy_col — exact fixed-point fold)
+    # entropy (textstats.char_entropy_from_chars — exact fixed-point fold)
     entropy_cols = [TS.char_entropy_from_chars(F.col("_wchars"))]
     # round-10 zero-slot promotion #3: winnowing fingerprints
     # (Schleimer et al. 2003 — rolling k-gram hashes -> window minima,
@@ -1084,7 +1086,7 @@ FROM documents d LEFT JOIN sf_ USING (doc_id)
 
 # char-entropy replay: per-doc char census of the lowercased text,
 # p = count/total as DOUBLE, each term rounded to 1e-6-nat fixed point
-# BEFORE the sum (order-free integer fold — see char_entropy_col)
+# BEFORE the sum (order-free integer fold — see char_entropy_from_chars)
 _X08_ENTROPY_BODY = """
 WITH ch AS (
   SELECT doc_id, unnest(string_split(lower(text), '')) AS c
@@ -1124,7 +1126,7 @@ def _cdc_sql_ctes(
     max_steps: int = 64,
 ) -> str:
     """Unrolled greedy CDC walk over the shared winnow gram CTE
-    (``wgr`` — packing.cdc_cut_cols_from's contract): cut candidates
+    (``wgr`` — packing.cdc_cuts_col's contract): cut candidates
     where ``hash % divisor == rem``, then ``max_steps`` plain CTE steps
     each accepting the smallest candidate >= previous cut + min_size.
     Greedy min-gap selection has no closed window form, recursive CTEs
@@ -1663,7 +1665,7 @@ def x13_multimodal_pipeline(
     # ONE decode of each planted tone family (round 13 — VERDICT r12
     # #7, guide §4): the baseline plan synthesized + decoded the SAME
     # wav bytes in four Arrow passes (decode_media for the time-domain
-    # columns, audio_spectral_features, audio_phash for the output
+    # columns, the spectral features, audio_phash for the output
     # columns, audio_phash again for the banding input) and the twin in
     # two. audio_profile emits all three families from one decode;
     # localCheckpoint (tiny: one row per media) lets the output chain
@@ -1681,7 +1683,7 @@ def x13_multimodal_pipeline(
     # round-11 zero-slot promotion (VERDICT r10 #4): the near-dup
     # BANDING path itself — each planted row's REAL pigeonhole band
     # join + popcount verify (dedup.simhash_neardup_pairs, the exact
-    # machinery image/audio_neardup_pairs run) against its twin at
+    # machinery image_neardup_pairs runs) against its twin at
     # id+1000. Audio: the twin is the half-volume (phash-identical) or
     # k-shifted (hamming >= 9 over all 200 ids — measured, margin 5
     # over the max_hamming=4 verify) tone, so the oracle's closed form
@@ -2606,9 +2608,9 @@ _X17_BUCKET = " + ".join(
     for i, p in enumerate(S._hyperplanes(64, 6))
 )
 
-# the multi-table recall knob's SECOND table (lsh_bucketed_pairs_multi
-# seeds table t with 42 + 1000*t) — its sign buckets are pinned as the
-# x17 `same_bucket_t2` column (round-7 zero-slot promotion)
+# a SECOND hyperplane table (seed 1042, the multi-table LSH recall knob:
+# table t seeded 42 + 1000*t) — its sign buckets are pinned as the x17
+# `same_bucket_t2` column (round-7 zero-slot promotion)
 _X17_BUCKET_T2 = " + ".join(
     f"(CASE WHEN round(list_dot_product(v, {_plane_literal(p)}), 4) > 0"
     f" THEN {1 << i} ELSE 0 END)"
@@ -2633,9 +2635,8 @@ def x17_lsh_bucketed_neardup(spark: SparkSession, sf: str) -> DataFrame:
     block-decomposed exact cosine verify).
 
     Round-7 zero-slot promotion: ``same_bucket_t2`` — whether the pair
-    ALSO collides in ``lsh_bucketed_pairs_multi``'s second table
-    (seed-varied hyperplanes, the multi-table recall knob, previously
-    pytest-only) — pins the second table's sign computation
+    ALSO collides in a second, seed-varied hyperplane table (the
+    multi-table LSH recall knob) — pins the second table's sign computation
     cross-engine: both engines evaluate the seed-1042 plane dots on the
     same inlined literals and compare the 6-bit bucket keys."""
     emb = table(spark, sf, "embeddings")
@@ -2927,8 +2928,10 @@ def x24_url_curation(
             F.lit("")
         ),
     )
-    blocklist = spark.createDataFrame(
-        [(d,) for d in _X24_BLOCKLIST], ["domain"]
+    blocklist = local_frame(
+        spark,
+        [(d,) for d in _X24_BLOCKLIST],
+        T.StructType([T.StructField("domain", T.StringType())]),
     )
     # ONE extraction subtree (round 13 — VERDICT r12 #4, guide §2.4).
     # url_stats (the URL regex + host + PSL registered-domain pipeline)
@@ -2981,13 +2984,17 @@ def x24_url_curation(
             F.lit("https://"), rdom, _x24_robots_path(did)
         ).alias("rurl"),
     )
-    robots_pub = spark.createDataFrame(
+    robots_pub = local_frame(
+        spark,
         [
             (f"newshub{k}.com", _x24_robots_body(k))
             for k in range(13)
             if _x24_robots_body(k) is not None
         ],
-        ["domain", "robots_txt"],
+        T.StructType([
+            T.StructField("domain", T.StringType()),
+            T.StructField("robots_txt", T.StringType()),
+        ]),
     )
     rallow = RB.filter_robots_disallowed(
         rfront,
@@ -3732,8 +3739,14 @@ def x27_quantize_embeddings(
             )
             for m in range(len(q0))
         ]
-        om = spark.createDataFrame(
-            om_rows, "m64o int, opq_xmom_ii double, opq_xmom_ij double"
+        om = local_frame(
+            spark,
+            om_rows,
+            T.StructType([
+                T.StructField("m64o", T.IntegerType()),
+                T.StructField("opq_xmom_ii", T.DoubleType()),
+                T.StructField("opq_xmom_ij", T.DoubleType()),
+            ]),
         )
         _mark(_stage_secs, "opq_moment", t0)
         return pqe, om
@@ -3742,7 +3755,7 @@ def x27_quantize_embeddings(
     # rotated-codes path under a FIXED exact Givens rotation (contract
     # + cross-engine argument at _x27_opq_serve_ctes): rotate_vectors →
     # 9dp coordinate quantization → pq_train → pq_encode against the
-    # rotated query — the opq_encode composition, with the REAL
+    # rotated query — the OPQ serving composition, with the REAL
     # operators end-to-end. The rotated query is read back from the
     # quantized frame itself so both engines consume the identically
     # rounded values.
@@ -3771,7 +3784,7 @@ def x27_quantize_embeddings(
         _mark(_stage_secs, "opq_serve", t0)
         return oenc
     # Matryoshka prefix serving (round-9 zero-slot promotion —
-    # operators/embeddings.truncate_dims + fixed_query_cosine, Kusupati
+    # prefix slices + operators/embeddings.fixed_query_cosine, Kusupati
     # et al. 2022): every row carries mrl_sim_d16 (4dp cosine of the
     # 16-dim PREFIXES vs the same fixed query — pure codegen HOFs, the
     # 4x-cheaper-scan serving path) and mrl_rank_d16 (its global rank
@@ -3865,9 +3878,15 @@ def x27_quantize_embeddings(
             )
             for m in range(len(mean))
         ]
-        pm = spark.createDataFrame(
+        pm = local_frame(
+            spark,
             pm_rows,
-            "m64 int, pca_mean_i double, pca_var_i double, pca_cov_ij double",
+            T.StructType([
+                T.StructField("m64", T.IntegerType()),
+                T.StructField("pca_mean_i", T.DoubleType()),
+                T.StructField("pca_var_i", T.DoubleType()),
+                T.StructField("pca_cov_ij", T.DoubleType()),
+            ]),
         )
         _mark(_stage_secs, "pca_moments", t0)
         return pm
@@ -3906,11 +3925,11 @@ def x27_quantize_embeddings(
 def _x27_opq_serve_ctes() -> str:
     """OPQ SERVING under the oracle (round-10 — VERDICT r9 #5): the
     rotated-codes path (operators/pq.rotate_vectors → pq_train →
-    pq_encode — the ``opq_encode`` composition, pinned equal to it in
-    tests/test_pq.py) cross-engine under a FIXED exact Givens rotation:
-    cos 0.6 / sin 0.8 between dims (1, 17) — one dim from each of the
-    first two SUBSPACES, because a within-subspace rotation is an
-    isometry of every Lloyd distance (seeds rotate with the data) and
+    pq_encode — the OPQ serving composition) cross-engine under a
+    FIXED exact Givens rotation: cos 0.6 / sin 0.8 between dims
+    (1, 17) — one dim from each of the first two SUBSPACES, because a
+    within-subspace rotation is an isometry of every Lloyd distance
+    (seeds rotate with the data) and
     would leave the codes bit-identical to the plain-PQ twins, pinning
     nothing new (measured, round 10) — identity elsewhere. '0.6' and
     '0.8' parse to identical doubles in numpy and DuckDB, and the

@@ -47,9 +47,8 @@ def get_spark(
         # inherited from the Spark version's default): with the stock
         # production thresholds (creation side <= 10MB, probe scan >=
         # 10GB) it only fires where it pays — the 100 TB fact ⋈
-        # filtered-dim case — and never on test-scale data, so callers
-        # need not remember enable_runtime_filtering (which remains the
-        # threshold-tuning hook; plan shape pinned in tests/test_plans.py).
+        # filtered-dim case — and never on test-scale data (plan shape
+        # pinned under tiny thresholds in tests/test_plans.py).
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
@@ -80,39 +79,6 @@ def local_frame(spark: SparkSession, rows, schema: T.StructType) -> DataFrame:
         [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
     )
     return spark.createDataFrame(table, schema)
-
-
-def enable_runtime_filtering(
-    spark: SparkSession,
-    creation_side_threshold: str = "10MB",
-    application_side_threshold: str = "10GB",
-) -> SparkSession:
-    """Turn on Catalyst's runtime bloom-filter join pruning and set its
-    size gates.
-
-    For a shuffle join where one side carries a selective filter, the
-    optimizer injects ``bloom_filter_agg`` over the filtered side's join
-    keys and a ``might_contain`` probe into the OTHER side's scan — rows
-    that cannot match are dropped BEFORE the big side is shuffled. On a
-    100 TB fact table joined to a filtered dimension too large to
-    broadcast, this is the difference between shuffling the whole fact
-    table and shuffling the ~matching fraction.
-
-    Spark's defaults only fire when the probe side's scan exceeds
-    ``application_side_threshold`` (10 GB) — correct at scale, never on
-    test data — so tests pass tiny thresholds to pin the plan shape
-    (tests/test_plans.py) while production keeps the defaults.
-    """
-    spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-    spark.conf.set(
-        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
-        creation_side_threshold,
-    )
-    spark.conf.set(
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-        application_side_threshold,
-    )
-    return spark
 
 
 def apply_runtime_conf(spark: SparkSession) -> SparkSession:

@@ -95,10 +95,6 @@ def read_csv_proper(
     return reader.csv(path)
 
 
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
 def read_json(spark: SparkSession, path: str,
               schema: T.StructType | None = None) -> DataFrame:
     reader = spark.read

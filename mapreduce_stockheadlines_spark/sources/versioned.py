@@ -1,6 +1,6 @@
 """Versioned tables: snapshot isolation over plain parquet via an atomic
-version pointer — the minimal lakehouse layer (time travel, rollback,
-safe concurrent readers) without a table-format dependency.
+version pointer — the minimal lakehouse layer (time travel, safe
+concurrent readers) without a table-format dependency.
 
 Layout: ``<table>/v=N/`` holds each immutable snapshot's parquet;
 ``<table>/_LATEST`` (one integer) names the committed version. The
@@ -15,10 +15,10 @@ parquet lacks (a reader racing an overwrite sees missing/mixed files).
 Underscore-prefixed files are invisible to Spark's parquet discovery, so
 the pointer never pollutes a directory listing read.
 
-The write path composes with the rest of the engine: ``merge.merge_upsert``
-output or ``sinks.compact_parquet`` output written as version N+1, then
-readers flip atomically; failed writes leave an orphaned ``v=N`` dir that
-no pointer references — invisible, re-writable, cleaned by ``vacuum``.
+The streaming artifact sinks (``streaming/ingest.py``) write each
+folded artifact as version N+1, then readers flip atomically; failed
+writes leave an orphaned ``v=N`` dir that no pointer references —
+invisible and re-writable.
 
 No reference counterpart (§2.2 incremental-maintenance surface).
 """
@@ -101,7 +101,7 @@ def _reclaim_stale_claim(
         mtime_ms = fs.getFileStatus(claim).getModificationTime()
     except Exception:
         # claim vanished between our failed create and here (another
-        # reclaimer won and committed, or rollback cleared it) — retry
+        # reclaimer won and committed) — retry
         # the create below; it arbitrates.
         mtime_ms = None
     if mtime_ms is not None:
@@ -132,10 +132,9 @@ def write_table_version(
     """Write ``df`` as the table's next immutable snapshot and publish
     it: data lands in ``v=N`` FIRST, the pointer flips LAST (temp file +
     rename), so a crash mid-write leaves the previous version intact
-    and referenced. Returns the committed version number (1-based).
-    N is ``committed + 1`` — a write AFTER a rollback overwrites the
-    rolled-back-away snapshot (git-reset-then-commit semantics: the
-    orphaned lineage is discarded, not preserved alongside).
+    and referenced. Returns the committed version number (1-based),
+    ``committed + 1``: an orphaned ``v=N`` dir above the pointer is
+    overwritten, never published.
 
     ``reclaim_stale_after_s`` bounds the blast radius of a writer that
     crashed BETWEEN claiming ``_claim_vN`` and publishing the pointer:
@@ -157,8 +156,7 @@ def write_table_version(
     # an overwrite=False create before touching data — two writers that
     # both read pointer N race to claim N+1 and exactly one wins; the
     # loser fails HERE instead of both overwriting one snapshot dir and
-    # committing a torn mix. rollback() clears claims above its target
-    # so write-after-rollback can legitimately re-claim the slot.
+    # committing a torn mix.
     claim = jvm.org.apache.hadoop.fs.Path(f"{table_dir}/_claim_v{version}")
     try:
         fs.create(claim, False).close()
@@ -186,68 +184,3 @@ def read_table(
     if v is None:
         raise FileNotFoundError(f"no committed version at {table_dir}")
     return spark.read.parquet(f"{table_dir}/v={v}")
-
-
-def table_versions(spark: SparkSession, table_dir: str) -> list[int]:
-    """All snapshot versions present on disk (committed or orphaned),
-    ascending; the committed one is ``_read_pointer``'s answer."""
-    fs, jvm = _fs(spark, table_dir)
-    p = jvm.org.apache.hadoop.fs.Path(table_dir)
-    if not fs.exists(p):
-        return []
-    out = []
-    for status in fs.listStatus(p):
-        name = status.getPath().getName()
-        if name.startswith("v="):
-            out.append(int(name[2:]))
-    return sorted(out)
-
-
-def rollback(spark: SparkSession, table_dir: str, version: int) -> None:
-    """Point the table back at an older COMMITTED snapshot (the data is
-    immutable, so rollback is a pointer flip). Only versions on the
-    committed lineage (<= the current pointer) are accepted: a ``v=``
-    dir ABOVE the pointer is an orphan — possibly the partial output of
-    a crashed write — and publishing it would commit torn data. Claims
-    above the target are cleared so the next write can re-use the
-    slot."""
-    fs, jvm = _fs(spark, table_dir)
-    committed = _read_pointer(spark, table_dir)
-    if committed is None or version > committed:
-        raise ValueError(
-            f"version {version} was never committed at {table_dir} "
-            f"(pointer: {committed}) — refusing to publish an orphan"
-        )
-    if version not in table_versions(spark, table_dir):
-        raise ValueError(f"version {version} does not exist at {table_dir}")
-    _publish_pointer(fs, jvm, table_dir, version)
-    for status in fs.listStatus(jvm.org.apache.hadoop.fs.Path(table_dir)):
-        name = status.getPath().getName()
-        if name.startswith("_claim_v") and int(name[8:]) > version:
-            fs.delete(status.getPath(), False)
-
-
-def vacuum(spark: SparkSession, table_dir: str, keep_last: int = 2) -> list[int]:
-    """Delete snapshot dirs older than the ``keep_last`` most recent
-    COMMITTED-or-newer versions, never the committed one — reclaims the
-    space immutable snapshots accumulate. Returns the versions removed.
-    Readers pinned (by ``read_table(version=...)``) to a vacuumed
-    version fail on next access — the standard retention trade-off;
-    size ``keep_last`` to the longest reader lifetime."""
-    if keep_last < 1:
-        raise ValueError("vacuum: keep_last must be >= 1")
-    committed = _read_pointer(spark, table_dir)
-    versions = table_versions(spark, table_dir)
-    keep = set(versions[-keep_last:])
-    if committed is not None:
-        keep.add(committed)
-    fs, jvm = _fs(spark, table_dir)
-    removed = []
-    for v in versions:
-        if v not in keep:
-            fs.delete(jvm.org.apache.hadoop.fs.Path(f"{table_dir}/v={v}"), True)
-            claim = jvm.org.apache.hadoop.fs.Path(f"{table_dir}/_claim_v{v}")
-            if fs.exists(claim):
-                fs.delete(claim, False)
-            removed.append(v)
-    return removed

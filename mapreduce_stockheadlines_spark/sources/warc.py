@@ -5,8 +5,7 @@ Web-scale training corpora start life as WARC: Common Crawl publishes
 ~1 GB ``.warc.gz`` / ``.wet.gz`` segments by the tens of thousands.
 Spark has no built-in WARC reader, and the format is not
 line-delimited, so ``spark.read.text`` cannot frame it; the Python
-DataSource API is the idiomatic extension point (same slot as
-``sources/pysource.py``'s feed connector).
+DataSource API is the idiomatic extension point.
 
 Scale design (100 TB): parallelism is planned at FILE granularity —
 one ``InputPartition`` per WARC file. Gzipped WARCs are not
@@ -367,7 +366,7 @@ class WarcStreamReader(DataSourceStreamReader):
 
     def partitions(self, start: dict, end: dict) -> list[InputPartition]:
         lo, hi = start.get("upto", ""), end.get("upto", "")
-        # restart recovery (same protocol note as pysource): planning is
+        # restart recovery: planning is
         # the first call that shows a fresh reader the checkpointed
         # offsets — adopt BOTH ends. After a clean-shutdown restart the
         # first latestOffset() runs before any adoption and can emit a

@@ -154,15 +154,13 @@ def test_word_census_matches_duckdb(spark, sf_dir):
 
 
 def test_bpe_vocabulary_layout(spark):
-    vocab = B.bpe_vocabulary(spark, [("a", "b"), ("ab", EOW)], ["a", "b", EOW])
-    rows = {r["piece"]: r["piece_id"] for r in vocab.collect()}
+    rows = B.piece_id_map([("a", "b"), ("ab", EOW)], ["a", "b", EOW])
     # alphabet first (sorted order as given), merges appended in order
     assert rows == {"a": 1, "b": 2, EOW: 3, "ab": 4, "ab" + EOW: 5}
 
 
 def test_bpe_vocabulary_dedups_repeated_pieces(spark):
-    vocab = B.bpe_vocabulary(spark, [("a", "b")], ["a", "b", "ab"])
-    rows = {r["piece"]: r["piece_id"] for r in vocab.collect()}
+    rows = B.piece_id_map([("a", "b")], ["a", "b", "ab"])
     assert rows == {"a": 1, "b": 2, "ab": 3}  # merge result keeps first id
 
 
@@ -188,10 +186,7 @@ def test_apply_bpe_matches_per_doc_reference(spark):
 def test_apply_bpe_emits_ids_under_vocabulary(spark):
     df = spark.createDataFrame(CORPUS, ["doc_id", "text"])
     merges, alphabet = B.train_bpe(df, "text", 12)
-    ids = {
-        r["piece"]: r["piece_id"]
-        for r in B.bpe_vocabulary(spark, merges, alphabet).collect()
-    }
+    ids = B.piece_id_map(merges, alphabet)
     out = {
         r["doc_id"]: r
         for r in B.apply_bpe(

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import math
 
+import media_fixtures as MF
 import pytest
 
 from pyspark.sql import functions as F
@@ -311,7 +312,8 @@ def test_fingerprint_whitespace_invariant(spark):
     df = spark.createDataFrame(
         [(0, "a  b\tc"), (1, "a b c"), (2, "a b d")], ["doc_id", "text"]
     )
-    rows = {r.doc_id: r.fp for r in TS.fingerprint(df, "doc_id", "text").collect()}
+    fp = df.select("doc_id", *TS.fingerprint_cols("text"))
+    rows = {r.doc_id: r.fp for r in fp.collect()}
     assert rows[0] == rows[1]
     assert rows[0] != rows[2]
 
@@ -416,7 +418,7 @@ def test_multimodal_real_png_decode(spark):
     px = rng.integers(0, 256, (9, 7, 3), dtype=np.uint8)
     # encoder round-trips under filter None and filter Sub
     for ft in (0, 1):
-        assert (M._decode_png(M._encode_png(px, filter_type=ft)) == px).all()
+        assert (M._decode_png(MF.encode_png(px, filter_type=ft)) == px).all()
 
     # hand-filtered stream exercising Up / Average / Paeth reversal
     h, w, ch = 4, 5, 3
@@ -470,7 +472,7 @@ def test_multimodal_real_png_decode(spark):
 
     # full Spark path: known dims + features, strict mode (no stub hit)
     df = spark.createDataFrame(
-        [(1, bytearray(M._encode_png(px)), M.MIME_PNG)], schema=M.MEDIA_SCHEMA
+        [(1, bytearray(MF.encode_png(px)), M.MIME_PNG)], schema=M.MEDIA_SCHEMA
     )
     r = M.decode_media(df, strict=True).collect()[0]
     assert (r.width, r.height, r.n_frames) == (7, 9, 1)
@@ -481,7 +483,7 @@ def test_multimodal_real_png_decode(spark):
     big = rng.integers(0, 256, (40, 40, 3), dtype=np.uint8)
     hdf = spark.createDataFrame(
         [
-            (1, bytearray(M._encode_png(big, filter_type=1)), M.MIME_PNG),
+            (1, bytearray(MF.encode_png(big, filter_type=1)), M.MIME_PNG),
             (2, bytearray(_bmp_bytes(big)), M.MIME_BMP),
         ],
         schema=M.MEDIA_SCHEMA,
@@ -526,7 +528,7 @@ def test_multimodal_real_png_decode(spark):
     plt = np.array([[250, 10, 10], [10, 250, 10], [10, 10, 250],
                     [200, 200, 200]], np.uint8)
     idx = np.array([[0, 1, 2, 3], [3, 2, 1, 0], [1, 1, 2, 2]], np.uint8)
-    good = M._encode_png(idx, color_type=3, depth=2, palette=plt,
+    good = MF.encode_png(idx, color_type=3, depth=2, palette=plt,
                          interlace=True)
     assert np.array_equal(M._decode_png(good), plt[idx])
     gdf = spark.createDataFrame(
@@ -537,39 +539,6 @@ def test_multimodal_real_png_decode(spark):
     assert r.feature == pytest.approx(
         M._pixel_feature(plt[idx]), rel=1e-6
     )
-
-
-def test_multimodal_detect_mime_and_sniffed_decode(spark):
-    """Magic-byte sniffing routes blobs to the right decode tier: a PPM
-    with no declared mime decodes for real once detect_mime labels it;
-    PNG/JPEG magic is recognized (the truncated PNG and the garbage
-    JPEG fall back to the digest stub); junk falls back to
-    octet-stream."""
-    import numpy as np
-
-    px = np.full((2, 2, 3), 7, np.uint8)
-    ppm = M._encode_ppm_p6(px)
-    rows = [
-        (1, bytearray(ppm)),
-        (2, bytearray(b"\x89PNG\r\n\x1a\n rest")),
-        (3, bytearray(b"\xff\xd8\xff\xe0 jfif")),
-        (4, bytearray(b"just some text")),
-    ]
-    df = spark.createDataFrame(rows, "media_id long, content binary")
-    sniffed = df.withColumn("mime", M.detect_mime("content"))
-    got = {r.media_id: r.mime for r in sniffed.collect()}
-    assert got == {
-        1: M.MIME_PPM,
-        2: "image/png",
-        3: "image/jpeg",
-        4: "application/octet-stream",
-    }
-    import pytest
-
-    decoded = {r.media_id: r for r in M.decode_media(sniffed).collect()}
-    assert (decoded[1].width, decoded[1].height) == (2, 2)  # real decode
-    assert decoded[1].feature == pytest.approx(M._pixel_feature(px), rel=1e-6)
-    assert decoded[2].n_frames >= 1  # stub tier still works
 
 
 def test_multimodal_real_jpeg_decode(spark):
@@ -595,11 +564,11 @@ def test_multimodal_real_jpeg_decode(spark):
 
     # round-trip bounds: flat exact, smooth within quantization error
     flat = np.full((24, 24, 3), [200, 30, 90], dtype=np.uint8)
-    assert (M._decode_jpeg(M._encode_jpeg(flat, quality=90)) == flat).all()
+    assert (M._decode_jpeg(MF.encode_jpeg(flat, quality=90)) == flat).all()
     for sub, bound in (("444", 4), ("420", 8)):
         for ri in (0, 3):
             out = M._decode_jpeg(
-                M._encode_jpeg(smooth, quality=92, subsample=sub,
+                MF.encode_jpeg(smooth, quality=92, subsample=sub,
                                restart_interval=ri)
             )
             assert out.shape == smooth.shape
@@ -616,8 +585,8 @@ def test_multimodal_real_jpeg_decode(spark):
         b"\xff\xd8"
         + _seg(0xDB, b"\x00" + bytes([1] * 64))
         + _seg(0xC0, _struct.pack(">BHHB", 8, 8, 8, 1) + bytes([1, 0x11, 0]))
-        + _seg(0xC4, b"\x00" + M._JPEG_ENC_DC_DHT)
-        + _seg(0xC4, b"\x10" + M._JPEG_ENC_AC_DHT)
+        + _seg(0xC4, b"\x00" + MF._JPEG_ENC_DC_DHT)
+        + _seg(0xC4, b"\x10" + MF._JPEG_ENC_AC_DHT)
         + _seg(0xDA, bytes([1, 1, 0x00, 0, 63, 0]))
         + b"\x00\x0f"
         + b"\xff\xd9"
@@ -627,7 +596,7 @@ def test_multimodal_real_jpeg_decode(spark):
 
     # full Spark path, strict mode (no stub hit): dims + features match
     # a driver-side decode of the same blob
-    blob = M._encode_jpeg(smooth, quality=95)
+    blob = MF.encode_jpeg(smooth, quality=95)
     df = spark.createDataFrame(
         [(1, bytearray(blob), "image/jpeg")], schema=M.MEDIA_SCHEMA
     )
@@ -658,8 +627,8 @@ def test_multimodal_real_jpeg_decode(spark):
     ).astype(np.uint8)
     hdf = spark.createDataFrame(
         [
-            (1, bytearray(M._encode_jpeg(wavy, quality=95)), "image/jpeg"),
-            (2, bytearray(M._encode_png(wavy)), M.MIME_PNG),
+            (1, bytearray(MF.encode_jpeg(wavy, quality=95)), "image/jpeg"),
+            (2, bytearray(MF.encode_png(wavy)), M.MIME_PNG),
         ],
         schema=M.MEDIA_SCHEMA,
     )
@@ -676,7 +645,7 @@ def test_multimodal_real_jpeg_decode(spark):
         b"\xff\xd8"
         + _seg(0xDB, b"\x00" + bytes([1] * 64))
         + _seg(0xC0, _struct.pack(">BHHB", 8, 8, 8, 1) + bytes([1, 0x11, 0]))
-        + _seg(0xC4, b"\x00" + M._JPEG_ENC_DC_DHT)
+        + _seg(0xC4, b"\x00" + MF._JPEG_ENC_DC_DHT)
         + _seg(0xDA, bytes([1, 1]))
     )
     with pytest.raises(ValueError, match="malformed JPEG"):
@@ -712,9 +681,9 @@ def test_multimodal_real_jpeg_decode(spark):
     # EXACT pixels the independently-tested baseline path produces for
     # the same image/quality/subsampling — and decode_media routes it
     # through the real tier (sniffed mime is plain image/jpeg)
-    prog_blob = M._encode_jpeg_progressive(smooth, quality=85,
+    prog_blob = MF.encode_jpeg_progressive(smooth, quality=85,
                                            subsample="420")
-    base_px = M._decode_jpeg(M._encode_jpeg(smooth, quality=85,
+    base_px = M._decode_jpeg(MF.encode_jpeg(smooth, quality=85,
                                             subsample="420"))
     assert np.array_equal(M._decode_jpeg(prog_blob), base_px)
     pdf2 = spark.createDataFrame(
@@ -1186,26 +1155,6 @@ def test_edit_distance_pairs_values(spark):
     assert [(r.id_a, r.id_b) for r in capped] == [(0, 2)]
 
 
-def test_incremental_dedup(spark):
-    day1 = spark.createDataFrame(
-        [(1, "alpha"), (2, "beta"), (3, "alpha")], ["doc_id", "text"]
-    )
-    survivors1, index1 = D.incremental_dedup(day1, None, "doc_id", "text")
-    assert sorted(r.doc_id for r in survivors1.collect()) == [1, 2]
-    assert index1.count() == 2
-
-    day2 = spark.createDataFrame(
-        [(4, "alpha"), (5, "gamma"), (6, "gamma")], ["doc_id", "text"]
-    )
-    survivors2, index2 = D.incremental_dedup(day2, index1, "doc_id", "text")
-    # 'alpha' already seen on day 1; within-batch 'gamma' dedups to min id
-    assert sorted(r.doc_id for r in survivors2.collect()) == [5]
-    assert index2.count() == 3
-    # replay of the same batch against the updated index yields nothing
-    survivors3, _ = D.incremental_dedup(day2, index2, "doc_id", "text")
-    assert survivors3.count() == 0
-
-
 def test_line_dedup_removes_cross_doc_boilerplate(spark):
     """Lines shared across >1 doc vanish from every doc; unique lines and
     short exempt lines survive in original order. DuckDB-pinned."""
@@ -1558,37 +1507,6 @@ def test_quantization_is_shuffle_free(spark):
     assert "Exchange" not in buf.getvalue()
 
 
-def test_dequantize_feeds_cosine_rescore(spark):
-    """Dequantized int8 vectors keep cosine structure: the quantized
-    corpus ranks neighbors the same as the float corpus on a spread-out
-    toy set (the two-phase ANN contract: coarse int8 scan, exact
-    rescore)."""
-    import math
-
-    from mapreduce_stockheadlines_spark.operators import embeddings as EB
-
-    rows = [
-        (0, [1.0, 0.0]),
-        (1, [0.9, 0.1]),
-        (2, [0.0, 1.0]),
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    deq = EB.dequantize_embeddings(
-        EB.quantize_embeddings(df, "vec_id", "embedding"),
-        "qvec", "scale", out_col="deq",
-    ).collect()
-
-    def cos(a, b):
-        num = sum(x * y for x, y in zip(a, b))
-        return num / (
-            math.sqrt(sum(x * x for x in a)) * math.sqrt(sum(y * y for y in b))
-        )
-
-    by_id = {r.vec_id: r.deq for r in deq}
-    # neighbor order of vec 0: vec 1 before vec 2, in both spaces
-    assert cos(by_id[0], by_id[1]) > cos(by_id[0], by_id[2])
-
-
 # --- SemDeDup: cluster-then-prune semantic dedup -----------------------------
 
 def test_semantic_dedup_removes_planted_copies(spark, sf_dir):
@@ -1687,8 +1605,8 @@ def _wav_bytes(rate, samples):
 def test_multimodal_real_wav_decode_and_frames(spark):
     """The audio tier is REAL for RIFF 16-bit PCM WAV: a generated-in-
     test stereo tone decodes to its exact rate/channels/frame-count with
-    PCM-derived features, detect_mime routes the RIFF/WAVE magic, and
-    sample_frames emits real evenly-spaced window features."""
+    PCM-derived features, and sample_frames emits real evenly-spaced
+    window features."""
     import numpy as np
     import pytest
 
@@ -1704,11 +1622,9 @@ def test_multimodal_real_wav_decode_and_frames(spark):
     assert got.shape == (n, 2)
     assert (got == samples).all()
 
-    df = spark.createDataFrame(
-        [(1, bytearray(wav))], "media_id long, content binary"
+    sniffed = spark.createDataFrame(
+        [(1, bytearray(wav), M.MIME_WAV)], M.MEDIA_SCHEMA
     )
-    sniffed = df.withColumn("mime", M.detect_mime("content"))
-    assert sniffed.collect()[0].mime == M.MIME_WAV
 
     out = M.decode_media(sniffed, strict=True).collect()[0]
     # documented audio mapping: width=rate, height=channels, n_frames=frames
@@ -1730,15 +1646,6 @@ def test_multimodal_real_wav_decode_and_frames(spark):
     # malformed input fails loudly
     with pytest.raises(ValueError):
         M._decode_wav(b"RIFFxxxxWAVE")  # no fmt/data chunks
-    # non-WAVE RIFF keeps the container mime (AVI form)
-    avi = b"RIFF\x10\x00\x00\x00AVI LIST"
-    df2 = spark.createDataFrame(
-        [(2, bytearray(avi))], "media_id long, content binary"
-    )
-    assert (
-        df2.select(M.detect_mime("content").alias("m")).collect()[0].m
-        == "audio/x-riff"
-    )
 
 
 def test_multimodal_undecodable_wav_falls_back_not_crashes(spark):
@@ -1757,11 +1664,9 @@ def test_multimodal_undecodable_wav_falls_back_not_crashes(spark):
     body += b"data" + _struct.pack("<I", 8) + b"\x00" * 8
     wav_f32 = b"RIFF" + _struct.pack("<I", 4 + len(body)) + b"WAVE" + body
 
-    df = spark.createDataFrame(
-        [(1, bytearray(wav_f32))], "media_id long, content binary"
+    sniffed = spark.createDataFrame(
+        [(1, bytearray(wav_f32), M.MIME_WAV)], M.MEDIA_SCHEMA
     )
-    sniffed = df.withColumn("mime", M.detect_mime("content"))
-    assert sniffed.collect()[0].mime == M.MIME_WAV  # routed to audio tier
 
     out = M.decode_media(sniffed).collect()[0]  # non-strict: stub values
     assert out.n_frames >= 1 and len(out.feature) == 8
@@ -1785,52 +1690,6 @@ def test_multimodal_undecodable_wav_falls_back_not_crashes(spark):
     assert out2.n_frames == 0
     assert out2.feature == [0.0] * 8
     assert not any(np.isnan(out2.feature))
-
-
-def test_multi_table_lsh_recall_dominates_single_table(spark, sf_dir):
-    """Adding tables can only ADD candidate pairs: multi-table output is
-    a superset of the single-table pairs (same seed for table 0), a
-    subset of the exact all-pairs, and catches at least as many of the
-    planted perturbed near-dups."""
-    import numpy as np
-
-    rng = np.random.RandomState(7)
-    base = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", "embedding"
-    ).limit(30)
-    pdf = base.toPandas()
-    rows = [(int(r.vec_id), [float(x) for x in r.embedding]) for r in pdf.itertuples()]
-    # perturbed near-copies: high-but-not-1 cosine so hyperplanes CAN
-    # separate them (exact copies would be caught by any table)
-    for vid, vec in list(rows):
-        v = np.asarray(vec)
-        p = v + rng.randn(len(v)) * 0.08 * np.linalg.norm(v) / np.sqrt(len(v))
-        rows.append((vid + 10000, [float(x) for x in p]))
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-
-    kw = dict(dim=64, n_planes=8, threshold=0.9, block_rows=16)
-    single = {
-        (r.id_a, r.id_b)
-        for r in S.lsh_bucketed_pairs(df, "vec_id", "embedding", **kw).collect()
-    }
-    multi = {
-        (r.id_a, r.id_b)
-        for r in S.lsh_bucketed_pairs_multi(
-            df, "vec_id", "embedding", n_tables=3, **kw
-        ).collect()
-    }
-    exact = {
-        (r.id_a, r.id_b)
-        for r in S.neardup_pairs(
-            df, "vec_id", "embedding", threshold=0.9, block_rows=16
-        ).collect()
-    }
-    assert single <= multi <= exact
-    planted = {(v, v + 10000) for v, _ in rows if v < 10000}
-    rec_single = len(single & planted) / len(planted)
-    rec_multi = len(multi & planted) / len(planted)
-    assert rec_multi >= rec_single
-    assert rec_multi > 0.5  # three 8-plane tables catch most 0.9+ pairs
 
 
 def test_topk_eval_hand_values_and_duckdb(spark):
@@ -2090,9 +1949,9 @@ def _mono_wav_bytes(samples, rate=8000):
     return b"RIFF" + st.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
 
 
-def test_audio_phash_and_neardup_pairs(spark):
+def test_audio_phash_volume_invariant_and_fallbacks(spark):
     """Spectral audio pHash: a volume-shifted copy of a tone hashes
-    identically (near-dup pair found), different content stays far,
+    identically, different content stays far,
     silence hashes to 0, corrupt WAV falls back to the digest
     stand-in, and strict raises."""
     import numpy as np
@@ -2119,10 +1978,6 @@ def test_audio_phash_and_neardup_pairs(spark):
     assert ham(got[1], got[3]) > 16  # different content far
     assert got[4] == 0               # silence: the flat case
     assert got[5] == M._fake_phash(bytes(rows[4][1]))  # corrupt fallback
-    pairs = {(r.id_a, r.id_b)
-             for r in M.audio_neardup_pairs(df, max_hamming=6).collect()}
-    assert (1, 2) in pairs
-    assert not any({3} & set(p) for p in pairs)
     with pytest.raises(Exception):
         M.audio_phash(
             df.filter(F.col("media_id") == 5), strict=True
@@ -2291,7 +2146,6 @@ def test_pca_fit_project_reference_and_invariance(spark, sf_dir):
     import numpy as np
 
     from mapreduce_stockheadlines_spark.operators.embeddings import (
-        pca_explained_variance,
         pca_fit,
         pca_project,
     )
@@ -2336,13 +2190,14 @@ def test_pca_fit_project_reference_and_invariance(spark, sf_dir):
         assert len(proj[vid]) == 8
 
     # explained variance: monotone in k, ~1 at full rank, and the
-    # shared-pass variant agrees with the standalone diagnostic
-    ev8 = pca_explained_variance(emb, "embedding", 8)
-    ev_full = pca_explained_variance(emb, "embedding", X.shape[1])
+    # components fitted alongside it are the plain fit's
+    mean8, comp8, ev8 = pca_fit(emb, "embedding", k=8, return_variance=True)
+    _, _, ev_full = pca_fit(
+        emb, "embedding", k=X.shape[1], return_variance=True
+    )
     assert 0.0 < ev8 < ev_full <= 1.0 + 1e-9
     assert ev_full > 0.999
-    _, _, ev8b = pca_fit(emb, "embedding", k=8, return_variance=True)
-    assert abs(ev8b - ev8) < 1e-12
+    assert np.array_equal(mean8, mean1) and np.array_equal(comp8, comp1)
 
 
 def test_kmeans_family_ignores_null_embeddings(spark, sf_dir):
@@ -2381,91 +2236,6 @@ def test_kmeans_family_ignores_null_embeddings(spark, sf_dir):
     assert sorted(map(tuple, p_clean.collect())) == sorted(
         map(tuple, p_dirty.collect())
     )
-
-
-def test_minhash_oph_signature_vs_duckdb_and_properties(spark, sf_dir):
-    """One-permutation MinHash: DuckDB re-derives the full signature
-    table bit-for-bit (one md5 per token, bucket = h mod k, per-bucket
-    MIN, rotation densification +t*2^60); identical texts get identical
-    signatures; the banding/agreement stack composes unchanged and the
-    OPH agreement tracks the classic k-hash estimate on real docs."""
-    import duckdb
-
-    from mapreduce_stockheadlines_spark.operators.dedup import (
-        lsh_candidate_pairs,
-        minhash_signature,
-        minhash_signature_oph,
-        signature_agreement,
-    )
-    from mapreduce_stockheadlines_spark.plans.catalog import table
-
-    docs = table(spark, sf_dir, "documents").filter(F.col("doc_id") % 7 == 0)
-    K = 8
-    sig = minhash_signature_oph(docs, "doc_id", "text", num_hashes=K)
-    got = sorted(map(tuple, sig.collect()))
-
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{sf_dir}/documents.parquet')"
-    )
-    mins = ", ".join(
-        f"min(CASE WHEN h % {K} = {i} THEN h END) AS m{i}" for i in range(K)
-    )
-    dense = ", ".join(
-        "coalesce("
-        + ", ".join(
-            f"m{(i + t) % K} + {t} * (1::BIGINT << 60)" for t in range(K)
-        )
-        + f") AS mh{i}"
-        for i in range(K)
-    )
-    duck = con.execute(
-        f"""
-        WITH toks AS (
-          SELECT doc_id, unnest(list_filter(string_split_regex(
-            regexp_replace(lower(text), '[^a-zA-Z ]', ' ', 'g'), ' +'),
-            t -> t <> '')) AS token
-          FROM documents WHERE doc_id % 7 = 0),
-        h AS (SELECT doc_id,
-                     CAST(('0x' || substr(md5('oph:' || token), 1, 15))
-                          AS BIGINT) AS h
-              FROM toks),
-        raw AS (SELECT doc_id, {mins} FROM h GROUP BY doc_id)
-        SELECT doc_id, {dense} FROM raw ORDER BY doc_id
-        """
-    ).fetchall()
-    assert got == [tuple(r) for r in duck]
-
-    # identical texts -> identical signatures; banding finds the pair
-    twin = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon zeta"),
-         (2, "alpha beta gamma delta epsilon zeta"),
-         (3, "totally different words here entirely now")],
-        "doc_id long, text string",
-    )
-    tsig = minhash_signature_oph(twin, "doc_id", "text", num_hashes=K)
-    rows = {r.doc_id: tuple(r)[1:] for r in tsig.collect()}
-    assert rows[1] == rows[2] != rows[3]
-    pairs = {
-        (r.id_a, r.id_b)
-        for r in lsh_candidate_pairs(tsig, "doc_id", num_hashes=K).collect()
-    }
-    assert (1, 2) in pairs
-
-    # OPH agreement tracks the classic estimator on the real docs
-    classic = minhash_signature(docs, "doc_id", "text", num_hashes=K)
-    cand = lsh_candidate_pairs(classic, "doc_id", num_hashes=K).limit(50)
-    a_oph = signature_agreement(cand, sig, sig, num_hashes=K)
-    a_cls = signature_agreement(cand, classic, classic, num_hashes=K)
-    joined = (
-        a_oph.withColumnRenamed("est_jaccard", "e1")
-        .join(a_cls, ["id_a", "id_b"])
-        .collect()
-    )
-    if joined:  # both are 1/K-granular estimators of the same quantity
-        diffs = [abs(r.e1 - r.est_jaccard) for r in joined]
-        assert sum(diffs) / len(diffs) <= 2.5 / K
 
 
 def test_round8_promoted_columns_nondegenerate(spark, sf_dir):
@@ -2563,8 +2333,8 @@ def test_jpeg_gray_sampling_and_adobe_app14():
         0,
         255,
     ).astype(np.uint8)
-    base = M._encode_jpeg(g, quality=90, gray=True)
-    declared = M._encode_jpeg(
+    base = MF.encode_jpeg(g, quality=90, gray=True)
+    declared = MF.encode_jpeg(
         g, quality=90, gray=True, gray_declared_sampling=(2, 2)
     )
     d0 = M._decode_jpeg(base)
@@ -2573,7 +2343,7 @@ def test_jpeg_gray_sampling_and_adobe_app14():
     assert np.abs(d0[..., 0].astype(int) - g.astype(int)).max() <= 12
     # restart markers through the single-component path: same pixels
     dri = M._decode_jpeg(
-        M._encode_jpeg(g, quality=90, gray=True, restart_interval=2)
+        MF.encode_jpeg(g, quality=90, gray=True, restart_interval=2)
     )
     assert (dri == d0).all()
 
@@ -2581,7 +2351,7 @@ def test_jpeg_gray_sampling_and_adobe_app14():
         return _struct.pack(">BBH", 0xFF, marker, len(payload) + 2) + payload
 
     color = np.stack([g, g[::-1], np.roll(g, 7, axis=1)], axis=2)
-    blob = M._encode_jpeg(color, quality=90)
+    blob = MF.encode_jpeg(color, quality=90)
 
     def with_app14(transform):
         app14 = _seg(0xEE, b"Adobe" + _struct.pack(">HHHB", 100, 0, 0,
@@ -2629,9 +2399,9 @@ def test_multimodal_real_gif_decode(spark):
     pal = rng.randint(0, 256, (17, 3)).astype(np.uint8)
     px = pal[rng.randint(0, 17, (45, 33))]
     for inter in (False, True):
-        assert (M._decode_gif(M._encode_gif(px, interlace=inter)) == px).all()
+        assert (M._decode_gif(MF.encode_gif(px, interlace=inter)) == px).all()
     big = pal[rng.randint(0, 17, (130, 130))]  # >4096 LZW entries
-    assert (M._decode_gif(M._encode_gif(big)) == big).all()
+    assert (M._decode_gif(MF.encode_gif(big)) == big).all()
 
     # sub-screen frame composes over the background color (index 0)
     sub = (
@@ -2663,7 +2433,7 @@ def test_multimodal_real_gif_decode(spark):
     assert (lout[1, 2] == [200, 100, 50]).all()  # frame idx 1 = LOCAL 1
 
     # animation: FIRST image descriptor wins (second frame differs)
-    f1 = M._encode_gif(px)
+    f1 = MF.encode_gif(px)
     # splice a GCE extension + reuse the image block twice
     gce = b"\x21\xf9\x04\x00\x02\x00\x00\x00"
     ct_len = (2 << (f1[10] & 7)) * 3
@@ -2680,8 +2450,8 @@ def test_multimodal_real_gif_decode(spark):
     wavy3 = np.repeat(wavy[..., None], 3, axis=2)
     hdf = spark.createDataFrame(
         [
-            (1, bytearray(M._encode_gif(wavy3)), "image/gif"),
-            (2, bytearray(M._encode_png(wavy3)), M.MIME_PNG),
+            (1, bytearray(MF.encode_gif(wavy3)), "image/gif"),
+            (2, bytearray(MF.encode_png(wavy3)), M.MIME_PNG),
         ],
         schema=M.MEDIA_SCHEMA,
     )
@@ -2692,7 +2462,7 @@ def test_multimodal_real_gif_decode(spark):
 
     # full Spark path: real decode in strict mode; malformed GIF (LZW
     # stream truncated) stubs non-strict, raises strict
-    blob = M._encode_gif(wavy3)
+    blob = MF.encode_gif(wavy3)
     bad = blob[: len(blob) // 2] + b"\x00\x3b"
     df = spark.createDataFrame(
         [(1, bytearray(blob), "image/gif"), (2, bytearray(bad), "image/gif")],
@@ -2714,8 +2484,7 @@ def test_multimodal_mp4_metadata_tier(spark):
     container metadata (pure ISO-BMFF box walk — tkhd 16.16 dims,
     stsz sample count), while the pixel feature stays the digest fake
     and strict mode still raises (frame decode is codec-bound).
-    detect_mime sniffs 'ftyp' at offset 4; malformed boxes fall to the
-    digest stub."""
+    Malformed boxes fall to the digest stub."""
     import struct as _struct
 
     import pytest
@@ -2743,10 +2512,8 @@ def test_multimodal_mp4_metadata_tier(spark):
     assert M._parse_mp4_meta(mp4) == (640, 360, 240)
 
     df = spark.createDataFrame(
-        [(1, bytearray(mp4), None)],
-        "media_id long, content binary, declared string",
-    ).select("media_id", "content", M.detect_mime("content").alias("mime"))
-    assert df.collect()[0].mime == "video/mp4"
+        [(1, bytearray(mp4), "video/mp4")], M.MEDIA_SCHEMA
+    )
     r = M.decode_media(df).collect()[0]
     assert (r.width, r.height, r.n_frames) == (640, 360, 240)
     # the FEATURE is still the digest fake (pixels need a codec)...
@@ -2928,7 +2695,7 @@ def test_multimodal_real_netpbm_family_decode(spark):
     """Round-8 Netpbm tier: P1-P5 decode for real (P6 delegated) —
     ASCII == binary twins pixel-for-pixel, PBM ink convention, comment
     handling, packed-bit rows at non-byte-aligned widths, and the
-    end-to-end decode_media path with sniffed mimes."""
+    end-to-end decode_media path."""
     import numpy as np
     import pytest
 
@@ -2968,20 +2735,18 @@ def test_multimodal_real_netpbm_family_decode(spark):
         with pytest.raises(ValueError):
             M._decode_pnm(bad)
 
-    # end-to-end: mime=None -> magic sniff routes every variant to the
-    # real tier; gray twins agree on dims and feature
+    # end-to-end: every variant decodes in the real tier; gray twins
+    # agree on dims and feature
     rows = [
-        (1, bytearray(p2), None),
-        (2, bytearray(p5), None),
-        (3, bytearray(p4), None),
-        (4, bytearray(p3), None),
+        (1, bytearray(p2), M.MIME_PGM),
+        (2, bytearray(p5), M.MIME_PGM),
+        (3, bytearray(p4), M.MIME_PBM),
+        (4, bytearray(p3), M.MIME_PPM),
     ]
     df = spark.createDataFrame(rows, M.MEDIA_SCHEMA)
     out = {
         r.media_id: r
-        for r in M.decode_media(
-            df.withColumn("mime", M.detect_mime("content")), strict=True
-        ).collect()
+        for r in M.decode_media(df, strict=True).collect()
     }
     assert (out[1].width, out[1].height) == (4, 3)
     assert out[1].feature == out[2].feature  # P2 == P5 twins
@@ -3065,9 +2830,7 @@ def _make_test_tiff(px, endian="<", photometric=None, strips=1,
             diffed.append(d.astype(np.uint8).tobytes())
         chunks = diffed
     if compression == 5:
-        from mapreduce_stockheadlines_spark.operators import multimodal as _M
-
-        chunks = [_M._tiff_lzw_encode(c) for c in chunks]
+        chunks = [MF.tiff_lzw_encode(c) for c in chunks]
     e = endian
     pos, offs, cnts = 8, [], []
     for c in chunks:
@@ -3118,8 +2881,8 @@ def _make_test_tiff(px, endian="<", photometric=None, strips=1,
 def test_multimodal_real_tiff_decode(spark):
     """Round-8 TIFF tier: both byte orders, multi-strip layouts, RGB and
     gray (incl. WhiteIsZero inversion) decode for real; compressed/
-    BigTIFF inputs fall to ValueError (stub class); mime sniffing
-    routes both magics end-to-end."""
+    BigTIFF inputs fall to ValueError (stub class); both byte orders
+    decode end-to-end through decode_media."""
     import numpy as np
     import pytest
 
@@ -3146,14 +2909,12 @@ def test_multimodal_real_tiff_decode(spark):
     le = _make_test_tiff(rgb, endian="<")
     be = _make_test_tiff(rgb, endian=">")
     df = spark.createDataFrame(
-        [(1, bytearray(le), None), (2, bytearray(be), None)],
+        [(1, bytearray(le), "image/tiff"), (2, bytearray(be), "image/tiff")],
         M.MEDIA_SCHEMA,
     )
     out = {
         r.media_id: r
-        for r in M.decode_media(
-            df.withColumn("mime", M.detect_mime("content")), strict=True
-        ).collect()
+        for r in M.decode_media(df, strict=True).collect()
     }
     assert (out[1].width, out[1].height) == (5, 4)
     assert out[1].feature == out[2].feature  # endianness twins
@@ -3194,9 +2955,9 @@ def test_multimodal_tiff_lzw_decode(spark):
     # (Clear at 4093) and every width bump; the repeated block hits the
     # KwKwK case
     blob = rng.integers(0, 256, size=80_000, dtype=np.uint8).tobytes()
-    assert M._tiff_lzw_decode(M._tiff_lzw_encode(blob), len(blob)) == blob
+    assert M._tiff_lzw_decode(MF.tiff_lzw_encode(blob), len(blob)) == blob
     rep = b"abcabcabD" * 500
-    assert M._tiff_lzw_decode(M._tiff_lzw_encode(rep), len(rep)) == rep
+    assert M._tiff_lzw_decode(MF.tiff_lzw_encode(rep), len(rep)) == rep
     with pytest.raises(ValueError):
         M._tiff_lzw_decode(b"\x00\x01\x02", 100)  # truncated stream
 
@@ -3227,7 +2988,7 @@ def test_multimodal_tiff_lzw_decode(spark):
                 ),
                 "image/tiff",
             ),
-            (2, bytearray(M._encode_png(wavy)), M.MIME_PNG),
+            (2, bytearray(MF.encode_png(wavy)), M.MIME_PNG),
         ],
         schema=M.MEDIA_SCHEMA,
     )
@@ -3267,8 +3028,7 @@ def test_multimodal_tiff_lzw_decode(spark):
 def test_multimodal_webp_container_metadata(spark):
     """Round-8 WebP metadata tier (the MP4 contract for images): real
     width/height/n_frames from VP8X / VP8L / lossy-VP8 headers and ANMF
-    counts; pixel features stay the digest fake (codec-bound);
-    detect_mime refines the RIFF container by its WEBP form."""
+    counts; pixel features stay the digest fake (codec-bound)."""
     import struct
 
     import numpy as np
@@ -3316,11 +3076,9 @@ def test_multimodal_webp_container_metadata(spark):
         M._parse_webp_meta(b"RIFF\x04\x00\x00\x00WAVE")
 
     df = spark.createDataFrame(
-        [(1, bytearray(vp8l), None)], M.MEDIA_SCHEMA
+        [(1, bytearray(vp8l), "image/webp")], M.MEDIA_SCHEMA
     )
-    out = M.decode_media(
-        df.withColumn("mime", M.detect_mime("content"))
-    ).collect()[0]
+    out = M.decode_media(df).collect()[0]
     assert out.mime == "image/webp"
     assert (out.width, out.height, out.n_frames) == (300, 200, 1)
 
@@ -3403,7 +3161,6 @@ def test_x18_hard_neg_rank_nondegenerate_and_consistent(spark, sf_dir):
 def test_fixed_query_cosine_hand_values_and_zero_norm(spark):
     from mapreduce_stockheadlines_spark.operators.embeddings import (
         fixed_query_cosine,
-        truncate_dims,
     )
 
     df = spark.createDataFrame(
@@ -3440,16 +3197,11 @@ def test_fixed_query_cosine_hand_values_and_zero_norm(spark):
         4,
     )
     assert full[1] == want
-    # truncate_dims is the slice primitive the eval path composes with
-    t = truncate_dims(df, "embedding", 2, out_col="p").collect()
-    assert all(len(r.p) == 2 for r in t)
 
     import pytest
 
     with pytest.raises(ValueError, match="zero norm"):
         fixed_query_cosine(df, "embedding", [0.0, 0.0], d=2)
-    with pytest.raises(ValueError, match="d must be"):
-        truncate_dims(df, "embedding", 0)
 
 
 def test_mrl_prefix_recall_eval_composition(spark, sf_dir):
@@ -3457,13 +3209,13 @@ def test_mrl_prefix_recall_eval_composition(spark, sf_dir):
     topk_eval vs full-dim truth. Full-dim 'truncation' must be a
     perfect self-eval; the 16-dim prefix trades some recall, never
     exceeding 1."""
-    from mapreduce_stockheadlines_spark.operators.embeddings import (
-        truncate_dims,
-    )
     from mapreduce_stockheadlines_spark.operators.similarity import (
         cosine_topk,
         topk_eval,
     )
+
+    def truncate_dims(df, col, d):
+        return df.withColumn(col, F.slice(F.col(col), 1, d))
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     queries = emb.filter(F.col("vec_id") < 3)
@@ -3544,7 +3296,7 @@ def test_audio_spectral_features_tone_and_noise(spark):
         rows, "media_id long, content binary, mime string"
     )
     out = {
-        r.media_id: r for r in M.audio_spectral_features(df).collect()
+        r.media_id: r for r in M.audio_profile(df).collect()
     }
     t1 = out[1]
     assert abs(t1.dominant_hz - 1000.0) < 4.0  # rfft bin width ~1.95 Hz
@@ -3558,7 +3310,7 @@ def test_audio_spectral_features_tone_and_noise(spark):
     assert out[3].dominant_hz is None
 
     with pytest.raises(Exception, match="codec"):
-        M.audio_spectral_features(
+        M.audio_profile(
             df.filter("media_id = 3"), strict=True
         ).collect()
 
@@ -3620,7 +3372,7 @@ def test_audio_spectral_features_degenerate_inputs(spark):
         rows, "media_id long, content binary, mime string"
     )
     out = {
-        r.media_id: r for r in M.audio_spectral_features(df).collect()
+        r.media_id: r for r in M.audio_profile(df).collect()
     }
     assert out[1].spec_centroid_hz == 0.0 and out[1].spec_flatness == 0.0
     assert out[2].spec_centroid_hz is None

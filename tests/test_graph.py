@@ -61,31 +61,6 @@ def test_pagerank_parallel_edges_and_validation(spark):
         pagerank(single, n_iters=0)
 
 
-def test_domain_authority_co_citation(spark):
-    """Domains co-cited with many others rank highest; an isolated
-    single-domain doc reports rank 0 (no co-citation evidence); the
-    per-doc domain cap bounds clique fan-out."""
-    from mapreduce_stockheadlines_spark.operators.graph import (
-        domain_authority,
-    )
-
-    rows = [
-        (1, "see https://hub.com/a and https://alpha.com/x today"),
-        (2, "see https://hub.com/b and https://beta.com/y today"),
-        (3, "see https://hub.com/c and https://gamma.com/z today"),
-        (4, "only https://lonely.org/p here"),
-        (5, "no urls at all in this document"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r.domain: r.rank for r in domain_authority(docs, n_iters=8).collect()}
-    assert set(got) == {"hub.com", "alpha.com", "beta.com", "gamma.com",
-                        "lonely.org"}
-    assert got["hub.com"] == max(got.values())  # co-cited by all three
-    assert got["lonely.org"] == 0.0
-    linked = {d: v for d, v in got.items() if d != "lonely.org"}
-    assert sum(linked.values()) == pytest.approx(1.0, abs=1e-6)
-
-
 def test_pagerank_quantized_is_partitioning_invariant(spark):
     """quantize_dp makes the iteration bit-reproducible: the same graph
     at 1 partition and at 16 partitions yields IDENTICAL ranks (the

@@ -377,11 +377,25 @@ def test_chunk_summary_cols_match_operator(spark, sf_dir):
     ).count() == 0
 
 
+def _sentence_chunk_summary_cols(src, chunk_tokens):
+    """(n_sent_chunks, sent_chunk_fp8) from the one-walk fold, the two
+    builders x08 stages through a bound column."""
+    from mapreduce_stockheadlines_spark.operators.packing import (
+        sentence_chunk_cols_from,
+        sentence_chunk_fold_col,
+    )
+
+    return sentence_chunk_cols_from(
+        sentence_chunk_fold_col(src, chunk_tokens)
+    )
+
+
 def test_sentence_chunk_summary_cols_match_operator(spark, sf_dir):
-    """The round-10 x08 registry columns (``sentence_chunk_summary_cols``)
-    pin the SAME chunking as ``chunk_by_sentences``: per doc,
-    n_sent_chunks equals the operator's chunk count and sent_chunk_fp8
-    equals the md5-prefix of the chunk_texts '|'-joined in chunk order,
+    """The round-10 x08 registry columns (``sentence_chunk_fold_col``
+    through ``sentence_chunk_cols_from``) pin the SAME chunking as
+    ``chunk_by_sentences``: per doc, n_sent_chunks equals the
+    operator's chunk count and sent_chunk_fp8 equals the md5-prefix of
+    the chunk_texts '|'-joined in chunk order,
     over the x08 decorated source (period every 5th word + the
     abbreviation-arm suffix); empty/NULL docs carry 0/NULL.
     Non-degenerate at the test SF (promotion guard)."""
@@ -389,7 +403,6 @@ def test_sentence_chunk_summary_cols_match_operator(spark, sf_dir):
 
     from mapreduce_stockheadlines_spark.operators.packing import (
         chunk_by_sentences,
-        sentence_chunk_summary_cols,
     )
     from mapreduce_stockheadlines_spark.plans.catalog import table
     from mapreduce_stockheadlines_spark.plans.extensions import (
@@ -405,7 +418,7 @@ def test_sentence_chunk_summary_cols_match_operator(spark, sf_dir):
         ),
     )
     summ = docs.select(
-        "doc_id", *sentence_chunk_summary_cols("_src", chunk_tokens=16)
+        "doc_id", *_sentence_chunk_summary_cols("_src", chunk_tokens=16)
     )
     assert_column_nondegenerate(summ, "n_sent_chunks")
     assert_column_nondegenerate(summ, "sent_chunk_fp8")
@@ -446,10 +459,6 @@ def test_sentence_chunk_summary_cols_edge_contracts(spark):
     """Empty / NULL / single-sentence docs under the scalar fold: 0 and
     NULL for no-sentence docs, 1 chunk for a short doc; an oversize
     sentence still lands in one chunk (budget-aligned rule)."""
-    from mapreduce_stockheadlines_spark.operators.packing import (
-        sentence_chunk_summary_cols,
-    )
-
     df = spark.createDataFrame(
         [
             (1, "short one."),
@@ -462,7 +471,7 @@ def test_sentence_chunk_summary_cols_edge_contracts(spark):
     out = {
         r.doc_id: (r.n_sent_chunks, r.sent_chunk_fp8)
         for r in df.select(
-            "doc_id", *sentence_chunk_summary_cols("text", chunk_tokens=16)
+            "doc_id", *_sentence_chunk_summary_cols("text", chunk_tokens=16)
         ).collect()
     }
     assert out[1][0] == 1 and out[1][1] is not None
@@ -520,15 +529,14 @@ def test_chunk_by_sentences_oversize_flag(spark):
 
 def test_cdc_chunk_summary_matches_python_reference(spark, sf_dir):
     """Round-11 promotion pin: content-defined chunking
-    (packing.cdc_cut_cols_from — Rabin rolling-hash boundaries with the
+    (packing.cdc_cuts_col — Rabin rolling-hash boundaries with the
     FastCDC min-size guard) must reproduce an independent pure-python
     greedy walk boundary-for-boundary on real corpus docs."""
     import hashlib
     import re
 
-    from mapreduce_stockheadlines_spark.operators.packing import (
-        cdc_chunk_summary,
-    )
+    from conftest import cdc_summary
+
     from mapreduce_stockheadlines_spark.plans.catalog import table
 
     def ref(text, k=5, divisor=64, rem=0, min_size=16):
@@ -556,7 +564,7 @@ def test_cdc_chunk_summary_matches_python_reference(spark, sf_dir):
     docs = table(spark, sf_dir, "documents").filter(F.col("doc_id") < 40)
     got = {
         r.id: (r.n_cdc_chunks, r.cdc_fp8)
-        for r in cdc_chunk_summary(docs, "doc_id", "text").collect()
+        for r in cdc_summary(docs, "doc_id", "text").collect()
     }
     texts = {r.doc_id: r.text for r in docs.collect()}
     assert got == {d: ref(t) for d, t in texts.items()}
@@ -572,11 +580,8 @@ def test_cdc_edge_contracts_and_x08_columns(spark, sf_dir):
     unrolls)."""
     import hashlib
 
-    from conftest import assert_column_nondegenerate
+    from conftest import assert_column_nondegenerate, cdc_summary
 
-    from mapreduce_stockheadlines_spark.operators.packing import (
-        cdc_chunk_summary,
-    )
     from mapreduce_stockheadlines_spark.plans.extensions import (
         x08_text_stats,
     )
@@ -590,7 +595,7 @@ def test_cdc_edge_contracts_and_x08_columns(spark, sf_dir):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     out = {
         r.id: (r.n_cdc_chunks, r.cdc_fp8)
-        for r in cdc_chunk_summary(df, "doc_id", "text").collect()
+        for r in cdc_summary(df, "doc_id", "text").collect()
     }
     assert out == {1: (0, None), 2: (0, None), 3: (0, None), 4: (0, None)}
     # a real gram array with no boundary candidate at all still yields
@@ -599,7 +604,7 @@ def test_cdc_edge_contracts_and_x08_columns(spark, sf_dir):
     df2 = spark.createDataFrame(
         [(1, "abcdef")], "doc_id long, text string"
     )
-    got2 = cdc_chunk_summary(
+    got2 = cdc_summary(
         df2, "doc_id", "text", divisor=1_000_003, rem=1_000_002
     ).collect()[0]
     # 'abcdef' has exactly two grams hashing to 431031 and 195445 —
@@ -670,17 +675,16 @@ def test_cdc_chunks_rows_consistent_with_summary(spark, sf_dir):
     import hashlib
     import re
 
-    from mapreduce_stockheadlines_spark.operators.packing import (
-        cdc_chunk_summary,
-        cdc_chunks,
-    )
+    from conftest import cdc_summary
+
+    from mapreduce_stockheadlines_spark.operators.packing import cdc_chunks
     from mapreduce_stockheadlines_spark.plans.catalog import table
 
     docs = table(spark, sf_dir, "documents").filter(F.col("doc_id") < 30)
     rows = cdc_chunks(docs, "doc_id", "text").collect()
     summ = {
         r.id: (r.n_cdc_chunks, r.cdc_fp8)
-        for r in cdc_chunk_summary(docs, "doc_id", "text").collect()
+        for r in cdc_summary(docs, "doc_id", "text").collect()
     }
     texts = {r.doc_id: r.text for r in docs.collect()}
 

@@ -23,7 +23,7 @@ def test_curate_invariants(spark, sf_dir):
     assert (pdf.quality >= 0.4).all()
     langs = {
         r.doc_id: r.pred_lang
-        for r in TS.lang_id(docs, "doc_id", "text").collect()
+        for r in TS.text_stats(docs, "doc_id", "text").collect()
     }
     assert all(langs[d] == "en" for d in pdf.doc_id)
     # token columns are present and consistent
@@ -988,90 +988,6 @@ def test_curate_remove_dup_spans_stage(spark):
     assert by_id[1].n_ws_tokens == len(by_id[1].text.split())
 
 
-def test_run_staged_skips_completed_and_invalidates_downstream(spark, tmp_path):
-    """Resumable stages: a re-run recomputes nothing; changing stage 2's
-    token reruns 2+3 but reads stage 1 from disk; a torn write (tmp dir
-    or stampless dir) is swept, never mistaken for done."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from mapreduce_stockheadlines_spark.jobs.staged import run_staged
-
-    base = str(tmp_path / "stages")
-    calls = {"a": 0, "b": 0, "c": 0}
-
-    def mk(name, fn):
-        def stage(spark_, prev):
-            calls[name] += 1
-            return fn(spark_, prev)
-        return stage
-
-    def stages(b_token):
-        return [
-            ("gen", "v1", mk("a", lambda s, _: s.range(0, 100))),
-            ("double", b_token,
-             mk("b", lambda s, p: p.select((F.col("id") * 2).alias("id")))),
-            ("agg", "v1",
-             mk("c", lambda s, p: p.agg(F.sum("id").alias("total")))),
-        ]
-
-    out = run_staged(spark, stages("v1"), base)
-    assert out.collect()[0].total == 9900
-    assert calls == {"a": 1, "b": 1, "c": 1}
-
-    # full re-run: everything served from disk
-    out = run_staged(spark, stages("v1"), base)
-    assert out.collect()[0].total == 9900
-    assert calls == {"a": 1, "b": 1, "c": 1}
-
-    # change stage 2's config: 2 and 3 rerun, 1 is read back
-    out = run_staged(spark, stages("v2-triple"), base)
-    assert calls == {"a": 1, "b": 2, "c": 2}
-
-    # torn write: a stampless stage dir and a stray tmp dir get swept
-    import shutil
-
-    shutil.rmtree(os.path.join(base, "02-agg"))
-    os.makedirs(os.path.join(base, "02-agg"))  # stampless = torn
-    os.makedirs(os.path.join(base, ".tmp-deadbeef"))
-    out = run_staged(spark, stages("v2-triple"), base)
-    assert calls == {"a": 1, "b": 2, "c": 3}  # only the torn stage reruns
-    assert not os.path.exists(os.path.join(base, ".tmp-deadbeef"))
-
-
-def test_run_staged_wraps_curate_cut_points(spark, tmp_path):
-    """The intended composition: curate() split at an expensive cut
-    point; the resumed run returns identical output without rerunning
-    stage one."""
-    from pyspark.sql import functions as F
-
-    from mapreduce_stockheadlines_spark.jobs.staged import run_staged
-    from mapreduce_stockheadlines_spark.operators import textstats as TS
-
-    docs = spark.createDataFrame(
-        [(i, f"doc number {i} with some plain english words here") for i in range(20)],
-        "doc_id long, text string",
-    )
-    ran = {"n": 0}
-
-    def gates(s, p):
-        ran["n"] += 1
-        st = TS.text_stats(p, "doc_id", "text")
-        return p.join(
-            st.filter(F.col("quality") >= 0.0).select("doc_id"), "doc_id"
-        )
-
-    stages = [
-        ("load", "v1", lambda s, _: docs),
-        ("gates", "q>=0", gates),
-    ]
-    base = str(tmp_path / "cur")
-    first = sorted(r.doc_id for r in run_staged(spark, stages, base).collect())
-    again = sorted(r.doc_id for r in run_staged(spark, stages, base).collect())
-    assert first == again and len(first) == 20 and ran["n"] == 1
-
-
 def test_pipeline_cli_epoch_weights(spark, tmp_path):
     """--epoch-weights replicates per-source with a dense epoch index;
     with --test-fraction the held-out side stays UN-upsampled (an
@@ -1099,24 +1015,6 @@ def test_pipeline_cli_epoch_weights(spark, tmp_path):
     tr = {r.doc_id for r in per}
     te = {r.doc_id for r in tper}
     assert tr.isdisjoint(te)
-
-
-def test_run_staged_sweep_only_removes_tmp_prefix(spark, tmp_path):
-    """_sweep_tmp must match the '.tmp-' PREFIX of crashed-stage temp
-    dirs, not the substring — a committed stage whose NAME contains
-    '.tmp-' must survive a later resume (ADVICE r5)."""
-    import os
-
-    from mapreduce_stockheadlines_spark.jobs.staged import _sweep_tmp
-
-    base = tmp_path / "staged"
-    base.mkdir()
-    (base / ".tmp-deadbeef").mkdir()          # crashed-write leftover
-    (base / "00-pre.tmp-x").mkdir()           # committed stage output
-    (base / "00-pre.tmp-x" / "keep").write_text("data")
-    _sweep_tmp(str(base))
-    assert not os.path.exists(base / ".tmp-deadbeef")
-    assert (base / "00-pre.tmp-x" / "keep").read_text() == "data"
 
 
 def test_embed_pipeline_pca_build_and_eval(spark, tmp_path, sf_dir, capsys):

@@ -358,18 +358,17 @@ def test_plan_guard_shuffle_cap_and_pushdown(spark, sf_dir):
 
 
 def test_runtime_bloom_filter_prunes_probe_side(spark, sf_dir):
-    """enable_runtime_filtering + a selective dim filter must inject a
-    bloom_filter_agg on the dim side and a might_contain probe on the
-    fact side's scan — the shuffle-join analogue of broadcast pruning."""
+    """The session's runtime bloom filter + a selective dim filter must
+    inject a bloom_filter_agg on the dim side and a might_contain probe
+    on the fact side's scan — the shuffle-join analogue of broadcast
+    pruning."""
     from pyspark.sql import functions as F
 
     from mapreduce_stockheadlines_spark.plans.catalog import table
-    from mapreduce_stockheadlines_spark.session import enable_runtime_filtering
 
     saved = {
         k: spark.conf.get(k, None)
         for k in (
-            "spark.sql.optimizer.runtime.bloomFilter.enabled",
             "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
             "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
             "spark.sql.autoBroadcastJoinThreshold",
@@ -378,7 +377,15 @@ def test_runtime_bloom_filter_prunes_probe_side(spark, sf_dir):
     try:
         # tiny thresholds so the rule fires on test-sized scans; kill
         # broadcast so the join is shuffle-based (where the filter applies)
-        enable_runtime_filtering(spark, "100GB", "0")
+        spark.conf.set(
+            "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
+            "100GB",
+        )
+        spark.conf.set(
+            "spark.sql.optimizer.runtime.bloomFilter."
+            "applicationSideScanSizeThreshold",
+            "0",
+        )
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         li = table(spark, sf_dir, "lineitem")
         orders = table(spark, sf_dir, "orders").filter(

@@ -342,15 +342,21 @@ def test_opq_identity_special_case(spark):
         PQ.opq_train(df, m=4, ksub=4, init="nope")
 
 
+def _opq_err(df, rot, cb):
+    """Mean reconstruction error of the OPQ serving path: rotate, then
+    encode in the rotated space."""
+    return (
+        PQ.pq_encode(PQ.rotate_vectors(df, rot), cb, vec_col="vr")
+        .agg(F.avg("pq_rmse").alias("e"))
+        .collect()[0]["e"]
+    )
+
+
 def test_opq_rotation_orthonormal_and_beats_plain_pq(spark):
     df, _ = _correlated(spark)
     rot, cb = PQ.opq_train(df, m=4, ksub=4, n_iters=2, pq_iters=2)
     assert np.allclose(rot @ rot.T, np.eye(8), atol=1e-10)
-    opq_err = (
-        PQ.opq_encode(df, rot, cb)
-        .agg(F.avg("pq_rmse").alias("e"))
-        .collect()[0]["e"]
-    )
+    opq_err = _opq_err(df, rot, cb)
     cb_plain = PQ.pq_train(df, m=4, ksub=4, n_iters=2)
     pq_err = (
         PQ.pq_encode(df, cb_plain)
@@ -370,11 +376,7 @@ def test_opq_alternation_nonincreasing_and_partition_invariant(spark):
     errs = []
     for it in (0, 1, 2):
         rot, cb = PQ.opq_train(df, m=4, ksub=4, n_iters=it, pq_iters=2)
-        errs.append(
-            PQ.opq_encode(df, rot, cb)
-            .agg(F.avg("pq_rmse").alias("e"))
-            .collect()[0]["e"]
-        )
+        errs.append(_opq_err(df, rot, cb))
     assert errs[1] <= errs[0] + 1e-3
     assert errs[2] <= errs[1] + 1e-3
 
@@ -384,28 +386,6 @@ def test_opq_alternation_nonincreasing_and_partition_invariant(spark):
     )
     assert np.array_equal(rot1, rot2)
     assert np.array_equal(cb1, cb2)
-
-
-def test_opq_encode_equals_manual_composition(spark):
-    """opq_encode is exactly rotate → pq_encode (with the query rotated
-    once) — the serving-path compatibility contract."""
-    df, _ = _correlated(spark, n=24)
-    rot, cb = PQ.opq_train(df, m=4, ksub=4, n_iters=1, pq_iters=1)
-    q0 = np.asarray(
-        df.orderBy("vec_id").limit(1).collect()[0]["embedding"]
-    )
-    got = sorted(
-        (r.vec_id, list(r.pq_codes), r.pq_rmse, r.adc_fp)
-        for r in PQ.opq_encode(df, rot, cb, query_vec=q0).collect()
-    )
-    manual = sorted(
-        (r.vec_id, list(r.pq_codes), r.pq_rmse, r.adc_fp)
-        for r in PQ.pq_encode(
-            PQ.rotate_vectors(df, rot), cb, vec_col="vr",
-            query_vec=rot @ q0,
-        ).collect()
-    )
-    assert got == manual
 
 
 def test_opq_cross_moment_matches_numpy_reference(spark):

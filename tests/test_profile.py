@@ -1,128 +1,11 @@
-"""Table profiling operators: DuckDB cross-engine pin for the exact
-profile, HLL sanity for the approximate one, histogram hand-check and
-oracle pin, and plan-shape assertions (one scan, one aggregate)."""
+"""Corpus profiling operators: the embedding profile and token
+divergence, each pinned against DuckDB."""
 
 from __future__ import annotations
 
 import duckdb
 import pytest
 from pyspark.sql import functions as F
-
-from mapreduce_stockheadlines_spark.operators.profile import (
-    numeric_histogram,
-    profile_table,
-)
-from mapreduce_stockheadlines_spark.plans.catalog import table
-
-
-def test_profile_exact_vs_duckdb(spark, sf_dir):
-    cols = ["c_custkey", "c_mktsegment", "c_acctbal"]
-    cust = table(spark, sf_dir, "customer")
-    got = {
-        r.column: r for r in profile_table(cust, cols, exact_distinct=True).collect()
-    }
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW customer AS SELECT * FROM read_parquet('{sf_dir}/customer.parquet')"
-    )
-    for c in cols:
-        n, nn, nd, mn, mx, avg = con.execute(
-            f"SELECT CAST(count(*) AS BIGINT), CAST(count({c}) AS BIGINT),"
-            f" CAST(count(DISTINCT {c}) AS BIGINT), min({c}), max({c}),"
-            f" round(avg(TRY_CAST({c} AS DOUBLE)), 4) FROM customer"
-        ).fetchone()
-        r = got[c]
-        assert (r.n_rows, r.n_rows - r.n_null, r.n_distinct) == (n, nn, nd)
-        # stringified bounds: compare via float for the numeric columns
-        if c == "c_mktsegment":
-            assert (r.min_value, r.max_value) == (mn, mx)
-            assert r.mean is None
-        else:
-            assert float(r.min_value) == pytest.approx(float(mn))
-            assert float(r.max_value) == pytest.approx(float(mx))
-            assert r.mean == pytest.approx(avg, abs=1e-4)
-
-
-def test_profile_counts_nulls(spark):
-    df = spark.createDataFrame(
-        [(1, "a"), (2, None), (3, None)], "k int, v string"
-    )
-    rows = {r.column: r for r in profile_table(df, exact_distinct=True).collect()}
-    assert rows["v"].n_null == 2 and rows["v"].n_distinct == 1
-    assert rows["k"].n_null == 0 and rows["k"].n_distinct == 3
-    assert rows["k"].mean == pytest.approx(2.0)
-
-
-def test_profile_approx_distinct_close(spark, sf_dir):
-    """HLL++ default rsd is 5%; the real key column must land within 10%."""
-    cust = table(spark, sf_dir, "customer")
-    n = cust.count()
-    r = {x.column: x for x in profile_table(cust, ["c_custkey"]).collect()}[
-        "c_custkey"
-    ]
-    assert abs(r.n_distinct - n) / n < 0.10
-
-
-def test_profile_is_one_scan_one_aggregate(spark, sf_dir):
-    """The whole profile must stay a single scan + single global aggregate
-    (no per-column jobs, no joins); exact mode adds only the Expand."""
-    cust = table(spark, sf_dir, "customer")
-    plan = (
-        profile_table(cust, ["c_custkey", "c_acctbal"])
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert plan.count("Scan parquet") == 1
-    assert "Join" not in plan
-
-
-def test_histogram_hand_values(spark):
-    df = spark.createDataFrame([(float(v),) for v in range(10)], "x double")
-    out = {r.bin: r for r in numeric_histogram(df, "x", n_bins=5).collect()}
-    assert len(out) == 5
-    # width (9-0)/5 = 1.8; max value 9.0 clamps into the last bin
-    assert [out[b].n for b in range(5)] == [2, 2, 2, 2, 2]
-    assert out[0].lo == 0.0 and out[4].hi == 9.0
-
-
-def test_histogram_emits_empty_bins(spark):
-    df = spark.createDataFrame([(0.0,), (10.0,)], "x double")
-    out = {r.bin: r.n for r in numeric_histogram(df, "x", n_bins=4).collect()}
-    assert out == {0: 1, 1: 0, 2: 0, 3: 1}
-
-
-def test_histogram_vs_duckdb(spark, sf_dir):
-    orders = table(spark, sf_dir, "orders")
-    got = sorted(
-        (r.bin, r.lo, r.hi, r.n)
-        for r in numeric_histogram(orders, "o_totalprice", n_bins=8).collect()
-    )
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW orders AS SELECT * FROM read_parquet('{sf_dir}/orders.parquet')"
-    )
-    want = sorted(
-        tuple(r)
-        for r in con.execute(
-            """
-            WITH b AS (SELECT min(o_totalprice) AS lo, max(o_totalprice) AS hi
-                       FROM orders),
-            binned AS (
-              SELECT least(CAST(floor((o_totalprice - lo) / ((hi - lo) / 8)) AS INT),
-                           7) AS bin
-              FROM orders, b),
-            axis AS (SELECT unnest(generate_series(0, 7)) AS bin)
-            SELECT a.bin,
-                   round(b.lo + a.bin * (b.hi - b.lo) / 8, 6) AS lo,
-                   round(b.lo + (a.bin + 1) * (b.hi - b.lo) / 8, 6) AS hi,
-                   CAST(count(binned.bin) AS BIGINT) AS n
-            FROM axis a CROSS JOIN b LEFT JOIN binned ON a.bin = binned.bin
-            GROUP BY 1, 2, 3 ORDER BY 1
-            """
-        ).fetchall()
-    )
-    assert got == want
 
 
 def test_profile_embeddings_matches_duckdb(spark, sf_dir):

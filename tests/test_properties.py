@@ -7,6 +7,7 @@ deadline — each example is a distributed job, not a pure function call.
 
 from __future__ import annotations
 
+import media_fixtures as MF
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -634,7 +635,7 @@ def test_jpeg_roundtrip_bounded_error_any_shape(h, w, quality, sub, ri, seed):
     noisy = rng.randint(0, 256, (h, w, 3)).astype(np.uint8)
     for px, bound in ((smooth, 35), (noisy, 255)):
         out = M._decode_jpeg(
-            M._encode_jpeg(px, quality=quality, subsample=sub,
+            MF.encode_jpeg(px, quality=quality, subsample=sub,
                            restart_interval=ri)
         )
         assert out.shape == px.shape
@@ -674,13 +675,13 @@ def test_jpeg_progressive_decodes_to_exact_baseline_pixels(
     flat = np.full_like(noisy, 130)  # long EOB runs across blocks
     for px in (noisy, flat):
         if gray:
-            base = M._encode_jpeg(px, quality=quality, gray=True)
-            prog = M._encode_jpeg_progressive(
+            base = MF.encode_jpeg(px, quality=quality, gray=True)
+            prog = MF.encode_jpeg_progressive(
                 px, quality=quality, gray=True, restart_interval=ri
             )
         else:
-            base = M._encode_jpeg(px, quality=quality, subsample=sub)
-            prog = M._encode_jpeg_progressive(
+            base = MF.encode_jpeg(px, quality=quality, subsample=sub)
+            prog = MF.encode_jpeg_progressive(
                 px, quality=quality, subsample=sub, restart_interval=ri
             )
         assert np.array_equal(
@@ -711,16 +712,19 @@ def test_oph_signature_matches_python_reference(spark, docs):
 
     from mapreduce_stockheadlines_spark.operators.dedup import (
         _OPH_ROT,
-        minhash_signature_oph,
+        minhash_signatures_multi,
     )
 
     K = 8
     rows = [(i, " ".join(words)) for i, words in enumerate(docs)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
+    sig = minhash_signatures_multi(
+        df, "doc_id", "text", num_hashes=K, shingle_ns=(None,),
+        include_oph=True,
+    )
     got = {
         r.doc_id: tuple(r)[1:]
-        for r in minhash_signature_oph(df, "doc_id", "text",
-                                       num_hashes=K).collect()
+        for r in sig.select("doc_id", *[f"oph{i}" for i in range(K)]).collect()
     }
 
     def ref(words):
@@ -764,7 +768,7 @@ def test_png_roundtrip_all_filters_and_color_types(h, w, filt, ctype, seed):
     rng = np.random.RandomState(seed)
     channels = {0: 1, 2: 3, 4: 2, 6: 4}[ctype]
     px = rng.randint(0, 256, (h, w, channels)).astype(np.uint8)
-    out = M._decode_png(M._encode_png(px, filter_type=filt, color_type=ctype))
+    out = M._decode_png(MF.encode_png(px, filter_type=filt, color_type=ctype))
     if ctype in (0, 4):
         want = np.repeat(px[..., :1], 3, axis=2)
     else:
@@ -808,14 +812,14 @@ def test_png_full_matrix_roundtrip(h, w, filt, depth, ctype, interlace,
         pal = rng.randint(0, 256, (n, 3)).astype(np.uint8)
         idx = rng.randint(0, n, (h, w)).astype(np.uint8)
         out = M._decode_png(
-            M._encode_png(idx, filter_type=filt, color_type=3,
+            MF.encode_png(idx, filter_type=filt, color_type=3,
                           depth=depth, palette=pal, interlace=interlace)
         )
         want = pal[idx]
     elif depth == 16:
         px = rng.randint(0, 65536, (h, w, channels)).astype(np.uint16)
         out = M._decode_png(
-            M._encode_png(px[..., 0] if channels == 1 else px,
+            MF.encode_png(px[..., 0] if channels == 1 else px,
                           filter_type=filt, color_type=ctype, depth=16,
                           interlace=interlace)
         )
@@ -828,7 +832,7 @@ def test_png_full_matrix_roundtrip(h, w, filt, depth, ctype, interlace,
         mx = (1 << depth) - 1
         g = rng.randint(0, mx + 1, (h, w)).astype(np.uint8)
         out = M._decode_png(
-            M._encode_png(g, filter_type=filt, color_type=0,
+            MF.encode_png(g, filter_type=filt, color_type=0,
                           depth=depth, interlace=interlace)
         )
         want = np.repeat(
@@ -837,7 +841,7 @@ def test_png_full_matrix_roundtrip(h, w, filt, depth, ctype, interlace,
     else:
         px = rng.randint(0, 256, (h, w, channels)).astype(np.uint8)
         out = M._decode_png(
-            M._encode_png(px[..., 0] if channels == 1 else px,
+            MF.encode_png(px[..., 0] if channels == 1 else px,
                           filter_type=filt, color_type=ctype,
                           interlace=interlace)
         )
@@ -872,7 +876,7 @@ def test_gif_roundtrip_any_shape_palette_interlace(
     rng = np.random.RandomState(seed)
     pal = rng.randint(0, 256, (n_colors, 3)).astype(np.uint8)
     px = pal[rng.randint(0, n_colors, (h, w))]
-    out = M._decode_gif(M._encode_gif(px, interlace=interlace))
+    out = M._decode_gif(MF.encode_gif(px, interlace=interlace))
     assert out.shape == (h, w, 3)
     assert (out == px).all(), (h, w, n_colors, interlace)
 

@@ -1,0 +1,345 @@
+"""Package reachability guard (AST only, no Spark).
+
+The package holds only what a query, job or CLI runs. This walks the
+call graph from the roots below, resolving every name per module
+(``from X import f as g``, module aliases such as ``D.f``, and imports
+inside function bodies), and fails with every top-level function or
+class in the package that no root reaches and that ``ALLOWED`` does not
+name.
+
+Roots:
+- the query registry (``plans/registry.py``);
+- the ``__main__`` block of every ``jobs/`` CLI;
+- ``scripts/``, ``bench.py``, ``perfbench/`` and ``__spark_entry__.py``;
+- ``streaming/`` (kept whole; its fate is an open ROADMAP item).
+
+Run as a script to print the unreached definitions:
+``python tests/test_reachability.py``.
+"""
+
+from __future__ import annotations
+
+import ast
+import os
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PKG = "mapreduce_stockheadlines_spark"
+
+# name -> reason. A name here is kept although no root reaches it, and
+# counts as a root itself, so its helpers stay reachable.
+ALLOWED = {
+    # Test references: a remaining test compares a live operator
+    # against them.
+    "operators.sampling.dsir_log_ratios":
+        "two-census reference that tests/test_sampling.py pins "
+        "dsir_fit_scores (the curate CLI's DSIR stage) against",
+    "operators.textstats.winnow_gram_col":
+        "one-expression semantic reference the staged winnow grams "
+        "(x08, curate) are pinned equal to; the plan-guard test builds "
+        "its inlining pathology from it",
+    # CLI artifact writers: the only way to produce an artifact that a
+    # CLI flag reads, or the path a CLI message names.
+    "operators.bpe.save_bpe": "writes what curate --bpe-dir reads",
+    "operators.unigram.save_unigram":
+        "writes what curate --unigram-dir reads",
+    "operators.wordpiece.save_wordpiece":
+        "writes what curate --wordpiece-dir reads",
+    "operators.relevance.save_bigram_lm": "writes what curate --lm-dir reads",
+    "operators.sampling.save_dsir_ratios":
+        "writes what the streaming ingest DSIR gate (dsir_ratios_dir) "
+        "reads; its error message names it",
+    "operators.pq.pq_refit":
+        "embed_pipeline --mode refit's messages name it as the path "
+        "for OPQ artifacts",
+    # Kept for now, each with its DuckDB-pinned tests: no root reaches
+    # them yet, and the next simplicity pass decides whether each goes
+    # or gains a query path.
+    "operators.merge.scd2_from_changes":
+        "SCD2 history build; tests/test_merge.py pins it against DuckDB",
+    "operators.rank.assign_global_ids":
+        "dense global ids over bucketed_row_number; "
+        "tests/test_rank_relational.py pins it against DuckDB",
+    "operators.temporal.resample_ffill":
+        "grid resample with forward fill; tests/test_temporal.py pins "
+        "it against a DuckDB ASOF join",
+}
+
+_MODULE = "<module>"
+_MAIN = "<main>"
+
+
+def _is_main_guard(node: ast.stmt) -> bool:
+    return (
+        isinstance(node, ast.If)
+        and isinstance(node.test, ast.Compare)
+        and isinstance(node.test.left, ast.Name)
+        and node.test.left.id == "__name__"
+    )
+
+
+class _Module:
+    def __init__(self, name: str, path: str, in_package: bool):
+        self.name = name
+        self.in_package = in_package
+        with open(path, encoding="utf-8") as f:
+            self.tree = ast.parse(f.read(), path)
+        self.defs: dict[str, ast.stmt] = {}
+        self.top_aliases: dict[str, tuple[str, str | None]] | None = None
+        for node in self.tree.body:
+            if isinstance(
+                node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            ):
+                self.defs[node.name] = node
+
+    def absolute(self, node: ast.ImportFrom) -> str:
+        if not node.level:
+            return node.module or ""
+        parts = self.name.split(".")
+        # A module's package is its name minus the last part.
+        base = parts[: len(parts) - node.level]
+        return ".".join(base + ([node.module] if node.module else []))
+
+
+def _load() -> dict[str, _Module]:
+    mods: dict[str, _Module] = {}
+    pkg_dir = os.path.join(ROOT, PKG)
+    for dirpath, _, files in os.walk(pkg_dir):
+        for fn in files:
+            if not fn.endswith(".py"):
+                continue
+            rel = os.path.relpath(os.path.join(dirpath, fn), ROOT)[:-3]
+            name = rel.replace(os.sep, ".")
+            if name.endswith(".__init__"):
+                name = name[: -len(".__init__")]
+            mods[name] = _Module(name, os.path.join(dirpath, fn), True)
+    externals = [os.path.join(ROOT, "bench.py"),
+                 os.path.join(ROOT, "__spark_entry__.py")]
+    for d in ("scripts", "perfbench"):
+        for fn in sorted(os.listdir(os.path.join(ROOT, d))):
+            if fn.endswith(".py") and not fn.startswith("test_"):
+                externals.append(os.path.join(ROOT, d, fn))
+    for path in externals:
+        name = "<ext>." + os.path.relpath(path, ROOT)[:-3].replace(os.sep, ".")
+        mods[name] = _Module(name, path, False)
+    return mods
+
+
+class _Graph:
+    def __init__(self, mods: dict[str, _Module]):
+        self.mods = mods
+        self.edges: dict[tuple[str, str], set[tuple[str, str]]] = {}
+        for m in mods.values():
+            self._module_edges(m)
+
+    def _target(self, mod: str, name: str, seen=()) -> tuple[str, str] | None:
+        """Resolve ``name`` as bound at the top level of module ``mod``
+        to a definition node, following re-exports."""
+        if f"{mod}.{name}" in self.mods:
+            return (f"{mod}.{name}", _MODULE)
+        m = self.mods.get(mod)
+        if m is None or (mod, name) in seen:
+            return None
+        if name in m.defs:
+            return (mod, name)
+        alias = self._aliases(m).get(name)
+        if alias is None:
+            return None
+        return self._target(alias[0], alias[1], seen + ((mod, name),)) \
+            if alias[1] else (alias[0], _MODULE)
+
+    @staticmethod
+    def _bind(m: _Module, node: ast.AST, out: dict) -> None:
+        if isinstance(node, ast.Import):
+            for a in node.names:
+                if a.asname:
+                    out[a.asname] = (a.name, None)
+        elif isinstance(node, ast.ImportFrom):
+            src = m.absolute(node)
+            for a in node.names:
+                out[a.asname or a.name] = (src, a.name)
+
+    def _aliases(self, m: _Module, scope: ast.AST | None = None):
+        """Names the imports bind -> (module, attribute or None): the
+        module-level imports, overridden by those inside ``scope``."""
+        if m.top_aliases is None:
+            m.top_aliases = {}
+            todo = list(m.tree.body)
+            while todo:
+                node = todo.pop(0)
+                if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                     ast.ClassDef, ast.Lambda)):
+                    continue
+                self._bind(m, node, m.top_aliases)
+                todo.extend(ast.iter_child_nodes(node))
+        out = dict(m.top_aliases)
+        if scope is not None:
+            for node in ast.walk(scope):
+                self._bind(m, node, out)
+        return out
+
+    def _refs(self, m: _Module, nodes: list[ast.AST],
+              scope: ast.AST | None = None) -> set[tuple[str, str]]:
+        out: set[tuple[str, str]] = set()
+        aliases = self._aliases(m, scope)
+        for root in nodes:
+            for node in ast.walk(root):
+                if isinstance(node, ast.Name):
+                    if node.id in aliases:
+                        src, attr = aliases[node.id]
+                        t = (self._target(src, attr) if attr
+                             else (src, _MODULE))
+                    else:
+                        t = (m.name, node.id) if node.id in m.defs else None
+                    if t:
+                        out.add(t)
+                elif isinstance(node, ast.Attribute):
+                    chain = []
+                    cur = node
+                    while isinstance(cur, ast.Attribute):
+                        chain.append(cur.attr)
+                        cur = cur.value
+                    if not isinstance(cur, ast.Name):
+                        continue
+                    head = cur.id
+                    if head in aliases:
+                        src, attr = aliases[head]
+                        mod = f"{src}.{attr}" if attr else src
+                    else:
+                        mod = head
+                    # ``D.f``, ``pkg.sub.f``: walk the dotted chain.
+                    for part in reversed(chain):
+                        if f"{mod}.{part}" in self.mods:
+                            mod = f"{mod}.{part}"
+                            continue
+                        if mod in self.mods:
+                            t = self._target(mod, part)
+                            if t:
+                                out.add(t)
+                        break
+                elif isinstance(node, (ast.Import, ast.ImportFrom)):
+                    # Importing a module runs its module-level code.
+                    if isinstance(node, ast.Import):
+                        srcs = [a.name for a in node.names]
+                    else:
+                        src = m.absolute(node)
+                        srcs = [src] + [f"{src}.{a.name}" for a in node.names]
+                    for s in srcs:
+                        parts = s.split(".")
+                        for i in range(1, len(parts) + 1):
+                            name = ".".join(parts[:i])
+                            if name in self.mods:
+                                out.add((name, _MODULE))
+        return out
+
+    def _module_edges(self, m: _Module) -> None:
+        top: list[ast.AST] = []
+        main: list[ast.AST] = []
+        for node in m.tree.body:
+            if node in m.defs.values():
+                body = self._refs(m, [node], scope=node)
+                self.edges[(m.name, node.name)] = body | {(m.name, _MODULE)}
+            elif _is_main_guard(node):
+                main.append(node)
+            else:
+                top.append(node)
+        self.edges[(m.name, _MODULE)] = self._refs(m, top)
+        self.edges[(m.name, _MAIN)] = self._refs(m, main) | {(m.name, _MODULE)}
+
+    def reach(self, roots: set[tuple[str, str]]) -> set[tuple[str, str]]:
+        seen: set[tuple[str, str]] = set()
+        todo = list(roots)
+        while todo:
+            n = todo.pop()
+            if n in seen:
+                continue
+            seen.add(n)
+            todo.extend(self.edges.get(n, ()))
+        return seen
+
+
+def _roots(mods: dict[str, _Module]) -> set[tuple[str, str]]:
+    roots: set[tuple[str, str]] = set()
+    for name, m in mods.items():
+        whole = (
+            not m.in_package
+            or name.startswith(f"{PKG}.streaming")
+        )
+        if whole:
+            roots |= {(name, _MODULE), (name, _MAIN)}
+            roots |= {(name, d) for d in m.defs}
+        elif name.startswith(f"{PKG}.jobs."):
+            roots.add((name, _MAIN))
+    roots.add((f"{PKG}.plans.registry", _MODULE))
+    for qual in ALLOWED:
+        mod, _, name = qual.rpartition(".")
+        roots.add((f"{PKG}.{mod}", name))
+    return roots
+
+
+def unreached() -> list[str]:
+    """Package definitions that no root reaches, as ``module.name``
+    relative to the package."""
+    mods = _load()
+    live = _Graph(mods).reach(_roots(mods))
+    out = []
+    for name, m in mods.items():
+        if not m.in_package:
+            continue
+        for d in m.defs:
+            if (name, d) not in live:
+                out.append(f"{name[len(PKG) + 1:]}.{d}")
+    return sorted(out)
+
+
+def test_every_package_definition_is_reached_from_a_root():
+    dead = unreached()
+    assert not dead, (
+        "package definitions that no query, job, CLI or streaming module "
+        "reaches (delete them, or name them in ALLOWED with a reason):\n  "
+        + "\n  ".join(dead)
+    )
+
+
+def test_allowlist_names_existing_unreached_definitions():
+    mods = _load()
+    for qual in ALLOWED:
+        mod, _, name = qual.rpartition(".")
+        assert name in mods[f"{PKG}.{mod}"].defs, qual
+    # An allowlisted name that a root reaches anyway is stale.
+    without = _Graph(mods).reach(
+        _roots(mods) - {(f"{PKG}.{q.rpartition('.')[0]}", q.rpartition(".")[2])
+                        for q in ALLOWED}
+    )
+    stale = [
+        q for q in ALLOWED
+        if (f"{PKG}.{q.rpartition('.')[0]}", q.rpartition(".")[2]) in without
+    ]
+    assert not stale, f"allowlisted but reached from a root: {stale}"
+
+
+def test_slow_tests_names_exist():
+    """Every ``conftest.SLOW_TESTS`` name (without its ``[param]``
+    suffix) is a ``def test_…`` under tests/: a stale name would
+    silently mark nothing slow."""
+    from conftest import SLOW_TESTS
+
+    tests_dir = os.path.join(ROOT, "tests")
+    defined = set()
+    for fn in os.listdir(tests_dir):
+        if fn.endswith(".py"):
+            with open(os.path.join(tests_dir, fn), encoding="utf-8") as f:
+                tree = ast.parse(f.read(), fn)
+            defined |= {
+                n.name for n in ast.walk(tree)
+                if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+                and n.name.startswith("test_")
+            }
+    stale = sorted(
+        name for name in SLOW_TESTS if name.split("[")[0] not in defined
+    )
+    assert not stale, f"SLOW_TESTS names no test defines: {stale}"
+
+
+if __name__ == "__main__":
+    for qual in unreached():
+        print(qual)

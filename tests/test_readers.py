@@ -71,10 +71,7 @@ def test_sink_round_trips(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from mapreduce_stockheadlines_spark.sources.readers import (
-        read_csv_proper,
-        read_parquet,
-    )
+    from mapreduce_stockheadlines_spark.sources.readers import read_csv_proper
     from mapreduce_stockheadlines_spark.sources.sinks import write_parquet
 
     df = spark.createDataFrame(
@@ -85,9 +82,9 @@ def test_sink_round_trips(spark, tmp_path):
     pq = str(tmp_path / "pq")
     write_parquet(df, pq, partition_by=["p"])
     assert sorted(d for d in os.listdir(pq) if d.startswith("p=")) == ["p=x", "p=y"]
-    back = read_parquet(spark, pq).select("id", "v", "p")
+    back = spark.read.parquet(pq).select("id", "v", "p")
     assert sorted((r.id, r.v, r.p) for r in back.collect()) == rows
-    pruned = read_parquet(spark, pq).filter(F.col("p") == "y")
+    pruned = spark.read.parquet(pq).filter(F.col("p") == "y")
     buf = io.StringIO()
     with redirect_stdout(buf):
         pruned.explain("formatted")
@@ -238,96 +235,6 @@ def test_convert_job_csv_to_partitioned_parquet(spark, tmp_path):
     assert spark.read.orc(out2).count() == 3
 
 
-def test_zordered_write_bounds_every_dimension(spark, tmp_path):
-    """Morton layout: every file's bounding box must be narrow in BOTH
-    ordered columns, where the single-column clustered layout leaves the
-    second column full-width in every file."""
-    import glob
-
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
-
-    from mapreduce_stockheadlines_spark.sources.sinks import (
-        write_clustered,
-        write_zordered,
-    )
-
-    n = 1 << 14
-    df = spark.range(0, n).select(
-        (F.col("id") % 128).alias("x"), (F.col("id") / 128).cast("long").alias("y")
-    )
-
-    def file_ranges(path, col_idx):
-        spans = []
-        for f in glob.glob(f"{path}/part-*.parquet"):
-            md = pq.ParquetFile(f).metadata
-            mins, maxs = [], []
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(col_idx).statistics
-                mins.append(st.min)
-                maxs.append(st.max)
-            spans.append(max(maxs) - min(mins))
-        return spans
-
-    zo = str(tmp_path / "zo")
-    write_zordered(df, zo, ["x", "y"], bits=7, num_files=16)
-    cl = str(tmp_path / "cl")
-    write_clustered(df.select("x", "y"), cl, "x", num_files=16)
-
-    # z-order: both dimensions' per-file spans well below the full domain
-    # for the typical file (a file straddling a major curve boundary can
-    # span wide in one dim — that's inherent to the space-filling curve,
-    # so assert the distribution, not the max)
-    x_spans = sorted(file_ranges(zo, 0))
-    y_spans = sorted(file_ranges(zo, 1))
-    assert len(x_spans) == 16
-    assert x_spans[len(x_spans) // 2] <= 127 * 0.55  # median file is tight
-    assert y_spans[len(y_spans) // 2] <= 127 * 0.55
-    assert sum(x_spans) / 16 <= 127 * 0.65
-    assert sum(y_spans) / 16 <= 127 * 0.65
-    # clustered-by-x: x is tight but y stays (near) full-width in EVERY
-    # file — the contrast that motivates the Morton layout
-    y_spans_cl = file_ranges(cl, 1)
-    assert min(y_spans_cl) > 127 * 0.9
-    # round trip
-    assert spark.read.parquet(zo).count() == n
-
-
-def test_compact_parquet_reduces_file_count(spark, tmp_path):
-    """Compaction must size the output from directory bytes (ceil of
-    total/target), preserve every row, and default to the shuffle-free
-    coalesce path."""
-    import glob
-
-    from pyspark.sql import functions as F
-
-    from mapreduce_stockheadlines_spark.sources.sinks import compact_parquet
-
-    src = str(tmp_path / "small_files")
-    dst = str(tmp_path / "compacted")
-    df = spark.range(0, 20_000).withColumn("payload", F.md5(F.col("id").cast("string")))
-    df.repartition(64).write.parquet(src)
-    assert len(glob.glob(f"{src}/part-*.parquet")) == 64
-
-    n = compact_parquet(spark, src, dst, target_file_mb=1)
-    files = glob.glob(f"{dst}/part-*.parquet")
-    assert len(files) == n
-    assert n < 64  # 64 tiny files sum to ~1-2 MB → a handful of outputs
-    got = sorted(r.id for r in spark.read.parquet(dst).collect())
-    assert got == list(range(20_000))
-
-
-def test_compact_parquet_shuffle_mode_balances(spark, tmp_path):
-    from mapreduce_stockheadlines_spark.sources.sinks import compact_parquet
-
-    src = str(tmp_path / "src")
-    dst = str(tmp_path / "dst")
-    spark.range(0, 1000).write.parquet(src)
-    n = compact_parquet(spark, src, dst, target_file_mb=1024, shuffle=True)
-    assert n == 1
-    assert spark.read.parquet(dst).count() == 1000
-
-
 def test_partitioned_sized_write_bounds_files_per_dir(spark, tmp_path):
     """Every partition directory gets at most files_per_partition parquet
     files in one write (no post-hoc compaction), and content round-trips."""
@@ -360,189 +267,6 @@ def test_partitioned_sized_write_bounds_files_per_dir(spark, tmp_path):
     )
     for d in glob.glob(f"{dst1}/day=*"):
         assert len(glob.glob(f"{d}/*.parquet")) == 1
-
-
-def test_python_datasource_batch_partitions_and_determinism(spark):
-    """Custom Python DataSource (Spark 4 API): the batch reader plans
-    real input partitions (parallel generation, no driver funnel), rows
-    are a pure function of their index (re-read identical), and the
-    reference-shaped schema feeds the parity pipeline unchanged."""
-    from mapreduce_stockheadlines_spark.sources.pysource import register
-
-    register(spark)
-    df = (
-        spark.read.format("headlines")
-        .option("rows", 500)
-        .option("numPartitions", 8)
-        .load()
-    )
-    assert df.schema.simpleString() == (
-        "struct<id:bigint,headline:string,date:string,stock:string>"
-    )
-    assert df.rdd.getNumPartitions() == 8
-    assert df.count() == 500
-    assert df.select("id").distinct().count() == 500
-
-    again = spark.read.format("headlines").option("rows", 500).load()
-    assert sorted(map(tuple, df.collect())) == sorted(
-        map(tuple, again.collect())
-    )
-
-    # the reference job shape runs on it directly: stock frequency count
-    top = (
-        df.groupBy("stock").count().orderBy(F.desc("count"), "stock")
-    ).collect()
-    assert sum(r["count"] for r in top) == 500
-
-
-def test_python_datasource_stream_offsets(spark, tmp_path):
-    """Streaming side: monotone offsets advance rowsPerBatch per
-    trigger; availableNow drains to maxRows exactly once, idempotent
-    rows (pure function of index)."""
-    from mapreduce_stockheadlines_spark.sources.pysource import register
-
-    register(spark)
-    stream = (
-        spark.readStream.format("headlines")
-        .option("rowsPerBatch", 40)
-        .option("maxRows", 120)
-        .load()
-    )
-    out = str(tmp_path / "out")
-    ck = str(tmp_path / "ck")
-    # availableNow is unsupported for Python micro-batch sources (Spark
-    # falls back to one batch) — run continuous micro-batches and stop
-    # once the offset cap has drained
-    import time
-
-    q = (
-        stream.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ck)
-        .trigger(processingTime="1 seconds")
-        .start()
-    )
-    try:
-        deadline = time.time() + 120
-        while time.time() < deadline:
-            try:
-                if spark.read.parquet(out).count() >= 120:
-                    break
-            except Exception:
-                pass
-            time.sleep(1)
-    finally:
-        q.stop()
-    got = spark.read.parquet(out)
-    assert got.count() == 120  # maxRows caps the offset exactly
-    assert got.select("id").distinct().count() == 120
-
-
-def test_python_datasource_manifest_writer(spark, tmp_path):
-    """Custom Python DataSourceWriter: tasks write per-partition shards,
-    the driver publishes _MANIFEST.json atomically, and the manifest
-    reader ignores files the commit never blessed."""
-    from mapreduce_stockheadlines_spark.sources.pysource import (
-        read_manifest,
-        register_sinks,
-    )
-
-    register_sinks(spark)
-    out = str(tmp_path / "jsonl")
-    df = spark.range(100).select(
-        F.col("id"), (F.col("id") % 3).alias("grp")
-    ).repartition(4)
-    df.write.format("jsonl_manifest").option("path", out).mode(
-        "append"
-    ).save()
-
-    import glob
-    import json as _json
-    import os
-
-    shards = sorted(glob.glob(f"{out}/part-*.jsonl"))
-    assert len(shards) == 4
-    with open(os.path.join(out, "_MANIFEST.json")) as f:
-        manifest = _json.load(f)
-    assert manifest["n_rows"] == 100
-    assert manifest["shards"] == [os.path.basename(s) for s in shards]
-
-    # a torn/uncommitted leftover file is invisible through the manifest
-    with open(os.path.join(out, "part-junk.jsonl"), "w") as f:
-        f.write('{"id": 9999, "grp": 0}\n')
-    back = read_manifest(spark, out)
-    assert back.count() == 100
-    assert back.agg(F.sum("id")).first()[0] == 100 * 99 // 2
-
-
-def test_python_datasource_stream_restart_resumes_offsets(spark, tmp_path):
-    """Restart from a PARTIAL checkpoint (stopped right after the first
-    batch commit, later batches planned but uncommitted) must resume
-    without re-serving: the Python runner protocol never calls
-    deserializeOffset, so a fresh reader instance recovers its position
-    through partitions()/commit() — without that, latestOffset() starts
-    back at 0, writes a REGRESSED offset into the log, and the next
-    batch re-serves previously-delivered rows (observed: 30 duplicate
-    ids before the fix)."""
-    import os
-    import time
-
-    from mapreduce_stockheadlines_spark.sources.pysource import register
-
-    register(spark)
-    out = str(tmp_path / "out")
-    ck = str(tmp_path / "ck")
-
-    def make_query(trigger_s):
-        stream = (
-            spark.readStream.format("headlines")
-            .option("rowsPerBatch", 30)
-            .option("maxRows", 90)
-            .load()
-        )
-        return (
-            stream.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ck)
-            .trigger(processingTime=f"{trigger_s} seconds")
-            .start()
-        )
-
-    # run 1: a slow trigger, stopped as soon as batch 0 commits — the
-    # checkpoint is left with a planned-but-uncommitted later batch
-    q = make_query(5)
-    deadline = time.time() + 120
-    while time.time() < deadline and not os.path.exists(f"{ck}/commits/0"):
-        time.sleep(0.2)
-    q.stop()
-
-    # run 2: fresh reader instance, same checkpoint — drain to maxRows
-    q2 = make_query(1)
-    try:
-        deadline = time.time() + 120
-        while time.time() < deadline:
-            try:
-                if spark.read.parquet(out).count() >= 90:
-                    break
-            except Exception:
-                pass
-            time.sleep(1)
-    finally:
-        q2.stop()
-    got = spark.read.parquet(out)
-    assert got.count() == 90
-    assert got.select("id").distinct().count() == 90  # no re-served rows
-
-
-def test_python_datasource_feed_dates_are_valid(spark):
-    """Every generated date must survive a strict to_date cast — the
-    naive month grid used to fabricate 2020-02-30-style dates."""
-    from mapreduce_stockheadlines_spark.sources.pysource import register
-
-    register(spark)
-    df = spark.read.format("headlines").option("rows", 3000).load()
-    parsed = df.select(F.to_date("date").alias("d"))
-    assert parsed.filter(F.col("d").isNull()).count() == 0
 
 
 def _warc_record(wtype, rid, uri, payload: bytes, extra=()):
@@ -966,53 +690,6 @@ def test_warc_stream_fix_mojibake_exact_dedup(spark, tmp_path):
     assert sorted(got) == ["<urn:uuid:a>", "<urn:uuid:c>"]
     assert got["<urn:uuid:a>"] == clean
     assert spark.read.parquet(idx).count() == 2
-
-
-def test_write_parquet_bloom_adds_filters(spark, tmp_path):
-    """Bloom-filtered parquet: identical data written with and without
-    blooms differs by about ndv x 1.2 bytes of filter payload (pyarrow
-    16 can't expose the footer offset, so the pin is the physical
-    artifact), data round-trips, and equality pushdown still reaches
-    the scan."""
-    import glob as _glob
-    import io
-    import os
-    from contextlib import redirect_stdout
-
-    import pytest as _pytest
-    from pyspark.sql import functions as F
-
-    from mapreduce_stockheadlines_spark.sources.sinks import (
-        write_parquet_bloom,
-    )
-
-    df = (
-        spark.range(0, 4000)
-        .select(F.md5(F.col("id").cast("string")).alias("dig"), "id")
-        .coalesce(1)
-    )
-    plain, bloomed = str(tmp_path / "plain"), str(tmp_path / "bloom")
-    df.write.parquet(plain)
-    write_parquet_bloom(df, bloomed, ["dig"], expected_ndv=4000)
-
-    size = lambda d: sum(
-        os.path.getsize(f) for f in _glob.glob(f"{d}/part-*.parquet")
-    )
-    delta = size(bloomed) - size(plain)
-    assert delta > 2000, f"bloom payload missing (delta={delta})"
-
-    back = spark.read.parquet(bloomed)
-    assert back.count() == 4000
-    probe = df.first().dig
-    hit = back.filter(F.col("dig") == probe)
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        hit.explain("formatted")
-    assert "PushedFilters: [IsNotNull(dig), EqualTo(dig," in buf.getvalue()
-    assert hit.count() == 1
-
-    with _pytest.raises(ValueError, match="not in frame"):
-        write_parquet_bloom(df, str(tmp_path / "x"), ["nope"])
 
 
 def test_pipeline_cli_warc_input(spark, tmp_path):

@@ -8,34 +8,10 @@ import duckdb
 from pyspark.sql import functions as F
 
 from mapreduce_stockheadlines_spark.operators.sampling import (
-    deterministic_sample,
     hash_fraction,
     train_test_split,
-    weighted_source_mix,
 )
 from mapreduce_stockheadlines_spark.plans.catalog import table
-
-
-def test_sample_is_deterministic_and_partition_invariant(spark, sf_dir):
-    docs = table(spark, sf_dir, "documents")
-    a = sorted(r.doc_id for r in deterministic_sample(docs, "doc_id", 0.3).collect())
-    b = sorted(
-        r.doc_id
-        for r in deterministic_sample(docs.repartition(17), "doc_id", 0.3).collect()
-    )
-    assert a == b and len(a) > 0
-    # fraction lands near target (md5 uniformity; 500 docs → loose bound)
-    n = docs.count()
-    assert 0.2 * n < len(a) < 0.4 * n
-
-
-def test_sample_is_monotone_in_fraction(spark, sf_dir):
-    """fraction f1 < f2 → sample(f1) ⊆ sample(f2): growing a sample never
-    swaps rows out (the property per-task RNG sampling lacks)."""
-    docs = table(spark, sf_dir, "documents")
-    small = {r.doc_id for r in deterministic_sample(docs, "doc_id", 0.2).collect()}
-    big = {r.doc_id for r in deterministic_sample(docs, "doc_id", 0.5).collect()}
-    assert small <= big
 
 
 def test_train_test_split_partitions_exactly(spark, sf_dir):
@@ -60,27 +36,13 @@ def test_split_membership_stable_under_growth(spark, sf_dir):
     assert full_ids == sub_ids
 
 
-def test_weighted_source_mix(spark, sf_dir):
-    docs = table(spark, sf_dir, "documents")
-    sources = [r.source for r in docs.select("source").distinct().collect()]
-    keep_all, drop_all = sources[0], sources[1]
-    out = weighted_source_mix(
-        docs, "source", "doc_id", {keep_all: 1.0, drop_all: 0.0}
-    )
-    got = {r.source for r in out.select("source").distinct().collect()}
-    assert keep_all in got and drop_all not in got
-    # unlisted sources dropped entirely
-    assert got <= {keep_all}
-    n_src = docs.filter(F.col("source") == keep_all).count()
-    assert out.count() == n_src
-
-
 def test_hash_fraction_portable_to_duckdb(spark, sf_dir):
     """The sampler primitive is plain md5 hex — DuckDB computes the exact
     same membership, so a split made elsewhere agrees row-for-row."""
     docs = table(spark, sf_dir, "documents")
     spark_ids = sorted(
-        r.doc_id for r in deterministic_sample(docs, "doc_id", 0.25, salt="s").collect()
+        r.doc_id
+        for r in docs.filter(hash_fraction("doc_id", "s") < 0.25).collect()
     )
     con = duckdb.connect()
     duck_ids = [
@@ -201,47 +163,6 @@ def test_stratified_partition_invariant_and_vs_duckdb(spark, sf_dir):
         ).fetchall()
     )
     assert a == want
-
-
-# --- leakage-safe group split -------------------------------------------------
-
-
-def test_group_split_keeps_groups_together(spark, sf_dir):
-    from mapreduce_stockheadlines_spark.operators.sampling import group_split
-
-    docs = table(spark, sf_dir, "documents").withColumn(
-        "grp", F.col("doc_id") % 50
-    )
-    train, test = group_split(docs, "grp", test_fraction=0.3)
-    tr_g = {r.grp for r in train.select("grp").distinct().collect()}
-    te_g = {r.grp for r in test.select("grp").distinct().collect()}
-    assert tr_g.isdisjoint(te_g)
-    assert train.count() + test.count() == docs.count()
-    assert len(te_g) > 0
-
-
-def test_group_split_blocks_neardup_leakage(spark):
-    """The composition that motivates the operator: split on the dedup
-    cluster representative and no near-dup pair straddles train/test."""
-    from mapreduce_stockheadlines_spark.operators.dedup import neardup_clusters
-    from mapreduce_stockheadlines_spark.operators.sampling import group_split
-
-    docs = spark.range(0, 200).withColumnRenamed("id", "doc_id")
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(0, 100, 2)]          # 50 two-node clusters
-        + [(150, 151), (151, 152), (152, 153)],          # one chain
-        "id_a long, id_b long",
-    )
-    clusters = neardup_clusters(pairs)
-    with_rep = docs.join(
-        clusters.withColumnRenamed("id", "doc_id"), "doc_id", "left"
-    ).withColumn("rep", F.coalesce("cluster_id", F.col("doc_id")))
-    train, test = group_split(with_rep, "rep", test_fraction=0.4)
-    tr = {r.doc_id for r in train.collect()}
-    te = {r.doc_id for r in test.collect()}
-    assert tr.isdisjoint(te) and tr | te == {r.doc_id for r in docs.collect()}
-    for a, b in [(i, i + 1) for i in range(0, 100, 2)] + [(150, 151), (151, 152), (152, 153)]:
-        assert (a in tr) == (b in tr), f"pair ({a},{b}) straddles the split"
 
 
 def test_token_budget_filter(spark):

@@ -9,10 +9,25 @@ from pyspark.sql import functions as F
 
 from mapreduce_stockheadlines_spark.operators.sketches import (
     distinct_sketches,
-    merge_sketches,
     upsert_sketches,
 )
 from mapreduce_stockheadlines_spark.plans.catalog import table
+
+
+def merge_sketches(sketches, group_cols):
+    """Read an artifact table back over ``group_cols``: HLL union of the
+    sketches, then group_cols + ``distinct_estimate`` + summed n_rows."""
+    merged = sketches.groupBy(*group_cols).agg(
+        F.hll_union_agg("sketch").alias("sketch"),
+        F.sum("n_rows").alias("n_rows"),
+    )
+    return merged.select(
+        *group_cols,
+        F.hll_sketch_estimate("sketch").cast("bigint").alias(
+            "distinct_estimate"
+        ),
+        "n_rows",
+    )
 
 
 def test_sketch_estimates_within_tolerance(spark, sf_dir):
@@ -201,22 +216,6 @@ def test_cms_never_underestimates_and_is_tight_when_wide(spark, sf_dir):
     assert all(r.freq_estimate == 0 for r in gh.collect())
 
 
-def test_cms_merge_exactly_equals_build_of_union(spark, sf_dir):
-    from mapreduce_stockheadlines_spark.operators.sketches import (
-        cms_build,
-        cms_merge,
-    )
-
-    toks = _tokens(spark, sf_dir)
-    a = toks.filter(F.col("doc_id") % 2 == 0)
-    b = toks.filter(F.col("doc_id") % 2 != 0)
-    merged = cms_merge(cms_build(a, "token"), cms_build(b, "token"))
-    whole = cms_build(toks, "token")
-    assert sorted(map(tuple, merged.collect())) == sorted(
-        map(tuple, whole.collect())
-    )
-
-
 def test_cms_grouped_and_vs_duckdb(spark, sf_dir):
     """DuckDB re-derives the salted-md5 positions, the counter table
     AND the per-probe min-estimate bit-for-bit (grouped by source)."""
@@ -288,26 +287,6 @@ def test_cms_grouped_and_vs_duckdb(spark, sf_dir):
 
 
 # --- quantile sketches -------------------------------------------------------
-
-
-def test_qsk_merge_exactly_equals_build_of_union(spark, sf_dir):
-    from mapreduce_stockheadlines_spark.operators.sketches import (
-        qsk_build,
-        qsk_merge,
-    )
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    a = docs.filter(F.col("doc_id") % 2 == 0)
-    b = docs.filter(F.col("doc_id") % 2 != 0)
-    merged = qsk_merge(
-        qsk_build(a, "n_chars", ["source"]),
-        qsk_build(b, "n_chars", ["source"]),
-        ["source"],
-    )
-    whole = qsk_build(docs, "n_chars", ["source"])
-    assert sorted(map(tuple, merged.collect())) == sorted(
-        map(tuple, whole.collect())
-    )
 
 
 def test_qsk_buckets_and_quantiles_vs_duckdb_and_error_bound(spark, sf_dir):

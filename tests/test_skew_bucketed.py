@@ -1,31 +1,13 @@
-"""Tests for skew salting and bucketed co-located joins — correctness
-(results identical to the plain operators) plus the plan property each
-exists for (skew spread over salt partitions; no Exchange on a
-bucketed⋈bucketed join)."""
+"""Tests for skew salting: results identical to the plain operators."""
 
 from __future__ import annotations
 
-import io
-from contextlib import redirect_stdout
-
-import pytest
 from pyspark.sql import functions as F
 
 from mapreduce_stockheadlines_spark.operators.skew import (
     salted_join,
     two_phase_count,
 )
-from mapreduce_stockheadlines_spark.sources.bucketed import (
-    read_table,
-    write_bucketed,
-)
-
-
-def _plan(df) -> str:
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
 
 
 def _skewed_frames(spark):
@@ -60,31 +42,3 @@ def test_two_phase_count_matches_groupby_count(spark):
     plain = {r.key: r["count"] for r in left.groupBy("key").count().collect()}
     two = {r.key: r["count"] for r in two_phase_count(left, "key", 4).collect()}
     assert plain == two
-
-
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    """The point of bucketing: both sides bucketed on the join key with the
-    same bucket count → sort-merge join without any shuffle Exchange."""
-    o = spark.range(0, 1000).select(
-        F.col("id").alias("k"), (F.col("id") * 2).alias("a")
-    )
-    l = spark.range(0, 4000).select(
-        (F.col("id") % 1000).alias("k"), F.col("id").alias("b")
-    )
-    write_bucketed(o, "t_orders_b", ["k"], num_buckets=8, sort_cols=["k"])
-    write_bucketed(l, "t_lineitem_b", ["k"], num_buckets=8, sort_cols=["k"])
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        joined = read_table(spark, "t_orders_b").join(
-            read_table(spark, "t_lineitem_b"), "k"
-        )
-        plan = _plan(joined)
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan  # co-located: bucket layout IS the shuffle
-        assert joined.count() == 4000
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-        spark.sql("DROP TABLE IF EXISTS t_orders_b")
-        spark.sql("DROP TABLE IF EXISTS t_lineitem_b")

@@ -87,11 +87,15 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_side_tables_plan_in_the_jvm(spark):
+def test_side_tables_plan_in_the_jvm(spark, sf_dir):
     """The built-in side tables never start a Python worker: the
-    stop-word table and ``ranked``'s bucket-offset table plan as
-    ``LocalTableScan``, not as a Python RDD (``Scan ExistingRDD``)."""
+    stop-word table, ``ranked``'s bucket-offset table and x24's
+    blocklist and robots tables plan as ``LocalTableScan``, not as a
+    Python RDD (``Scan ExistingRDD``)."""
     from mapreduce_stockheadlines_spark.operators.rank import ranked
+    from mapreduce_stockheadlines_spark.plans.extensions import (
+        x24_url_curation,
+    )
 
     stop = stopwords_df(spark)
     assert "LocalTableScan" in _plan(stop)
@@ -105,6 +109,9 @@ def test_side_tables_plan_in_the_jvm(spark):
     assert "LocalTableScan" in plan
     assert "ExistingRDD" not in plan
     assert sorted(x.rank for x in r.collect()) == list(range(1, 51))
+    x24 = _plan(x24_url_curation(spark, sf_dir))
+    assert "LocalTableScan" in x24
+    assert "ExistingRDD" not in x24
 
 
 def test_explode_tokens_one_row_per_token(spark):
@@ -807,7 +814,7 @@ def test_gopher_rules_hand_values(spark):
     """gopher_rules_cols against hand-computed values for every rule
     dimension (Rae et al. 2021 appendix A1.1 thresholds)."""
     from mapreduce_stockheadlines_spark.operators.textstats import (
-        gopher_c4_filter,
+        gopher_rules_cols,
     )
 
     long_good = (
@@ -828,7 +835,7 @@ def test_gopher_rules_hand_values(spark):
     df = spark.createDataFrame(cases, "doc_id int, text string")
     out = {
         r["doc_id"]: r.asDict()
-        for r in gopher_c4_filter(df, "doc_id", "text").collect()
+        for r in df.select("doc_id", *gopher_rules_cols("text")).collect()
     }
     g = out[0]
     assert g["gopher_n_words"] == 60 and g["gopher_kept"] is True
@@ -843,7 +850,7 @@ def test_gopher_rules_hand_values(spark):
 
 def test_c4_rules_hand_values(spark):
     from mapreduce_stockheadlines_spark.operators.textstats import (
-        gopher_c4_filter,
+        c4_rules_cols,
     )
 
     cases = [
@@ -856,7 +863,7 @@ def test_c4_rules_hand_values(spark):
     df = spark.createDataFrame(cases, "doc_id int, text string")
     out = {
         r["doc_id"]: r.asDict()
-        for r in gopher_c4_filter(df, "doc_id", "text").collect()
+        for r in df.select("doc_id", *c4_rules_cols("text")).collect()
     }
     assert out[0]["c4_kept"] is True and out[0]["c4_n_sentences"] == 4
     assert out[0]["c4_term_line_frac"] == 1.0
@@ -867,15 +874,26 @@ def test_c4_rules_hand_values(spark):
 
 
 def test_gopher_c4_zero_shuffle_plan(spark):
-    """The fused rule projection must stay exchange-free (pure codegen
-    over one scan — the text_stats contract)."""
+    """The fused rule projection (both rule sets over one shared word
+    array and line count, as the curate CLI and x08 build it) must stay
+    exchange-free (pure codegen over one scan — the text_stats
+    contract)."""
+    from pyspark.sql import functions as F
+
     from mapreduce_stockheadlines_spark.operators.textstats import (
-        gopher_c4_filter,
+        _rule_base,
+        c4_rules_cols,
+        gopher_rules_cols,
     )
 
     df = spark.createDataFrame([(1, "a b c")], "doc_id int, text string")
+    base = _rule_base(F.col("text"))
     plan = (
-        gopher_c4_filter(df, "doc_id", "text")
+        df.select(
+            "doc_id",
+            *gopher_rules_cols("text", _base=base),
+            *c4_rules_cols("text", _base=base),
+        )
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -917,6 +935,8 @@ def test_winnow_fingerprints_guarantee_and_edges(spark):
     is reflow/case-invariant; (c) short/NULL docs carry 0/NULL; (d) a
     hash present in more than max_df docs is dropped before the
     self-join (the hot-boilerplate quadratic guard)."""
+    from conftest import winnow_summary
+
     from mapreduce_stockheadlines_spark.operators import textstats as TS
 
     rows = [
@@ -933,7 +953,7 @@ def test_winnow_fingerprints_guarantee_and_edges(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     out = {
         r.id: (r.n_winnow, r.winnow_fp8)
-        for r in TS.winnow_fingerprint_summary(df, "doc_id", "text").collect()
+        for r in winnow_summary(df, "doc_id", "text").collect()
     }
     assert out[4] == (0, None) and out[5] == (0, None)
     assert out[1][0] > 0 and out[1][1] is not None
@@ -951,7 +971,7 @@ def test_winnow_fingerprints_guarantee_and_edges(spark):
               "the river bank today")],
         "doc_id long, text string",
     )
-    got = TS.winnow_fingerprint_summary(df2, "doc_id", "text").collect()[0]
+    got = winnow_summary(df2, "doc_id", "text").collect()[0]
     assert got.winnow_fp8 == out[1][1]
     # max_df drops ubiquitous hashes before the join
     many = spark.createDataFrame(
@@ -969,10 +989,9 @@ def test_winnow_fingerprints_guarantee_and_edges(spark):
 def test_x08_winnow_columns_nondegenerate(spark, sf_dir):
     """Round-10 promotion guard: the registry-pinned winnow columns
     vary across docs at the test SF, and the x08 wiring equals the
-    standalone operator row-for-row."""
-    from conftest import assert_column_nondegenerate
+    staged column builders composed on their own row-for-row."""
+    from conftest import assert_column_nondegenerate, winnow_summary
 
-    from mapreduce_stockheadlines_spark.operators import textstats as TS
     from mapreduce_stockheadlines_spark.plans.catalog import table
     from mapreduce_stockheadlines_spark.plans.registry import ALL_QUERIES
 
@@ -980,7 +999,7 @@ def test_x08_winnow_columns_nondegenerate(spark, sf_dir):
     assert_column_nondegenerate(x08, "n_winnow", f"at {sf_dir}")
     assert_column_nondegenerate(x08, "winnow_fp8", f"at {sf_dir}")
     docs = table(spark, sf_dir, "documents")
-    op = TS.winnow_fingerprint_summary(docs, "doc_id", "text")
+    op = winnow_summary(docs, "doc_id", "text")
     joined = x08.select("doc_id", "n_winnow", "winnow_fp8").join(
         op.select(
             F.col("id").alias("doc_id"),
@@ -1009,7 +1028,9 @@ def test_char_entropy_hand_values_and_edges(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     out = {
         r.doc_id: r.char_entropy_fp6
-        for r in TS.char_entropy(df, "doc_id", "text").collect()
+        for r in df.select(
+            "doc_id", TS.char_entropy_from_chars(TS.char_array_col("text"))
+        ).collect()
     }
     assert out[1] == 0
     assert out[3] is None and out[4] is None
@@ -1132,12 +1153,7 @@ def test_winnow_and_cdc_unicode_contract(spark):
     import hashlib
     import re
 
-    from mapreduce_stockheadlines_spark.operators.packing import (
-        cdc_chunk_summary,
-    )
-    from mapreduce_stockheadlines_spark.operators.textstats import (
-        winnow_fingerprint_summary,
-    )
+    from conftest import cdc_summary, winnow_summary
 
     texts = [
         (1, "café über naïve — die straße führt zum fluß und zurück"),
@@ -1179,11 +1195,11 @@ def test_winnow_and_cdc_unicode_contract(spark):
 
     got_w = {
         r.id: (r.n_winnow, r.winnow_fp8)
-        for r in winnow_fingerprint_summary(df, "doc_id", "text").collect()
+        for r in winnow_summary(df, "doc_id", "text").collect()
     }
     assert got_w == {d: ref_winnow(t) for d, t in texts}
     got_c = {
         r.id: (r.n_cdc_chunks, r.cdc_fp8)
-        for r in cdc_chunk_summary(df, "doc_id", "text").collect()
+        for r in cdc_summary(df, "doc_id", "text").collect()
     }
     assert got_c == {d: ref_cdc(t) for d, t in texts}

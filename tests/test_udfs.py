@@ -1,123 +1,7 @@
-"""Arrow-vectorized UDF surface: scalar pandas UDF (embedding
-normalization) and GROUPED_AGG pandas UDF (weighted mean), each checked
-against an exact reference computation."""
+"""Scalar pandas UDF surface: Unicode normalization checked against
+DuckDB's normalization functions."""
 
 from __future__ import annotations
-
-import math
-
-import pytest
-from pyspark.sql import functions as F
-
-from mapreduce_stockheadlines_spark.functions.udfs import (
-    normalize_vec,
-    weighted_mean,
-    weighted_mean_expr,
-)
-from mapreduce_stockheadlines_spark.plans.catalog import table
-
-
-def test_normalize_vec_unit_norm(spark, sf_dir):
-    emb = table(spark, sf_dir, "embeddings").limit(100)
-    out = emb.select("vec_id", normalize_vec("embedding").alias("nv"))
-    rows = out.collect()
-    assert len(rows) == 100
-    for r in rows[:10]:
-        n = math.sqrt(sum(x * x for x in r.nv))
-        assert n == pytest.approx(1.0, abs=1e-5)
-
-
-def test_normalize_vec_zero_vector_passthrough(spark):
-    df = spark.createDataFrame([(1, [0.0, 0.0]), (2, [3.0, 4.0])], ["id", "vec"])
-    out = {r.id: list(r.nv) for r in df.select(
-        "id", normalize_vec(F.col("vec").cast("array<float>")).alias("nv")
-    ).collect()}
-    assert out[1] == [0.0, 0.0]
-    assert out[2] == pytest.approx([0.6, 0.8], abs=1e-6)
-
-
-def test_weighted_mean_agg_matches_expr_and_exact(spark):
-    df = spark.createDataFrame(
-        [("a", 1.0, 1.0), ("a", 3.0, 3.0), ("b", 5.0, 2.0), ("b", 0.0, 0.0)],
-        ["g", "v", "w"],
-    )
-    udf_out = {
-        r.g: r.m
-        for r in df.groupBy("g").agg(weighted_mean("v", "w").alias("m")).collect()
-    }
-    expr_out = {
-        r.g: r.m
-        for r in df.groupBy("g").agg(weighted_mean_expr("v", "w").alias("m")).collect()
-    }
-    # exact: a = (1*1 + 3*3)/4 = 2.5 ; b = (5*2 + 0*0)/2 = 5.0
-    assert udf_out["a"] == pytest.approx(2.5) == expr_out["a"]
-    assert udf_out["b"] == pytest.approx(5.0) == expr_out["b"]
-
-
-def test_weighted_mean_on_documents(spark, sf_dir):
-    from mapreduce_stockheadlines_spark.operators.textstats import (
-        quality_score,
-        whitespace_token_count,
-    )
-
-    docs = table(spark, sf_dir, "documents")
-    scored = quality_score(docs, "doc_id", "text").join(
-        docs.select(
-            "doc_id", "source", whitespace_token_count("text").alias("w")
-        ),
-        "doc_id",
-    )
-    # NB: a GROUPED_AGG pandas UDF cannot share an agg() with JVM
-    # aggregates — two aggregations joined on the group key instead
-    udf_agg = scored.groupBy("source").agg(
-        weighted_mean("quality", "w").alias("udf_m")
-    )
-    expr_agg = scored.groupBy("source").agg(
-        weighted_mean_expr("quality", "w").alias("expr_m")
-    )
-    got = udf_agg.join(expr_agg, "source").collect()
-    assert len(got) > 0
-    for r in got:
-        assert r.udf_m == pytest.approx(r.expr_m, rel=1e-12)
-
-
-def test_sentence_spans_udtf_matches_codegen_twin(spark):
-    """The Python UDTF (SQL LATERAL table function) and its codegen
-    twin produce identical sentence fan-outs, including NULL-text and
-    sentence-less rows vanishing, and multi-space separators."""
-    from mapreduce_stockheadlines_spark.functions.udfs import (
-        sentence_spans,
-        sentence_spans_expr,
-    )
-
-    df = spark.createDataFrame(
-        [
-            (1, "First one. Second two!  Third three? trailing bit"),
-            (2, "no terminal punctuation at all"),
-            (3, None),
-            (4, "   "),
-        ],
-        "doc_id long, text string",
-    )
-    got = sorted(
-        (r.doc_id, r.sent_idx, r.sentence, r.n_chars)
-        for r in sentence_spans(df, "doc_id", "text").collect()
-    )
-    want = sorted(
-        (r.doc_id, r.sent_idx, r.sentence, r.n_chars)
-        for r in sentence_spans_expr(df, "doc_id", "text").collect()
-    )
-    assert got == want
-    assert got  # non-trivial
-    by_doc = {}
-    for doc, idx, sent, n in got:
-        by_doc.setdefault(doc, []).append(sent)
-        assert n == len(sent)
-    assert by_doc[1] == [
-        "First one.", "Second two!", "Third three?", "trailing bit"
-    ]
-    assert by_doc[2] == ["no terminal punctuation at all"]
-    assert 3 not in by_doc and 4 not in by_doc
 
 
 def test_normalize_unicode_matches_duckdb(spark):
@@ -170,25 +54,6 @@ def test_normalize_unicode_matches_duckdb(spark):
         ).collect()
     }
     assert nfkc[3] == "ABC 12" and nfc[3] != "ABC 12"
-
-
-def test_sentence_spans_unicode_whitespace_parity(spark):
-    """UDTF and codegen twin agree on Unicode whitespace separators
-    (non-breaking space after a period — common in web text) and on
-    edge trimming."""
-    from mapreduce_stockheadlines_spark.functions.udfs import (
-        sentence_spans,
-        sentence_spans_expr,
-    )
-
-    df = spark.createDataFrame(
-        [(1, "One. Two done!  Three?"), (2, "  padded. tail  ")],
-        "doc_id long, text string",
-    )
-    got = sorted(map(tuple, sentence_spans(df, "doc_id", "text").collect()))
-    want = sorted(map(tuple, sentence_spans_expr(df, "doc_id", "text").collect()))
-    assert got == want
-    assert [s for d, i, s, n in got if d == 1] == ["One.", "Two done!", "Three?"]
 
 
 def test_normalize_unicode_preserves_decomposed_forms(spark):

@@ -1,5 +1,5 @@
-"""Versioned-table layer: snapshot isolation, time travel, rollback,
-vacuum — over plain parquet with an atomic pointer file."""
+"""Versioned-table layer: snapshot isolation and time travel over plain
+parquet with an atomic pointer file."""
 
 from __future__ import annotations
 
@@ -7,9 +7,6 @@ import pytest
 
 from mapreduce_stockheadlines_spark.sources.versioned import (
     read_table,
-    rollback,
-    table_versions,
-    vacuum,
     write_table_version,
 )
 
@@ -18,23 +15,17 @@ def _df(spark, vals):
     return spark.createDataFrame([(v,) for v in vals], "x int")
 
 
-def test_write_read_time_travel_rollback(spark, tmp_path):
+def test_write_read_time_travel(spark, tmp_path):
     t = str(tmp_path / "t")
     assert write_table_version(_df(spark, [1, 2]), t) == 1
     assert write_table_version(_df(spark, [3]), t) == 2
     assert sorted(r.x for r in read_table(spark, t).collect()) == [3]
     assert sorted(r.x for r in read_table(spark, t, version=1).collect()) == [1, 2]
-    assert table_versions(spark, t) == [1, 2]
-    rollback(spark, t, 1)
-    assert sorted(r.x for r in read_table(spark, t).collect()) == [1, 2]
-    # a write after rollback replaces the rolled-back-away lineage:
-    # pointer is 1, so the new commit is v2, overwriting the orphan
-    v = write_table_version(_df(spark, [9]), t)
-    assert v == 2
+    # an orphan above the pointer (a crashed write's data dir) is
+    # overwritten by the next commit, never published as it stands
+    _df(spark, [99]).write.parquet(f"{t}/v=3")
+    assert write_table_version(_df(spark, [9]), t) == 3
     assert sorted(r.x for r in read_table(spark, t).collect()) == [9]
-    assert sorted(r.x for r in read_table(spark, t, version=2).collect()) == [9]
-    with pytest.raises(ValueError):
-        rollback(spark, t, 99)
     with pytest.raises(FileNotFoundError):
         read_table(spark, str(tmp_path / "missing"))
 
@@ -58,20 +49,6 @@ def test_pointer_invisible_to_parquet_discovery(spark, tmp_path):
     assert [r.x for r in got] == [1]
 
 
-def test_vacuum_keeps_committed_and_recent(spark, tmp_path):
-    t = str(tmp_path / "t")
-    for i in range(4):
-        write_table_version(_df(spark, [i]), t)
-    rollback(spark, t, 2)
-    removed = vacuum(spark, t, keep_last=2)
-    # keeps {3, 4} (most recent) plus committed 2; removes 1
-    assert removed == [1]
-    assert table_versions(spark, t) == [2, 3, 4]
-    assert [r.x for r in read_table(spark, t).collect()] == [1]  # v2 data
-    with pytest.raises(ValueError):
-        vacuum(spark, t, keep_last=0)
-
-
 def test_concurrent_writer_claim_conflict(spark, tmp_path):
     """Two writers that both observed pointer N race to claim N+1:
     exactly one wins, the loser fails loudly BEFORE touching data."""
@@ -88,17 +65,6 @@ def test_concurrent_writer_claim_conflict(spark, tmp_path):
         write_table_version(_df(spark, [2]), t)
     # the losing writer wrote nothing: committed table unchanged
     assert [r.x for r in read_table(spark, t).collect()] == [1]
-
-
-def test_rollback_rejects_orphan_versions(spark, tmp_path):
-    """A v= dir above the pointer (crashed write's partial output) can
-    never be published by rollback."""
-    t = str(tmp_path / "t")
-    write_table_version(_df(spark, [1]), t)
-    # orphan: data dir exists, pointer never reached it
-    _df(spark, [99]).write.parquet(f"{t}/v=7")
-    with pytest.raises(ValueError, match="never committed"):
-        rollback(spark, t, 7)
 
 
 def test_stale_claim_reclaim(spark, tmp_path):
