@@ -56,7 +56,7 @@ from pyspark.sql import functions as F
 from ..operators import embeddings as EB
 from ..operators import similarity as S
 from ..plans.catalog import DEFAULT_SF_DIR, table
-from ..session import get_spark
+from ..session import checkpoint, get_spark
 
 
 def curate_embeddings(
@@ -67,7 +67,6 @@ def curate_embeddings(
     n_clusters: int = 16,
     train_iters: int = 2,
     quantize: bool = False,
-    reliable_checkpoint: bool = False,
 ) -> DataFrame:
     """Semantic dedup (optional) then int8 quantization (optional) over
     an embedding frame; stages are DataFrame→DataFrame and default off,
@@ -80,7 +79,6 @@ def curate_embeddings(
             threshold=sem_threshold,
             n_clusters=n_clusters,
             train_iters=train_iters,
-            reliable_checkpoint=reliable_checkpoint,
         )
     if quantize:
         emb = EB.quantize_embeddings(emb, id_col, vec_col)
@@ -318,15 +316,14 @@ def main(argv: list[str] | None = None) -> None:
                 emb, "embedding", k=args.pca_k, return_variance=True
             )
             print(f"pca.k\t{args.pca_k}\tpca.explained_variance\t{round(ev, 4)}")
-            emb = (
+            # materialize the projection ONCE: semantic dedup's k-means
+            # rounds and IVF training rescan the frame, and each rescan
+            # would otherwise re-run the Arrow projection UDF over the
+            # full corpus
+            emb = checkpoint(
                 EB.pca_project(emb, "embedding", mean, comps, out_col="_pca")
                 .drop("embedding")
                 .withColumnRenamed("_pca", "embedding")
-                # materialize the projection ONCE: semantic dedup's
-                # k-means rounds and IVF training rescan the frame, and
-                # each rescan would otherwise re-run the Arrow
-                # projection UDF over the full corpus
-                .localCheckpoint()
             )
             rows = [(-1, [float(x) for x in mean])] + [
                 (i, [float(x) for x in c]) for i, c in enumerate(comps)

@@ -102,7 +102,7 @@ from ..operators import relevance as RV
 from ..operators import sampling as SA
 from ..operators import textstats as TS
 from ..plans.catalog import DEFAULT_SF_DIR, parallel_table
-from ..session import get_spark
+from ..session import checkpoint, get_spark
 
 
 def curate(
@@ -152,14 +152,12 @@ def curate(
     bpe_model: tuple[list[tuple[str, str]], list[str]] | None = None,
     wordpiece_merges: int | None = None,
     wordpiece_vocab: list[str] | None = None,
-    reliable_checkpoint: bool = False,
 ) -> DataFrame:
     """The full curation plan over a (doc_id, text, ...) frame; returns the
-    surviving docs with quality/token columns attached.
-    ``reliable_checkpoint=True`` makes the near-dup component rounds
-    checkpoint to the configured checkpoint dir (fault-tolerant on a
-    real cluster) instead of executor-local blocks — call
-    ``spark.sparkContext.setCheckpointDir(...)`` first."""
+    surviving docs with quality/token columns attached. Every lineage cut
+    goes through ``session.checkpoint``: durable files when the session
+    has a checkpoint dir (``spark.sparkContext.setCheckpointDir``),
+    executor-local blocks otherwise."""
     # config validation FIRST — the encode stages eagerly execute the
     # whole curation chain (checkpoint barriers, census collects), so a
     # config error surfacing there would come after the cluster already
@@ -327,9 +325,7 @@ def curate(
         # reused both for the paired-id set and inside dedup_by_pairs —
         # re-deriving either from `verified` would execute the whole
         # MinHash→LSH→Jaccard subplan a second time.
-        clusters = D.neardup_clusters(
-            verified, reliable_checkpoint=reliable_checkpoint
-        )
+        clusters = D.neardup_clusters(verified)
         paired_ids = clusters.select(F.col("id").alias("doc_id"))
         paired_q = TS.quality_score(
             docs.join(paired_ids, "doc_id", "left_semi"), "doc_id", "text"
@@ -343,9 +339,7 @@ def curate(
             clusters=clusters,
         ).drop("_ndq")
     else:
-        docs = D.dedup_by_pairs(
-            docs, verified, "doc_id", reliable_checkpoint=reliable_checkpoint
-        )
+        docs = D.dedup_by_pairs(docs, verified, "doc_id")
 
     # 2b. (optional) cross-doc duplicated-window gate: drops docs whose
     #     prose is mostly shared with other docs even though neither
@@ -390,12 +384,8 @@ def curate(
             docs, "doc_id", "text",
             min_shared=winnow_min_shared, max_df=winnow_max_df,
             max_per_doc=winnow_max_per_doc,
-            reliable_checkpoint=reliable_checkpoint,
         )
-        docs = D.dedup_by_pairs(
-            docs, wpairs, "doc_id",
-            reliable_checkpoint=reliable_checkpoint,
-        )
+        docs = D.dedup_by_pairs(docs, wpairs, "doc_id")
 
     # 2e. (optional) corpus-wide chunk-level dedup at content-defined
     #     boundaries (dedup.cdc_chunk_dedup — the operation CDC exists
@@ -495,12 +485,7 @@ def curate(
             # self-train: materialize ONE gram stream and share it
             # between training and scoring (halves the tokenize+explode
             # passes — same policy as the near-dup checkpoints)
-            grams = RV.doc_bigrams(docs, "doc_id", "text")
-            grams = (
-                grams.checkpoint()
-                if reliable_checkpoint
-                else grams.localCheckpoint()
-            )
+            grams = checkpoint(RV.doc_bigrams(docs, "doc_id", "text"))
             lm, ctx, v = RV.train_bigram_lm(
                 docs, "doc_id", "text", grams=grams
             )
@@ -536,12 +521,7 @@ def curate(
             # moore_lewis_scores consumes the stream four times (two
             # trainings, two scorings) — materialize once, the 4b
             # self-train policy
-            ml_grams = RV.doc_bigrams(docs, "doc_id", "text")
-            ml_grams = (
-                ml_grams.checkpoint()
-                if reliable_checkpoint
-                else ml_grams.localCheckpoint()
-            )
+            ml_grams = checkpoint(RV.doc_bigrams(docs, "doc_id", "text"))
         ml = RV.moore_lewis_scores(
             docs, "doc_id", "text",
             F.col("source") == ml_target_source,
@@ -586,17 +566,12 @@ def curate(
     #      and are not selectable; the target's own surviving docs
     #      compete like any others.
     if dsir_target_source is not None:
-        docs = (
-            docs.checkpoint() if reliable_checkpoint else docs.localCheckpoint()
-        )
+        docs = checkpoint(docs)
         _ratios, scored = SA.dsir_fit_scores(
             docs, "doc_id", "text", n_buckets=dsir_buckets,
             target_filter=F.col("source") == dsir_target_source,
         )
-        scored = (
-            scored.checkpoint() if reliable_checkpoint
-            else scored.localCheckpoint()
-        )
+        scored = checkpoint(scored)
         n_scored = scored.count()
         if n_scored == 0:
             # no survivor produced a single hashed n-gram: selecting
@@ -675,9 +650,7 @@ def curate(
         # and without a barrier each — plus the final consumer — would
         # re-execute the whole curation chain (the same hazard the
         # encode stages document below, same checkpoint policy)
-        docs = (
-            docs.checkpoint() if reliable_checkpoint else docs.localCheckpoint()
-        )
+        docs = checkpoint(docs)
         docs = SA.token_budget_filter(
             docs, "quality", "n_ws_tokens", token_budget
         )
@@ -694,9 +667,7 @@ def curate(
         # explode and the packer input would each recompute that chain
         # from scratch (~4 full-corpus passes at scale). Same
         # checkpoint policy as the near-dup component rounds.
-        docs = (
-            docs.checkpoint() if reliable_checkpoint else docs.localCheckpoint()
-        )
+        docs = checkpoint(docs)
         vocab = RV.vocabulary(docs, "text", top_v=encode_vocab_top)
         enc = RV.apply_vocabulary(docs, "doc_id", "text", vocab).select(
             "doc_id",
@@ -724,9 +695,7 @@ def curate(
     if bpe_merges is not None or bpe_model is not None:
         # same barrier rationale as the vocabulary encode: train_bpe's
         # census collect executes the chain — materialize survivors once
-        docs = (
-            docs.checkpoint() if reliable_checkpoint else docs.localCheckpoint()
-        )
+        docs = checkpoint(docs)
         if bpe_model is not None:
             merges, alphabet = bpe_model
         else:
@@ -751,9 +720,7 @@ def curate(
     #     operators/unigram.py). Same barrier rationale as the other
     #     encode stages: the census collect executes the chain.
     if unigram_pieces is not None or unigram_model is not None:
-        docs = (
-            docs.checkpoint() if reliable_checkpoint else docs.localCheckpoint()
-        )
+        docs = checkpoint(docs)
         model = (
             unigram_model
             if unigram_model is not None
@@ -780,9 +747,7 @@ def curate(
     if wordpiece_merges is not None or wordpiece_vocab is not None:
         from ..operators import wordpiece as WPO
 
-        docs = (
-            docs.checkpoint() if reliable_checkpoint else docs.localCheckpoint()
-        )
+        docs = checkpoint(docs)
         if wordpiece_vocab is not None:
             wvocab = wordpiece_vocab
         else:
@@ -1023,9 +988,9 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument("--target-partition-mb", type=int, default=128,
                     help="target partition size for the sizing arithmetic")
     ap.add_argument("--checkpoint-dir", default=None,
-                    help="checkpoint dir for the near-dup component "
-                         "rounds (fault-tolerant reliable checkpoints "
-                         "instead of executor-local blocks)")
+                    help="checkpoint dir for every lineage cut (durable "
+                         "reliable checkpoints instead of executor-local "
+                         "blocks)")
     ap.add_argument("--strip-boilerplate", action="store_true",
                     help="remove lines repeated across >1 documents "
                          "before dedup (corpus-level boilerplate filter)")
@@ -1196,7 +1161,6 @@ def main(argv: list[str] | None = None) -> None:
             _load_wordpiece(spark, args.wordpiece_dir)
             if args.wordpiece_dir else None
         ),
-        reliable_checkpoint=bool(args.checkpoint_dir),
     )
     def _parse_epochs(spec: str) -> dict[str, float]:
         weights = {}
@@ -1222,7 +1186,7 @@ def main(argv: list[str] | None = None) -> None:
             # census collect() would otherwise execute the whole gate
             # DAG once for the census and again for the write
             df = SA.temperature_mix(
-                df.localCheckpoint(), "source", "doc_id", args.mix_alpha
+                checkpoint(df), "source", "doc_id", args.mix_alpha
             )
         if args.epoch_weights:
             df = SA.epoch_upsample(
@@ -1236,7 +1200,7 @@ def main(argv: list[str] | None = None) -> None:
             # collect would otherwise execute the whole gate DAG once
             # more (the --mix-alpha census pattern)
             df = SA.curriculum_interleave(
-                df.localCheckpoint(),
+                checkpoint(df),
                 "quality",
                 "source",
                 epoch_col="epoch" if args.epoch_weights else None,

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import normalized_text, text_word_ngrams, tokens_array
+from ..session import checkpoint
 
 
 def exact_dedup(df: DataFrame, subset: list[str], order_by: list[str]) -> DataFrame:
@@ -402,7 +403,6 @@ def simhash_neardup_pairs(
 def neardup_clusters(
     pairs: DataFrame,
     max_iters: int = 20,
-    reliable_checkpoint: bool = False,
 ) -> DataFrame:
     """Connected components over an (id_a, id_b) near-dup pair graph:
     every node gets ``cluster_id`` = the minimum id in its component —
@@ -417,23 +417,14 @@ def neardup_clusters(
       chains so long paths converge in far fewer than diameter rounds;
     - stop when a round changes no label (an ``isEmpty`` on the diff).
 
-    Each round ends in a checkpoint to truncate the lineage — iterative
-    plans otherwise grow exponentially in the optimizer. By default
-    that is ``localCheckpoint`` (executor-local blocks, no extra
-    config — right for a single machine and for tests). On a real
-    cluster set ``reliable_checkpoint=True`` AND configure
-    ``spark.sparkContext.setCheckpointDir(...)`` first: rounds then
-    write to the checkpoint dir, so a lost executor replays from the
-    last round instead of recomputing the whole iteration history
-    (localCheckpoint blocks die with their executor).
+    Each round ends in a ``session.checkpoint`` to truncate the lineage
+    — iterative plans otherwise grow exponentially in the optimizer.
+    With a checkpoint dir configured a lost executor replays from the
+    last round instead of recomputing the whole iteration history.
     Large-star/small-star is the published refinement if rounds
     themselves become the bottleneck.
     """
-
-    def _ckpt(df: DataFrame) -> DataFrame:
-        return df.checkpoint() if reliable_checkpoint else df.localCheckpoint()
-
-    edges = _ckpt(
+    edges = checkpoint(
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .unionByName(
             pairs.select(
@@ -442,7 +433,7 @@ def neardup_clusters(
         )
         .distinct()
     )
-    labels = _ckpt(
+    labels = checkpoint(
         edges.select(F.col("src").alias("id"))
         .distinct()
         .withColumn("lbl", F.col("id"))
@@ -467,7 +458,7 @@ def neardup_clusters(
         l2 = updated.select(
             F.col("id").alias("_lid"), F.col("lbl").alias("_llbl")
         )
-        compressed = _ckpt(
+        compressed = checkpoint(
             updated.join(l2, updated["lbl"] == l2["_lid"], "left")
             .select(
                 "id", F.coalesce("_llbl", F.col("lbl")).alias("lbl")
@@ -497,7 +488,6 @@ def dedup_by_pairs(
     pairs: DataFrame,
     id_col: str,
     max_iters: int = 20,
-    reliable_checkpoint: bool = False,
     keep_by: str | None = None,
     clusters: DataFrame | None = None,
 ) -> DataFrame:
@@ -505,8 +495,7 @@ def dedup_by_pairs(
     representative per component; rows never mentioned in a pair pass
     through untouched (broadcast-friendly anti-join against the
     non-representative set, which is at most the paired-node count —
-    tiny relative to the corpus). ``reliable_checkpoint`` passes through
-    to ``neardup_clusters`` (set a checkpoint dir first).
+    tiny relative to the corpus).
 
     Survivor policy: min id by default (deterministic, metric-free).
     ``keep_by`` names a COLUMN OF ``df`` (e.g. a quality score): each
@@ -524,9 +513,7 @@ def dedup_by_pairs(
     clustered ids — without this the MinHash→LSH→Jaccard subplan that
     produced ``pairs`` would execute once per reference)."""
     if clusters is None:
-        clusters = neardup_clusters(
-            pairs, max_iters=max_iters, reliable_checkpoint=reliable_checkpoint
-        )
+        clusters = neardup_clusters(pairs, max_iters=max_iters)
     if keep_by is None:
         losers = clusters.filter(F.col("id") != F.col("cluster_id")).select(
             F.col("id").alias(id_col)
@@ -1087,7 +1074,7 @@ def cdc_chunk_dedup(
     # avoid the self-join entirely but serializes each digest's rows
     # into one partition — the census+min+join form keeps map-side
     # partials, which is what absorbs a billion-copy hot chunk.
-    digested = digested.localCheckpoint(eager=False)
+    digested = checkpoint(digested, eager=False)
     first = digested.groupBy("_dig").agg(
         F.min(F.struct("id", "chunk_id")).alias("_first")
     )

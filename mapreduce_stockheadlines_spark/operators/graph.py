@@ -17,7 +17,21 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import checkpoint
+
 __all__ = ["pagerank", "hits"]
+
+# Rounds between pagerank's lineage cuts. Each round references the
+# rank table TWICE (contributions + dangling mass), so an un-truncated
+# chain doubles in plan size per round — measured: cutting only at the
+# end turns a 6 s 10-round run into 155 s (the 2^rounds re-expansion;
+# the same pathology as un-materialized chained CTEs). 1 is one Spark
+# job per round; 2 bounds the re-expansion at 4 leaf references while
+# halving the checkpoint jobs — measured ~25% faster end-to-end with
+# identical results (a cut never changes values). Larger values are a
+# hazard, not a tuning knob: HITS at 5 wedged the driver 30+ min just
+# rendering the re-expanded tree. The final round is always cut.
+_PAGERANK_ROUNDS_PER_CUT = 2
 
 
 def pagerank(
@@ -26,9 +40,7 @@ def pagerank(
     n_iters: int = 10,
     src_col: str = "src",
     dst_col: str = "dst",
-    reliable_checkpoint: bool = False,
     quantize_dp: int | None = None,
-    checkpoint_interval: int = 2,
 ) -> DataFrame:
     """Power-iteration PageRank: (node, rank) after ``n_iters`` rounds
     of ``rank = (1-d)/N + d·(Σ in-neighbor rank/out_degree +
@@ -41,9 +53,8 @@ def pagerank(
     dedup upstream if the graph is simple). Each round: one
     contributions join keyed on src (edge-sized, the only big shuffle),
     one dst-keyed sum, one left-join back to the node table for
-    zero-in-degree nodes, then a checkpoint truncating lineage
-    (``reliable_checkpoint`` as in ``neardup_clusters``: executor-local
-    by default, real checkpoint dir on a cluster). The dangling mass is
+    zero-in-degree nodes, then every ``_PAGERANK_ROUNDS_PER_CUT`` rounds
+    a ``session.checkpoint`` truncating lineage. The dangling mass is
     a one-row aggregate of the node-sized rank table folded back in as
     a broadcast equi-join on a constant key (BroadcastHashJoin with a
     1-row build side — NOT a nested-loop cross join, and NOT a driver
@@ -59,32 +70,16 @@ def pagerank(
     across partitionings and across engines — the knob the registry
     oracle (x31) uses to hash-match an independent DuckDB unrolled
     power iteration. ``None`` (default) keeps full double precision.
-
-    ``checkpoint_interval``: rounds between lineage truncations. Each
-    round references the rank table TWICE (contributions + dangling
-    mass), so an un-truncated chain doubles in plan size per round —
-    measured: checkpointing only at the end turns a 6 s 10-round run
-    into 155 s (the 2^rounds re-expansion; the same pathology as
-    un-materialized chained CTEs). Interval 1 is one Spark job per
-    round; interval 2 (default) bounds the re-expansion at 4 leaf
-    references while halving the checkpoint jobs — measured ~25%
-    faster end-to-end with identical results (truncation never changes
-    values). The final round is always truncated.
     """
     if not 0.0 < damping < 1.0:
         raise ValueError("pagerank: damping must be in (0, 1)")
     if n_iters < 1:
         raise ValueError("pagerank: n_iters must be >= 1")
-    if checkpoint_interval < 1:
-        raise ValueError("pagerank: checkpoint_interval must be >= 1")
-
-    def _ckpt(df: DataFrame) -> DataFrame:
-        return df.checkpoint() if reliable_checkpoint else df.localCheckpoint()
 
     e = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
     )
-    nodes = _ckpt(
+    nodes = checkpoint(
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
@@ -95,7 +90,7 @@ def pagerank(
     out_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("_deg"))
     # edges annotated with the sender's out-degree, checkpointed once —
     # every round reuses this materialized table
-    contrib_edges = _ckpt(e.join(out_deg, "src"))
+    contrib_edges = checkpoint(e.join(out_deg, "src"))
 
     base = (1.0 - damping) / n_nodes
     ranks = nodes.withColumn("rank", F.lit(1.0 / n_nodes))
@@ -131,8 +126,8 @@ def pagerank(
             .join(F.broadcast(dang), "_k")
             .select("node", new_rank.alias("rank"))
         )
-        if (it + 1) % checkpoint_interval == 0 or it == n_iters - 1:
-            ranks = _ckpt(ranks)
+        if (it + 1) % _PAGERANK_ROUNDS_PER_CUT == 0 or it == n_iters - 1:
+            ranks = checkpoint(ranks)
     return ranks.select("node", F.round("rank", 8).alias("rank"))
 
 
@@ -141,9 +136,7 @@ def hits(
     n_iters: int = 10,
     src_col: str = "src",
     dst_col: str = "dst",
-    reliable_checkpoint: bool = False,
     quantize_dp: int | None = None,
-    checkpoint_interval: int = 1,
 ) -> DataFrame:
     """HITS hubs-and-authorities (Kleinberg 1999) — PageRank's
     bidirectional sibling: a good AUTHORITY is linked from good hubs,
@@ -170,29 +163,24 @@ def hits(
     sums; the normalizing sums are one-row aggregates of the
     node-sized score table folded back via constant-key broadcast
     equi-joins (pagerank's dangling-mass pattern — no driver collect
-    per round). Lineage truncates every ``checkpoint_interval`` rounds
-    (pagerank's re-expansion argument) — default 1, NOT pagerank's 2:
-    a HITS round is two chained phases that each reference the node
-    table and a one-row total, so the per-round fan-out is ~4x where
-    pagerank's is 2x, and the re-expansion overtakes the saved
-    checkpoint jobs immediately (round-12 measure at sf0.1: interval
-    1 = 3.0 s, 2 = 4.4 s, 3 = 9.5 s, 5 = minutes of pure driver
-    plan-tree rendering)."""
+    per round). Lineage is cut EVERY round (pagerank's re-expansion
+    argument, but not its 2 rounds per cut): a HITS round is two
+    chained phases that each reference the node table and a one-row
+    total, so the per-round fan-out is ~4x where pagerank's is 2x, and
+    the re-expansion overtakes the saved checkpoint jobs immediately
+    (round-12 measure at sf0.1: every round = 3.0 s, every 2nd = 4.4
+    s, every 3rd = 9.5 s, every 5th = minutes of pure driver plan-tree
+    rendering)."""
     if n_iters < 1:
         raise ValueError("hits: n_iters must be >= 1")
-    if checkpoint_interval < 1:
-        raise ValueError("hits: checkpoint_interval must be >= 1")
-
-    def _ckpt(df: DataFrame) -> DataFrame:
-        return df.checkpoint() if reliable_checkpoint else df.localCheckpoint()
 
     def _q(col):
         return F.round(col, quantize_dp) if quantize_dp is not None else col
 
-    e = _ckpt(
+    e = checkpoint(
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
     )
-    nodes = _ckpt(
+    nodes = checkpoint(
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
@@ -230,12 +218,10 @@ def hits(
             .select("node", val.alias(out_col))
         )
 
-    for it in range(n_iters):
+    for _ in range(n_iters):
         auths = _phase(scores, "hub", "src", "dst", "auth")
         hubs = _phase(auths, "auth", "dst", "src", "hub")
-        scores = hubs.join(auths, "node")
-        if (it + 1) % checkpoint_interval == 0 or it == n_iters - 1:
-            scores = _ckpt(scores)
+        scores = checkpoint(hubs.join(auths, "node"))
     return scores.select(
         "node", F.round("hub", 8).alias("hub"),
         F.round("auth", 8).alias("auth"),

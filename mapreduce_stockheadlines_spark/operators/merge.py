@@ -1,32 +1,27 @@
-"""Incremental table maintenance: MERGE (upsert), SCD2 history build,
-snapshot diff (CDC extraction).
+"""Incremental table maintenance: MERGE (upsert) and snapshot diff (CDC
+extraction).
 
 The reference recomputes its outputs from scratch on every run
 (/root/reference/src/StockCount.java:70-82 — one batch job, no notion of
 applying a delta); a 100 TB corpus cannot be rebuilt per batch, so the
-engine needs the standard incremental trio:
+engine needs the standard incremental pair:
 
 - ``merge_upsert``: SQL MERGE semantics (update matched / insert new /
   optionally delete flagged) as ONE full-outer shuffle join on the key —
   the changes side is a delta (usually orders of magnitude smaller than
   the target), and nothing else in the target is rewritten or shuffled
   twice.
-- ``scd2_from_changes``: collapse a change log into slowly-changing-
-  dimension type-2 history (``valid_from`` / ``valid_to`` /
-  ``is_current``) with consecutive-duplicate compression — one hash
-  shuffle on the key, two window passes over the same sort order (Spark
-  plans them in a single Window sort, no extra exchange).
 - ``snapshot_diff``: classify rows as inserted / deleted / updated
   between two table versions via a null-safe full-outer compare — the
   standard way to extract a CDC stream when the source can't emit one.
 
-All three are pure DataFrame compositions (codegen, AQE-eligible) and
+Both are pure DataFrame compositions (codegen, AQE-eligible) and
 deterministic, so each is DuckDB-oracle-checked in tests/test_merge.py.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -75,49 +70,6 @@ def merge_upsert(
         ),
     ]
     return joined.select(*out)
-
-
-def scd2_from_changes(
-    changes: DataFrame,
-    key: str,
-    ts_col: str,
-    attr_cols: list[str],
-    compress: bool = True,
-) -> DataFrame:
-    """Slowly-changing-dimension type-2 history from a change log: one row
-    per (key, version) with ``valid_from`` (the change timestamp),
-    ``valid_to`` (the next version's timestamp, NULL while current) and
-    ``is_current``.
-
-    ``compress=True`` drops a change whose attributes all equal the
-    previous version's (null-safe), so back-to-back identical snapshots
-    — the norm when change capture re-emits full rows — collapse into
-    one validity interval.
-
-    Requires unique (key, ts) pairs (dedupe the log upstream otherwise).
-
-    Scale shape: one hash shuffle on the key; the lag (compression) and
-    lead (interval close) windows share the same partitioning + ordering,
-    but the lead must run AFTER the compression filter (the next
-    *surviving* version closes the interval), so Spark plans two Window
-    sorts over key-local data — still a single exchange, no join, and
-    per-key work is linear in that key's change count.
-    """
-    w = Window.partitionBy(key).orderBy(F.asc(ts_col))
-    df = changes
-    if compress:
-        changed = F.lit(False)
-        for c in attr_cols:
-            changed = changed | ~F.col(c).eqNullSafe(F.lag(c).over(w))
-        first_row = F.lag(ts_col).over(w).isNull()
-        df = df.withColumn("_keep", first_row | changed).filter("_keep").drop("_keep")
-    return df.select(
-        key,
-        *attr_cols,
-        F.col(ts_col).alias("valid_from"),
-        F.lead(ts_col).over(w).alias("valid_to"),
-        F.lead(ts_col).over(w).isNull().alias("is_current"),
-    )
 
 
 def snapshot_diff(

@@ -1817,7 +1817,7 @@ def decode_media(df: DataFrame, strict: bool = False) -> DataFrame:
             # other tier.
             try:
                 w, h, nf = video(content)
-            except (ValueError, struct.error):
+            except (ValueError, struct.error, TypeError):
                 return _fake_decode(content)
             return w, h, int(min(nf, 2**31 - 1)), _fake_decode(content)[3]
         if strict:
@@ -1947,18 +1947,17 @@ def sample_frames(df: DataFrame, max_frames: int = 4) -> DataFrame:
             for mid, content, mime in zip(
                 pdf["media_id"], pdf["content"], mimes
             ):
-                samples = None
-                if mime in AUDIO_DECODERS:
-                    # REAL audio frames: up to max_frames evenly-spaced
-                    # windows of the PCM stream, per-window rms features;
-                    # undecodable WAV variants (float32/ADPCM/truncated)
-                    # fall through to the fake tier — sample_frames has
-                    # no strict mode and must not kill the task
-                    try:
-                        rate, _nch, samples = AUDIO_DECODERS[mime](content)
-                    except (ValueError, struct.error):
-                        samples = None
-                if samples is not None:
+                # REAL audio frames: up to max_frames evenly-spaced
+                # windows of the PCM stream, per-window rms features;
+                # undecodable or NULL WAV content falls through to the
+                # fake tier — sample_frames has no strict mode
+                decoded = (
+                    _decode_audio(content, mime, strict=False)
+                    if mime in AUDIO_DECODERS
+                    else None
+                )
+                if decoded is not None:
+                    rate, _nch, samples = decoded
                     take = min(max_frames, max(1, samples.shape[0]))
                     bounds = np.linspace(
                         0, samples.shape[0], take + 1, dtype=np.int64
@@ -1983,8 +1982,15 @@ def sample_frames(df: DataFrame, max_frames: int = 4) -> DataFrame:
                     ids.append(mid)
                     idxs.append(frame_no)
                     feats.append([round(b / 255.0, 6) for b in d[:8]])
+            # object dtype: a batch that emits no frame (all NULL
+            # content) would otherwise infer float64, which Arrow cannot
+            # convert to the array column
             out = pd.DataFrame(
-                {"media_id": ids, "frame_idx": idxs, "frame_feature": feats}
+                {
+                    "media_id": ids,
+                    "frame_idx": idxs,
+                    "frame_feature": pd.Series(feats, dtype=object),
+                }
             )
             out["media_id"] = out["media_id"].astype("int64")
             out["frame_idx"] = out["frame_idx"].astype("int32")

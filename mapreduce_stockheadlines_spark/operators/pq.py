@@ -51,7 +51,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.vectors import as_double
-from ..session import local_frame
+from ..session import checkpoint, local_frame
 from .similarity import _collect_query_side, _head_vecs, _nonempty_vecs
 
 ADC_FP_DP = 4  # fixed-point decimals for ADC lookup-table entries
@@ -439,7 +439,7 @@ def ivfpq_train(
 
     Cost shape: coarse training is one corpus pass per Lloyd round;
     residual PQ training adds ONE assignment+subtract projection,
-    materialized (localCheckpoint) before ``pq_train``'s
+    materialized (checkpoint) before ``pq_train``'s
     one-pass-per-round loop — the residual projection has
     ``pq_iters + 1`` consumers (the init collect and every Lloyd
     round), so without the barrier each re-ran the broadcast-Arrow
@@ -464,9 +464,7 @@ def ivfpq_train(
         corpus, id_col, vec_col, k=n_centroids, n_iters=coarse_iters,
         quantize_dp=quantize_dp, init_vecs=init_vecs,
     )
-    residuals = _ivfpq_residuals(
-        corpus, coarse, id_col, vec_col
-    ).localCheckpoint()
+    residuals = checkpoint(_ivfpq_residuals(corpus, coarse, id_col, vec_col))
     codebooks = pq_train(
         residuals, id_col, "residual", m=m, ksub=ksub, n_iters=pq_iters,
         quantize_dp=quantize_dp,

@@ -96,8 +96,8 @@ def bucketed_row_number(
     max_buckets: int = 1 << 20,
 ) -> DataFrame:
     """1-based ``row_number`` over the global order ``(bucket_cols ASC,
-    order_by)`` WITHOUT a SinglePartition exchange — the shared engine
-    under ``assign_global_ids`` and ``relevance.vocabulary``.
+    order_by)`` WITHOUT a SinglePartition exchange — the engine under
+    ``relevance.vocabulary``.
 
     REQUIRES: the bucket tuple is a monotone PREFIX of the intended
     global order — every row of a lesser bucket sorts before every row
@@ -146,75 +146,3 @@ def bucketed_row_number(
         )
         .drop("_offset")
     )
-
-
-def assign_global_ids(
-    df: DataFrame,
-    key_col: str,
-    id_col: str = "global_id",
-    bucket_bits: int = 8,
-    hash_mode: str = "native",
-) -> DataFrame:
-    """Dense 0-based global row ids WITHOUT a single-partition global
-    sort — the id-assignment step of corpus construction, where
-    ``row_number().over(Window.orderBy(...))`` would funnel 100 TB
-    through one task.
-
-    Order is hash-of-key order (a deterministic shuffle order, like
-    ``sampling.deterministic_shuffle``), keys tie-broken by value;
-    ``key_col`` must be unique per row for ids to be well-defined.
-    ``hash_mode="native"`` orders by unsigned xxhash64 (fastest, JVM
-    codegen); ``hash_mode="portable"`` orders by the md5 hex digest of
-    the key's string form — reproducible in any engine (the DuckDB
-    oracle in tests re-derives the ids as a plain global sort on
-    ``md5(CAST(key AS VARCHAR))``, independently verifying the whole
-    bucket/offset construction).
-
-    Construction: bucket = the hash's top ``bucket_bits`` bits (so
-    (bucket ASC, hash ASC) IS global hash order and ids are INVARIANT
-    to the bucket count — pinned in tests); per-bucket counts aggregate
-    map-side down to 2^bucket_bits rows for a driver-held cumulative-
-    offset table (broadcast back); final id = bucket offset +
-    row_number within the bucket's window. Everything is a pure function
-    of the DATA — no partitioner boundary sampling, no
-    spark_partition_id — so re-execution of any stage reproduces the
-    same ids. Cost: one tiny counts job + ONE corpus shuffle (the
-    bucket-partitioned window); per-task sort is n / 2^bucket_bits rows
-    (raise bucket_bits at larger scale). ``bucket_bits`` caps at 20:
-    the per-bucket counts are collect()ed, and 2^20 offset rows is
-    already far beyond any realistic per-task-sort need — higher would
-    grow the driver-held table toward the very bottleneck this
-    operator exists to avoid.
-    """
-    if not 1 <= bucket_bits <= 20:
-        raise ValueError("assign_global_ids: bucket_bits must be in [1, 20]")
-    if hash_mode == "native":
-        h = F.xxhash64(F.col(key_col))
-        # top bits of the UNSIGNED hash: sign bit becomes the bucket's
-        # MSB, and within a bucket every hash shares that sign, so signed
-        # ordering within a bucket equals unsigned ordering —
-        # bucket-count-invariant.
-        bucket = F.shiftrightunsigned(h, 64 - bucket_bits).cast("int")
-    elif hash_mode == "portable":
-        # md5 hex string: lexicographic order == unsigned numeric order
-        # of the digest, and the bucket (top bits of the first 32) is a
-        # PREFIX of that order, so (bucket ASC, hex ASC) is global
-        # md5 order — same invariance argument as the native path.
-        h = F.md5(F.col(key_col).cast("string").cast("binary"))
-        # first 8 hex chars = top 32 bits, value < 2^32 — fits a long
-        top32 = F.conv(F.substring(h, 1, 8), 16, 10).cast("long")
-        bucket = F.shiftright(top32, 32 - bucket_bits).cast("int")
-    else:
-        raise ValueError(
-            f"assign_global_ids: unknown hash_mode {hash_mode!r} "
-            "(expected 'native' or 'portable')"
-        )
-    with_b = df.withColumn("_bucket", bucket)
-    out = bucketed_row_number(
-        with_b,
-        ["_bucket"],
-        [h.asc(), F.col(key_col).asc()],
-        id_col,
-        max_buckets=1 << bucket_bits,
-    )
-    return out.withColumn(id_col, F.col(id_col) - 1).drop("_bucket")

@@ -346,7 +346,7 @@ def train_bigram_lm(
 
     ``grams``: a pre-built (id, bigram) stream (``doc_bigrams``) — for
     the train-then-self-score composition, materialize it once
-    (localCheckpoint) and pass it to BOTH functions, halving the
+    (checkpoint) and pass it to BOTH functions, halving the
     tokenize+explode passes over the corpus."""
     if grams is None:
         grams = doc_bigrams(df, id_col, text_col)
@@ -506,7 +506,7 @@ def moore_lewis_scores(
     target subset of the SAME materialized gram stream; scoring is the
     lm_perplexity join shape (gram stream vs vocab²-bounded model
     tables, AQE-broadcast) run twice — no extra corpus tokenization,
-    no corpus×corpus joins. Pass ``grams`` (a localCheckpoint'd
+    no corpus×corpus joins. Pass ``grams`` (a checkpointed
     ``doc_bigrams``), ``general`` (a pre-trained (lm, ctx, V)) and
     ``general_scored`` (the lm_perplexity(backoff=False) output under
     that model — (id, n_bigrams, avg_logp)) to share work with a

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import checkpoint
+
 _BUCKETS = 16 ** 8  # first 8 hex chars of the digest
 
 
@@ -293,7 +295,7 @@ def curriculum_interleave(
     n_sources become LITERAL expressions, so the input lineage runs
     exactly twice (dim collect + main pass) instead of once more per
     broadcast build side — callers whose input is an expensive uncached
-    DAG should localCheckpoint first, as jobs/pipeline.py --curriculum
+    DAG should checkpoint it first, as jobs/pipeline.py --curriculum
     does (code-review finding, round 7). No global exchange anywhere;
     the total order exists only as arithmetic. NULL sources group under
     '' (coalesce both sides — a map lookup on a NULL key would yield a
@@ -504,23 +506,21 @@ def dsir_log_ratios(
     stream; the totals are scalar aggregates (bounded driver collect,
     same contract as token_budget_filter's histogram)."""
     # materialize the <= n_buckets-row censuses ONCE (eager
-    # localCheckpoint): the totals collects below and every downstream
+    # checkpoint): the totals collects below and every downstream
     # consumer (the ratio broadcast inside dsir_scores) would otherwise
     # each re-run a corpus-wide explode+census. After the barrier the
     # whole function costs one corpus pass per input corpus however
     # many times the ratio table is read.
-    tgtc = (
+    tgtc = checkpoint(
         dsir_features(target_df, id_col, text_col, n_buckets, salt)
         .groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("_tc"))
-        .localCheckpoint()
     )
-    rawc = (
+    rawc = checkpoint(
         dsir_features(raw_df, id_col, text_col, n_buckets, salt)
         .groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("_rc"))
         .join(tgtc, "bucket", "left")
-        .localCheckpoint()
     )
     tr = rawc.agg(F.sum("_rc")).collect()[0][0] or 0
     # the FULL target mass — target-only buckets (present in the
@@ -614,29 +614,29 @@ def dsir_fit_scores(
     raw.filter(target_filter))`` + ``dsir_scores`` (pinned in tests).
 
     The (id, bucket) occurrence stream is tokenized + hashed ONCE and
-    materialized (localCheckpoint — a within-query barrier, narrow int
+    materialized (a checkpoint — a within-query barrier, narrow int
     rows, never the text); both censuses fold from it in one pass via a
     conditional count, and the probe joins the same rows. A separate
     ``target_df`` tokenizes a different corpus, so there is no shared
     stream to stage — use ``dsir_log_ratios`` + ``dsir_scores`` there."""
-    stream = _dsir_feature_stream(
-        raw_df,
-        {id_col: F.col(id_col), "_t": target_filter},
-        text_col,
-        n_buckets,
-        salt,
-    ).localCheckpoint()
+    stream = checkpoint(
+        _dsir_feature_stream(
+            raw_df,
+            {id_col: F.col(id_col), "_t": target_filter},
+            text_col,
+            n_buckets,
+            salt,
+        )
+    )
     # census + totals: target ⊆ raw by construction, so the census's
     # conditional count IS the full target mass (counts are integers,
     # so WHERE they are folded from cannot change them); the census is
     # bounded by n_buckets rows
-    census = (
-        stream.groupBy("bucket")
-        .agg(
+    census = checkpoint(
+        stream.groupBy("bucket").agg(
             F.count(F.lit(1)).alias("_rc"),
             F.count_if(F.col("_t")).alias("_tc"),
         )
-        .localCheckpoint()
     )
     totals = census.agg(F.sum("_rc"), F.sum("_tc")).collect()[0]
     tr, tt = totals[0] or 0, totals[1] or 0
@@ -743,7 +743,7 @@ def doremi_weights(
     at weight 1 (p_mix ≡ p_own, excess 0).
 
     Scale shape: the corpus is tokenized ONCE into a per-(source,
-    bigram) count census (vocab²·S-bounded, localCheckpointed — never
+    bigram) count census (vocab²·S-bounded, checkpointed — never
     the corpus again). Each round: one bigram-keyed aggregation builds
     the mixture distribution (per-domain smoothed probabilities carry
     the S weights as an inlined CASE; domains missing a gram contribute
@@ -759,10 +759,8 @@ def doremi_weights(
     from .relevance import doc_bigrams
 
     grams = doc_bigrams(df, source_col, text_col)
-    cen = (
-        grams.groupBy(source_col, "bigram")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint()
+    cen = checkpoint(
+        grams.groupBy(source_col, "bigram").agg(F.count(F.lit(1)).alias("c"))
     )
     masses = {
         r[0]: int(r[1])

@@ -931,7 +931,6 @@ def semantic_dedup(
     n_clusters: int = 16,
     train_iters: int = 2,
     block_rows: int = 4096,
-    reliable_checkpoint: bool = False,
 ) -> DataFrame:
     """Corpus-level semantic deduplication: drop all but one
     representative (min id) of every semantic near-dup group —
@@ -945,9 +944,7 @@ def semantic_dedup(
     pairs = semantic_neardup_pairs(
         emb, id_col, vec_col, threshold, n_clusters, train_iters, block_rows
     )
-    return dedup_by_pairs(
-        emb, pairs, id_col, reliable_checkpoint=reliable_checkpoint
-    )
+    return dedup_by_pairs(emb, pairs, id_col)
 
 
 def topk_eval(

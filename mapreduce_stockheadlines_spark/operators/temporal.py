@@ -72,58 +72,6 @@ def asof_join(
     return filled.filter(F.col("_is_left") == 1).drop("_t", "_is_left")
 
 
-def resample_ffill(
-    df: DataFrame,
-    key: str,
-    ts_col: str,
-    value_cols: list[str],
-    step_seconds: int,
-) -> DataFrame:
-    """Regularize a per-key event series onto a fixed ``step_seconds``
-    grid with forward fill: grid points are the epoch multiples of the
-    step inside [min(ts), max(ts)] of each key (``ceil`` at the low end,
-    ``floor`` at the high end, both inclusive), and each grid point takes
-    the latest observation at-or-before it. Because the grid starts at or
-    after the key's first observation, every output value is non-null;
-    keys whose span contains no grid point emit nothing.
-
-    The standard time-series densification step (downsample irregular
-    ticks / upsample sparse ones) ahead of window features or
-    as-of-aligned joins.
-
-    Scale shape: one agg shuffle for the per-key bounds, a ``sequence``
-    + ``explode`` grid whose size is span/step (never a cross join), and
-    the union-and-fill as-of construction (ONE more hash shuffle on the
-    key, no join explosion). Per-key work is linear in events + grid
-    points, so a hot key degrades gracefully instead of quadratically.
-    """
-    step = F.lit(int(step_seconds)).cast("long")
-    ep = F.unix_timestamp(F.col(ts_col)).cast("long")
-    bounds = df.groupBy(key).agg(
-        F.min(ep).alias("_mn"), F.max(ep).alias("_mx")
-    )
-    lo = (F.ceil(F.col("_mn") / step) * step).cast("long")
-    hi = (F.floor(F.col("_mx") / step) * step).cast("long")
-    grid = (
-        bounds.select(key, lo.alias("_lo"), hi.alias("_hi"))
-        .filter(F.col("_lo") <= F.col("_hi"))
-        .select(
-            key,
-            F.explode(F.sequence("_lo", "_hi", step)).alias("_gs"),
-        )
-        .select(key, F.timestamp_seconds(F.col("_gs")).alias("grid_ts"))
-    )
-    obs = df.select(key, F.col(ts_col), *value_cols)
-    return asof_join(
-        grid,
-        obs,
-        key,
-        left_ts="grid_ts",
-        right_ts=ts_col,
-        right_cols={c: c for c in value_cols},
-    )
-
-
 def range_join_bucketed(
     points: DataFrame,
     intervals: DataFrame,

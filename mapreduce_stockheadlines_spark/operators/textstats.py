@@ -16,6 +16,7 @@ from ..functions.text import (
     text_word_ngrams,
     tokens_array,
 )
+from ..session import checkpoint
 
 # BPE-ish pre-tokenization: letter runs, digit runs, single non-space symbols
 # (a simplification of the GPT-2 pre-tokenizer split).
@@ -606,7 +607,6 @@ def winnow_neardup_pairs(
     min_shared: int = 2,
     max_df: int = 1000,
     max_per_doc: int | None = None,
-    reliable_checkpoint: bool = False,
 ) -> DataFrame:
     """Partial-overlap near-duplicate pairs by shared winnow hashes:
     (id_a, id_b, n_shared) with id_a < id_b and n_shared >=
@@ -634,18 +634,11 @@ def winnow_neardup_pairs(
     # sides) — without a barrier each re-executes the rolling-hash +
     # window-minima chain over the corpus (round 11: 3x the dominant
     # cost, measured; the dedup_by_pairs/x31 multi-consumer policy).
-    # localCheckpoint by default; reliable_checkpoint=True writes to
-    # the configured checkpoint dir for fault tolerance on a cluster.
     # eager=False (round-12 advice fix): the barrier materializes at
     # the FIRST action, not at plan construction — merely building the
     # x04 registry query (schema inspection, explain, warm-up) must
-    # not execute the full fingerprint pass, and the reliable variant
-    # must not demand a configured checkpoint dir at build time.
-    fp = (
-        fp.checkpoint(eager=False)
-        if reliable_checkpoint
-        else fp.localCheckpoint(eager=False)
-    )
+    # not execute the full fingerprint pass.
+    fp = checkpoint(fp, eager=False)
     return winnow_pairs_from_fingerprints(
         fp, min_shared, winnow_rare_hashes(fp, max_df)
     )
@@ -1344,7 +1337,6 @@ def train_classifier(
     l2: float = 0.0,
     min_df: int = 2,
     quantize_dp: int | None = 12,
-    checkpoint_interval: int = 1,
 ) -> DataFrame:
     """Train the (token, weight) table ``classifier_score`` consumes —
     the TRAINING half of the CCNet/DCLM quality-filter stage (fastText
@@ -1369,15 +1361,14 @@ def train_classifier(
     equi-joins over it (token-keyed against the vocab-sized weight
     table, doc-keyed against the doc-sized residuals) plus two
     aggregations — no driver-side data, weight table vocab-sized,
-    lineage truncated every ``checkpoint_interval`` rounds (each round
-    references the weight table twice — once for scores, once in the
-    update join — so un-truncated plans double per round exactly like
-    PageRank's; the 2^interval re-expansion overtakes the saved
-    checkpoint jobs fast. Re-measured in round 12 on Spark 4.1.2 at 6
-    rounds/sf0.1: interval 1 beats 2 (6.5 vs 7.7-10.6 s across
-    orderings) — plan processing per job grew enough that the extra
-    checkpoint jobs are cheaper than the doubled plans, so 1 is now
-    the default).
+    lineage cut every round (each round references the weight table
+    twice — once for scores, once in the update join — so un-cut plans
+    double per round exactly like PageRank's; the 2^rounds
+    re-expansion overtakes the saved checkpoint jobs fast. Re-measured
+    in round 12 on Spark 4.1.2 at 6 rounds/sf0.1: a cut every round
+    beats every 2nd (6.5 vs 7.7-10.6 s across orderings) — plan
+    processing per job grew enough that the extra checkpoint jobs are
+    cheaper than the doubled plans).
 
     ``quantize_dp``: round weights to this many decimals each round.
     Distributed (and cross-library) float sums reorder run-to-run at
@@ -1388,8 +1379,6 @@ def train_classifier(
     """
     if n_iters < 1:
         raise ValueError("train_classifier: n_iters must be >= 1")
-    if checkpoint_interval < 1:
-        raise ValueError("train_classifier: checkpoint_interval must be >= 1")
     toks = df.select(
         F.col(id_col).alias("_id"),
         F.col(label_col).cast("double").alias("_y"),
@@ -1403,21 +1392,20 @@ def train_classifier(
         .filter(F.col("_df") >= min_df)
         .select("token")
     )
-    feats = (
+    feats = checkpoint(
         counts.join(lens, "_id")
         .join(vocab, "token", "left_semi")
         .select(
             "_id", "_y", "token",
             (F.col("_c") / F.col("_len")).alias("_x"),
         )
-        .localCheckpoint()
     )
     n_docs = lens.count()
     if n_docs == 0:
         return df.sparkSession.createDataFrame([], "token string, weight double")
 
-    weights = vocab.withColumn("_w", F.lit(0.0)).localCheckpoint()
-    for it in range(n_iters):
+    weights = checkpoint(vocab.withColumn("_w", F.lit(0.0)))
+    for _ in range(n_iters):
         zd = (
             feats.join(weights, "token")
             .groupBy("_id", "_y")
@@ -1443,11 +1431,11 @@ def train_classifier(
         )
         if quantize_dp is not None:
             new_w = F.round(new_w, quantize_dp)
-        weights = weights.join(grad, "token", "left").select(
-            "token", new_w.alias("_w")
+        weights = checkpoint(
+            weights.join(grad, "token", "left").select(
+                "token", new_w.alias("_w")
+            )
         )
-        if (it + 1) % checkpoint_interval == 0 or it == n_iters - 1:
-            weights = weights.localCheckpoint()
     return weights.select("token", F.col("_w").alias("weight"))
 
 

@@ -31,7 +31,7 @@ from ..operators import similarity as S
 from ..operators import packing as PK
 from ..operators import skew as SK
 from ..operators import textstats as TS
-from ..session import local_frame
+from ..session import checkpoint, local_frame
 from .catalog import parallel_table, table
 from .core import QuerySpec
 
@@ -1649,9 +1649,9 @@ def x13_multimodal_pipeline(
     import time as _time
 
     _t0 = _time.time()
-    resized = M.resize_media(media, 64, 64).select(
-        "media_id", "content", "mime"
-    ).localCheckpoint()
+    resized = checkpoint(
+        M.resize_media(media, 64, 64).select("media_id", "content", "mime")
+    )
     _mark(_stage_secs, "resize", _t0)
     decoded = M.decode_media(resized)
     frames = M.sample_frames(resized, max_frames=3)
@@ -1668,17 +1668,17 @@ def x13_multimodal_pipeline(
     # columns, the spectral features, audio_phash for the output
     # columns, audio_phash again for the banding input) and the twin in
     # two. audio_profile emits all three families from one decode;
-    # localCheckpoint (tiny: one row per media) lets the output chain
+    # checkpoint (tiny: one row per media) lets the output chain
     # AND the banding path read the same materialization. The
     # time-domain columns ride feature[] exactly as before (round 10):
     # feature[1] = duration (exact — 2⁻⁵ vs 2⁻⁴ s), feature[2] = 6dp
     # rms, pinned at 1e-4 fixed point against the closed form
     # sqrt((A1² + A2²)/2)/32768 (amplitudes planted per row).
     _t0 = _time.time()
-    prof = M.audio_profile(wav).localCheckpoint()
+    prof = checkpoint(M.audio_profile(wav))
     _mark(_stage_secs, "audio_profile", _t0)
     _t0 = _time.time()
-    tph = M.audio_phash(twin).select("media_id", "phash").localCheckpoint()
+    tph = checkpoint(M.audio_phash(twin).select("media_id", "phash"))
     _mark(_stage_secs, "twin_phash", _t0)
     # round-11 zero-slot promotion (VERDICT r10 #4): the near-dup
     # BANDING path itself — each planted row's REAL pigeonhole band
@@ -2047,11 +2047,9 @@ def x16_approx_aggregates(spark: SparkSession, sf: str) -> DataFrame:
     )
     # the sketch feeds four consumers (estimate, click filter, group
     # list, set-algebra `a` side) — materialize it once (the x18 `asg`
-    # localCheckpoint pattern) instead of re-running the distinct-hash
+    # checkpoint pattern) instead of re-running the distinct-hash
     # pass + two rank windows per consumer
-    sk = QS.kmv_build(
-        keyed, "user_day", ["event_type"], k=k_kmv
-    ).localCheckpoint()
+    sk = checkpoint(QS.kmv_build(keyed, "user_day", ["event_type"], k=k_kmv))
     kest = QS.kmv_estimate(sk, ["event_type"], k=k_kmv).select(
         "event_type",
         F.col("theta").alias("kmv_theta"),
@@ -2291,24 +2289,26 @@ def x18_ivf_topk(
 
         def _ivf_stage():
             t1 = time.time()
-            # localCheckpoint: multiple consumers (topk_eval, rrf_fuse,
+            # checkpoint: multiple consumers (topk_eval, rrf_fuse,
             # the output join) — without the barrier every consumer
             # would re-execute the corpus-scale probe/rescore lineage.
             # Result-sized (queries x k rows).
-            approx = S.ivf_topk(
-                queries, emb, k=10, n_centroids=16, n_probe=4,
-                centroids=cent,
-            ).localCheckpoint()
+            approx = checkpoint(
+                S.ivf_topk(
+                    queries, emb, k=10, n_centroids=16, n_probe=4,
+                    centroids=cent,
+                )
+            )
             _mark(_stage_secs, "ivf_probe", t1)
             return approx
 
         def _assign_stage():
             t1 = time.time()
-            # localCheckpoint: asg is consumed TWICE below (row side +
+            # checkpoint: asg is consumed TWICE below (row side +
             # cell_n groupBy side of the self-join) — without it the
             # kmeans_assign mapInPandas pass re-executes over the
             # corpus per consumer (the x31 multi-consumer lesson)
-            asg = S.kmeans_assign(emb, cent).localCheckpoint()
+            asg = checkpoint(S.kmeans_assign(emb, cent))
             _mark(_stage_secs, "assign", t1)
             return asg
 
@@ -2335,7 +2335,7 @@ def x18_ivf_topk(
 
     def _truth_stage():
         t0 = time.time()
-        truth = S.cosine_topk(queries, emb, k=10).localCheckpoint()
+        truth = checkpoint(S.cosine_topk(queries, emb, k=10))
         _mark(_stage_secs, "brute_truth", t0)
         return truth
 
@@ -2690,16 +2690,14 @@ GROUP BY event_type ORDER BY event_type
 
 # --- x23 incremental maintenance: MERGE upsert → snapshot diff (CDC) ----------
 #
-# The incremental-maintenance trio (operators/merge.py) under the value-
+# The incremental-maintenance pair (operators/merge.py) under the value-
 # hash gate: a deterministic delta (updates for custkey%10==0, deletes for
 # %100==7, inserts at key+1_000_000 for %200==3 — the three residue
 # classes are pairwise disjoint) is MERGEd into customer, then
 # snapshot_diff extracts the CDC stream between the original and merged
 # versions. The oracle states the EXPECTED diff directly from the residue
 # classes — an independent formulation, not a SQL transliteration of the
-# operators. scd2_from_changes, the third member, is DuckDB-pinned in
-# tests/test_merge.py (its interval output is window-shaped, covered
-# there at full column width).
+# operators.
 
 
 def x23_merge_diff(spark: SparkSession, sf: str) -> DataFrame:
@@ -3464,7 +3462,7 @@ ORDER BY o.doc_id
 # (vs a fixed 4-term query with a deliberate df spread: 'dup' is rare,
 # 'the' is everywhere), and oov_stats (vs the top-20 vocabulary, so the
 # 31-term corpus has real OOV mass). All four reuse ONE materialized
-# term_frequencies census (localCheckpoint — the x31 reuse pattern);
+# term_frequencies census (checkpoint — the x31 reuse pattern);
 # DuckDB re-derives tf, df, N, doc lengths, avgdl, the idf curves, the
 # rank windows and every rounded score from the raw text.
 
@@ -3492,7 +3490,7 @@ def x26_classifier_score(spark: SparkSession, sf: str) -> DataFrame:
     # Exchange count 48 → 48 with the repartition, i.e. one exchange
     # added, none saved). The exchange-sharing idea needs partitioning
     # metadata to survive the barrier, which it does not here.
-    tf = R.term_frequencies(docs, "doc_id", "text").localCheckpoint()
+    tf = checkpoint(R.term_frequencies(docs, "doc_id", "text"))
     clf = TS.classifier_score(docs, "doc_id", "text", tf=tf)
     top = R.tfidf_top_terms(docs, "doc_id", "text", k=1, tf=tf).select(
         "doc_id",
@@ -3500,7 +3498,7 @@ def x26_classifier_score(spark: SparkSession, sf: str) -> DataFrame:
         F.col("tf").alias("top_tf"),
         F.col("score").alias("top_tfidf"),
     )
-    vocab = R.vocabulary(docs, "text", tf=tf).localCheckpoint()
+    vocab = checkpoint(R.vocabulary(docs, "text", tf=tf))
     vid = vocab.select(
         F.col("term").alias("top_term"), F.col("term_id").alias("top_term_id")
     )
@@ -3763,9 +3761,11 @@ def x27_quantize_embeddings(
         t0 = _time.time()
         rg = np.eye(len(q0))
         rg[0, 0], rg[0, 16], rg[16, 0], rg[16, 16] = 0.6, 0.8, -0.8, 0.6
-        vrq = PQO.rotate_vectors(emb, rg).withColumn(
-            "vr", F.transform("vr", lambda x: F.round(x, 9))
-        ).localCheckpoint()  # consumed by 2 Lloyd passes + the query
+        vrq = checkpoint(  # consumed by 2 Lloyd passes + the query
+            PQO.rotate_vectors(emb, rg).withColumn(
+                "vr", F.transform("vr", lambda x: F.round(x, 9))
+            )
+        )
         # collect + the encode — without the cut each re-runs the Arrow
         # rotation pass over the corpus (round-10 review finding)
         ocb = PQO.pq_train(vrq, vec_col="vr", m=4, ksub=4, n_iters=2)
@@ -3821,7 +3821,7 @@ def x27_quantize_embeddings(
     def _ivfpq_stage():
         t0 = _time.time()
         # return_residuals: the trainer materializes the residual
-        # projection ONCE (localCheckpoint inside ivfpq_train) and its
+        # projection ONCE (checkpoint inside ivfpq_train) and its
         # pq_train rounds and renc all consume that one frame —
         # the baseline re-derived the broadcast-Arrow residual pass
         # 3x inside the trainer and a 4th time here (round-12 measure:
@@ -4433,12 +4433,12 @@ def x28_lm_perplexity(
 
     docs = parallel_table(spark, sf, "documents")
     # ONE tokenize+explode pass for train AND score: the gram stream is
-    # materialized once (localCheckpoint) and shared — without it both
+    # materialized once (checkpoint) and shared — without it both
     # halves re-run the scan+regex pipeline independently
     import time as _time
 
     _t = _time.time()
-    grams = RV.doc_bigrams(docs, "doc_id", "text").localCheckpoint()
+    grams = checkpoint(RV.doc_bigrams(docs, "doc_id", "text"))
     _t = _mark(_stage_secs, "gram_census", _t)
     # Stage dependency graph after the shared gram checkpoint: the
     # add-k LM (+ its perplexity/buckets/Moore-Lewis consumers), the
@@ -4465,7 +4465,7 @@ def x28_lm_perplexity(
         # model. Rank comes from the skew-proof bucketed row_number (no
         # SinglePartition corpus pass), the bucket from the exact
         # integer (rank−1)·3 div total — both cross-engine hashable.
-        ppl = ppl.localCheckpoint()  # consumed by the bucket rank AND
+        ppl = checkpoint(ppl)  # consumed by the bucket rank AND
         # the Moore-Lewis reuse AND the output join
         buckets = RV.ppl_buckets(ppl, "doc_id", "ppl", n_buckets=3)
         _mark(_stage_secs, "addk_kn_lm", t0)
@@ -4520,7 +4520,7 @@ def x28_lm_perplexity(
     # word-type distincts, 4 doc-keyed shuffles, 4 output joins
     # (baseline x28 execute: 7.6 s, the query's dominant cost). The
     # word-type set is vocabulary-sized (the tokenizer-trainer premise:
-    # censuses are bounded, corpora are not), so it localCheckpoints
+    # censuses are bounded, corpora are not), so it checkpoints
     # cheaply; each family encodes that one frame (word-keyed Arrow
     # passes over vocab-sized input), the four (word, n_pieces) tables
     # join word-keyed BEFORE touching the corpus (guide §2.3: aggregate
@@ -4532,7 +4532,7 @@ def x28_lm_perplexity(
 
     def _wtypes_stage():
         t0 = _time.time()
-        wtypes = words.select("word").distinct().localCheckpoint()
+        wtypes = checkpoint(words.select("word").distinct())
         _mark(_stage_secs, "word_types", t0)
         return wtypes
     # BPE TRAINING (round-7 zero-slot promotion — the x33/x31 recipe
@@ -5438,19 +5438,17 @@ def x31_pagerank(
 
     _t = _time.time()
     docs = parallel_table(spark, sf, "documents")
-    edges = (
+    # both consumers below (connected components AND pagerank) walk
+    # this frame many times across their iterative rounds — cut the
+    # lineage ONCE so the corpus scan + distinct executes once, not
+    # once per consumer (x32 cuts its input the same way).
+    edges = checkpoint(
         docs.select(
             (F.col("doc_id") % 97).alias("src"),
             ((F.col("doc_id") * 31 + 7) % 97).alias("dst"),
         )
         .filter((F.col("src") != F.col("dst")) & (F.col("src") % 7 != 0))
         .distinct()
-        # both consumers below (connected components AND pagerank) walk
-        # this frame many times across their iterative rounds — cut the
-        # lineage ONCE so the corpus scan + distinct executes once, not
-        # once per consumer (the x32 builder learned this from x31; now
-        # x31 practices it too).
-        .localCheckpoint()
     )
     _t = _mark(_stage_secs, "edges", _t)
 
@@ -5690,7 +5688,7 @@ def x32_sampling(
         # is libm-dependent; 0.5 keeps the whole construction exact).
         # Checkpoint first: the operator's census collect and the flag
         # join would otherwise each re-run the budget-filter chain.
-        mixed = mixed.localCheckpoint().withColumn(
+        mixed = checkpoint(mixed).withColumn(
             "_mk", F.concat_ws(":", F.col("doc_id"), F.col("epoch"))
         )
         tm = SP.temperature_mix(mixed, "source", "_mk", alpha=0.5).select(
@@ -5740,9 +5738,9 @@ def x32_sampling(
             target_filter=F.col("source") == "src0",
         )
         # scored is tiny (one row per doc) but its lineage re-probes
-        # the staged stream; localCheckpoint so count/min-max/histogram/
+        # the staged stream; checkpoint so count/min-max/histogram/
         # filter/join all reuse one materialization (the x31 pattern)
-        scored = scored.localCheckpoint()
+        scored = checkpoint(scored)
         # floor at 1 (both sides — the oracle uses greatest(n//3, 1)):
         # with fewer than 3 scored docs an unfloored n_keep of 0 would
         # make dsir_resample raise while the SQL quietly returns

@@ -81,6 +81,22 @@ def local_frame(spark: SparkSession, rows, schema: T.StructType) -> DataFrame:
     return spark.createDataFrame(table, schema)
 
 
+def checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
+    """Cut ``df``'s lineage: the engine's one materialization policy.
+
+    With a checkpoint dir configured (``setCheckpointDir``; the curate
+    CLI's ``--checkpoint-dir``) the cut is a reliable ``checkpoint``:
+    files in that dir outlive a lost executor, the reference's
+    every-intermediate-on-HDFS guarantee. Without one it is a
+    ``localCheckpoint`` into executor-local blocks, which needs no
+    config and suits one machine and tests. ``eager`` is Spark's own
+    argument: ``False`` defers the materialization to the first
+    action, so building a plan never runs it."""
+    if df.sparkSession.sparkContext.getCheckpointDir():
+        return df.checkpoint(eager)
+    return df.localCheckpoint(eager)
+
+
 def apply_runtime_conf(spark: SparkSession) -> SparkSession:
     """Pin runtime-settable confs on an externally-provided session.
 

@@ -831,7 +831,7 @@ def media_ingest_sink(
     (``dedup.simhash_bands`` — candidates only, never all-pairs against
     history), verify by exact popcount(xor) ≤ ``max_hamming``, drop
     matches; within-batch near-dups collapse to the min-id
-    representative through ``image/audio_neardup_pairs``. Survivors
+    representative through ``dedup.simhash_neardup_pairs``. Survivors
     append their band rows (band, bits, id, phash — 8-byte fingerprints,
     never media bytes) to the index: day-N cost ∝ day-N data plus
     matched candidates, and the index stores ~(max_hamming+1) tiny rows

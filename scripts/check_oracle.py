@@ -9,12 +9,13 @@ insensitive), and canonicalized values. Usage:
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from mapreduce_stockheadlines_spark.oracle_compare import (
     arrow_type_kinds,

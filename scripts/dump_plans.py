@@ -16,16 +16,18 @@ why verification re-runs this script rather than reusing a live session.
 from __future__ import annotations
 
 import io
+import os
 import re
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO_ROOT)
 
 from mapreduce_stockheadlines_spark.plans.registry import ALL_QUERIES
 from mapreduce_stockheadlines_spark.session import get_spark
 
-PLANS_PATH = "/root/repo/PLANS.md"
+PLANS_PATH = os.path.join(_REPO_ROOT, "PLANS.md")
 
 
 def _normalize(plan: str) -> str:

@@ -3,7 +3,7 @@ plans/<round>/<query>_<tag>.txt — the before/after plan evidence for
 the optimization-round notes (OPTIMIZATION_r*.md). Renamed from
 dump_r12_plan.py in round 13 with the ADVICE r12 fixes: the sibling
 import no longer depends on the implicit sys.path[0], and every path
-derives from __file__ instead of a hardcoded /root/repo.
+derives from __file__ instead of a hardcoded checkout path.
 
 Usage: python scripts/dump_round_plan.py <round> <tag> <query> [query ...]
        python scripts/dump_round_plan.py <round> <tag> --all
@@ -20,11 +20,9 @@ _REPO_ROOT = os.path.dirname(_SCRIPT_DIR)
 sys.path.insert(0, _SCRIPT_DIR)
 sys.path.insert(0, _REPO_ROOT)
 
-# Import the package BEFORE the sibling script: dump_plans.py inserts
-# a hardcoded /root/repo on sys.path at import time, which would
-# otherwise shadow THIS checkout's package when the script runs from a
-# worktree (bit round 13's first before-dump pass). With the package
-# already in sys.modules, that insert can no longer redirect it.
+# Import the package BEFORE the sibling script, so this checkout's
+# package is the one in sys.modules whatever the sibling puts on
+# sys.path.
 from mapreduce_stockheadlines_spark.plans.guard import formatted_plan  # noqa: E402
 from mapreduce_stockheadlines_spark.plans.registry import ALL_QUERIES  # noqa: E402
 from mapreduce_stockheadlines_spark.session import get_spark  # noqa: E402

@@ -190,7 +190,6 @@ SLOW_TESTS = frozenset((
     "test_query_matches_oracle[x25_line_dedup]",  # 20.9s
     "test_query_matches_oracle[x27_quantize_embeddings]",  # 8.5s
     "test_query_matches_oracle[x28_lm_perplexity]",  # 7.0s
-    "test_query_matches_oracle[x31_pagerank]",  # 6.4s
     "test_query_matches_oracle[x33_train_classifier]",  # 5.2s
     "test_rank_is_permutation",  # 10.5s
     "test_remove_dup_windows_matches_brute_force",  # 10.3s

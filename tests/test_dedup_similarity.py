@@ -1692,6 +1692,34 @@ def test_multimodal_undecodable_wav_falls_back_not_crashes(spark):
     assert not any(np.isnan(out2.feature))
 
 
+def test_multimodal_null_content_falls_back_not_crashes(spark):
+    """NULL content under a mime with a real tier (WAV decode, MP4/WebP
+    container walk) gets the digest stub's NULL values from
+    decode_media and no frames from sample_frames, instead of a
+    TypeError that kills the task; a decodable row in the same batch
+    is unaffected."""
+    import numpy as np
+
+    mimes = ["audio/wav", "video/mp4", "image/webp"]
+    rate, n = 8000, 800
+    wav = _wav_bytes(rate, np.zeros((n, 1), dtype="<i2"))
+    df = spark.createDataFrame(
+        [(i, None, m) for i, m in enumerate(mimes)]
+        + [(9, bytearray(wav), "audio/wav")],
+        M.MEDIA_SCHEMA,
+    )
+
+    out = {r.media_id: r for r in M.decode_media(df).collect()}
+    for i in range(len(mimes)):
+        r = out[i]
+        assert (r.n_bytes, r.width, r.height, r.n_frames) == (0, 0, 0, 0)
+        assert r.feature == []
+    assert (out[9].width, out[9].height, out[9].n_frames) == (rate, 1, n)
+
+    frames = M.sample_frames(df, max_frames=2).collect()
+    assert {f.media_id for f in frames} == {9}
+
+
 def test_topk_eval_hand_values_and_duckdb(spark):
     """topk_eval on a hand-built approx/truth pair: recall, first-hit
     rank and MRR match hand computation AND an independent DuckDB

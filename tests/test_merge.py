@@ -1,4 +1,4 @@
-"""Incremental maintenance operators (merge/SCD2/diff): hand-checked tiny
+"""Incremental maintenance operators (merge/diff): hand-checked tiny
 cases, DuckDB cross-engine pins on the real tables, and the CDC roundtrip
 identity merge_upsert(old, snapshot_diff(old, new)) == new."""
 
@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 
 from mapreduce_stockheadlines_spark.operators.merge import (
     merge_upsert,
-    scd2_from_changes,
     snapshot_diff,
 )
 from mapreduce_stockheadlines_spark.plans.catalog import table
@@ -85,79 +84,6 @@ def test_merge_upsert_vs_duckdb_oracle(spark, sf_dir):
             UNION ALL
             SELECT c_custkey, c_name, c_mktsegment, c_acctbal
             FROM delta WHERE NOT is_delete
-            """
-        ).fetchall()
-    )
-    assert got == want
-
-
-def test_scd2_hand_values(spark):
-    chg = spark.createDataFrame(
-        [
-            (1, 10, "new"),
-            (1, 20, "new"),  # duplicate snapshot → compressed away
-            (1, 30, "shipped"),
-            (2, 15, "new"),
-        ],
-        ["k", "ts", "status"],
-    )
-    out = scd2_from_changes(chg, "k", "ts", ["status"])
-    rows = sorted(
-        (r.k, r.valid_from, r.valid_to, r.is_current, r.status) for r in out.collect()
-    )
-    assert rows == [
-        (1, 10, 30, False, "new"),
-        (1, 30, None, True, "shipped"),
-        (2, 15, None, True, "new"),
-    ]
-    # without compression the duplicate snapshot keeps its own interval
-    raw = scd2_from_changes(chg, "k", "ts", ["status"], compress=False)
-    assert raw.filter("k = 1").count() == 3
-
-
-def test_scd2_null_attr_compression(spark):
-    """Null-safe compare: None→None is 'unchanged', None→value is a change."""
-    chg = spark.createDataFrame(
-        [(1, 10, None), (1, 20, None), (1, 30, "x")], "k int, ts int, status string"
-    )
-    out = scd2_from_changes(chg, "k", "ts", ["status"]).orderBy("valid_from")
-    assert [(r.valid_from, r.status) for r in out.collect()] == [(10, None), (30, "x")]
-
-
-def test_scd2_vs_duckdb_oracle(spark, sf_dir):
-    """Pin on a change log derived from orders: (custkey, orderdate) unique
-    rows with orderstatus as the tracked attribute."""
-    orders = table(spark, sf_dir, "orders")
-    chg = orders.groupBy(
-        F.col("o_custkey").alias("k"), F.col("o_orderdate").alias("ts")
-    ).agg(F.min("o_orderstatus").alias("status"))
-    out = scd2_from_changes(chg, "k", "ts", ["status"])
-    got = sorted(
-        (r.k, r.status, r.valid_from, r.valid_to, r.is_current) for r in out.collect()
-    )
-
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW orders AS SELECT * FROM read_parquet('{sf_dir}/orders.parquet')"
-    )
-    want = sorted(
-        tuple(r)
-        for r in con.execute(
-            """
-            WITH chg AS (
-              SELECT o_custkey AS k, o_orderdate AS ts, min(o_orderstatus) AS status
-              FROM orders GROUP BY 1, 2),
-            lagged AS (
-              SELECT k, ts, status,
-                     lag(status) OVER w AS prev, lag(ts) OVER w AS prev_ts
-              FROM chg WINDOW w AS (PARTITION BY k ORDER BY ts)),
-            kept AS (
-              SELECT k, ts, status FROM lagged
-              WHERE prev_ts IS NULL OR status IS DISTINCT FROM prev)
-            SELECT k, status, ts AS valid_from,
-                   lead(ts) OVER w AS valid_to,
-                   lead(ts) OVER w IS NULL AS is_current
-            FROM kept WINDOW w AS (PARTITION BY k ORDER BY ts)
             """
         ).fetchall()
     )

@@ -222,22 +222,35 @@ def test_curate_dup_window_gate(spark):
 
 
 def test_curate_reliable_checkpoint_path(spark, tmp_path):
-    """reliable_checkpoint=True routes the component rounds through the
-    configured checkpoint dir (fault-tolerant) with identical results."""
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
+    """A configured checkpoint dir is the one switch: curate, with no
+    flag of its own, writes its lineage cuts there as reliable
+    checkpoints and keeps the same docs as a run without a dir."""
+    import os
+
     a = "the alpha and beta of the gamma is delta epsilon zeta eta theta"
     rows = [(1, a, "s"), (2, a + " lambda mu", "s"),
             (3, "entirely different words about markets and weather", "s")]
     docs = spark.createDataFrame(rows, "doc_id long, text string, source string")
-    out = curate(
-        docs, lang="en", min_quality=0.0, jaccard_threshold=0.5,
-        reliable_checkpoint=True,
-    )
-    ids = sorted(r.doc_id for r in out.select("doc_id").collect())
-    assert ids == [1, 3]
-    import os
 
-    assert any(os.scandir(tmp_path / "ckpt"))  # checkpoints actually written
+    def kept():
+        out = curate(docs, lang="en", min_quality=0.0, jaccard_threshold=0.5)
+        return sorted(r.doc_id for r in out.select("doc_id").collect())
+
+    sc = spark.sparkContext
+    assert sc.getCheckpointDir() is None
+    local = kept()
+    sc.setCheckpointDir(str(tmp_path / "ckpt"))
+    try:
+        reliable = kept()
+    finally:
+        # the session fixture is shared: later tests keep local cuts
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(
+            sc._jvm.scala.Option.apply(None)
+        )
+    assert sc.getCheckpointDir() is None
+    assert local == reliable == [1, 3]
+    ckpt = tmp_path / "ckpt"
+    assert any(f for _, _, fs in os.walk(ckpt) for f in fs)  # files written
 
 
 def _curate_pinned_output(spark):

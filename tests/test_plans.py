@@ -460,7 +460,7 @@ def test_plans_md_regenerated_at_head():
     env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_CPUS"}
     proc = subprocess.run(
         [sys.executable, "scripts/dump_plans.py", "--verify"],
-        cwd="/root/repo",
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         env=env,
         capture_output=True,
         text=True,

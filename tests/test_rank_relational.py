@@ -92,95 +92,3 @@ def test_except_semantics(spark):
     # and the round-1 construction is demonstrably NOT set-EXCEPT here
     wrong = a.exceptAll(b.distinct()).distinct()
     assert sorted(r.x for r in wrong.collect()) == [1, 2, 3]
-
-
-def test_assign_global_ids_dense_and_bucket_invariant(spark, sf_dir):
-    """Ids are a dense 0..n-1 bijection, deterministic across reruns, and
-    INVARIANT to the bucket count (the top-bits bucketing preserves
-    global unsigned-hash order) — the property that makes the operator a
-    drop-in for a global row_number without its single-task sort."""
-    from mapreduce_stockheadlines_spark.operators.rank import assign_global_ids
-    from mapreduce_stockheadlines_spark.plans.catalog import table
-
-    docs = table(spark, sf_dir, "documents").select("doc_id")
-    n = docs.count()
-    a = assign_global_ids(docs, "doc_id", bucket_bits=3)
-    ids = sorted(r.global_id for r in a.collect())
-    assert ids == list(range(n))  # dense bijection
-    b = {r.doc_id: r.global_id
-         for r in assign_global_ids(docs, "doc_id", bucket_bits=7).collect()}
-    assert {r.doc_id: r.global_id for r in a.collect()} == b  # bucket-invariant
-
-
-def test_assign_global_ids_no_single_partition_sort(spark, sf_dir):
-    """The plan must shuffle on the bucket hash — never funnel the corpus
-    into a SinglePartition exchange the way a global-order Window does."""
-    import io
-    from contextlib import redirect_stdout
-
-    from mapreduce_stockheadlines_spark.operators.rank import assign_global_ids
-    from mapreduce_stockheadlines_spark.plans.catalog import table
-
-    df = assign_global_ids(
-        table(spark, sf_dir, "documents").select("doc_id"), "doc_id"
-    )
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
-    plan = buf.getvalue()
-    assert "hashpartitioning(_bucket" in plan
-    assert "SinglePartition" not in plan
-
-    from mapreduce_stockheadlines_spark.operators.rank import assign_global_ids as g
-    import pytest
-
-    with pytest.raises(ValueError, match="bucket_bits"):
-        g(table(spark, sf_dir, "documents"), "doc_id", bucket_bits=0)
-    # ADVICE r4: the per-bucket counts are driver-collected, so the bit
-    # width caps at 20 (1M offset rows) instead of the old 30 (~1B)
-    with pytest.raises(ValueError, match="bucket_bits"):
-        g(table(spark, sf_dir, "documents"), "doc_id", bucket_bits=21)
-
-
-def test_assign_global_ids_portable_mode_duckdb_pin(spark, sf_dir):
-    """hash_mode='portable' ids hash-verified cross-engine: DuckDB
-    re-derives them as a PLAIN GLOBAL SORT on md5(CAST(key AS VARCHAR))
-    — an independent formulation that checks the whole bucket/offset
-    construction, including the cumulative-offset arithmetic. Also
-    pinned: portable ids are bucket-count-invariant, same as native."""
-    import duckdb
-
-    from mapreduce_stockheadlines_spark.operators.rank import assign_global_ids
-    from mapreduce_stockheadlines_spark.plans.catalog import table
-
-    docs = table(spark, sf_dir, "documents").select("doc_id")
-    got = {
-        r.doc_id: r.global_id
-        for r in assign_global_ids(
-            docs, "doc_id", bucket_bits=5, hash_mode="portable"
-        ).collect()
-    }
-    con = duckdb.connect()
-    want = dict(
-        con.sql(
-            f"""
-            SELECT doc_id,
-                   row_number() OVER (
-                     ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) - 1
-            FROM read_parquet('{sf_dir}/documents.parquet')
-            """
-        ).fetchall()
-    )
-    assert got == want
-    again = {
-        r.doc_id: r.global_id
-        for r in assign_global_ids(
-            docs, "doc_id", bucket_bits=9, hash_mode="portable"
-        ).collect()
-    }
-    assert again == want  # bucket-count-invariant
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="hash_mode"):
-        assign_global_ids(docs, "doc_id", hash_mode="sha9000")

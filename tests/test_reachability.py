@@ -51,17 +51,6 @@ ALLOWED = {
     "operators.pq.pq_refit":
         "embed_pipeline --mode refit's messages name it as the path "
         "for OPQ artifacts",
-    # Kept for now, each with its DuckDB-pinned tests: no root reaches
-    # them yet, and the next simplicity pass decides whether each goes
-    # or gains a query path.
-    "operators.merge.scd2_from_changes":
-        "SCD2 history build; tests/test_merge.py pins it against DuckDB",
-    "operators.rank.assign_global_ids":
-        "dense global ids over bucketed_row_number; "
-        "tests/test_rank_relational.py pins it against DuckDB",
-    "operators.temporal.resample_ffill":
-        "grid resample with forward fill; tests/test_temporal.py pins "
-        "it against a DuckDB ASOF join",
 }
 
 _MODULE = "<module>"
@@ -315,6 +304,26 @@ def test_allowlist_names_existing_unreached_definitions():
         if (f"{PKG}.{q.rpartition('.')[0]}", q.rpartition(".")[2]) in without
     ]
     assert not stale, f"allowlisted but reached from a root: {stale}"
+
+
+def test_lineage_cuts_go_through_session_checkpoint():
+    """Every lineage cut in the package calls ``session.checkpoint``, so
+    one configured checkpoint dir decides local versus reliable for all
+    of them. ``streaming/`` is outside the rule for now, like its
+    reachability."""
+    calls = sorted(
+        f"{name}:{n.lineno} .{n.func.attr}("
+        for name, m in _load().items()
+        if m.in_package and name != f"{PKG}.session"
+        and not name.startswith(f"{PKG}.streaming")
+        for n in ast.walk(m.tree)
+        if isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Attribute)
+        and n.func.attr in ("checkpoint", "localCheckpoint")
+    )
+    assert not calls, (
+        "lineage cuts that bypass session.checkpoint:\n  " + "\n  ".join(calls)
+    )
 
 
 def test_slow_tests_names_exist():

@@ -10,8 +10,6 @@ from __future__ import annotations
 
 from datetime import datetime
 
-from pyspark.sql import functions as F
-
 from mapreduce_stockheadlines_spark.operators.temporal import (
     asof_join,
     range_join_bucketed,
@@ -98,67 +96,3 @@ def test_range_join_respects_key(spark):
         points, intervals, "key", "pt", "st", "en", bucket_seconds=600
     ).collect()
     assert [r.pid for r in rows] == [1]
-
-
-def test_resample_ffill_hand_values(spark):
-    from mapreduce_stockheadlines_spark.operators.temporal import resample_ffill
-
-    obs = spark.createDataFrame(
-        [
-            ("a", datetime(2024, 1, 1, 0, 0, 30), 1.0),
-            ("a", datetime(2024, 1, 1, 0, 2, 10), 2.0),
-            ("a", datetime(2024, 1, 1, 0, 5, 0), 3.0),
-            ("b", datetime(2024, 1, 1, 0, 0, 50), 9.0),  # span < step → no rows
-        ],
-        "key string, ts timestamp, val double",
-    )
-    out = resample_ffill(obs, "key", "ts", ["val"], step_seconds=60)
-    rows = sorted((r.key, r.grid_ts, r.val) for r in out.collect())
-    # grid for a: 0:01..0:05 inclusive (ceil(0:00:30)→0:01, floor(0:05:00)→0:05)
-    assert rows == [
-        ("a", datetime(2024, 1, 1, 0, 1, 0), 1.0),
-        ("a", datetime(2024, 1, 1, 0, 2, 0), 1.0),
-        ("a", datetime(2024, 1, 1, 0, 3, 0), 2.0),
-        ("a", datetime(2024, 1, 1, 0, 4, 0), 2.0),
-        ("a", datetime(2024, 1, 1, 0, 5, 0), 3.0),
-    ]
-    assert out.filter("val IS NULL").count() == 0  # ffill total by construction
-
-
-def test_resample_ffill_vs_duckdb_asof(spark, sf_dir):
-    """Cross-engine pin on the real events table: DuckDB states the same
-    semantics via generate_series + ASOF JOIN (a different construction
-    than the engine's union-and-fill)."""
-    import duckdb
-
-    from mapreduce_stockheadlines_spark.operators.temporal import resample_ffill
-    from mapreduce_stockheadlines_spark.plans.catalog import table
-
-    events = table(spark, sf_dir, "events")
-    out = resample_ffill(events, "user_id", "ts", ["value"], step_seconds=3600)
-    got = sorted((r.user_id, r.grid_ts, r.value) for r in out.collect())
-
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM read_parquet('{sf_dir}/events.parquet')"
-    )
-    want = sorted(
-        tuple(r)
-        for r in con.execute(
-            """
-            WITH bounds AS (
-              SELECT user_id,
-                     CAST(ceil(floor(epoch(min(ts))) / 3600) * 3600 AS BIGINT) AS lo,
-                     CAST(floor(floor(epoch(max(ts))) / 3600) * 3600 AS BIGINT) AS hi
-              FROM events GROUP BY user_id),
-            grid AS (
-              SELECT user_id, to_timestamp(unnest(generate_series(lo, hi, 3600))) AS grid_ts
-              FROM bounds WHERE lo <= hi)
-            SELECT g.user_id, g.grid_ts AT TIME ZONE 'UTC' AS grid_ts, e.value
-            FROM grid g ASOF JOIN events e
-              ON g.user_id = e.user_id AND g.grid_ts >= e.ts
-            """
-        ).fetchall()
-    )
-    assert len(got) > 0
-    assert got == want
