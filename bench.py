@@ -32,6 +32,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from mapreduce_stockheadlines_spark.plans.extensions import STAGE_SECS
 from mapreduce_stockheadlines_spark.plans.registry import ALL_QUERIES
 from mapreduce_stockheadlines_spark.session import get_spark
 
@@ -78,16 +79,12 @@ HEADLINE_QUERIES = [
 ]
 
 
-# Fat multi-stage x-queries (VERDICT r9 "What's wrong" #1): one extra
-# attribution pass each — the builders accept a _stage_secs sink and
-# record the wall time of their EAGER sections (collects,
-# localCheckpoints, unrolled trainer rounds); the lazy assembly's cost
-# lands in the "execute" entry. Cross-round deltas on these queries
-# attribute to a named stage instead of requiring commit archaeology.
-# Round 11 (VERDICT r10 #2): every query above ~3 s at sf0.1 is staged —
-# the purely-LAZY ones (x08/x13/x24) attribute via component sub-plan
-# probes (plans/extensions._probe), whose walls overlap (shared scan)
-# rather than partition "execute".
+# Fat multi-stage x-queries: one extra attribution pass each. Their
+# builders wrap each EAGER section (collects, checkpoints, unrolled
+# trainer rounds) in plans.extensions._stage, which records its driver
+# wall in STAGE_SECS; the lazy assembly's cost lands in the "execute"
+# entry. The purely-lazy x08 and x24 have no eager section, so they
+# report "execute" only.
 STAGED_QUERIES = [
     "x08_text_stats",
     "x13_multimodal_pipeline",
@@ -155,6 +152,17 @@ def _run_noop(spark, name: str, sf_dir: str) -> float:
         "overwrite"
     ).save()
     return round(time.time() - t0, 3)
+
+
+def stage_pass(spark, name: str, sf_dir: str) -> dict[str, float]:
+    """One attribution run of a staged query: the builder's eager
+    sections land in STAGE_SECS, the run of the built plan in
+    ``execute``."""
+    STAGE_SECS.clear()
+    df = ALL_QUERIES[name].builder(spark, sf_dir)
+    t0 = time.time()
+    df.write.format("noop").mode("overwrite").save()
+    return {**STAGE_SECS, "execute": round(time.time() - t0, 3)}
 
 
 def _time_controls(spark, sf_dir: str) -> dict[str, float]:
@@ -225,12 +233,7 @@ def main() -> None:
     # headline numbers; the headline timing above stays best-of-3)
     stage_secs: dict[str, dict[str, float]] = {}
     for name in STAGED_QUERIES:
-        stages: dict[str, float] = {}
-        df = ALL_QUERIES[name].builder(spark, sf_dir, _stage_secs=stages)
-        t0 = time.time()
-        df.write.format("noop").mode("overwrite").save()
-        stages["execute"] = round(time.time() - t0, 3)
-        stage_secs[name] = stages
+        stage_secs[name] = stage_pass(spark, name, sf_dir)
         _free_session_state(spark)
 
     # drift control, last bracket + the Spark-independent DuckDB probe

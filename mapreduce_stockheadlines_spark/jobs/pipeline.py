@@ -1053,8 +1053,31 @@ def main(argv: list[str] | None = None) -> None:
         for k, v in sized.items():
             spark.conf.set(k, v)
         print("conf_for_scale:", sized)
-    if args.checkpoint_dir:
-        spark.sparkContext.setCheckpointDir(args.checkpoint_dir)
+    if not args.checkpoint_dir:
+        _run(spark, args)
+        return
+    spark.sparkContext.setCheckpointDir(args.checkpoint_dir)
+    try:
+        _run(spark, args)
+    finally:
+        _drop_checkpoint_dir(spark.sparkContext)
+
+
+def _drop_checkpoint_dir(sc) -> None:
+    """Delete this run's checkpoint files and unset the session's dir.
+    ``setCheckpointDir`` adds a ``<uuid>`` subdirectory per call, and
+    Spark leaves the files there (``cleanCheckpoints`` is off by
+    default); a dir left set would make every later lineage cut in the
+    process reliable. Hadoop's ``FileSystem`` deletes it, so HDFS and
+    S3 dirs work too."""
+    path = sc._jvm.org.apache.hadoop.fs.Path(sc.getCheckpointDir())
+    path.getFileSystem(sc._jsc.hadoopConfiguration()).delete(path, True)
+    unset = sc._jvm.scala.Option.apply(None)
+    getattr(sc._jsc.sc(), "checkpointDir_$eq")(unset)
+
+
+def _run(spark: SparkSession, args: argparse.Namespace) -> None:
+    """Read, curate and write the corpus as the parsed CLI asks."""
     if args.warc_dir:
         # Common Crawl entry: WARC/WET segments → (doc_id, url, text)
         # with markup stripped — the curation chain is source-agnostic

@@ -65,20 +65,12 @@ def doc_shingles(
     return out.distinct() if distinct else out
 
 
-def _minhash_agg(i: int, hash_mode: str):
-    """One signature slot: min over the set of hash_i(token).
-
-    ``portable``: md5 of the salt-prefixed token (lexicographic min over
-    hex digests) — reproducible in any engine with md5, used by every
-    oracle-checked query. ``native``: xxhash64 → long min — one 64-bit
-    hash instead of a 128-bit digest + hex string per (token, i); the
-    cheap path for engine-internal dedup at corpus scale."""
+def _minhash_agg(i: int):
+    """One signature slot: min over the set of hash_i(token) — md5 of the
+    salt-prefixed token (lexicographic min over hex digests),
+    reproducible in any engine with md5."""
     salted = F.concat(F.lit(f"{i}:"), F.col("token"))
-    if hash_mode == "portable":
-        return F.min(F.md5(salted.cast("binary"))).alias(f"mh{i}")
-    if hash_mode == "native":
-        return F.min(F.xxhash64(salted)).alias(f"mh{i}")
-    raise ValueError(f"minhash: unknown hash mode {hash_mode!r}")
+    return F.min(F.md5(salted.cast("binary"))).alias(f"mh{i}")
 
 
 def minhash_signature(
@@ -87,10 +79,9 @@ def minhash_signature(
     text_col: str,
     num_hashes: int = 8,
     shingle_n: int | None = None,
-    hash_mode: str = "portable",
 ) -> DataFrame:
-    """MinHash signature: column ``mh{i}`` = min(hash_i(token)) — md5 or
-    xxhash64 per ``hash_mode`` (see _minhash_agg).
+    """MinHash signature: column ``mh{i}`` = min(hash_i(token)), the md5
+    construction of _minhash_agg.
 
     One groupBy produces the whole signature (num_hashes aggregates in a
     single pass); no per-hash shuffle. ``shingle_n`` switches the set
@@ -103,7 +94,7 @@ def minhash_signature(
         toks = doc_shingles(df, id_col, text_col, n=shingle_n, distinct=False)
     else:
         toks = doc_tokens(df, id_col, text_col, distinct=False)
-    aggs = [_minhash_agg(i, hash_mode) for i in range(num_hashes)]
+    aggs = [_minhash_agg(i) for i in range(num_hashes)]
     return toks.groupBy(id_col).agg(*aggs)
 
 
@@ -113,7 +104,6 @@ def minhash_signatures_multi(
     text_col: str,
     num_hashes: int = 8,
     shingle_ns: tuple[int | None, ...] = (None, 3),
-    hash_mode: str = "portable",
     include_oph: bool = False,
 ) -> DataFrame:
     """Signatures for SEVERAL set representations in one pass: every mode's
@@ -140,10 +130,9 @@ def minhash_signatures_multi(
     ``num_hashes`` times: the gram is routed to bucket ``h mod k`` and
     each bucket keeps its min; empty buckets borrow the nearest
     following non-empty bucket's value plus ``t·2^60`` (t = rotation
-    distance). ``portable`` mode hashes via md5 ('oph:'-salted, first
-    15 hex chars as a 60-bit BIGINT) so an independent engine
-    re-derives signatures bit-for-bit; ``native`` uses one xxhash64
-    masked to the same 60-bit domain."""
+    distance). The hash is md5 ('oph:'-salted, first 15 hex chars as a
+    60-bit BIGINT), so an independent engine re-derives signatures
+    bit-for-bit."""
     if include_oph and num_hashes > 8:
         raise ValueError(
             "minhash_signatures_multi: include_oph needs num_hashes <= 8 "
@@ -165,10 +154,10 @@ def minhash_signatures_multi(
             mode
         )
     exploded = exploded.select(id_col, mode.alias("mode"), "token")
-    aggs = [_minhash_agg(i, hash_mode) for i in range(num_hashes)]
+    aggs = [_minhash_agg(i) for i in range(num_hashes)]
     if not include_oph:
         return exploded.groupBy(id_col, "mode").agg(*aggs)
-    h = _oph_hash(hash_mode)
+    h = _oph_hash()
     b = F.pmod(h, F.lit(num_hashes)).cast("int")
     aggs += [
         F.min(F.when(b == i, h)).alias(f"_m{i}") for i in range(num_hashes)
@@ -187,17 +176,12 @@ def minhash_signatures_multi(
 _OPH_ROT = 1 << 60
 
 
-def _oph_hash(hash_mode: str):
+def _oph_hash():
     """The single 60-bit token hash OPH routes and min-reduces ('oph:'-
     salted so it is independent of every per-slot classic hash)."""
     salted = F.concat(F.lit("oph:"), F.col("token"))
-    if hash_mode == "portable":
-        return F.conv(F.substring(F.md5(salted.cast("binary")), 1, 15), 16, 10).cast(
-            "long"
-        )
-    if hash_mode == "native":
-        return F.pmod(F.xxhash64(salted), F.lit(1 << 60)).cast("long")
-    raise ValueError(f"oph: unknown hash mode {hash_mode!r}")
+    hex15 = F.substring(F.md5(salted.cast("binary")), 1, 15)
+    return F.conv(hex15, 16, 10).cast("long")
 
 
 def _oph_dense(num_hashes: int, prefix: str = "mh") -> list:
@@ -545,7 +529,6 @@ def fuzzy_text_join(
     num_hashes: int = 8,
     bands: int = 4,
     shingle_n: int = 3,
-    hash_mode: str = "portable",
 ) -> DataFrame:
     """Approximate TEXT join between TWO tables (record linkage: match
     re-published headlines across feeds, crawl snapshots across days,
@@ -575,10 +558,10 @@ def fuzzy_text_join(
     (measured: 28k → 160 pairs on a 33%-boilerplate probe).
     """
     sig_l = minhash_signature(
-        left, left_id, left_text, num_hashes, shingle_n, hash_mode
+        left, left_id, left_text, num_hashes, shingle_n
     )
     sig_r = minhash_signature(
-        right, right_id, right_text, num_hashes, shingle_n, hash_mode
+        right, right_id, right_text, num_hashes, shingle_n
     )
     bl = signature_bands(sig_l, left_id, num_hashes, bands).select(
         F.col(left_id).alias("id_a"), "bucket"
@@ -652,9 +635,7 @@ def jaccard_pairs(
     )
 
 
-def simhash64(
-    df: DataFrame, id_col: str, text_col: str, hash_mode: str = "native"
-) -> DataFrame:
+def simhash64(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """64-bit SimHash fingerprint.
 
     Per doc: hash every token to 64 bits, sum ±1 per bit position weighted
@@ -663,41 +644,30 @@ def simhash64(
     (doc, bit) explode is a 64x shuffle blowup), single partial+final
     aggregation pass, all JVM-side codegen.
 
-    ``hash_mode="native"`` uses xxhash64 (fastest, engine-specific bits);
-    ``hash_mode="portable"`` derives the 64 bits from the first 8 bytes of
-    md5(token) (bit i = bit i%8 of hex byte i//8), the same construction
-    the cross-engine DuckDB oracle reproduces — identical fingerprint
-    SIGNS on any engine with md5, at the cost of the md5 + hex parse per
-    token. Only the per-bit signs matter downstream (hamming distances
-    are packing-invariant).
+    The 64 bits come from the first 8 bytes of md5(token) (bit i = bit
+    i%8 of hex byte i//8), the same construction the cross-engine DuckDB
+    oracle reproduces — identical fingerprint SIGNS on any engine with
+    md5. Only the per-bit signs matter downstream (hamming distances are
+    packing-invariant).
     """
     toks = df.select(id_col, F.explode(tokens_array(text_col)).alias("token"))
-    if hash_mode == "portable":
-        m = F.md5(F.col("token"))
-        hashed = toks.select(
-            F.col(id_col),
-            *[
-                F.conv(F.substring(m, 2 * j + 1, 2), 16, 10)
-                .cast("int")
-                .alias(f"_byte{j}")
-                for j in range(8)
-            ],
+    m = F.md5(F.col("token"))
+    hashed = toks.select(
+        F.col(id_col),
+        *[
+            F.conv(F.substring(m, 2 * j + 1, 2), 16, 10)
+            .cast("int")
+            .alias(f"_byte{j}")
+            for j in range(8)
+        ],
+    )
+
+    def bit_set(i: int):
+        return (
+            F.shiftright(F.col(f"_byte{i // 8}"), i % 8).bitwiseAND(F.lit(1))
+            == 1
         )
 
-        def bit_set(i: int):
-            return (
-                F.shiftright(F.col(f"_byte{i // 8}"), i % 8).bitwiseAND(F.lit(1))
-                == 1
-            )
-
-    elif hash_mode == "native":
-        hashed = toks.select(F.col(id_col), F.xxhash64("token").alias("h"))
-
-        def bit_set(i: int):
-            return F.shiftright(F.col("h"), i).bitwiseAND(F.lit(1)) == 1
-
-    else:
-        raise ValueError(f"simhash64: unknown hash mode {hash_mode!r}")
     bit_aggs = [
         F.sum(F.when(bit_set(i), 1).otherwise(-1)).alias(f"_b{i}")
         for i in range(64)

@@ -138,7 +138,7 @@ def bloom_lookup(
     bc = df.sparkSession.sparkContext.broadcast(_bitmap_array(bloom_df, m_bits))
 
     @F.pandas_udf("boolean")
-    def _probe(pos: pd.Series) -> pd.Series:
+    def _all_bits_set(pos: pd.Series) -> pd.Series:
         if len(pos) == 0:
             return pd.Series(np.zeros(0, dtype=bool))
         bitmap = bc.value
@@ -147,7 +147,8 @@ def bloom_lookup(
         return pd.Series(hits.all(axis=1))
 
     return df.withColumn(
-        out_col, _probe(F.array(*bloom_positions(value_col, m_bits, k, salt)))
+        out_col,
+        _all_bits_set(F.array(*bloom_positions(value_col, m_bits, k, salt))),
     )
 
 

@@ -716,11 +716,12 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
 def lsh_bucket(vec_col, planes: list[list[float]]):
     """Sign-bucket expression: bit i = (v · plane_i) > 0 — random-hyperplane
     LSH for cosine. Returns an int bucket id column. The zip_with/
-    aggregate fold is interpreted (no codegen) and loses to the Arrow
-    matmul kernel in isolation, but WINS inside lsh_bucketed_pairs
-    because it keeps the bucket column JVM-side across the sizing
-    window and sub-block explode (see the LSH_ARROW_MIN_PLANES
-    measurements — pipeline, not kernel, decides). A literal-weight
+    aggregate fold is interpreted (no codegen) and loses to an Arrow
+    matmul kernel in isolation (sf0.1, 64 dims: 0.67 vs 0.23 s at 6
+    planes, round 5), but WINS inside lsh_bucketed_pairs because it
+    keeps the bucket column JVM-side across the sizing window and
+    sub-block explode: a pandas_udf bucket column made x17 1.8x SLOWER
+    (1.47 vs 2.66 s) — pipeline, not kernel, decides. A literal-weight
     element_at multiply-add chain stays off the table regardless: 384
     scalar terms for 6 planes x 64 dims tripped codegen's size
     fallbacks and ran 2x slower (round-4 measurement)."""
@@ -728,51 +729,13 @@ def lsh_bucket(vec_col, planes: list[list[float]]):
     for i, p in enumerate(planes):
         plane = F.array(*[F.lit(float(x)) for x in p])
         # sign decided on the 4dp-rounded projection: a projection within
-        # float-summation noise of 0 buckets identically in the fold, the
-        # Arrow matmul path, and the SQL oracle
+        # float-summation noise of 0 buckets identically here and in the
+        # SQL oracle
         bit = F.when(
             F.round(dot(vec_col, plane), 4) > 0,
             F.shiftleft(F.lit(1).cast("long"), i),
         ).otherwise(0)
         bucket = bucket + bit
-    return bucket
-
-
-# Fold-vs-Arrow, re-measured sf0.1/64-dim in round 5 after the 4dp
-# sign-rounding landed in both paths. In ISOLATION the Arrow matmul now
-# wins at every plane count (bucket-only: fold 0.67s vs arrow 0.23s at
-# 6 planes, 0.87s vs 0.22s at 12 — the per-plane round() made the
-# interpreted fold strictly worse). But inside the FULL
-# lsh_bucketed_pairs pipeline the pandas_udf bucket column inserts
-# ArrowEvalPython stages around the sizing window / sub-block explode
-# and the whole query runs 1.8x SLOWER (x17 at sf0.1: 1.47s fold vs
-# 2.66s arrow), so the JVM-side fold stays the default at low plane
-# counts — the context cost of a Python-evaluated column outweighs its
-# kernel win. Both numbers kept here so the next tuning pass measures
-# the pipeline, not the kernel.
-LSH_ARROW_MIN_PLANES = 12
-
-
-def lsh_bucket_arrow(planes: list[list[float]]):
-    """Arrow-batched bucket assignment: all plane projections in ONE BLAS
-    matmul (V @ Pᵀ) per batch — the scale path for many-plane/multi-table
-    LSH where the interpreted fold's per-plane cost dominates (see
-    measurement above). Returns a callable: column -> long bucket column.
-
-    Signs are decided on the 4dp-rounded projections (same as the fold
-    and the SQL oracle), so BLAS-vs-sequential summation-order noise on
-    a near-zero projection cannot flip a bucket between paths or
-    engines; a projection would need to straddle the rounding boundary
-    itself to disagree, which the rounding makes a deterministic,
-    engine-independent event."""
-    P = np.array(planes, dtype=np.float64).T  # dim x n_planes
-    weights = (1 << np.arange(len(planes))).astype(np.int64)
-
-    @F.pandas_udf("long")
-    def bucket(s: pd.Series) -> pd.Series:
-        V = np.array(list(s), dtype=np.float64)
-        return pd.Series((np.round(V @ P, 4) > 0) @ weights)
-
     return bucket
 
 
@@ -810,15 +773,10 @@ def lsh_bucketed_pairs(
     membership makes the distinct necessary).
     """
     planes = _hyperplanes(dim, n_planes)
-    bucket_col = (
-        lsh_bucket_arrow(planes)(as_double(vec_col))
-        if n_planes >= LSH_ARROW_MIN_PLANES
-        else lsh_bucket(as_double(vec_col), planes)
-    )
     bucketed = emb.select(
         F.col(id_col).cast("long").alias("id"),
         as_double(vec_col).alias("v"),
-        bucket_col.alias("bucket"),
+        lsh_bucket(as_double(vec_col), planes).alias("bucket"),
     )
     return _within_group_pairs(bucketed, threshold, block_rows, "bucket")
 

@@ -13,6 +13,9 @@ instead.
 
 from __future__ import annotations
 
+import time
+from contextlib import contextmanager
+
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -36,23 +39,27 @@ from .catalog import parallel_table, table
 from .core import QuerySpec
 
 
-def _mark(sink: "dict | None", name: str, t0: float) -> float:
-    """Stage attribution for the fat x-queries (round-10 — VERDICT r9
-    'What's wrong' #1: per-operator wall time stopped being observable
-    from BENCH once x27/x28/x31/x32 grew multiple co-trained stages).
-    The trainers run EAGERLY inside these builders (collects,
-    localCheckpoints, unrolled Lloyd/EM rounds), so attribution has to
-    happen here: record the wall time since ``t0`` under ``name`` when
-    a sink dict is passed (bench.py's stage pass) and return a fresh
-    t0. The registry/driver path passes no sink — two clock reads of
-    overhead, no behavior change. The lazy assembly's cost lands in
-    bench's ``execute`` entry."""
-    import time
+STAGE_SECS: dict[str, float] = {}
 
-    now = time.time()
-    if sink is not None:
-        sink[name] = round(now - t0, 3)
-    return now
+
+@contextmanager
+def _stage(name: str):
+    """Record the driver wall of one named builder section in
+    ``STAGE_SECS`` (bench.py's attribution pass clears and reads it).
+    The fat x-queries train EAGERLY inside their builders (collects,
+    checkpoints, unrolled Lloyd/EM rounds), so that cost is invisible
+    to the final ``execute``. Driver walls, not Spark job times: some
+    sections run no job at all (x28's ``bpe_train`` on a shared census
+    is driver-only). Use it as ``with _stage(...)`` around a sequential
+    section, or as a decorator on an ``_overlap`` thunk so the wall is
+    taken inside its worker thread — overlapped walls overlap, they do
+    not partition the query's time. A section that raises still
+    records its key."""
+    t0 = time.time()
+    try:
+        yield
+    finally:
+        STAGE_SECS[name] = round(time.time() - t0, 3)
 
 
 def _overlap(*thunks):
@@ -105,26 +112,6 @@ def _overlap(*thunks):
             raise first_err
         return [f.result() for f in futures]
 
-
-def _probe(sink: "dict | None", name: str, df: DataFrame) -> None:
-    """Stage attribution for the LAZY fat x-queries (round 11 — VERDICT
-    r10 'What's wrong' #2: x08 became the suite's #5 cost with zero
-    stage_secs attribution, so its +5.9 s round-10 delta had to be
-    adjudicated by commit archaeology). These queries are single lazy
-    plans with no eager sections, so per-stage walls come from running
-    each component SUB-PLAN to the noop sink when a sink dict is passed
-    (bench.py's attribution pass only — the registry/driver path passes
-    no sink and this is a no-op). Column pruning cuts each probe to its
-    own component's expressions, but the probes share the scan, so
-    stage walls OVERLAP and do not partition 'execute' — they are
-    attribution hints for cross-round adjudication, not a sum."""
-    if sink is None:
-        return
-    import time
-
-    t0 = time.time()
-    df.write.format("noop").mode("overwrite").save()
-    sink[name] = round(time.time() - t0, 3)
 
 _TOKS_CTE = """
   SELECT DISTINCT doc_id, token FROM (
@@ -556,14 +543,13 @@ ORDER BY kind, id_a, id_b
 
 # --- x05 SimHash fingerprint + Hamming-banded near-dup pairs ------------------
 #
-# hash_mode="portable": token bits come from md5 (bit i = bit i%8 of digest
-# byte i//8 — operators/dedup.simhash64), so the ENTIRE pipeline
+# Token bits come from md5 (bit i = bit i%8 of digest byte i//8 —
+# operators/dedup.simhash64), so the ENTIRE pipeline
 # (fingerprint signs → pigeonhole bands → popcount(xor) verify) is
 # reproducible in ANSI SQL and value-hash-checked. The oracle carries the
 # fingerprint as a 64-char '0'/'1' string (bit i at position i+1): band b
 # equality = substring equality, hamming = DuckDB's hamming() mismatch
-# count — no BIGINT sign/overflow traps. The xxhash64 "native" mode stays
-# the fast path for engine-internal use (unit/property-tested).
+# count — no BIGINT sign/overflow traps.
 
 _X05_BYTES = ",\n         ".join(f"{_hexbyte('h', j)} AS b{j}" for j in range(8))
 _X05_SUMS = ",\n         ".join(
@@ -604,7 +590,7 @@ def x05_simhash_neardup(spark: SparkSession, sf: str) -> DataFrame:
     popcount(xor) verify — cross-engine value-hash-checked against the
     bitstring reconstruction above."""
     docs = parallel_table(spark, sf, "documents")
-    fp = D.simhash64(docs, "doc_id", "text", hash_mode="portable")
+    fp = D.simhash64(docs, "doc_id", "text")
     return D.simhash_neardup_pairs(fp, max_hamming=12).orderBy("id_a", "id_b")
 
 
@@ -700,9 +686,7 @@ _SENT_DECO_SUFFIX = (
 )
 
 
-def x08_text_stats(
-    spark: SparkSession, sf: str, _stage_secs: dict | None = None
-) -> DataFrame:
+def x08_text_stats(spark: SparkSession, sf: str) -> DataFrame:
     """Language ID (n-gram marker heuristic), quality scoring
     (length/punct/stopword components), document fingerprint (md5 of
     whitespace-normalized text) and raw whitespace/BPE-ish token counts
@@ -834,28 +818,6 @@ def x08_text_stats(
         *TS.gopher_rules_cols(F.col("_gc"), _base=_gc_base),
         *TS.c4_rules_cols(F.col("_gc"), _base=_gc_base),
     ]
-    if _stage_secs is not None:
-        # bench attribution pass (VERDICT r10 #2): per-component
-        # sub-plan walls — column pruning cuts each probe to its own
-        # expressions (see _probe's overlap caveat)
-        _probe(
-            _stage_secs,
-            "base_stats",
-            TS.text_stats(
-                base, "doc_id", "text",
-                include_fingerprint=True, include_token_counts=True,
-            ),
-        )
-        for pname, pcols in [
-            ("html_moji", html_moji_cols),
-            ("tok_chunks", tok_chunk_cols),
-            ("sent_chunks", sent_chunk_cols),
-            ("entropy", entropy_cols),
-            ("winnow", winnow_cols),
-            ("cdc", cdc_cols),
-            ("gopher_c4", gc_cols),
-        ]:
-            _probe(_stage_secs, pname, base.select("doc_id", *pcols))
     stats = TS.text_stats(
         base,
         "doc_id",
@@ -1627,9 +1589,7 @@ def _feature_bytes_csv(col_name: str):
     )
 
 
-def x13_multimodal_pipeline(
-    spark: SparkSession, sf: str, _stage_secs: dict | None = None
-) -> DataFrame:
+def x13_multimodal_pipeline(spark: SparkSession, sf: str) -> DataFrame:
     """meta → resize → decode → frame-sample over a binary media column;
     the metadata-only path (media_meta: codegen byte length + content
     hash, no decode) and a typed-metadata JSON extract join in alongside
@@ -1646,13 +1606,10 @@ def x13_multimodal_pipeline(
     # without the barrier each re-ran the resize pass over the media
     # bytes (round 13 — the multi-consumer barrier policy; tiny frame,
     # one row per media)
-    import time as _time
-
-    _t0 = _time.time()
-    resized = checkpoint(
-        M.resize_media(media, 64, 64).select("media_id", "content", "mime")
-    )
-    _mark(_stage_secs, "resize", _t0)
+    with _stage("resize"):
+        resized = checkpoint(
+            M.resize_media(media, 64, 64).select("media_id", "content", "mime")
+        )
     decoded = M.decode_media(resized)
     frames = M.sample_frames(resized, max_frames=3)
     # round-10 zero-slot promotion: the spectral-audio family over the
@@ -1674,12 +1631,10 @@ def x13_multimodal_pipeline(
     # feature[1] = duration (exact — 2⁻⁵ vs 2⁻⁴ s), feature[2] = 6dp
     # rms, pinned at 1e-4 fixed point against the closed form
     # sqrt((A1² + A2²)/2)/32768 (amplitudes planted per row).
-    _t0 = _time.time()
-    prof = checkpoint(M.audio_profile(wav))
-    _mark(_stage_secs, "audio_profile", _t0)
-    _t0 = _time.time()
-    tph = checkpoint(M.audio_phash(twin).select("media_id", "phash"))
-    _mark(_stage_secs, "twin_phash", _t0)
+    with _stage("audio_profile"):
+        prof = checkpoint(M.audio_profile(wav))
+    with _stage("twin_phash"):
+        tph = checkpoint(M.audio_phash(twin).select("media_id", "phash"))
     # round-11 zero-slot promotion (VERDICT r10 #4): the near-dup
     # BANDING path itself — each planted row's REAL pigeonhole band
     # join + popcount verify (dedup.simhash_neardup_pairs, the exact
@@ -1752,26 +1707,6 @@ def x13_multimodal_pipeline(
             ),
         )
     )
-    if _stage_secs is not None:
-        # bench attribution pass (VERDICT r10 #2) — component sub-plan
-        # walls; overlap caveat on _probe. Since round 13 the audio
-        # decode cost lives in the eager audio_profile/twin_phash marks
-        # above; the audio_* probe keys are kept (only-added rule) but
-        # now time checkpoint reads, not decodes.
-        _probe(_stage_secs, "img_decode", decoded)
-        _probe(_stage_secs, "img_frames", frames)
-        _probe(_stage_secs, "meta_json", meta.join(k, "media_id"))
-        _probe(
-            _stage_secs, "audio_spectral",
-            prof.select("media_id", "spec_centroid_hz", "spec_bandwidth_hz",
-                        "spec_rolloff_hz", "spec_flatness", "dominant_hz"),
-        )
-        _probe(_stage_secs, "audio_td", prof.select("media_id", "feature"))
-        _probe(
-            _stage_secs,
-            "audio_phash",
-            prof.select("media_id", "phash").unionByName(tph),
-        )
     return (
         decoded.join(frames, "media_id")
         .join(meta, "media_id")
@@ -2218,9 +2153,7 @@ GROUP BY e.event_type ORDER BY e.event_type
 # float-summation noise therefore resolves identically everywhere,
 # while any real kernel regression ≥ 1e-4 still breaks the hash.
 
-def x18_ivf_topk(
-    spark: SparkSession, sf: str, _stage_secs: dict | None = None
-) -> DataFrame:
+def x18_ivf_topk(spark: SparkSession, sf: str) -> DataFrame:
     """IVF probe-and-rescore: coarse-quantize the corpus into 16 cells
     (TRAINED — since round 7 the index comes from 3 quantized Lloyd
     rounds, see below), probe the 4 cells nearest each query,
@@ -2262,8 +2195,6 @@ def x18_ivf_topk(
     label propagation + pointer jumping, so the pin is cross-ALGORITHM
     too (the x31 cc_label recipe, now over DATA-derived float pairs
     rather than a planted integer graph)."""
-    import time
-
     emb = table(spark, sf, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
 
@@ -2274,9 +2205,8 @@ def x18_ivf_topk(
     # sf0.1); now brute-force truth overlaps the training, and the
     # three centroid consumers overlap each other (guide §2.6 via
     # _overlap — every stage is partitioning-invariant by the quantized
-    # contracts). stage_secs walls OVERLAP (the _probe caveat).
+    # contracts). Their stage walls overlap (see _stage).
     def _train_stage():
-        t0 = time.time()
         # ONE quantized training serves everything below: the IVF
         # probes a genuinely TRAINED index (until round 7 the registry
         # IVF used lowest-id centroids because float training wasn't
@@ -2284,36 +2214,32 @@ def x18_ivf_topk(
         # that restriction, so the trained-IVF path is oracle-verified
         # END-TO-END), the same centroids cell the corpus for the
         # per-row columns, and SemDeDup pairs within the same cells.
-        cent = S.kmeans_centroids(emb, k=16, n_iters=3, quantize_dp=7)
-        _mark(_stage_secs, "kmeans_train", t0)
+        with _stage("kmeans_train"):
+            cent = S.kmeans_centroids(emb, k=16, n_iters=3, quantize_dp=7)
 
+        @_stage("ivf_probe")
         def _ivf_stage():
-            t1 = time.time()
             # checkpoint: multiple consumers (topk_eval, rrf_fuse,
             # the output join) — without the barrier every consumer
             # would re-execute the corpus-scale probe/rescore lineage.
             # Result-sized (queries x k rows).
-            approx = checkpoint(
+            return checkpoint(
                 S.ivf_topk(
                     queries, emb, k=10, n_centroids=16, n_probe=4,
                     centroids=cent,
                 )
             )
-            _mark(_stage_secs, "ivf_probe", t1)
-            return approx
 
+        @_stage("assign")
         def _assign_stage():
-            t1 = time.time()
             # checkpoint: asg is consumed TWICE below (row side +
             # cell_n groupBy side of the self-join) — without it the
             # kmeans_assign mapInPandas pass re-executes over the
             # corpus per consumer (the x31 multi-consumer lesson)
-            asg = checkpoint(S.kmeans_assign(emb, cent))
-            _mark(_stage_secs, "assign", t1)
-            return asg
+            return checkpoint(S.kmeans_assign(emb, cent))
 
+        @_stage("semdedup_cc")
         def _sem_stage():
-            t1 = time.time()
             # semantic_neardup_pairs re-assigns the corpus internally
             # rather than joining `asg` back: the assignment is one
             # NARROW broadcast-centroid Arrow pass (no exchange),
@@ -2324,20 +2250,16 @@ def x18_ivf_topk(
             pairs = S.semantic_neardup_pairs(
                 emb, threshold=0.5, centroids=cent
             )
-            comp = D.neardup_clusters(pairs).select(
+            return D.neardup_clusters(pairs).select(
                 F.col("id").alias("neighbor_id"),
                 F.col("cluster_id").alias("_sem"),
             )
-            _mark(_stage_secs, "semdedup_cc", t1)
-            return comp
 
         return cent, *_overlap(_ivf_stage, _assign_stage, _sem_stage)
 
+    @_stage("brute_truth")
     def _truth_stage():
-        t0 = time.time()
-        truth = checkpoint(S.cosine_topk(queries, emb, k=10))
-        _mark(_stage_secs, "brute_truth", t0)
-        return truth
+        return checkpoint(S.cosine_topk(queries, emb, k=10))
 
     (_cent, approx, asg, comp), truth = _overlap(
         _train_stage, _truth_stage
@@ -2891,9 +2813,7 @@ def _x24_frontier_url(did: Column) -> Column:
     )
 
 
-def x24_url_curation(
-    spark: SparkSession, sf: str, _stage_secs: dict | None = None
-) -> DataFrame:
+def x24_url_curation(spark: SparkSession, sf: str) -> DataFrame:
     docs = parallel_table(spark, sf, "documents")
     did = F.col("doc_id")
     aug = F.concat(
@@ -3001,19 +2921,6 @@ def x24_url_curation(
         domain_col="rdomain",
         agent="engine-bot",
     ).select("doc_id", F.lit(1).alias("robots_allowed"))
-    if _stage_secs is not None:
-        # bench attribution pass (VERDICT r10 #2) — component sub-plan
-        # walls; overlap caveat on _probe. The blocklist/domain-cap
-        # flags now live on the one flagged frame (keys kept: the
-        # blocklist/domain_cap probes time the flag sub-plans).
-        _probe(_stage_secs, "url_stats", stats)
-        _probe(_stage_secs, "blocklist", flagged.select("doc_id", "kept"))
-        _probe(_stage_secs, "frontier_dedup", surv)
-        _probe(
-            _stage_secs, "domain_cap",
-            flagged.select("doc_id", "domain_capped"),
-        )
-        _probe(_stage_secs, "robots", rallow)
     return (
         flagged
         # canonical_url is a pure codegen projection of doc_id (via the
@@ -3615,9 +3522,7 @@ ORDER BY doc_id
 # rounded (4dp float contract). The codes ship as a csv string because
 # the compare canonicalizes scalars, not arrays.
 
-def x27_quantize_embeddings(
-    spark: SparkSession, sf: str, _stage_secs: dict | None = None
-) -> DataFrame:
+def x27_quantize_embeddings(spark: SparkSession, sf: str) -> DataFrame:
     """Symmetric max-abs int8 quantization of the embedding column plus
     per-vector reconstruction RMSE — one narrow projection over the
     scan, zero data shuffle (operators/embeddings.py; parallel_table
@@ -3670,8 +3575,6 @@ def x27_quantize_embeddings(
     re-derives the coarse trainer (the x18 CTE shape at k=4),
     residuals, the residual-PQ trainer, the per-probed-cell LUTs and
     the serving rank — the full probe→residual-ADC→rank path."""
-    import time as _time
-
     import numpy as np
 
     from ..operators import pq as PQO
@@ -3692,7 +3595,7 @@ def x27_quantize_embeddings(
     # prefix query, the IVFPQ probe), which run as concurrent jobs
     # (guide §2.6 via _overlap) — every trainer is partitioning-
     # invariant by the quantized contract, so results are
-    # bit-identical. stage_secs walls OVERLAP (the _probe caveat).
+    # bit-identical. Their stage walls overlap (see _stage).
     # _head_vecs is the trainers' own init collect, NULL/empty vectors
     # dropped, so the shared head is exactly what each would collect.
     from ..operators.similarity import _head_vecs, _nonempty_vecs
@@ -3703,17 +3606,18 @@ def x27_quantize_embeddings(
     q0 = head[0]
 
     def _pq_stage():
-        t0 = _time.time()
-        cbooks = PQO.pq_train(emb, m=4, ksub=4, n_iters=2, init_vecs=head)
-        pqe = PQO.pq_encode(emb, cbooks, query_vec=q0).select(
-            "vec_id",
-            F.concat_ws(
-                ",", F.transform("pq_codes", lambda c: c.cast("string"))
-            ).alias("pq_codes_csv"),
-            "pq_rmse",
-            F.col("adc_fp").alias("pq_adc_fp"),
-        )
-        _mark(_stage_secs, "pq_train_encode", t0)
+        with _stage("pq_train_encode"):
+            cbooks = PQO.pq_train(
+                emb, m=4, ksub=4, n_iters=2, init_vecs=head
+            )
+            pqe = PQO.pq_encode(emb, cbooks, query_vec=q0).select(
+                "vec_id",
+                F.concat_ws(
+                    ",", F.transform("pq_codes", lambda c: c.cast("string"))
+                ).alias("pq_codes_csv"),
+                "pq_rmse",
+                F.col("adc_fp").alias("pq_adc_fp"),
+            )
         # OPQ cross-moment pin (round-9, the pca_fit moment-pin
         # pattern): the orthogonal-Procrustes step consumes
         # A = (1/n)·Σ x·ŷᵀ (operators/pq.opq_cross_moment) — the SVD
@@ -3725,28 +3629,27 @@ def x27_quantize_embeddings(
         # diagonal entry and one planted off-diagonal
         # (j = (17·m+3) mod 64 — never m, and a bijection over
         # columns). Runs INSIDE this stage group: it needs cbooks.
-        t0 = _time.time()
-        a_mom = PQO.opq_cross_moment(
-            emb, np.eye(len(q0)), cbooks, moment_dp=9
-        )
-        om_rows = [
-            (
-                m,
-                float(a_mom[m, m]),
-                float(a_mom[m, (17 * m + 3) % len(q0)]),
+        with _stage("opq_moment"):
+            a_mom = PQO.opq_cross_moment(
+                emb, np.eye(len(q0)), cbooks, moment_dp=9
             )
-            for m in range(len(q0))
-        ]
-        om = local_frame(
-            spark,
-            om_rows,
-            T.StructType([
-                T.StructField("m64o", T.IntegerType()),
-                T.StructField("opq_xmom_ii", T.DoubleType()),
-                T.StructField("opq_xmom_ij", T.DoubleType()),
-            ]),
-        )
-        _mark(_stage_secs, "opq_moment", t0)
+            om_rows = [
+                (
+                    m,
+                    float(a_mom[m, m]),
+                    float(a_mom[m, (17 * m + 3) % len(q0)]),
+                )
+                for m in range(len(q0))
+            ]
+            om = local_frame(
+                spark,
+                om_rows,
+                T.StructType([
+                    T.StructField("m64o", T.IntegerType()),
+                    T.StructField("opq_xmom_ii", T.DoubleType()),
+                    T.StructField("opq_xmom_ij", T.DoubleType()),
+                ]),
+            )
         return pqe, om
 
     # OPQ SERVING (round-10 zero-slot promotion — VERDICT r9 #5): the
@@ -3757,8 +3660,8 @@ def x27_quantize_embeddings(
     # operators end-to-end. The rotated query is read back from the
     # quantized frame itself so both engines consume the identically
     # rounded values.
+    @_stage("opq_serve")
     def _opq_stage():
-        t0 = _time.time()
         rg = np.eye(len(q0))
         rg[0, 0], rg[0, 16], rg[16, 0], rg[16, 16] = 0.6, 0.8, -0.8, 0.6
         vrq = checkpoint(  # consumed by 2 Lloyd passes + the query
@@ -3781,7 +3684,6 @@ def x27_quantize_embeddings(
             F.col("pq_rmse").alias("opq_rmse"),
             F.col("adc_fp").alias("opq_adc_fp"),
         )
-        _mark(_stage_secs, "opq_serve", t0)
         return oenc
     # Matryoshka prefix serving (round-9 zero-slot promotion —
     # prefix slices + operators/embeddings.fixed_query_cosine, Kusupati
@@ -3794,8 +3696,8 @@ def x27_quantize_embeddings(
     # slices.
     from ..operators.rank import bucketed_row_number as _brn
 
+    @_stage("mrl")
     def _mrl_stage():
-        t0 = _time.time()
         mrl = EB.fixed_query_cosine(
             emb.select("vec_id", "embedding"),
             "embedding",
@@ -3811,15 +3713,14 @@ def x27_quantize_embeddings(
             [F.col("_mk").asc(), F.col("vec_id").asc()],
             "mrl_rank_d16",
         ).drop("_mk")
-        _mark(_stage_secs, "mrl", t0)
         return mrl
 
     # IVFPQ serving (round 9): train the real two-level index, then
     # index-derived columns for every row + the real served top-10 for
     # the lowest-vec_id query (rank-bounded by design — the registry
     # never materializes a corpus-sized result list)
+    @_stage("ivfpq_train_serve")
     def _ivfpq_stage():
-        t0 = _time.time()
         # return_residuals: the trainer materializes the residual
         # projection ONCE (checkpoint inside ivfpq_train) and its
         # pq_train rounds and renc all consume that one frame —
@@ -3861,11 +3762,10 @@ def x27_quantize_embeddings(
             F.col("adc_fp").alias("ivfpq_adc_fp"),
             F.col("rank").alias("ivfpq_rank"),
         )
-        _mark(_stage_secs, "ivfpq_train_serve", t0)
         return renc, probed, serv
 
+    @_stage("pca_moments")
     def _pca_stage():
-        t0 = _time.time()
         mean, cov, _comps = EB.pca_fit(
             emb, "embedding", k=4, moment_dp=9, return_moments=True
         )
@@ -3888,7 +3788,6 @@ def x27_quantize_embeddings(
                 T.StructField("pca_cov_ij", T.DoubleType()),
             ]),
         )
-        _mark(_stage_secs, "pca_moments", t0)
         return pm
 
     (pqe, om), oenc, mrl, (renc, probed, serv), pm = _overlap(
@@ -4411,9 +4310,7 @@ _X28_BPE_MERGES: list[tuple[str, str]] = [
 ]
 
 
-def x28_lm_perplexity(
-    spark: SparkSession, sf: str, _stage_secs: dict | None = None
-) -> DataFrame:
+def x28_lm_perplexity(spark: SparkSession, sf: str) -> DataFrame:
     """Per-document bigram-LM perplexity, model self-trained on the
     corpus: one gram census (train) + one gram→model join (score);
     model tables vocab²-bounded, never the corpus again
@@ -4435,11 +4332,8 @@ def x28_lm_perplexity(
     # ONE tokenize+explode pass for train AND score: the gram stream is
     # materialized once (checkpoint) and shared — without it both
     # halves re-run the scan+regex pipeline independently
-    import time as _time
-
-    _t = _time.time()
-    grams = checkpoint(RV.doc_bigrams(docs, "doc_id", "text"))
-    _t = _mark(_stage_secs, "gram_census", _t)
+    with _stage("gram_census"):
+        grams = checkpoint(RV.doc_bigrams(docs, "doc_id", "text"))
     # Stage dependency graph after the shared gram checkpoint: the
     # add-k LM (+ its perplexity/buckets/Moore-Lewis consumers), the
     # Kneser-Ney LM, and the word-census tokenizer-trainer family are
@@ -4448,27 +4342,26 @@ def x28_lm_perplexity(
     # to back (addk_kn_lm 3.3 + moore_lewis 0.9 + word_census 0.8 s at
     # sf0.1). Submit them as concurrent jobs (guide §2.6 via _overlap);
     # every model table is a pure function of the census row set, so
-    # results are bit-identical. stage_secs walls now OVERLAP (the
-    # _probe caveat); the KN half of the old combined "addk_kn_lm" key
-    # lands under the new "kn_lm" key.
+    # results are bit-identical. Their stage walls overlap (see
+    # _stage); the KN half of the old combined "addk_kn_lm" key lands
+    # under the new "kn_lm" key.
     def _addk_ml_stage():
-        t0 = _time.time()
-        lm, ctx, v = RV.train_bigram_lm(
-            docs, "doc_id", "text", add_k=0.5, grams=grams
-        )
-        ppl = RV.lm_perplexity(
-            docs, lm, ctx, v, "doc_id", "text", backoff=False, grams=grams
-        )
-        # CCNet head/middle/tail (round-9 zero-slot promotion —
-        # relevance.ppl_buckets, Wenzek et al. 2020): every doc carries
-        # its global perplexity rank and its tercile under the add-k
-        # model. Rank comes from the skew-proof bucketed row_number (no
-        # SinglePartition corpus pass), the bucket from the exact
-        # integer (rank−1)·3 div total — both cross-engine hashable.
-        ppl = checkpoint(ppl)  # consumed by the bucket rank AND
-        # the Moore-Lewis reuse AND the output join
-        buckets = RV.ppl_buckets(ppl, "doc_id", "ppl", n_buckets=3)
-        _mark(_stage_secs, "addk_kn_lm", t0)
+        with _stage("addk_kn_lm"):
+            lm, ctx, v = RV.train_bigram_lm(
+                docs, "doc_id", "text", add_k=0.5, grams=grams
+            )
+            ppl = RV.lm_perplexity(
+                docs, lm, ctx, v, "doc_id", "text", backoff=False, grams=grams
+            )
+            # CCNet head/middle/tail (round-9 zero-slot promotion —
+            # relevance.ppl_buckets, Wenzek et al. 2020): every doc carries
+            # its global perplexity rank and its tercile under the add-k
+            # model. Rank comes from the skew-proof bucketed row_number (no
+            # SinglePartition corpus pass), the bucket from the exact
+            # integer (rank−1)·3 div total — both cross-engine hashable.
+            ppl = checkpoint(ppl)  # consumed by the bucket rank AND
+            # the Moore-Lewis reuse AND the output join
+            buckets = RV.ppl_buckets(ppl, "doc_id", "ppl", n_buckets=3)
         # Moore-Lewis cross-entropy-difference selection (round-10
         # zero-slot promotion — relevance.moore_lewis_scores, Moore &
         # Lewis ACL 2010): in-domain = source 'src0' (the x32 DSIR
@@ -4478,12 +4371,11 @@ def x28_lm_perplexity(
         # aggregation over the src0 subset, OOV grams take the backoff
         # floor. ml_excess_fp is the exact 1e-4 fixed-point difference
         # of the two integer-mean logps.
-        t0 = _time.time()
-        ml = RV.moore_lewis_scores(
-            docs, "doc_id", "text", F.col("source") == "src0",
-            grams=grams, general=(lm, ctx, v), general_scored=ppl,
-        ).select("doc_id", "ml_excess_fp")
-        _mark(_stage_secs, "moore_lewis", t0)
+        with _stage("moore_lewis"):
+            ml = RV.moore_lewis_scores(
+                docs, "doc_id", "text", F.col("source") == "src0",
+                grams=grams, general=(lm, ctx, v), general_scored=ppl,
+            ).select("doc_id", "ml_excess_fp")
         return ppl, buckets, ml
 
     # KNESER-NEY promotion (round 9, zero slots): the same gram stream
@@ -4494,8 +4386,8 @@ def x28_lm_perplexity(
     # and the fixed-point doc mean; backoff=False for the same
     # self-scored reason as ppl (the backoff arm is DuckDB-pinned on a
     # held-out split in tests/test_relevance.py).
+    @_stage("kn_lm")
     def _kn_stage():
-        t0 = _time.time()
         knlm, knctx, kncont, knt, knv = RV.train_bigram_lm_kn(
             docs, "doc_id", "text", discount=0.75, cont_k=0.5, grams=grams
         )
@@ -4507,7 +4399,6 @@ def x28_lm_perplexity(
             F.col("avg_logp").alias("kn_avg_logp"),
             F.col("ppl").alias("kn_ppl"),
         )
-        _mark(_stage_secs, "kn_lm", t0)
         return knppl
 
     from ..functions.text import tokens_array
@@ -4530,11 +4421,9 @@ def x28_lm_perplexity(
         "doc_id", F.explode(tokens_array("text")).alias("word")
     )
 
+    @_stage("word_types")
     def _wtypes_stage():
-        t0 = _time.time()
-        wtypes = checkpoint(words.select("word").distinct())
-        _mark(_stage_secs, "word_types", t0)
-        return wtypes
+        return checkpoint(words.select("word").distinct())
     # BPE TRAINING (round-7 zero-slot promotion — the x33/x31 recipe
     # applied to the tokenizer trainer): train_bpe learns 8 merges from
     # the corpus word census (freq-DESC/word-ASC truncation, count ties
@@ -4555,136 +4444,138 @@ def x28_lm_perplexity(
     # family is the third concurrent stage group (driver-side after
     # the one census collect).
     def _trainers_stage():
-        t0 = _time.time()
-        _census_rows = BP.word_census(docs, "text", 4096).collect()
-        shared_census = [(r["word"], int(r["freq"])) for r in _census_rows]
-        t0 = _mark(_stage_secs, "word_census", t0)
-        merges, _alpha = BP.train_bpe(docs, "text", num_merges=8,
-                                      max_word_types=4096,
-                                      census=shared_census)
-        t0 = _mark(_stage_secs, "bpe_train", t0)
+        with _stage("word_census"):
+            _census_rows = BP.word_census(docs, "text", 4096).collect()
+            shared_census = [
+                (r["word"], int(r["freq"])) for r in _census_rows
+            ]
+        with _stage("bpe_train"):
+            merges, _alpha = BP.train_bpe(docs, "text", num_merges=8,
+                                          max_word_types=4096,
+                                          census=shared_census)
         return shared_census, merges
 
     (ppl, buckets, ml), knppl, (shared_census, merges), wtypes = _overlap(
         _addk_ml_stage, _kn_stage, _trainers_stage, _wtypes_stage
     )
-    _t = _time.time()
-    enc = BP.encode_word_types(wtypes, _X28_BPE_MERGES).select(
-        "word", F.size("pieces").cast("bigint").alias("_np")
-    )
-    mfp = hashlib.md5(
-        "|".join(a + " " + b for a, b in merges).encode()
-    ).hexdigest()[:8]
-    enc_t = BP.encode_word_types(wtypes, merges).select(
-        "word", F.size("pieces").cast("bigint").alias("_npt")
-    )
-    # UNIGRAM-LM TRAINING (round-8 zero-slot promotion — the fifth
-    # iterative trainer under the unrolled-CTE recipe, and the first
-    # PROBABILISTIC one): train_unigram seeds substring candidates from
-    # the same word census, runs 2 hard-EM rounds (fixed-point Viterbi
-    # best segmentations -> freq-weighted counts with a +1 single-char
-    # coverage floor -> re-estimated 1e6-fixed-point ln probabilities)
-    # and prunes to 12 multi-char pieces + the alphabet. Two columns pin
-    # it: uni_model_fp8 (md5 prefix of the piece:logp table — one wrong
-    # probability anywhere breaks every row) and n_uni_pieces (each
-    # doc's Viterbi piece count under the trained table, encoded by the
-    # real Arrow path). DuckDB re-derives seed scores, both EM rounds
-    # (best paths via recursive-CTE enumeration vs the driver's DP — a
-    # cross-ALGORITHM pin with the same (score DESC, seg ASC) contract),
-    # the prune, the fingerprint and every per-doc count.
-    from ..operators import unigram as UG
-
-    # WORDPIECE TRAINING (round-9 zero-slot promotion — the SEVENTH
-    # trainer under the unrolled-CTE recipe, and the first whose merge
-    # decision is a likelihood SCORE rather than a raw count): 8
-    # score-ranked merges from the same word census, greedy
-    # longest-match encode over every word type (the BERT algorithm —
-    # NOT merge replay; DuckDB walks it with a recursive CTE). Two
-    # columns pin it: wp_vocab_fp8 (md5 prefix of the ordered piece
-    # list) and n_wp_pieces. The score's cross-engine determinism is
-    # IEEE-exact, not quantized: float(c)/(float(ca)*float(cb)) is the
-    # same cast-cast-multiply-divide sequence both engines run
-    # (operators/wordpiece.py module doc).
-    from ..operators import wordpiece as WP
-
-    wp_vocab, _wp_merges, _wp_alpha = WP.train_wordpiece(
-        docs, "text", num_merges=8, max_word_types=4096,
-        census=shared_census,
-    )
-    wfp = WP.wordpiece_vocab_fp8(wp_vocab)
-    enc_w = WP.encode_word_types_wp(wtypes, wp_vocab).select(
-        "word", F.size("pieces").cast("bigint").alias("_nw")
-    )
-    _t = _mark(_stage_secs, "wp_train", _t)
-    uni = UG.train_unigram(
-        docs, "text", vocab_size=12, n_rounds=2, max_piece_len=4,
-        seed_size=64, max_word_types=4096, census=shared_census,
-    )
-    ufp = UG.unigram_model_fp8(uni)
-    # round 9: the TRUE soft-EM trainer under the gate too — expected
-    # counts quantized to integer fixed point per round (count_dp=4)
-    # make the forward-backward model cross-engine hashable; DuckDB
-    # re-derives it by ENUMERATING all segmentations per census word
-    # and folding exp(score/1e6) — a cross-ALGORITHM pin of the whole
-    # lattice (uni_soft_fp8 breaks if any expected count, floor, prune
-    # or M-step diverges)
-    uni_soft = UG.train_unigram(
-        docs, "text", vocab_size=12, n_rounds=2, max_piece_len=4,
-        seed_size=64, max_word_types=4096, em="soft", count_dp=4,
-        census=shared_census,
-    )
-    usfp = UG.unigram_model_fp8(uni_soft)
-    enc_u = UG.unigram_encode_word_types(wtypes, uni).select(
-        "word", F.size("pieces").cast("bigint").alias("_nu")
-    )
-    _t = _mark(_stage_secs, "unigram_em", _t)
-    # ONE per-word piece-count table for all four families (each
-    # encoder emits exactly one row per input word type, so the
-    # word-keyed inner joins are lossless), then ONE corpus join + ONE
-    # doc-keyed groupBy for all five aggregates — the baseline's four
-    # separate explode→join→groupBy subtrees collapsed (guide §2.4).
-    enc_all = enc.join(enc_t, "word").join(enc_w, "word").join(enc_u, "word")
-    piece_aggs = (
-        words.join(enc_all, "word")
-        .groupBy("doc_id")
-        .agg(
-            F.sum("_np").cast("bigint").alias("n_bpe_pieces"),
-            F.max("_np").cast("bigint").alias("max_word_pieces"),
-            F.sum("_npt").cast("bigint").alias("n_bpe_pieces_trained"),
-            F.sum("_nu").cast("bigint").alias("n_uni_pieces"),
-            F.sum("_nw").cast("bigint").alias("n_wp_pieces"),
+    with _stage("wp_train"):
+        enc = BP.encode_word_types(wtypes, _X28_BPE_MERGES).select(
+            "word", F.size("pieces").cast("bigint").alias("_np")
         )
-    )
-    # TOKENIZER FERTILITY (round-10 zero-slot promotion — VERDICT r9
-    # #3, jobs/report._tokenizer_fertility_rows under the gate): the
-    # three corpus-level fertility ratios — freq-weighted mean pieces
-    # per word over the SAME shared census the trainers consume — as
-    # 1e6 fixed-point BIGINTs under the exact integer-DIV contract:
-    # floor((sum freq·pieces · 1e6) / sum freq), python int // here,
-    # HUGEINT // in the oracle (the KMV/UniMax twin). Driver cost: one
-    # loop over the ≤4096 census types already in hand — no extra
-    # corpus pass, no collect. Like the model fingerprints these are
-    # corpus CONSTANTS: the pin is the value (a wrong merge / vocab
-    # entry / probability anywhere moves the sum), not per-row
-    # variation.
-    _ranks = {pair: i for i, pair in enumerate(merges)}
-    _wset = set(wp_vocab)
-    _mpl = max((len(pc) for pc in uni), default=1)
-    _tot = sum(f for _, f in shared_census)
-    _s_bpe = _s_wp = _s_uni = 0
-    for _w, _f in shared_census:
-        _s_bpe += _f * len(BP._encode_word(_w, _ranks))
-        _s_wp += _f * len(WP._encode_word_wp(_w, _wset))
-        _seg = UG._viterbi(_w, uni, _mpl)
-        # char fallback when no segmentation exists — apply_unigram's
-        # convention, mirrored by the oracle's coalesce(np, length)
-        _s_uni += _f * (len(_seg) if _seg else len(_w))
-    fert = {
-        "bpe_fert_fp": _s_bpe * 1_000_000 // _tot if _tot else 0,
-        "uni_fert_fp": _s_uni * 1_000_000 // _tot if _tot else 0,
-        "wp_fert_fp": _s_wp * 1_000_000 // _tot if _tot else 0,
-    }
-    _t = _mark(_stage_secs, "fertility", _t)
+        mfp = hashlib.md5(
+            "|".join(a + " " + b for a, b in merges).encode()
+        ).hexdigest()[:8]
+        enc_t = BP.encode_word_types(wtypes, merges).select(
+            "word", F.size("pieces").cast("bigint").alias("_npt")
+        )
+        # UNIGRAM-LM TRAINING (round-8 zero-slot promotion — the fifth
+        # iterative trainer under the unrolled-CTE recipe, and the first
+        # PROBABILISTIC one): train_unigram seeds substring candidates from
+        # the same word census, runs 2 hard-EM rounds (fixed-point Viterbi
+        # best segmentations -> freq-weighted counts with a +1 single-char
+        # coverage floor -> re-estimated 1e6-fixed-point ln probabilities)
+        # and prunes to 12 multi-char pieces + the alphabet. Two columns pin
+        # it: uni_model_fp8 (md5 prefix of the piece:logp table — one wrong
+        # probability anywhere breaks every row) and n_uni_pieces (each
+        # doc's Viterbi piece count under the trained table, encoded by the
+        # real Arrow path). DuckDB re-derives seed scores, both EM rounds
+        # (best paths via recursive-CTE enumeration vs the driver's DP — a
+        # cross-ALGORITHM pin with the same (score DESC, seg ASC) contract),
+        # the prune, the fingerprint and every per-doc count.
+        from ..operators import unigram as UG
+
+        # WORDPIECE TRAINING (round-9 zero-slot promotion — the SEVENTH
+        # trainer under the unrolled-CTE recipe, and the first whose merge
+        # decision is a likelihood SCORE rather than a raw count): 8
+        # score-ranked merges from the same word census, greedy
+        # longest-match encode over every word type (the BERT algorithm —
+        # NOT merge replay; DuckDB walks it with a recursive CTE). Two
+        # columns pin it: wp_vocab_fp8 (md5 prefix of the ordered piece
+        # list) and n_wp_pieces. The score's cross-engine determinism is
+        # IEEE-exact, not quantized: float(c)/(float(ca)*float(cb)) is the
+        # same cast-cast-multiply-divide sequence both engines run
+        # (operators/wordpiece.py module doc).
+        from ..operators import wordpiece as WP
+
+        wp_vocab, _wp_merges, _wp_alpha = WP.train_wordpiece(
+            docs, "text", num_merges=8, max_word_types=4096,
+            census=shared_census,
+        )
+        wfp = WP.wordpiece_vocab_fp8(wp_vocab)
+        enc_w = WP.encode_word_types_wp(wtypes, wp_vocab).select(
+            "word", F.size("pieces").cast("bigint").alias("_nw")
+        )
+    with _stage("unigram_em"):
+        uni = UG.train_unigram(
+            docs, "text", vocab_size=12, n_rounds=2, max_piece_len=4,
+            seed_size=64, max_word_types=4096, census=shared_census,
+        )
+        ufp = UG.unigram_model_fp8(uni)
+        # round 9: the TRUE soft-EM trainer under the gate too — expected
+        # counts quantized to integer fixed point per round (count_dp=4)
+        # make the forward-backward model cross-engine hashable; DuckDB
+        # re-derives it by ENUMERATING all segmentations per census word
+        # and folding exp(score/1e6) — a cross-ALGORITHM pin of the whole
+        # lattice (uni_soft_fp8 breaks if any expected count, floor, prune
+        # or M-step diverges)
+        uni_soft = UG.train_unigram(
+            docs, "text", vocab_size=12, n_rounds=2, max_piece_len=4,
+            seed_size=64, max_word_types=4096, em="soft", count_dp=4,
+            census=shared_census,
+        )
+        usfp = UG.unigram_model_fp8(uni_soft)
+        enc_u = UG.unigram_encode_word_types(wtypes, uni).select(
+            "word", F.size("pieces").cast("bigint").alias("_nu")
+        )
+    with _stage("fertility"):
+        # ONE per-word piece-count table for all four families (each
+        # encoder emits exactly one row per input word type, so the
+        # word-keyed inner joins are lossless), then ONE corpus join + ONE
+        # doc-keyed groupBy for all five aggregates — the baseline's four
+        # separate explode→join→groupBy subtrees collapsed (guide §2.4).
+        enc_all = (
+            enc.join(enc_t, "word").join(enc_w, "word").join(enc_u, "word")
+        )
+        piece_aggs = (
+            words.join(enc_all, "word")
+            .groupBy("doc_id")
+            .agg(
+                F.sum("_np").cast("bigint").alias("n_bpe_pieces"),
+                F.max("_np").cast("bigint").alias("max_word_pieces"),
+                F.sum("_npt").cast("bigint").alias("n_bpe_pieces_trained"),
+                F.sum("_nu").cast("bigint").alias("n_uni_pieces"),
+                F.sum("_nw").cast("bigint").alias("n_wp_pieces"),
+            )
+        )
+        # TOKENIZER FERTILITY (round-10 zero-slot promotion — VERDICT r9
+        # #3, jobs/report._tokenizer_fertility_rows under the gate): the
+        # three corpus-level fertility ratios — freq-weighted mean pieces
+        # per word over the SAME shared census the trainers consume — as
+        # 1e6 fixed-point BIGINTs under the exact integer-DIV contract:
+        # floor((sum freq·pieces · 1e6) / sum freq), python int // here,
+        # HUGEINT // in the oracle (the KMV/UniMax twin). Driver cost: one
+        # loop over the ≤4096 census types already in hand — no extra
+        # corpus pass, no collect. Like the model fingerprints these are
+        # corpus CONSTANTS: the pin is the value (a wrong merge / vocab
+        # entry / probability anywhere moves the sum), not per-row
+        # variation.
+        _ranks = {pair: i for i, pair in enumerate(merges)}
+        _wset = set(wp_vocab)
+        _mpl = max((len(pc) for pc in uni), default=1)
+        _tot = sum(f for _, f in shared_census)
+        _s_bpe = _s_wp = _s_uni = 0
+        for _w, _f in shared_census:
+            _s_bpe += _f * len(BP._encode_word(_w, _ranks))
+            _s_wp += _f * len(WP._encode_word_wp(_w, _wset))
+            _seg = UG._viterbi(_w, uni, _mpl)
+            # char fallback when no segmentation exists — apply_unigram's
+            # convention, mirrored by the oracle's coalesce(np, length)
+            _s_uni += _f * (len(_seg) if _seg else len(_w))
+        fert = {
+            "bpe_fert_fp": _s_bpe * 1_000_000 // _tot if _tot else 0,
+            "uni_fert_fp": _s_uni * 1_000_000 // _tot if _tot else 0,
+            "wp_fert_fp": _s_wp * 1_000_000 // _tot if _tot else 0,
+        }
     return (
         ppl.join(buckets, "doc_id", "left")
         .join(knppl, "doc_id", "left")
@@ -5405,9 +5296,7 @@ ORDER BY term
 
 # --- x31 PageRank over a planted link graph ----------------------------------
 
-def x31_pagerank(
-    spark: SparkSession, sf: str, _stage_secs: dict | None = None
-) -> DataFrame:
+def x31_pagerank(spark: SparkSession, sf: str) -> DataFrame:
     """Iterative PageRank (operators/graph.py) hash-matched against an
     independent DuckDB unrolled power iteration — the registry promotion
     the round-5 verdict asked for (the operator was previously pinned
@@ -5432,25 +5321,24 @@ def x31_pagerank(
     re-derives it independently via a recursive-CTE transitive closure,
     not label propagation, so the pin is cross-ALGORITHM as well as
     cross-engine."""
-    import time as _time
-
     from ..operators import graph as G
 
-    _t = _time.time()
-    docs = parallel_table(spark, sf, "documents")
-    # both consumers below (connected components AND pagerank) walk
-    # this frame many times across their iterative rounds — cut the
-    # lineage ONCE so the corpus scan + distinct executes once, not
-    # once per consumer (x32 cuts its input the same way).
-    edges = checkpoint(
-        docs.select(
-            (F.col("doc_id") % 97).alias("src"),
-            ((F.col("doc_id") * 31 + 7) % 97).alias("dst"),
+    with _stage("edges"):
+        docs = parallel_table(spark, sf, "documents")
+        # both consumers below (connected components AND pagerank) walk
+        # this frame many times across their iterative rounds — cut the
+        # lineage ONCE so the corpus scan + distinct executes once, not
+        # once per consumer (x32 cuts its input the same way).
+        edges = checkpoint(
+            docs.select(
+                (F.col("doc_id") % 97).alias("src"),
+                ((F.col("doc_id") * 31 + 7) % 97).alias("dst"),
+            )
+            .filter(
+                (F.col("src") != F.col("dst")) & (F.col("src") % 7 != 0)
+            )
+            .distinct()
         )
-        .filter((F.col("src") != F.col("dst")) & (F.col("src") % 7 != 0))
-        .distinct()
-    )
-    _t = _mark(_stage_secs, "edges", _t)
 
     # The three iterative algorithms below are INDEPENDENT consumers of
     # the one checkpointed edge table, but each runs many small eager
@@ -5459,24 +5347,20 @@ def x31_pagerank(
     # stage_secs: components 5.9 + pagerank 4.7 + hits 4.5). Submit
     # them as concurrent jobs instead (guide §2.6 via _overlap); each
     # result is bit-identical by the quantize_dp contract regardless of
-    # scheduling. stage_secs walls now OVERLAP (the _probe caveat).
+    # scheduling. Their stage walls overlap (see _stage).
+    @_stage("components")
     def _cc_stage():
-        t0 = _time.time()
-        cc = D.neardup_clusters(
+        return D.neardup_clusters(
             edges.select(
                 F.col("src").alias("id_a"), F.col("dst").alias("id_b")
             )
         ).select(
             F.col("id").alias("node"), F.col("cluster_id").alias("cc_label")
         )
-        _mark(_stage_secs, "components", t0)
-        return cc
 
+    @_stage("pagerank")
     def _pr_stage():
-        t0 = _time.time()
-        ranks = G.pagerank(edges, damping=0.85, n_iters=10, quantize_dp=10)
-        _mark(_stage_secs, "pagerank", t0)
-        return ranks
+        return G.pagerank(edges, damping=0.85, n_iters=10, quantize_dp=10)
 
     # HITS (round-9 zero-slot promotion — operators/graph.hits,
     # Kleinberg 1999): 5 hub↔authority rounds over the SAME planted
@@ -5486,11 +5370,9 @@ def x31_pagerank(
     # exact). The planted src%7==0 residues receive links but emit
     # none: their hub is structurally 0 while their auth is positive —
     # the role separation PageRank conflates, pinned per row.
+    @_stage("hits")
     def _hits_stage():
-        t0 = _time.time()
-        hub_auth = G.hits(edges, n_iters=5, quantize_dp=10)
-        _mark(_stage_secs, "hits", t0)
-        return hub_auth
+        return G.hits(edges, n_iters=5, quantize_dp=10)
 
     cc, ranks, hub_auth = _overlap(_cc_stage, _pr_stage, _hits_stage)
     return ranks.join(cc, "node").join(hub_auth, "node").orderBy("node")
@@ -5599,9 +5481,7 @@ X31_SQL = _x31_oracle_sql()
 
 # --- x32 mixture construction: token budget + epoch upsampling + DSIR --------
 
-def x32_sampling(
-    spark: SparkSession, sf: str, _stage_secs: dict | None = None
-) -> DataFrame:
+def x32_sampling(spark: SparkSession, sf: str) -> DataFrame:
     """The mixture-construction stages a curation user touches on day
     one (operators/sampling.py), registry-promoted in round 6 (slot
     freed by folding q26's pivot into q25): token_budget_filter fills
@@ -5645,8 +5525,6 @@ def x32_sampling(
     own-domain CEs and both mixture-CE → update → renormalize rounds
     as MATERIALIZED CTEs, and the weight lands on the mixed rows as a
     codegen CASE (no join — S driver scalars)."""
-    import time as _time
-
     docs = parallel_table(spark, sf, "documents")
     s = docs.select(
         "doc_id",
@@ -5663,14 +5541,14 @@ def x32_sampling(
     # stage_secs: budget_mix_strat 2.0 + dsir 3.2 + doremi 2.7).
     # Submit them as concurrent jobs (guide §2.6 via _overlap); every
     # decision inside each group is integer/md5/quantized arithmetic —
-    # a pure function of the row set, scheduling-invariant. stage_secs
-    # walls now OVERLAP (the _probe caveat). `total` is computed first
+    # a pure function of the row set, scheduling-invariant. Their
+    # stage walls overlap (see _stage). `total` is computed first
     # (one tiny agg) because both the budget chain and UniMax consume
     # it.
     total = s.agg(F.sum("n_tokens")).collect()[0][0]
 
+    @_stage("budget_mix_strat")
     def _mix_stage():
-        t0 = _time.time()
         budget = int(total * 0.35)
         kept = SP.token_budget_filter(s, "score", "n_tokens", budget)
         mixed = SP.epoch_upsample(
@@ -5722,11 +5600,10 @@ def x32_sampling(
         mixed = SP.curriculum_interleave(
             mixed, "score", "source", epoch_col="epoch"
         )
-        _mark(_stage_secs, "budget_mix_strat", t0)
         return mixed
 
+    @_stage("dsir")
     def _dsir_stage():
-        t0 = _time.time()
         raw = docs.filter(F.col("text").isNotNull())
         # fused fit+score (round 13, guide §2.4 / VERDICT r12 #3): the
         # ratio fit and the probe share ONE staged (id, bucket) feature
@@ -5749,7 +5626,6 @@ def x32_sampling(
         sel = SP.dsir_resample(
             scored, "doc_id", "dsir_score", n_keep
         ).select("doc_id", F.lit(True).alias("dsir_kept"))
-        _mark(_stage_secs, "dsir", t0)
         return scored, sel
 
     # DoReMi mixture weights (round-9 zero-slot promotion): the SIXTH
@@ -5763,10 +5639,9 @@ def x32_sampling(
     # The final per-source weight lands on every mixed row as a pure
     # codegen CASE over the driver dict — no join, the weights are S
     # scalars.
+    @_stage("doremi")
     def _doremi_stage():
-        t0 = _time.time()
         dw, _hist = SP.doremi_weights(docs, "source", "text", n_rounds=2)
-        _mark(_stage_secs, "doremi", t0)
         return dw
 
     mixed, (scored, sel), dw = _overlap(
@@ -5781,26 +5656,25 @@ def x32_sampling(
                    F.coalesce(F.col("dsir_kept"), F.lit(False))),
         )
     )
-    _t = _time.time()
-    wexpr = F.lit(None).cast("double")
-    for _src in sorted(dw):
-        wexpr = F.when(F.col("source") == _src, F.lit(dw[_src])).otherwise(
-            wexpr
-        )
-    enriched = enriched.withColumn("doremi_w", wexpr)
-    # UniMax allocation (round-9 zero-slot promotion —
-    # operators/sampling.unimax_allocation, Chung et al. 2023):
-    # water-filling the budget across sources under an epoch cap.
-    # Cap = 2 epochs, budget = 1.9 epochs of the corpus: source sizes
-    # straddle the mean at every SF, so BOTH arms populate — small
-    # sources saturate at their cap, large ones share θ (promotion-
-    # guarded non-degenerate). Every decision is integer (monotone
-    # prefix test, DECIMAL DIV floors), so all three columns are exact
-    # cross-engine pins. The allocation table is source-count-sized —
-    # a broadcast dim onto the mixed rows.
-    um = SP.unimax_allocation(s, "source", "n_tokens",
-                              (19 * total) // 10, 2)
-    _t = _mark(_stage_secs, "unimax", _t)
+    with _stage("unimax"):
+        wexpr = F.lit(None).cast("double")
+        for _src in sorted(dw):
+            wexpr = F.when(
+                F.col("source") == _src, F.lit(dw[_src])
+            ).otherwise(wexpr)
+        enriched = enriched.withColumn("doremi_w", wexpr)
+        # UniMax allocation (round-9 zero-slot promotion —
+        # operators/sampling.unimax_allocation, Chung et al. 2023):
+        # water-filling the budget across sources under an epoch cap.
+        # Cap = 2 epochs, budget = 1.9 epochs of the corpus: source sizes
+        # straddle the mean at every SF, so BOTH arms populate — small
+        # sources saturate at their cap, large ones share θ (promotion-
+        # guarded non-degenerate). Every decision is integer (monotone
+        # prefix test, DECIMAL DIV floors), so all three columns are exact
+        # cross-engine pins. The allocation table is source-count-sized —
+        # a broadcast dim onto the mixed rows.
+        um = SP.unimax_allocation(s, "source", "n_tokens",
+                                  (19 * total) // 10, 2)
     enriched = enriched.join(
         F.broadcast(
             um.select(

@@ -77,35 +77,6 @@ def test_minhash_multi_matches_per_mode(spark):
     assert got == want
 
 
-def test_minhash_native_mode_properties(spark):
-    """hash_mode="native" (xxhash64 longs — the corpus-scale fast path)
-    must keep the MinHash invariants: identical docs collide on every
-    slot, unrelated docs don't, LSH banding still finds the exact dup,
-    and the multi-mode operator agrees with the per-mode runs."""
-    df = docs_df(spark)
-    sig = D.minhash_signature(df, "doc_id", "text", num_hashes=8,
-                              hash_mode="native")
-    assert dict(sig.dtypes)["mh0"] == "bigint"
-    rows = {r.doc_id: tuple(r[f"mh{i}"] for i in range(8)) for r in sig.collect()}
-    assert rows[0] == rows[3]
-    assert rows[0] != rows[2]
-    pairs = {
-        (r.id_a, r.id_b)
-        for r in D.lsh_candidate_pairs(sig, "doc_id", 8, 4).collect()
-    }
-    assert (0, 3) in pairs
-    multi = {
-        (r.doc_id, r.mode): tuple(r[f"mh{i}"] for i in range(8))
-        for r in D.minhash_signatures_multi(
-            df, "doc_id", "text", num_hashes=8, shingle_ns=(None,),
-            hash_mode="native"
-        ).collect()
-    }
-    assert multi[(0, "unigram")] == rows[0]
-    with pytest.raises(ValueError, match="unknown hash mode"):
-        D.minhash_signature(df, "doc_id", "text", hash_mode="sha9")
-
-
 def test_lsh_pairs_catch_exact_dups(spark):
     sig = D.minhash_signature(docs_df(spark), "doc_id", "text", num_hashes=8)
     pairs = {
@@ -138,8 +109,8 @@ def test_simhash_properties(spark):
 
 
 def test_simhash_portable_matches_md5_reference(spark):
-    """hash_mode="portable" pins the exact bit construction the x05 DuckDB
-    oracle reproduces: bit i = bit i%8 of md5-digest byte i//8, votes
+    """simhash64 pins the exact bit construction the x05 DuckDB oracle
+    reproduces: bit i = bit i%8 of md5-digest byte i//8, votes
     weighted by token frequency, sign > 0 → bit set. Checked against an
     independent hashlib.md5 reimplementation (ADVICE r3)."""
     import hashlib
@@ -158,15 +129,10 @@ def test_simhash_portable_matches_md5_reference(spark):
     df = docs_df(spark)
     got = {
         r.doc_id: r.simhash
-        for r in D.simhash64(df, "doc_id", "text", hash_mode="portable").collect()
+        for r in D.simhash64(df, "doc_id", "text").collect()
     }
     want = {r.doc_id: ref_fp(r.text) for r in df.collect()}
     assert got == want
-
-
-def test_simhash_unknown_mode_raises(spark):
-    with pytest.raises(ValueError, match="unknown hash mode"):
-        D.simhash64(docs_df(spark), "doc_id", "text", hash_mode="sha9")
 
 
 def test_cosine_expression(spark):
@@ -209,41 +175,6 @@ def test_lsh_bucketed_recall_of_exact_dup(spark):
         for r in S.lsh_bucketed_pairs(emb, dim=8, n_planes=4, threshold=0.9).collect()
     }
     assert (0, 1) in pairs  # identical vectors share every sign bucket
-    assert (0, 2) not in pairs
-
-
-def test_lsh_arrow_bucket_agrees_with_fold(spark, sf_dir):
-    """The Arrow matmul path (used at >= LSH_ARROW_MIN_PLANES) must assign
-    the same sign buckets as the interpreted fold on the test embeddings
-    (which have margin at every projection — the only admissible
-    disagreement is a projection within float-summation error of 0)."""
-    from mapreduce_stockheadlines_spark.functions.vectors import as_double
-    from mapreduce_stockheadlines_spark.plans.catalog import table
-
-    emb = table(spark, sf_dir, "embeddings")
-    planes = S._hyperplanes(64, 16)
-    both = emb.select(
-        "vec_id",
-        S.lsh_bucket(as_double("embedding"), planes).alias("fold"),
-        S.lsh_bucket_arrow(planes)(as_double("embedding")).alias("arrow"),
-    )
-    assert both.filter(F.col("fold") != F.col("arrow")).count() == 0
-
-
-def test_lsh_bucketed_many_planes_uses_arrow_path(spark):
-    """>= LSH_ARROW_MIN_PLANES must still produce correct pairs through
-    the Arrow assignment (identical vectors collide, opposites don't)."""
-    emb = spark.createDataFrame(
-        [(0, [1.0] * 8), (1, [1.0] * 8), (2, [-1.0] * 8)],
-        ["vec_id", "embedding"],
-    )
-    pairs = {
-        (r.id_a, r.id_b)
-        for r in S.lsh_bucketed_pairs(
-            emb, dim=8, n_planes=S.LSH_ARROW_MIN_PLANES, threshold=0.9
-        ).collect()
-    }
-    assert (0, 1) in pairs
     assert (0, 2) not in pairs
 
 

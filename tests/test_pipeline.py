@@ -253,6 +253,21 @@ def test_curate_reliable_checkpoint_path(spark, tmp_path):
     assert any(f for _, _, fs in os.walk(ckpt) for f in fs)  # files written
 
 
+def test_pipeline_cli_checkpoint_dir_is_cleaned_up(spark, tmp_path):
+    """``--checkpoint-dir`` leaves no checkpoint files behind and no
+    checkpoint dir set on the shared session after the run."""
+    import os
+
+    from mapreduce_stockheadlines_spark.jobs.pipeline import main
+
+    ckpt = tmp_path / "ckpt"
+    main([str(tmp_path / "out"), "--sf-dir", "/root/testdata/sf0.001",
+          "--checkpoint-dir", str(ckpt)])
+    assert spark.read.parquet(str(tmp_path / "out")).count() > 0
+    assert not [f for _, _, fs in os.walk(ckpt) for f in fs]
+    assert spark.sparkContext.getCheckpointDir() is None
+
+
 def _curate_pinned_output(spark):
     """The fixed-flag full-chain run the content pin is computed over:
     blocklist + boilerplate strip + exact dedup + near-dup + PII +

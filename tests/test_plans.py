@@ -471,3 +471,46 @@ def test_plans_md_regenerated_at_head():
         + proc.stdout[-2000:]
         + proc.stderr[-2000:]
     )
+
+
+def test_stage_records_decorated_and_with_sections():
+    """``_stage`` as a decorator on ``_overlap`` thunks and as a ``with``
+    block records exactly those keys in STAGE_SECS; a section that
+    raises still records its key and re-raises."""
+    from mapreduce_stockheadlines_spark.plans.extensions import (
+        STAGE_SECS,
+        _overlap,
+        _stage,
+    )
+
+    STAGE_SECS.clear()
+
+    @_stage("left")
+    def _left():
+        return 1
+
+    @_stage("right")
+    def _right():
+        return 2
+
+    assert _overlap(_left, _right) == [1, 2]
+    with _stage("tail"):
+        pass
+    assert set(STAGE_SECS) == {"left", "right", "tail"}
+    assert all(v >= 0 for v in STAGE_SECS.values())
+
+    STAGE_SECS.clear()
+    with pytest.raises(ValueError, match="boom"):
+        with _stage("broken"):
+            raise ValueError("boom")
+    assert set(STAGE_SECS) == {"broken"}
+
+
+def test_bench_stage_pass_reports_x31_stages(spark, sf_dir):
+    """bench.py's attribution pass for x31: the builder's eager sections
+    plus the run of the built plan."""
+    import bench
+
+    stages = bench.stage_pass(spark, "x31_pagerank", sf_dir)
+    assert set(stages) == {"edges", "components", "pagerank", "hits",
+                           "execute"}

@@ -326,6 +326,61 @@ def test_lineage_cuts_go_through_session_checkpoint():
     )
 
 
+def test_stage_timing_lives_in_one_helper():
+    """Builder sections are timed by ``plans.extensions._stage`` alone:
+    no timing sink or per-builder timer exists in the package, and no
+    ``plans/`` code outside ``_stage`` calls the ``time`` module."""
+    banned = {"_stage_secs", "_mark", "_probe"}
+    hits = []
+    for name, m in _load().items():
+        if not m.in_package:
+            continue
+        # names bound to the time module, and names imported from it
+        mod_names, fn_names = set(), set()
+        for n in ast.walk(m.tree):
+            if isinstance(n, ast.Import):
+                mod_names |= {a.asname or a.name for a in n.names
+                              if a.name == "time"}
+            elif isinstance(n, ast.ImportFrom) and n.module == "time":
+                fn_names |= {a.asname or a.name for a in n.names}
+        skip = {
+            id(x)
+            for n in m.tree.body
+            if name == f"{PKG}.plans.extensions"
+            and isinstance(n, ast.FunctionDef) and n.name == "_stage"
+            for x in ast.walk(n)
+        }
+        for n in ast.walk(m.tree):
+            ident = (
+                n.id if isinstance(n, ast.Name)
+                else n.attr if isinstance(n, ast.Attribute)
+                else n.arg if isinstance(n, (ast.arg, ast.keyword))
+                else n.name if isinstance(
+                    n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+                )
+                else None
+            )
+            if ident in banned:
+                hits.append(f"{name}:{n.lineno} {ident}")
+            if (
+                name.startswith(f"{PKG}.plans.")
+                and isinstance(n, ast.Call)
+                and id(n) not in skip
+                and (
+                    isinstance(n.func, ast.Attribute)
+                    and isinstance(n.func.value, ast.Name)
+                    and n.func.value.id in mod_names
+                    or isinstance(n.func, ast.Name)
+                    and n.func.id in fn_names
+                )
+            ):
+                hits.append(f"{name}:{n.lineno} time call")
+    assert not hits, (
+        "stage timing outside plans.extensions._stage:\n  "
+        + "\n  ".join(sorted(hits))
+    )
+
+
 def test_slow_tests_names_exist():
     """Every ``conftest.SLOW_TESTS`` name (without its ``[param]``
     suffix) is a ``def test_…`` under tests/: a stale name would
