@@ -108,13 +108,13 @@ def explode_tokens(df: DataFrame, text_col: str, token_col: str = "token") -> Da
     return df.select(F.explode(tokens_array(text_col)).alias(token_col))
 
 
-def stopwords_df(spark, words=STOPWORDS) -> DataFrame:
+def stopwords_df(spark) -> DataFrame:
     """Stop-word side table. The reference re-reads the HDFS file in every
     mapper's ``setup`` (WordCount.java:25-38); here it is a tiny JVM-local
     table (``LocalTableScan``, no Python worker) shipped once via a
     broadcast join."""
     schema = T.StructType([T.StructField("word", T.StringType())])
-    return local_frame(spark, [(w,) for w in words], schema)
+    return local_frame(spark, [(w,) for w in STOPWORDS], schema)
 
 
 def load_stopwords_file(spark, path: str) -> DataFrame:

@@ -60,7 +60,7 @@ def convert(
     return df
 
 
-def main(argv: list[str] | None = None) -> None:
+def main() -> None:
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("in_path")
     ap.add_argument("out_path")
@@ -72,7 +72,7 @@ def main(argv: list[str] | None = None) -> None:
     ap.add_argument("--cluster-by", default=None)
     ap.add_argument("--mode", default="PERMISSIVE",
                     choices=["PERMISSIVE", "DROPMALFORMED", "FAILFAST"])
-    args = ap.parse_args(argv)
+    args = ap.parse_args()
 
     spark = get_spark("convert")
     spark.sparkContext.setLogLevel("ERROR")

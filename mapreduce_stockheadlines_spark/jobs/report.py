@@ -305,13 +305,12 @@ def corpus_drift_report(
     docs_a: DataFrame,
     docs_b: DataFrame,
     text_col: str = "text",
-    top_k: int = 5,
     div: DataFrame | None = None,
 ) -> DataFrame:
     """(metric, value) drift rows between two corpora (a new crawl vs
     the last, train vs eval, source A vs B before mixing):
     ``js_divergence`` (token-distribution Jensen-Shannon, [0, ln 2]),
-    ``vocab_jaccard`` (shared-term fraction), and the ``top_k`` terms
+    ``vocab_jaccard`` (shared-term fraction), and the 5 terms
     explaining the drift as ``js_top_<term>`` rows. Built on
     ``profile.token_divergence`` — two censuses, one vocab-sized
     full-outer join, tiny aggregates; summary semantics come from the
@@ -334,7 +333,7 @@ def corpus_drift_report(
     )
     top = (
         div.orderBy(F.desc("js_contrib"), F.asc("term"))
-        .limit(top_k)
+        .limit(5)
         .select(
             F.concat(F.lit("js_top_"), "term").alias("metric"),
             F.round("js_contrib", 4).alias("value"),

@@ -31,8 +31,8 @@ def stock_count(spark: SparkSession, input_path: str) -> DataFrame:
     return count_rank_format(stocks, "stock", fmt="%d: %s, %d")
 
 
-def main(argv: list[str] | None = None) -> None:
-    argv = argv if argv is not None else sys.argv[1:]
+def main() -> None:
+    argv = sys.argv[1:]
     if len(argv) != 2:
         raise SystemExit("usage: python -m ...jobs.stock_count <input> <output>")
     from ..session import get_spark

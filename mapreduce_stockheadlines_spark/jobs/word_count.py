@@ -32,7 +32,6 @@ def word_count(
     spark: SparkSession,
     input_path: str,
     stopwords_path: str | None = None,
-    limit: int = 100,
 ) -> DataFrame:
     headlines = headlines_from_naive(read_csv_naive(spark, input_path))
     tokens = explode_tokens(headlines, "headline")
@@ -42,11 +41,12 @@ def word_count(
         else stopwords_df(spark)
     )
     kept = remove_stopwords(tokens, stop)
-    return count_rank_format(kept, "token", fmt="%d: %s\t%d", limit=limit)
+    # top-100 (O14)
+    return count_rank_format(kept, "token", fmt="%d: %s\t%d", limit=100)
 
 
-def main(argv: list[str] | None = None) -> None:
-    argv = argv if argv is not None else sys.argv[1:]
+def main() -> None:
+    argv = sys.argv[1:]
     if len(argv) not in (2, 3):
         raise SystemExit(
             "usage: python -m ...jobs.word_count <input> <output> [stopwords]"

@@ -399,7 +399,9 @@ def neardup_clusters(
       shuffle on id per round (edges pre-oriented both ways once);
     - compress:  l(v) ← l(l(v)) — pointer jumping, which collapses label
       chains so long paths converge in far fewer than diameter rounds;
-    - stop when a round changes no label (an ``isEmpty`` on the diff).
+    - stop when a round changes no label: each row carries its label
+      from the round before, so the test is an ``isEmpty`` on the
+      checkpointed round, with no join.
 
     Each round ends in a ``session.checkpoint`` to truncate the lineage
     — iterative plans otherwise grow exponentially in the optimizer.
@@ -436,25 +438,20 @@ def neardup_clusters(
                 F.least(
                     F.col("lbl"), F.coalesce("nbr_lbl", F.col("lbl"))
                 ).alias("lbl"),
+                F.col("lbl").alias("prev"),
             )
         )
         # pointer jumping: follow one's label's label
         l2 = updated.select(
             F.col("id").alias("_lid"), F.col("lbl").alias("_llbl")
         )
-        compressed = checkpoint(
+        labels = checkpoint(
             updated.join(l2, updated["lbl"] == l2["_lid"], "left")
             .select(
-                "id", F.coalesce("_llbl", F.col("lbl")).alias("lbl")
+                "id", F.coalesce("_llbl", F.col("lbl")).alias("lbl"), "prev"
             )
         )
-        changed = compressed.alias("n").join(
-            labels.alias("o"),
-            (F.col("n.id") == F.col("o.id")) & (F.col("n.lbl") != F.col("o.lbl")),
-            "left_semi",
-        )
-        labels = compressed
-        if changed.isEmpty():
+        if labels.filter(F.col("lbl") != F.col("prev")).isEmpty():
             converged = True
             break
     if not converged:
@@ -471,7 +468,6 @@ def dedup_by_pairs(
     df: DataFrame,
     pairs: DataFrame,
     id_col: str,
-    max_iters: int = 20,
     keep_by: str | None = None,
     clusters: DataFrame | None = None,
 ) -> DataFrame:
@@ -497,7 +493,7 @@ def dedup_by_pairs(
     clustered ids — without this the MinHash→LSH→Jaccard subplan that
     produced ``pairs`` would execute once per reference)."""
     if clusters is None:
-        clusters = neardup_clusters(pairs, max_iters=max_iters)
+        clusters = neardup_clusters(pairs)
     if keep_by is None:
         losers = clusters.filter(F.col("id") != F.col("cluster_id")).select(
             F.col("id").alias(id_col)
@@ -526,9 +522,6 @@ def fuzzy_text_join(
     left_text: str = "text",
     right_text: str = "text",
     threshold: float = 0.5,
-    num_hashes: int = 8,
-    bands: int = 4,
-    shingle_n: int = 3,
 ) -> DataFrame:
     """Approximate TEXT join between TWO tables (record linkage: match
     re-published headlines across feeds, crawl snapshots across days,
@@ -543,12 +536,10 @@ def fuzzy_text_join(
     the only cross-table shuffle carries fixed-width digests; the exact
     verify is candidate-pair-scoped (the x02 contract). Recall < 1 by
     the banding S-curve like any LSH — identical texts always match
-    (identical signatures share every band); raise ``num_hashes``/
-    ``bands`` to push the S-curve toward lower thresholds. Precision is
-    exact: the emitted jaccard is true set Jaccard on the 4dp-rounded
-    contract shared with ``jaccard_pairs``. Rows whose text yields no
-    ``shingle_n``-gram (shorter than n words) never match — they have
-    no set representation.
+    (identical signatures share every band). Precision is exact: the
+    emitted jaccard is true set Jaccard on the 4dp-rounded contract
+    shared with ``jaccard_pairs``. Rows whose text yields no 3-word
+    shingle never match — they have no set representation.
 
     Boilerplate caveat (probed — scripts/skew_probe.py §8b): a text
     shared verbatim by m left and n right rows genuinely matches m·n
@@ -557,6 +548,9 @@ def fuzzy_text_join(
     (``content_hash_dedup``) when m·n links are not the intent
     (measured: 28k → 160 pairs on a 33%-boilerplate probe).
     """
+    # 8 hashes in 4 bands over word 3-shingles: the curate CLI's
+    # MinHash/LSH setting
+    num_hashes, bands, shingle_n = 8, 4, 3
     sig_l = minhash_signature(
         left, left_id, left_text, num_hashes, shingle_n
     )
@@ -728,14 +722,12 @@ def line_dedup(
     id_col: str,
     text_col: str,
     sep: str = "\n",
-    max_doc_occurrences: int = 1,
     min_line_chars: int = 1,
 ) -> DataFrame:
     """Corpus-level repeated-line removal (the MassiveText/Gopher
-    boilerplate filter): a line appearing in more than
-    ``max_doc_occurrences`` DISTINCT documents is boilerplate (headers,
-    footers, cookie banners, licence blurbs) and is dropped from every
-    document; lines shorter than ``min_line_chars`` are exempt (blank
+    boilerplate filter): a line appearing in more than one DISTINCT
+    document is boilerplate (headers, footers, cookie banners, licence
+    blurbs) and is dropped from every document; lines shorter than ``min_line_chars`` are exempt (blank
     separators and one-character lines are structure, not boilerplate).
 
     Output: (id, text, n_lines_removed) with surviving lines rejoined in
@@ -773,7 +765,7 @@ def line_dedup(
         lines.filter(F.col("_dig").isNotNull())
         .groupBy("_dig")
         .agg(F.count_distinct(id_col).alias("_n_docs"))
-        .filter(F.col("_n_docs") > max_doc_occurrences)
+        .filter(F.col("_n_docs") > 1)
         .select("_dig", F.lit(True).alias("_boiler"))
     )
     marked = lines.join(census, "_dig", "left")
@@ -805,13 +797,12 @@ def duplicated_window_fraction(
     id_col: str,
     text_col: str,
     window_tokens: int = 8,
-    min_doc_occurrences: int = 2,
 ) -> DataFrame:
     """Cross-document duplicated-window fraction — the substring-dedup
     signal (Lee et al. 2022, 'Deduplicating Training Data Makes
     Language Models Better') at token-window granularity: for each doc,
     the fraction of its DISTINCT ``window_tokens``-gram windows that
-    occur in at least ``min_doc_occurrences`` distinct documents.
+    occur in at least two distinct documents.
     Output: (id, n_windows, n_dup_windows, dup_fraction); docs shorter
     than one window report (0, 0, 0.0). Filtering on ``dup_fraction``
     drops mostly-duplicated prose that exact/line dedup misses:
@@ -844,7 +835,7 @@ def duplicated_window_fraction(
         # (id, digest), and the map-side partial count gives the same
         # hot-digest absorption without the distinct-expansion pass
         .agg(F.count(F.lit(1)).alias("_nd"))
-        .filter(F.col("_nd") >= min_doc_occurrences)
+        .filter(F.col("_nd") >= 2)
         .select("_dig", F.lit(1).alias("_dup"))
     )
     per_doc = (
@@ -998,9 +989,6 @@ def cdc_chunk_dedup(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    k: int = 5,
-    divisor: int = 64,
-    rem: int = 0,
     min_size: int = 16,
 ) -> DataFrame:
     """Corpus-wide chunk-level dedup at content-defined boundaries —
@@ -1030,7 +1018,7 @@ def cdc_chunk_dedup(
     from .packing import cdc_chunks
     from .textstats import _winnow_norm
 
-    chunks = cdc_chunks(df, id_col, text_col, k, divisor, rem, min_size)
+    chunks = cdc_chunks(df, id_col, text_col, min_size)
     digested = chunks.select(
         "id",
         "chunk_id",

@@ -67,10 +67,9 @@ def quantization_error(
     qvec_col: str,
     scale_col: str,
     out_col: str = "rmse",
-    dp: int = 4,
 ) -> DataFrame:
     """Per-vector reconstruction RMSE between the original and the
-    dequantized codes, rounded to ``dp`` (the float contract: the fold
+    dequantized codes, rounded to 4dp (the float contract: the fold
     runs in array order in any engine, and rounding absorbs sub-ulp
     summation differences)."""
     sc = F.col(scale_col)
@@ -82,14 +81,13 @@ def quantization_error(
     mse = F.aggregate(
         sq, F.lit(0.0), lambda acc, v: acc + v
     ) / F.greatest(F.size(sq), F.lit(1))
-    return df.withColumn(out_col, F.round(F.sqrt(mse), dp))
+    return df.withColumn(out_col, F.round(F.sqrt(mse), 4))
 
 
 def pca_fit(
     df: DataFrame,
     vec_col: str,
     k: int,
-    center: bool = True,
     moment_dp: int | None = 9,
     return_variance: bool = False,
     return_moments: bool = False,
@@ -195,11 +193,7 @@ def pca_fit(
         raise ValueError("pca_fit: inconsistent moment shapes across rows")
     s, g = flat[:d], flat[d:].reshape(d, d)
     mean = s / n
-    if center:
-        cov = g / n - np.outer(mean, mean)
-    else:
-        cov = g / n
-        mean = np.zeros(d)
+    cov = g / n - np.outer(mean, mean)
     if moment_dp is not None:
         mean = np.round(mean, moment_dp)
         cov = np.round(cov, moment_dp)
@@ -275,9 +269,8 @@ def fixed_query_cosine(
     query: list[float],
     d: int | None = None,
     out_col: str = "sim",
-    dp: int = 4,
 ) -> DataFrame:
-    """``dp``-rounded cosine of each vector (or its first-``d`` MRL
+    """4dp-rounded cosine of each vector (or its first-``d`` MRL
     prefix) against ONE fixed query vector — the zero-Python path for
     single-query scoring/eval columns (the x27 registry shape): dot and
     norm are ``aggregate``/``zip_with`` HOFs inside codegen, the query
@@ -329,6 +322,6 @@ def fixed_query_cosine(
         else F.size(F.col(vec_col)) == len(qd)
     )
     sim = F.when(
-        sized & (vnorm > 0.0), F.round(dot / (vnorm * F.lit(qnorm)), dp)
+        sized & (vnorm > 0.0), F.round(dot / (vnorm * F.lit(qnorm)), 4)
     )
     return df.withColumn(out_col, sim)

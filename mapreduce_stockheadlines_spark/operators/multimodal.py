@@ -2136,9 +2136,7 @@ def image_phash(df: DataFrame, strict: bool = False) -> DataFrame:
     )
 
 
-def image_neardup_pairs(
-    df: DataFrame, max_hamming: int = 6, strict: bool = False
-) -> DataFrame:
+def image_neardup_pairs(df: DataFrame, max_hamming: int = 6) -> DataFrame:
     """Near-duplicate image pairs: pHash fingerprints → the SAME
     pigeonhole band equi-join + popcount verify the text SimHash path
     uses (``dedup.simhash_neardup_pairs``) — (id_a, id_b, hamming) with
@@ -2146,7 +2144,7 @@ def image_neardup_pairs(
     (narrow), one band-key self-join; image bytes never shuffle."""
     from .dedup import simhash_neardup_pairs
 
-    fp = image_phash(df, strict=strict).select(
+    fp = image_phash(df).select(
         F.col("media_id"), F.col("phash").alias("simhash")
     )
     return simhash_neardup_pairs(fp, "media_id", max_hamming=max_hamming)

@@ -195,16 +195,15 @@ def pack_sequences(
     token_count_col: str,
     budget: int,
     num_partitions: int = 64,
-    max_open_bins: int = 1024,
 ) -> DataFrame:
     """(id, n_tokens, pack_id, truncate): each id assigned to exactly one
     pack; sum of n_tokens within a pack ≤ budget except single-doc
     ``truncate`` packs.
 
-    ``max_open_bins`` bounds the first-fit scan: beyond it the OLDEST open
-    bin is closed (it is also the most-filled under FFD). This caps the
-    per-row cost at O(max_open_bins) — plain first-fit is O(rows²) per
-    partition when items cluster just above budget/2 — at a marginal
+    At most 1024 bins stay open in the first-fit scan: beyond that the
+    OLDEST open bin is closed (it is also the most-filled under FFD).
+    This caps the per-row cost at O(1024) — plain first-fit is O(rows²)
+    per partition when items cluster just above budget/2 — at a marginal
     packing-efficiency cost."""
     if budget <= 0:
         raise ValueError("pack_sequences: budget must be positive")
@@ -235,7 +234,7 @@ def pack_sequences(
             )
         namespace = min_id << PACK_ID_BITS
         assign, truncate = _assign_bins(
-            [int(n) for n in pdf["n_tokens"]], budget, max_open_bins
+            [int(n) for n in pdf["n_tokens"]], budget, 1024
         )
         out = pd.DataFrame(
             {
@@ -342,7 +341,6 @@ def chunk_by_sentences(
     id_col: str,
     text_col: str,
     chunk_tokens: int = 512,
-    boundary_pattern: str = SENTENCE_BOUNDARY,
 ) -> DataFrame:
     """Split each document into chunks at SENTENCE boundaries — the
     finer-grained sibling of ``chunk_by_paragraphs`` (same
@@ -353,7 +351,7 @@ def chunk_by_sentences(
     re-joined by one space in original order."""
     out = chunk_by_paragraphs(
         df, id_col, text_col, chunk_tokens,
-        sep_pattern=boundary_pattern, join_sep=" ",
+        sep_pattern=SENTENCE_BOUNDARY, join_sep=" ",
     )
     return (
         out.withColumnRenamed("n_paragraphs", "n_sentences")
@@ -364,7 +362,6 @@ def chunk_by_sentences(
 def sentence_chunk_fold_col(
     src,
     chunk_tokens: int = 512,
-    boundary_pattern: str = SENTENCE_BOUNDARY,
 ) -> "F.Column":
     """The ONE-walk fold struct behind the sentence-chunk registry
     columns: ``struct(n_sents, agg)`` where ``agg`` is the aggregate
@@ -399,7 +396,7 @@ def sentence_chunk_fold_col(
             F.filter(F.split(F.trim(s), r"\s+"), lambda t: F.length(t) > 0)
         )
 
-    sents = F.filter(F.split(col, boundary_pattern), lambda s: ntok(s) > 0)
+    sents = F.filter(F.split(col, SENTENCE_BOUNDARY), lambda s: ntok(s) > 0)
     zipped = F.transform(
         sents,
         lambda s: F.struct(s.alias("s"), ntok(s).cast("long").alias("nt")),
@@ -558,9 +555,6 @@ def cdc_chunks(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    k: int = 5,
-    divisor: int = 64,
-    rem: int = 0,
     min_size: int = 16,
 ) -> DataFrame:
     """Content-defined chunk ROWS: (id, chunk_id, n_chunk_chars,
@@ -571,7 +565,7 @@ def cdc_chunks(
     WHITESPACE-NORMALIZED LOWERCASED text (the winnow normalization —
     content-defined boundaries exist for dedup keys, and reflow/case
     noise would defeat exactly the stability CDC buys). Gram-less docs
-    (shorter than k normalized chars, empty, NULL) produce no chunks —
+    (shorter than one 5-char gram, empty, NULL) produce no chunks —
     the chunk_documents 'no chunks' contract. Cut consistency with the
     registry summary is structural: cut_i = 1 + sum(len(chunks[0..i))),
     pinned in pytest.
@@ -597,8 +591,8 @@ def cdc_chunks(
         # staged-chars fast path (round 12): char codes bound once, so
         # the gram lambda does array lookups, not per-element regex
         .withColumn("_wc", winnow_char_col(F.col("_norm")))
-        .withColumn("_wg", winnow_gram_from_chars(F.col("_wc"), k))
-        .withColumn("_cuts", cdc_cuts_col("_wg", divisor, rem, min_size))
+        .withColumn("_wg", winnow_gram_from_chars(F.col("_wc")))
+        .withColumn("_cuts", cdc_cuts_col("_wg", min_size=min_size))
     )
     n = F.length("_norm")
     starts = F.concat(F.array(F.lit(1).cast("long")), F.col("_cuts"))

@@ -323,7 +323,6 @@ def pq_adc_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 10,
-    max_query_rows: int = 65536,
 ) -> DataFrame:
     """Approximate top-k nearest neighbors per query by PQ asymmetric
     distance: per Arrow batch, corpus vectors are encoded against the
@@ -342,7 +341,7 @@ def pq_adc_topk(
     cb = np.asarray(codebooks, dtype="float64")
     mm, kk, ds = cb.shape
     q_pdf = _collect_query_side(
-        queries, id_col, vec_col, max_query_rows, "pq_adc_topk"
+        queries, id_col, vec_col, 65536, "pq_adc_topk"
     )
     q_ids = q_pdf["query_id"].to_numpy()
     q_mat = _raw_matrix(q_pdf["qv"]).reshape(len(q_pdf), mm, ds)
@@ -539,7 +538,6 @@ def ivfpq_topk(
     vec_col: str = "embedding",
     k: int = 10,
     n_probe: int = 4,
-    max_query_rows: int = 65536,
 ) -> DataFrame:
     """IVFPQ serving: probe the ``n_probe`` coarse cells nearest each
     query, ADC-score ONLY rows in probed cells from their PQ codes —
@@ -593,7 +591,7 @@ def ivfpq_topk(
     ).mapInPandas(enc, "cell int, neighbor_id long, codes array<int>")
 
     q_pdf = _collect_query_side(
-        queries, id_col, vec_col, max_query_rows, "ivfpq_topk"
+        queries, id_col, vec_col, 65536, "ivfpq_topk"
     )
     q_ids = q_pdf["query_id"].to_numpy()
     q_raw = np.array(list(q_pdf["qv"]), dtype=np.float64)
@@ -733,12 +731,11 @@ def pq_moment_partials(
 def pq_refit(
     moments: DataFrame,
     prev_codebooks: np.ndarray,
-    quantize_dp: int = 7,
     fp_dp: int = 6,
 ) -> np.ndarray:
     """One Lloyd update of the PQ codebooks from a folded moment
     artifact: per (sub, cell, dim),
-    ``round((s_fp / 10^fp_dp) / n, quantize_dp)`` — the ``pq_train``
+    ``round((s_fp / 10^fp_dp) / n, 7)`` — the ``pq_train``
     raw-mean contract (NO normalization: PQ centroids live in residual/
     coordinate space, unlike the spherical coarse quantizer) computed
     from EXACT integer sums, so the rolled codebooks are a pure
@@ -787,7 +784,7 @@ def pq_refit(
     n_by[subs, cells] = pdf["n"].to_numpy(dtype=np.int64)
     for j, c in zip(*np.nonzero(n_by > 0)):
         new[j, c] = np.round(
-            (s_fp[j, c] / 10**fp_dp) / n_by[j, c], quantize_dp
+            (s_fp[j, c] / 10**fp_dp) / n_by[j, c], 7
         )
     return new
 
@@ -910,8 +907,6 @@ def opq_train(
     ksub: int = 4,
     n_iters: int = 2,
     pq_iters: int = 1,
-    quantize_dp: int = 7,
-    moment_dp: int | None = 9,
     init: str = "pca",
 ) -> tuple[np.ndarray, np.ndarray]:
     """OPQ, non-parametric variant (Ge et al. CVPR 2013; the Faiss
@@ -957,7 +952,7 @@ def opq_train(
     quantized moments — the pca_fit eigensolve argument: LAPACK
     factorization order is not a cross-engine contract, so what gets
     pinned is the MOMENT each factorization consumes, which is
-    partitioning-invariant under the moment_dp quantum."""
+    partitioning-invariant under opq_cross_moment's 1e-9 quantum."""
     dim_row = corpus.select(as_double(vec_col).alias("v")).first()
     if dim_row is None:
         raise ValueError("opq_train: empty corpus")
@@ -981,20 +976,14 @@ def opq_train(
             f"opq_train: init must be 'pca' or 'identity', got {init!r}"
         )
     cb = pq_train(
-        train_src, id_col, train_col, m=m, ksub=ksub, n_iters=pq_iters,
-        quantize_dp=quantize_dp,
+        train_src, id_col, train_col, m=m, ksub=ksub, n_iters=pq_iters
     )
     for _ in range(n_iters):
-        a = opq_cross_moment(
-            corpus, rot, cb, id_col, vec_col, moment_dp=moment_dp
-        )
+        a = opq_cross_moment(corpus, rot, cb, id_col, vec_col)
         u, _s, vt = np.linalg.svd(a)
         rot = vt.T @ u.T  # R = V·Uᵀ
         rotated = rotate_vectors(corpus, rot, id_col, vec_col)
-        cb = pq_train(
-            rotated, id_col, "vr", m=m, ksub=ksub, n_iters=pq_iters,
-            quantize_dp=quantize_dp,
-        )
+        cb = pq_train(rotated, id_col, "vr", m=m, ksub=ksub, n_iters=pq_iters)
     return rot, cb
 
 

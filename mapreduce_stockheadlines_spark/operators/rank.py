@@ -93,7 +93,6 @@ def bucketed_row_number(
     bucket_cols: list[str],
     order_by: list,
     id_col: str,
-    max_buckets: int = 1 << 20,
 ) -> DataFrame:
     """1-based ``row_number`` over the global order ``(bucket_cols ASC,
     order_by)`` WITHOUT a SinglePartition exchange — the engine under
@@ -103,8 +102,8 @@ def bucketed_row_number(
     global order — every row of a lesser bucket sorts before every row
     of a greater bucket, and ``order_by`` resolves order within a
     bucket. Bucket columns must be simple orderable types (int/str):
-    the per-bucket counts are collected (≤ ``max_buckets`` rows,
-    enforced loudly) and cumulated driver-side in Spark's ASC order —
+    the per-bucket counts are collected (≤ 2^20 rows, enforced
+    loudly) and cumulated driver-side in Spark's ASC order —
     NULLs first, then Python value order, which is Spark's for those
     types (strings compare by code point, as UTF-8 bytes do). The offset
     table is JVM-local (``LocalTableScan``, no Python worker) and joins
@@ -115,11 +114,11 @@ def bucketed_row_number(
     counts = (
         df.groupBy(*bucket_cols).agg(F.count(F.lit(1)).alias("n")).collect()
     )
-    if len(counts) > max_buckets:
+    if len(counts) > 1 << 20:
         raise ValueError(
             f"bucketed_row_number: {len(counts)} distinct buckets exceeds "
-            f"max_buckets={max_buckets} — the offset table is driver-held; "
-            "coarsen the bucket expression"
+            "2^20 — the offset table is driver-held; coarsen the bucket "
+            "expression"
         )
     keyed = sorted(
         ((tuple(r[c] for c in bucket_cols), r["n"]) for r in counts),

@@ -313,11 +313,16 @@ def doc_bigrams(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
+# add-k smoothing of the bigram LM: training and backoff scoring must
+# use the same k
+LM_ADD_K = 0.5
+
+
 def train_bigram_lm(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    add_k: float = 0.5,
+    add_k: float = LM_ADD_K,
     grams: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame, int]:
     """Add-k-smoothed bigram LM over the corpus — the KenLM-filtering
@@ -381,11 +386,11 @@ def lm_perplexity(
     vocab_size: int,
     id_col: str,
     text_col: str,
-    add_k: float = 0.5,
     backoff: bool = True,
     grams: DataFrame | None = None,
 ) -> DataFrame:
-    """Per-document perplexity under a bigram LM:
+    """Per-document perplexity under a bigram LM trained with the
+    default ``LM_ADD_K``:
     ``ppl = round(exp(-mean(logp)), 4)`` over the doc's BOS-padded
     bigrams. The standard CCNet quality signal — low perplexity ≈
     fluent text, extreme values flag junk.
@@ -421,10 +426,10 @@ def lm_perplexity(
                     "logp",
                     F.round(
                         F.log(
-                            F.lit(add_k)
+                            F.lit(LM_ADD_K)
                             / (
                                 F.coalesce("c1", F.lit(0))
-                                + F.lit(add_k) * F.lit(int(vocab_size))
+                                + F.lit(LM_ADD_K) * F.lit(int(vocab_size))
                             )
                         ),
                         4,
@@ -472,7 +477,6 @@ def moore_lewis_scores(
     id_col: str,
     text_col: str,
     in_domain,
-    add_k: float = 0.5,
     grams: DataFrame | None = None,
     general: tuple[DataFrame, DataFrame, int] | None = None,
     general_scored: DataFrame | None = None,
@@ -519,13 +523,13 @@ def moore_lewis_scores(
     if grams is None:
         grams = doc_bigrams(df, id_col, text_col)
     if general is None:
-        general = train_bigram_lm(df, id_col, text_col, add_k, grams=grams)
+        general = train_bigram_lm(df, id_col, text_col, grams=grams)
     glm, gctx, gv = general
     in_grams = grams.join(
         df.filter(in_domain).select(F.col(id_col)), id_col
     )
     ilm, ictx, iv = train_bigram_lm(
-        df.filter(in_domain), id_col, text_col, add_k, grams=in_grams
+        df.filter(in_domain), id_col, text_col, grams=in_grams
     )
     if iv == 0:
         raise ValueError(
@@ -542,16 +546,14 @@ def moore_lewis_scores(
         )
     else:
         gen = lm_perplexity(
-            df, glm, gctx, gv, id_col, text_col, add_k,
-            backoff=False, grams=grams,
+            df, glm, gctx, gv, id_col, text_col, backoff=False, grams=grams,
         ).select(
             id_col,
             "n_bigrams",
             F.col("avg_logp").alias("ml_gen_avg_logp"),
         )
     ind = lm_perplexity(
-        df, ilm, ictx, iv, id_col, text_col, add_k,
-        backoff=True, grams=grams,
+        df, ilm, ictx, iv, id_col, text_col, backoff=True, grams=grams,
     ).select(id_col, F.col("avg_logp").alias("ml_in_avg_logp"))
     return gen.join(ind, id_col).select(
         id_col,
@@ -567,12 +569,17 @@ def moore_lewis_scores(
     )
 
 
+# Kneser-Ney absolute discount D and the add-k of its continuation
+# distribution: training and backoff scoring must use the same pair
+KN_DISCOUNT, KN_CONT_K = 0.75, 0.5
+
+
 def train_bigram_lm_kn(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    discount: float = 0.75,
-    cont_k: float = 0.5,
+    discount: float = KN_DISCOUNT,
+    cont_k: float = KN_CONT_K,
     grams: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame, int, int]:
     """Interpolated Kneser-Ney bigram LM (Kneser & Ney 1995; the
@@ -667,14 +674,13 @@ def lm_perplexity_kn(
     vocab_size: int,
     id_col: str,
     text_col: str,
-    discount: float = 0.75,
-    cont_k: float = 0.5,
     backoff: bool = True,
     grams: DataFrame | None = None,
 ) -> DataFrame:
     """Per-document perplexity under a Kneser-Ney bigram LM — the same
     fixed-point doc mean as lm_perplexity, with KN's three-tier unseen
-    handling instead of the add-k floor:
+    handling instead of the add-k floor, at the default ``KN_DISCOUNT``
+    and ``KN_CONT_K`` the model was trained with:
 
     - unseen bigram, seen context:  P = (D·N1+(w1·)/c1) · Pcont(w2)
       (the interpolation term alone — exactly the mass training set
@@ -692,11 +698,11 @@ def lm_perplexity_kn(
     scored = grams.join(lm.select("bigram", "logp"), "bigram", "left")
     if backoff:
         pc = _kn_pcont(
-            F.coalesce("n1b", F.lit(0)), n_bigram_types, vocab_size, cont_k
+            F.coalesce("n1b", F.lit(0)), n_bigram_types, vocab_size, KN_CONT_K
         )
         lam = F.when(
             F.col("c1").isNotNull(),
-            F.lit(discount) * F.col("n1f") / F.col("c1"),
+            F.lit(KN_DISCOUNT) * F.col("n1f") / F.col("c1"),
         ).otherwise(F.lit(1.0))
         scored = (
             scored.withColumn("w1", F.split("bigram", " ")[0])
@@ -718,15 +724,14 @@ def apply_vocabulary(
     id_col: str,
     text_col: str,
     vocab: DataFrame,
-    unk_id: int = 0,
 ) -> DataFrame:
     """Tokenize documents INTO ID SEQUENCES under a ``vocabulary()``
     table — the encode step between vocabulary building and sequence
     packing that turns text into model-ready token ids.
 
     Output: (id, ``token_ids`` array<int> in original token order,
-    ``n_tokens``, ``n_unk``). OOV tokens map to ``unk_id`` (vocabulary()
-    ids start at 1, so the default 0 is reserved and unambiguous).
+    ``n_tokens``, ``n_unk``). OOV tokens map to id 0 (vocabulary() ids
+    start at 1, so 0 is reserved and unambiguous).
 
     Shape: posexplode keeps each token's position → broadcast-class join
     against the vocab (one build row per term — AQE broadcasts real
@@ -744,7 +749,7 @@ def apply_vocabulary(
         "term",
         "left",
     )
-    tid = F.coalesce("_tid", F.lit(unk_id))
+    tid = F.coalesce("_tid", F.lit(0))
     return (
         joined.groupBy(id_col)
         .agg(

@@ -37,12 +37,12 @@ def hash_fraction(key: Column | str, salt: str = "") -> Column:
 
 
 def train_test_split(
-    df: DataFrame, key: str, test_fraction: float = 0.1, salt: str = "split"
+    df: DataFrame, key: str, test_fraction: float = 0.1
 ) -> tuple[DataFrame, DataFrame]:
     """(train, test) with hash-disjoint membership: every row lands in
     exactly one side, and a row's side never changes as data is added —
     no leakage between refreshes of a growing corpus."""
-    h = hash_fraction(key, salt)
+    h = hash_fraction(key, "split")
     return (
         df.filter(h >= F.lit(test_fraction)),
         df.filter(h < F.lit(test_fraction)),
@@ -68,7 +68,6 @@ def quantile_threshold_filter(
     df: DataFrame,
     score_col: str,
     keep_top: float,
-    relative_error: float = 0.001,
 ) -> DataFrame:
     """Keep the top ``keep_top`` fraction of rows by ``score_col`` (the
     'drop the worst 20% by quality score' pipeline stage).
@@ -76,12 +75,13 @@ def quantile_threshold_filter(
     The threshold is ONE approx_percentile aggregate (t-digest sketch:
     fixed memory, one pass, mergeable across partitions) cross-joined back
     as a broadcast scalar — the corpus itself is never shuffled or
-    sorted; total cost is a scan plus a narrow filter, at any scale."""
+    sorted; total cost is a scan plus a narrow filter, at any scale.
+    Accuracy 1000 bounds the sketch's rank error at 0.1%."""
     if not 0.0 < keep_top <= 1.0:
         raise ValueError("quantile_threshold_filter: need 0 < keep_top <= 1")
     thr = df.agg(
         F.percentile_approx(
-            score_col, F.lit(1.0 - keep_top), F.lit(int(1.0 / relative_error))
+            score_col, F.lit(1.0 - keep_top), F.lit(1000)
         ).alias("__thr")
     )
     return (
@@ -92,12 +92,12 @@ def quantile_threshold_filter(
 
 
 def stratified_sample(
-    df: DataFrame, strata_col: str, key: str, fraction: float, salt: str = "strat"
+    df: DataFrame, strata_col: str, key: str, fraction: float
 ) -> DataFrame:
     """EXACT per-stratum sampling: every stratum keeps exactly
     ``ceil(fraction * n_stratum)`` rows (the plain hash filter's count
     wanders binomially — fatal for small strata that must stay
-    represented). Rows are ranked inside each stratum by md5(salt:key)
+    represented). Rows are ranked inside each stratum by md5("strat:" + key)
     (key tiebreak) and the lowest ranks survive, so the choice is still
     deterministic, partition-invariant, and portable across engines.
 
@@ -115,7 +115,7 @@ def stratified_sample(
     if not 0.0 < fraction <= 1.0:
         raise ValueError("stratified_sample: need 0 < fraction <= 1")
     key_c = F.col(key).cast("string")
-    h = F.md5(F.concat(F.lit(f"{salt}:"), key_c).cast("binary"))
+    h = F.md5(F.concat(F.lit("strat:"), key_c).cast("binary"))
     w = Window.partitionBy(strata_col).orderBy(h, key_c)
     wn = Window.partitionBy(strata_col)
     quota = F.ceil(F.count(F.lit(1)).over(wn) * F.lit(float(fraction)))
@@ -132,7 +132,6 @@ def token_budget_filter(
     score_col: str,
     token_col: str,
     budget: int,
-    n_bins: int = 1000,
 ) -> DataFrame:
     """Keep the highest-``score_col`` rows until their ``token_col``
     sum fills ``budget`` tokens — the 'fill a 2T-token training budget
@@ -142,24 +141,22 @@ def token_budget_filter(
 
     Mechanism (no global sort, corpus scanned once for the histogram
     and once for the filter): equi-width histogram of the score range
-    with SUM(tokens) per bin (one aggregation, ≤ ``n_bins`` rows),
+    with SUM(tokens) per bin (one aggregation, ≤ 1000 rows),
     driver-side suffix-sum picks the lowest bin whose
     best-scores-down-to-here token mass still fits the budget, and the
     bin's lower edge broadcasts back as the threshold. Granularity: the
     kept mass undershoots the budget by at most one bin's tokens
     (deterministic; when even the single BEST bin overflows the budget
-    the result is EMPTY rather than over budget — raise ``n_bins`` for
-    finer granularity); rows with NULL score are dropped, NULL token
-    counts count 0. Returns rows with ``score >= threshold``;
-    degenerate all-equal-scores corpora keep everything that fits bin 0
-    — i.e. all rows if any fit was possible at all. Cost: two bounded
-    driver collects (min/max + the ≤n_bins histogram — equi-width needs
-    the range first) and one filter scan; eager, unlike the lazy
-    fraction-based sibling above."""
+    the result is EMPTY rather than over budget); rows with NULL score
+    are dropped, NULL token counts count 0. Returns rows with
+    ``score >= threshold``; degenerate all-equal-scores corpora keep
+    everything that fits bin 0 — i.e. all rows if any fit was possible
+    at all. Cost: two bounded driver collects (min/max + the ≤1000-bin
+    histogram — equi-width needs the range first) and one filter scan;
+    eager, unlike the lazy fraction-based sibling above."""
     if budget <= 0:
         raise ValueError("token_budget_filter: budget must be > 0")
-    if n_bins < 1:
-        raise ValueError("token_budget_filter: n_bins must be >= 1")
+    n_bins = 1000  # histogram resolution: the granularity of the cut
     raw = F.col(score_col).cast("double")
     # NaN scores are unrankable: treated exactly like NULL (dropped).
     # Left in, Spark's NaN-greatest ordering would poison max() (span
@@ -209,14 +206,13 @@ def token_budget_filter(
 
 def epoch_upsample(
     df: DataFrame, source_col: str, key: str,
-    weights: dict[str, float], salt: str = "mix",
-    default_weight: float = 0.0,
+    weights: dict[str, float], default_weight: float = 0.0,
 ) -> DataFrame:
     """The UPSAMPLING half of mixture construction ('Wikipedia at 3.3
     epochs'): each row of source ``s`` appears ``floor(w_s)`` times plus
     one more iff its key hash falls under ``frac(w_s)`` — so the
     expected multiplicity is exactly ``w_s`` and whether a PARTICULAR
-    row gets the extra epoch is a pure function of (salt, key), never of
+    row gets the extra epoch is a pure function of the key, never of
     partitioning or corpus growth (the determinism contract shared by
     every sampler here). Weights < 1 degenerate to a per-source
     downsample (0 or 1 copies); unlisted sources get
@@ -240,7 +236,7 @@ def epoch_upsample(
             raise ValueError(f"negative weight for source {label}: {w}")
         whole, frac = int(w), round(w - int(w), 9)
         return F.lit(whole) + F.when(
-            hash_fraction(key, salt) < F.lit(frac), F.lit(1)
+            hash_fraction(key, "mix") < F.lit(frac), F.lit(1)
         ).otherwise(F.lit(0))
 
     default = _copies_expr(default_weight, "<default>")
@@ -346,8 +342,6 @@ def temperature_mix(
     source_col: str,
     key: str,
     alpha: float = 0.7,
-    salt: str = "tmix",
-    max_rate: float = 1.0,
 ) -> DataFrame:
     """Temperature-scaled source rebalancing — the multilingual /
     multi-source sampling rule (mBERT/XLM-R's exponent trick, also the
@@ -356,12 +350,12 @@ def temperature_mix(
     mixture follows ``p_s ∝ n_s^alpha``. ``alpha=1`` keeps natural
     proportions (every row, rate 1), ``alpha=0`` equalizes sources,
     in-between damps the head without starving the tail. Rates are
-    normalized so the largest is ``max_rate`` (default 1.0: the biggest
-    boost factor is 'keep everything' — this is a DOWN-sampling mix;
-    compose with ``epoch_upsample`` when small sources need >1 epoch).
+    normalized so the largest is 1.0 (the biggest boost factor is 'keep
+    everything' — this is a DOWN-sampling mix; compose with
+    ``epoch_upsample`` when small sources need >1 epoch).
 
     Determinism contract shared by every sampler here: membership is a
-    pure function of (salt, key) via the md5 ``hash_fraction``
+    pure function of the key via the md5 ``hash_fraction``
     primitive, so the same corpus mixes identically on any cluster,
     any partitioning, any engine with md5 (DuckDB-pinned row-for-row
     in pytest). One honest DIFFERENCE from the fixed-fraction siblings:
@@ -376,8 +370,6 @@ def temperature_mix(
     corpus, no join."""
     if alpha < 0:
         raise ValueError("temperature_mix: alpha must be >= 0")
-    if not 0.0 < max_rate <= 1.0:
-        raise ValueError("temperature_mix: max_rate must be in (0, 1]")
     # NULL source is a real group, not a drop: alpha=1 must be the
     # IDENTITY (silently losing unlabeled rows in a documented no-op
     # configuration is data loss), so NULL participates in the census
@@ -391,13 +383,13 @@ def temperature_mix(
     }
     if not counts:
         return df.filter(F.lit(False))
-    # keep-rate ∝ n^(alpha-1), scaled so max(rate) == max_rate; the
+    # keep-rate ∝ n^(alpha-1), scaled so max(rate) == 1; the
     # arithmetic is plain double powers — engine-portable because the
     # RATES are driver-computed literals (the oracle reuses the same
     # literals, so only the md5 membership needs cross-engine parity)
     raw = {s: float(n) ** (alpha - 1.0) for s, n in counts.items()}
     top = max(raw.values())
-    rates = {s: max_rate * v / top for s, v in raw.items()}
+    rates = {s: v / top for s, v in raw.items()}
     rate = None
     for s in sorted(rates, key=lambda s: (s is None, s or "")):
         cond = (
@@ -408,7 +400,7 @@ def temperature_mix(
         lit = F.lit(rates[s])
         rate = F.when(cond, lit) if rate is None else rate.when(cond, lit)
     rate = rate.otherwise(F.lit(0.0))
-    return df.filter(hash_fraction(key, salt) < rate)
+    return df.filter(hash_fraction(key, "tmix") < rate)
 
 
 # --- DSIR: Data Selection via Importance Resampling (Xie et al. 2023) --------
@@ -427,6 +419,9 @@ def temperature_mix(
 # divisions + one final rounding produce the score.
 
 _DSIR_FP = 10**6  # fixed-point quantum for per-bucket log ratios
+# feature-hash salt: the fitters, the scorers and the saved artifact's
+# meta row must bucket features alike
+DSIR_SALT = "dsir"
 
 
 def _dsir_bucket(feat: Column, n_buckets: int, salt: str) -> Column:
@@ -469,7 +464,7 @@ def dsir_features(
     id_col: str,
     text_col: str,
     n_buckets: int = 65536,
-    salt: str = "dsir",
+    salt: str = DSIR_SALT,
 ) -> DataFrame:
     """(id, bucket) — one row per unigram/bigram OCCURRENCE, hashed into
     ``n_buckets`` (the hashing trick: fixed model size regardless of
@@ -486,12 +481,10 @@ def dsir_log_ratios(
     id_col: str,
     text_col: str,
     n_buckets: int = 65536,
-    alpha: float = 1.0,
-    salt: str = "dsir",
 ) -> DataFrame:
     """Per-bucket fixed-point log importance ratio table:
     ``ratio_fp = round(1e6 * (ln p_target(b) - ln p_raw(b)))`` with
-    add-``alpha`` smoothing, for a target corpus that is a separate
+    add-one smoothing, for a target corpus that is a separate
     table (e.g. a curated Wikipedia dump vs a crawl): TWO bucket
     censuses, one agg each — the corpora are never joined row-to-row.
     The result is bounded by ``n_buckets`` rows, so downstream scoring
@@ -512,12 +505,12 @@ def dsir_log_ratios(
     # whole function costs one corpus pass per input corpus however
     # many times the ratio table is read.
     tgtc = checkpoint(
-        dsir_features(target_df, id_col, text_col, n_buckets, salt)
+        dsir_features(target_df, id_col, text_col, n_buckets)
         .groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("_tc"))
     )
     rawc = checkpoint(
-        dsir_features(raw_df, id_col, text_col, n_buckets, salt)
+        dsir_features(raw_df, id_col, text_col, n_buckets)
         .groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("_rc"))
         .join(tgtc, "bucket", "left")
@@ -527,17 +520,18 @@ def dsir_log_ratios(
     # target corpus, absent from raw) still count toward the
     # normalizer even though no raw doc can probe them
     tt = tgtc.agg(F.sum("_tc")).collect()[0][0] or 0
-    return _dsir_ratio_table(rawc, tr, tt, alpha, n_buckets)
+    return _dsir_ratio_table(rawc, tr, tt, n_buckets)
 
 
 def _dsir_ratio_table(
-    census: DataFrame, tr: int, tt: int, alpha: float, n_buckets: int
+    census: DataFrame, tr: int, tt: int, n_buckets: int
 ) -> DataFrame:
     """THE log-ratio formula, in one place (shared by ``dsir_log_ratios``
     and ``dsir_fit_scores`` so the smoothing/quantization contract
-    cannot drift): per bucket of a (_rc, _tc) census,
+    cannot drift): per bucket of a (_rc, _tc) census, with add-one
+    smoothing a = 1,
     ``round(1e6 * (ln((tc+a)/(tt+a·b)) - ln((rc+a)/(tr+a·b))))``."""
-    a, b = float(alpha), float(n_buckets)
+    a, b = 1.0, float(n_buckets)
     ratio = F.log(
         (F.coalesce(F.col("_tc"), F.lit(0)).cast("double") + F.lit(a))
         / F.lit(float(tt) + a * b)
@@ -585,7 +579,7 @@ def dsir_scores(
     id_col: str,
     text_col: str,
     n_buckets: int = 65536,
-    salt: str = "dsir",
+    salt: str = DSIR_SALT,
 ) -> DataFrame:
     """Per-document DSIR score: mean log importance ratio over the doc's
     feature occurrences, rounded to 4dp. The fold is an exact BIGINT sum
@@ -603,8 +597,6 @@ def dsir_fit_scores(
     id_col: str,
     text_col: str,
     n_buckets: int = 65536,
-    alpha: float = 1.0,
-    salt: str = "dsir",
     *,
     target_filter: Column,
 ) -> tuple[DataFrame, DataFrame]:
@@ -625,7 +617,7 @@ def dsir_fit_scores(
             {id_col: F.col(id_col), "_t": target_filter},
             text_col,
             n_buckets,
-            salt,
+            DSIR_SALT,
         )
     )
     # census + totals: target ⊆ raw by construction, so the census's
@@ -640,7 +632,7 @@ def dsir_fit_scores(
     )
     totals = census.agg(F.sum("_rc"), F.sum("_tc")).collect()[0]
     tr, tt = totals[0] or 0, totals[1] or 0
-    ratios = _dsir_ratio_table(census, tr, tt, alpha, n_buckets)
+    ratios = _dsir_ratio_table(census, tr, tt, n_buckets)
     scored = _dsir_score_from_stream(
         stream.select(id_col, "bucket"), ratios, id_col
     )
@@ -669,7 +661,6 @@ def dsir_resample(
     score_col: str,
     n_keep: int,
     salt: str = "dsir-g",
-    n_bins: int = 1000,
 ) -> DataFrame:
     """Gumbel-top-k selection of ``n_keep`` docs by DSIR score — the
     resampling half of DSIR. No global sort: the top-k cut reuses
@@ -683,13 +674,13 @@ def dsir_resample(
     keyed = scored.withColumn(
         "_gk", gumbel_key(F.col(score_col), id_col, salt)
     ).withColumn("_one", F.lit(1))
-    return token_budget_filter(keyed, "_gk", "_one", n_keep, n_bins).drop(
+    return token_budget_filter(keyed, "_gk", "_one", n_keep).drop(
         "_gk", "_one"
     )
 
 
 def save_dsir_ratios(
-    ratios: DataFrame, path: str, n_buckets: int, salt: str = "dsir"
+    ratios: DataFrame, path: str, n_buckets: int
 ) -> None:
     """Persist a DSIR log-ratio table as a parquet artifact — the
     offline half of the deployment shape (fit target-vs-raw ratios once
@@ -699,7 +690,7 @@ def save_dsir_ratios(
     they travel with the table instead of trusting call sites)."""
     ratios.write.mode("overwrite").parquet(f"{path}/ratios")
     ratios.sparkSession.createDataFrame(
-        [(int(n_buckets), salt)], "n_buckets long, salt string"
+        [(int(n_buckets), DSIR_SALT)], "n_buckets long, salt string"
     ).write.mode("overwrite").parquet(f"{path}/meta")
 
 
@@ -717,8 +708,6 @@ def doremi_weights(
     text_col: str,
     n_rounds: int = 4,
     lr: float = 1.0,
-    add_k: float = 0.5,
-    quantize_dp: int = 6,
 ) -> tuple[dict[str, float], list[dict[str, float]]]:
     """DoReMi-style mixture-weight optimization (Xie et al. 2023,
     "Doremi: Optimizing Data Mixtures Speeds Up Language Model
@@ -749,8 +738,8 @@ def doremi_weights(
     the S weights as an inlined CASE; domains missing a gram contribute
     their smoothing floor via one closed-form scalar), one census-sized
     join + source-keyed aggregation measures every domain's CE, and S
-    driver-side scalars move. Cross-entropies are rounded to
-    ``quantize_dp`` before the update so distributed summation-order
+    driver-side scalars move. Cross-entropies are rounded to 6
+    decimals before the update so distributed summation-order
     noise (~1e-12 on O(10) values) vanishes below the quantum: weights
     are reproducible across partitionings and equal a pure-python
     re-derivation from the same census (pinned)."""
@@ -758,6 +747,9 @@ def doremi_weights(
 
     from .relevance import doc_bigrams
 
+    # add-k of the per-domain bigram distributions, and the decimals
+    # every cross-entropy and weight is rounded to
+    add_k, dp = 0.5, 6
     grams = doc_bigrams(df, source_col, text_col)
     cen = checkpoint(
         grams.groupBy(source_col, "bigram").agg(F.count(F.lit(1)).alias("c"))
@@ -799,11 +791,11 @@ def doremi_weights(
         .collect()
     )
     ce_own = {
-        r[0]: round(float(r["nll"]) / masses[r[0]], quantize_dp)
+        r[0]: round(float(r["nll"]) / masses[r[0]], dp)
         for r in ce_own_rows
     }
 
-    weights = {s: round(1.0 / len(sources), quantize_dp) for s in sources}
+    weights = {s: round(1.0 / len(sources), dp) for s in sources}
     history: list[dict[str, float]] = []
     for _ in range(n_rounds):
         # p_mix(g) = Σ_present w_s·(p_s(g) − u_s) + Σ_all w_s·u_s: the
@@ -826,7 +818,7 @@ def doremi_weights(
             .collect()
         )
         ce_mix = {
-            r[0]: round(float(r["nll"]) / masses[r[0]], quantize_dp)
+            r[0]: round(float(r["nll"]) / masses[r[0]], dp)
             for r in ce_mix_rows
         }
         raw = {
@@ -835,7 +827,7 @@ def doremi_weights(
             for s in sources
         }
         z = sum(raw.values())
-        weights = {s: round(raw[s] / z, quantize_dp) for s in sources}
+        weights = {s: round(raw[s] / z, dp) for s in sources}
         history.append(dict(weights))
     return weights, history
 
@@ -847,7 +839,6 @@ def unimax_allocation(
     budget: int,
     max_epochs_num: int,
     max_epochs_den: int = 1,
-    fp_scale: int = 10**6,
 ) -> DataFrame:
     """UniMax budget allocation (Chung et al. 2023, "UniMax: Fairer and
     More Effective Language Sampling for Large-Scale Multilingual
@@ -867,8 +858,8 @@ def unimax_allocation(
     alloc_tokens, epochs_fp) — the allocation in WHOLE tokens (a
     saturated source gets its integer cap verbatim, an unsaturated one
     ⌊θ⌋; whole tokens rather than a fixed-point allocation because
-    cap·fp_scale overflows BIGINT at real corpus sizes — review
-    finding, round 9), realized epochs in ``fp_scale`` fixed point
+    cap·10^6 overflows BIGINT at real corpus sizes — review
+    finding, round 9), realized epochs in 10^6 fixed point
     (epochs are O(E)-magnitude, so their fixed point cannot overflow).
     Every decision is integer: the
     saturated set is the ascending-cap prefix where
@@ -930,13 +921,13 @@ def unimax_allocation(
         F.col("saturated"),
         F.expr(
             f"CAST((CAST(cap AS DECIMAL(38,0))"
-            f" * CAST({int(fp_scale)} AS DECIMAL(38,0)))"
+            " * CAST(1000000 AS DECIMAL(38,0)))"
             " DIV CAST(greatest(n_tokens, 1) AS DECIMAL(38,0)) AS BIGINT)"
         ),
     ).otherwise(
         F.expr(
             f"CAST((CAST({int(budget)} - _satsum AS DECIMAL(38,0))"
-            f" * CAST({int(fp_scale)} AS DECIMAL(38,0)))"
+            " * CAST(1000000 AS DECIMAL(38,0)))"
             " DIV CAST(greatest((_s - _k) * n_tokens, 1)"
             " AS DECIMAL(38,0)) AS BIGINT)"
         )

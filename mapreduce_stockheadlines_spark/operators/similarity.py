@@ -105,7 +105,7 @@ def _collect_query_side(
         raise ValueError(
             f"{op}: query side exceeds max_query_rows={max_query_rows}; it is "
             "collected to the driver and broadcast like a join build side. "
-            "Reduce the query set or raise max_query_rows explicitly."
+            "Reduce the query set."
         )
     return q_pdf.sort_values("query_id")
 
@@ -507,11 +507,10 @@ def kmeans_moment_partials(
 def kmeans_refit(
     moments: DataFrame,
     prev_centroids: np.ndarray,
-    quantize_dp: int = 7,
     fp_dp: int = 6,
 ) -> np.ndarray:
     """One Lloyd update from a folded moment artifact: per cell,
-    ``mean_j = round((s_fp / 10^fp_dp) / n, quantize_dp)``, L2-norm OF
+    ``mean_j = round((s_fp / 10^fp_dp) / n, 7)``, L2-norm OF
     the quantized mean, divide, round again — the ``kmeans_centroids``
     quantized contract computed from EXACT integer sums, so the rolled
     index is a pure function of (row set, frozen centroids) regardless
@@ -566,11 +565,9 @@ def kmeans_refit(
     n_by[cells] = pdf["n"].to_numpy(dtype=np.int64)
     live = np.nonzero(n_by > 0)[0]
     for cell in live:
-        mean = np.round(
-            (s_fp[cell] / 10**fp_dp) / n_by[cell], quantize_dp
-        )
+        mean = np.round((s_fp[cell] / 10**fp_dp) / n_by[cell], 7)
         nrm = float(np.linalg.norm(mean)) or 1.0
-        new[cell] = np.round(mean / nrm, quantize_dp)
+        new[cell] = np.round(mean / nrm, 7)
     return new
 
 
@@ -1003,18 +1000,16 @@ def rrf_fuse(
     query_col: str = "query_id",
     item_col: str = "neighbor_id",
     rank_col: str = "rank",
-    k_rrf: int = 60,
-    fp_scale: int = 10**9,
 ) -> DataFrame:
     """Reciprocal-rank fusion (Cormack et al. 2009) of N ranked result
     lists — the standard hybrid-retrieval combiner (dense ANN + lexical
     BM25, or two ANN indexes with different trade-offs): each list
-    contributes ``1/(k + rank)`` per (query, item) and items are
-    re-ranked by the summed score. Scores are EXACT integer fixed-point
-    — ``fp_scale div (k + rank)`` (integer division, no float quotient)
-    summed as BIGINTs — so the fused order and every emitted score are
-    bit-reproducible across engines and partitionings; ties break by
-    item id ASC.
+    contributes ``1/(k + rank)`` per (query, item), with the paper's
+    k = 60, and items are re-ranked by the summed score. Scores are
+    EXACT integer fixed-point — ``10^9 div (60 + rank)`` (integer
+    division, no float quotient) summed as BIGINTs — so the fused order
+    and every emitted score are bit-reproducible across engines and
+    partitionings; ties break by item id ASC.
 
     Scale shape: the inputs are result lists (queries × k rows, never
     corpus-sized), so the union + one (query, item) aggregation + one
@@ -1023,11 +1018,9 @@ def rrf_fuse(
     contributes nothing for it (the RRF convention)."""
     if len(results) < 2:
         raise ValueError("rrf_fuse: need at least two result lists")
-    if k_rrf < 1 or fp_scale < 1:
-        raise ValueError("rrf_fuse: k_rrf and fp_scale must be >= 1")
     contribs = None
     for r in results:
-        # fp_scale div (k + rank) as Column ops, not an F.expr string
+        # 10^9 div (60 + rank) as Column ops, not an F.expr string
         # (a rank column named with spaces/reserved words would break
         # or mis-resolve the parse — ADVICE r8). floor(a/b) on doubles
         # equals integer div here: both operands are exact integers
@@ -1037,7 +1030,7 @@ def rrf_fuse(
             F.col(query_col),
             F.col(item_col),
             F.floor(
-                F.lit(float(fp_scale)) / (F.lit(float(k_rrf)) + F.col(rank_col))
+                F.lit(1e9) / (F.lit(60.0) + F.col(rank_col))
             )
             .cast("long")
             .alias("_c"),

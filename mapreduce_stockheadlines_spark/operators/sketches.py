@@ -108,6 +108,9 @@ def upsert_sketches(
 
 DEFAULT_CMS_DEPTH = 4  # P(overshoot > eps*N) <= e^-4 ~ 1.8%
 DEFAULT_CMS_WIDTH = 1 << 12  # eps = e/4096 ~ 0.066% of total count
+# position-hash salt: build and estimate must hash a value to the same
+# cells
+CMS_SALT = "cms"
 
 
 def cms_build(
@@ -116,7 +119,6 @@ def cms_build(
     group_cols: list[str] | None = None,
     depth: int = DEFAULT_CMS_DEPTH,
     width: int = DEFAULT_CMS_WIDTH,
-    salt: str = "cms",
 ) -> DataFrame:
     """Sparse CMS counter table per group: group_cols + (d, w, cnt),
     ≤ depth·min(width, #distinct) rows per group. One row of input
@@ -125,7 +127,7 @@ def cms_build(
     cells = df.select(
         *group_cols,
         F.posexplode(
-            F.array(*bloom_positions(value_col, width, depth, salt))
+            F.array(*bloom_positions(value_col, width, depth, CMS_SALT))
         ).alias("d", "w"),
     )
     return cells.groupBy(*group_cols, "d", "w").agg(
@@ -140,7 +142,6 @@ def cms_estimate(
     group_cols: list[str] | None = None,
     depth: int = DEFAULT_CMS_DEPTH,
     width: int = DEFAULT_CMS_WIDTH,
-    salt: str = "cms",
 ) -> DataFrame:
     """Frequency upper-bound per probe value: min over the depth
     counters (absent cell = 0). Output: group_cols + value_col +
@@ -151,7 +152,7 @@ def cms_estimate(
         *group_cols,
         value_col,
         F.posexplode(
-            F.array(*bloom_positions(value_col, width, depth, salt))
+            F.array(*bloom_positions(value_col, width, depth, CMS_SALT))
         ).alias("d", "w"),
     )
     joined = p.join(cms, [*group_cols, "d", "w"], "left")

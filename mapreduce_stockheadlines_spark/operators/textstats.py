@@ -148,20 +148,11 @@ def _rule_base(text: Column) -> tuple[Column, Column, Column]:
 def gopher_rules_cols(
     text_col: Column | str,
     *,
-    min_words: int = 50,
-    max_words: int = 100_000,
-    min_mean_word_len: float = 3.0,
-    max_mean_word_len: float = 10.0,
-    max_symbol_word_ratio: float = 0.1,
-    max_bullet_line_frac: float = 0.9,
-    max_ellipsis_line_frac: float = 0.3,
-    min_alpha_word_frac: float = 0.8,
-    min_required_stop_hits: int = 2,
     _base: tuple[Column, Column, Column] | None = None,
 ) -> list[Column]:
     """The named Gopher document-quality rules (Rae et al. 2021,
     appendix A1.1 — the filter set FineWeb/Dolma/RefinedWeb all derive
-    from) as pure codegen column expressions, defaults = the paper's
+    from) as pure codegen column expressions, at the paper's
     thresholds: word count in [50, 100k], mean word length in [3, 10],
     symbol-to-word ratio <= 0.1 for EITHER hashes or ellipses (the
     paper applies the threshold per symbol, so ``symbol_word_ratio``
@@ -212,15 +203,15 @@ def gopher_rules_cols(
         ).otherwise(0)
     req_stop_hits = hits.cast("int")
     kept = (
-        (n_words >= min_words)
-        & (n_words <= max_words)
-        & (mean_word_len >= min_mean_word_len)
-        & (mean_word_len <= max_mean_word_len)
-        & (symbol_word_ratio <= max_symbol_word_ratio)
-        & (bullet_line_frac <= max_bullet_line_frac)
-        & (ellipsis_line_frac <= max_ellipsis_line_frac)
-        & (alpha_word_frac >= min_alpha_word_frac)
-        & (req_stop_hits >= min_required_stop_hits)
+        (n_words >= 50)
+        & (n_words <= 100_000)
+        & (mean_word_len >= 3.0)
+        & (mean_word_len <= 10.0)
+        & (symbol_word_ratio <= 0.1)
+        & (bullet_line_frac <= 0.9)
+        & (ellipsis_line_frac <= 0.3)
+        & (alpha_word_frac >= 0.8)
+        & (req_stop_hits >= 2)
     )
     return [
         n_words.alias("gopher_n_words"),
@@ -237,14 +228,13 @@ def gopher_rules_cols(
 def c4_rules_cols(
     text_col: Column | str,
     *,
-    min_sentences: int = 3,
-    min_words: int = 5,
     _base: tuple[Column, Column, Column] | None = None,
 ) -> list[Column]:
     """The C4 cleaning heuristics (Raffel et al. 2020 §2.2) that are
     document-level and deterministic, as codegen columns: terminal-
     punctuation line fraction (C4 keeps only lines ending in . ! ? "),
-    sentence count (pages with < 3 sentences are dropped), the curly-
+    sentence count (pages with < 3 sentences, or < 5 words, are
+    dropped), the curly-
     brace code filter and the "lorem ipsum" placeholder filter, plus
     the conjunction ``c4_kept``. The remaining C4 rules live elsewhere
     in the engine by design: the bad-word list is a data input (the
@@ -263,8 +253,8 @@ def c4_rules_cols(
     kept = (
         ~has_brace
         & ~has_lorem
-        & (n_sentences >= min_sentences)
-        & (n_words >= min_words)
+        & (n_sentences >= 3)
+        & (n_words >= 5)
     )
     return [
         term_line_frac.alias("c4_term_line_frac"),
@@ -414,12 +404,13 @@ def _winnow_norm(text_col) -> Column:
     return F.trim(F.regexp_replace(F.lower(col), r"\s+", " "))
 
 
-def winnow_gram_col(text_col, k: int = 5) -> Column:
-    """The k-gram rolling-hash array (NULL when the normalized text is
-    shorter than k — Spark's sequence(1, stop) DESCENDS when stop < 1,
-    so the array is when-GATED on n >= k, never clamped; a clamp-to-0
-    stop yields the bogus [1, 0] index list, and a NULL n slips through
-    greatest(), which skips NULLs).
+def winnow_gram_col(text_col) -> Column:
+    """The k = 5 gram rolling-hash array, at the staged builders'
+    default width (NULL when the normalized text is shorter than k —
+    Spark's sequence(1, stop) DESCENDS when stop < 1, so the array is
+    when-GATED on n >= k, never clamped; a clamp-to-0 stop yields the
+    bogus [1, 0] index list, and a NULL n slips through greatest(),
+    which skips NULLs).
 
     PERFORMANCE (round 12, measured): this one-expression convenience
     form embeds the NORMALIZATION CHAIN in the lambda body, and a HOF
@@ -432,8 +423,7 @@ def winnow_gram_col(text_col, k: int = 5) -> Column:
     bit-identical values, pinned by
     test_winnow_gram_staged_chars_equivalence). This form remains for
     one-off/cold-path use and as the semantic reference."""
-    if k < 2:
-        raise ValueError("winnow: need k >= 2")
+    k = 5
     norm = _winnow_norm(text_col)
     n = F.length(norm)
     pows = [WINNOW_BASE ** (k - 1 - j) for j in range(k)]
@@ -541,13 +531,12 @@ def winnow_fingerprints(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    k: int = 5,
-    w: int = 4,
     max_per_doc: int | None = None,
 ) -> DataFrame:
     """(id, whash) — one row per selected hash, the exploded index form
-    ``winnow_neardup_pairs`` joins on. Narrow staged projections + one
-    explode, no shuffle.
+    ``winnow_neardup_pairs`` joins on, at the staged builders' default
+    k = 5 grams and w = 4 windows (x08's winnow columns use the same
+    pair). Narrow staged projections + one explode, no shuffle.
 
     The explode is ``explode_outer`` + a post-filter on the GENERATED
     attribute, not a plain ``explode`` — deliberately (round 11, a
@@ -578,7 +567,7 @@ def winnow_fingerprints(
     its smallest hashes, and a shared span's hashes are identical in
     both). The uncapped default keeps the exact w+k-1 guarantee for
     moderate corpora."""
-    sel = winnow_sel_col("_wg", w)
+    sel = winnow_sel_col("_wg")
     if max_per_doc is not None:
         if max_per_doc < 1:
             raise ValueError(
@@ -591,7 +580,7 @@ def winnow_fingerprints(
             _winnow_norm(F.col(text_col)).alias("_wn"),
         )
         .select("id", winnow_char_col("_wn").alias("_wc"))
-        .select("id", winnow_gram_from_chars("_wc", k).alias("_wg"))
+        .select("id", winnow_gram_from_chars("_wc").alias("_wg"))
         .select("id", sel.alias("_ws"))
         .select("id", F.explode_outer("_ws").alias("whash"))
         .filter(F.col("whash").isNotNull())
@@ -602,8 +591,6 @@ def winnow_neardup_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    k: int = 5,
-    w: int = 4,
     min_shared: int = 2,
     max_df: int = 1000,
     max_per_doc: int | None = None,
@@ -627,9 +614,7 @@ def winnow_neardup_pairs(
     # (id, whash) rows are already distinct by construction —
     # winnow_sel_col applies array_distinct per doc before the explode —
     # so no dedup shuffle is spent here (round-10 review finding)
-    fp = winnow_fingerprints(
-        df, id_col, text_col, k, w, max_per_doc=max_per_doc
-    )
+    fp = winnow_fingerprints(df, id_col, text_col, max_per_doc=max_per_doc)
     # the index has THREE consumers below (census + both self-join
     # sides) — without a barrier each re-executes the rolling-hash +
     # window-minima chain over the corpus (round 11: 3x the dominant
@@ -713,9 +698,7 @@ def pii_redacted(text_col: Column | str) -> Column:
     return red
 
 
-def pii_stats(
-    df: DataFrame, id_col: str, text_col: str, *, redact: bool = True
-) -> DataFrame:
+def pii_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Per-document PII detection + redaction — the scrub step of a
     training-data pipeline. Counts each PII class (regexp_count) and
     rewrites the text with ``<CLASS>`` placeholders (regexp_replace), all
@@ -726,12 +709,12 @@ def pii_stats(
         F.regexp_count(text, F.lit(p)).cast("bigint").alias(f"n_{name}")
         for name, p in PII_PATTERNS.items()
     ]
-    out = df.select(id_col, text, *cols).withColumn(
-        "n_pii", pii_count(text_col).cast("bigint")
+    return (
+        df.select(id_col, text, *cols)
+        .withColumn("n_pii", pii_count(text_col).cast("bigint"))
+        .withColumn("redacted", pii_redacted(text_col))
+        .drop(text_col)
     )
-    if redact:
-        out = out.withColumn("redacted", pii_redacted(text_col))
-    return out.drop(text_col)
 
 
 def repetition_stats(
@@ -1182,7 +1165,6 @@ def filter_blocked_domains(
     id_col: str,
     text_col: str,
     blocklist: DataFrame,
-    domains: DataFrame | None = None,
 ) -> DataFrame:
     """Drop every document referencing ANY blocked registered domain.
 
@@ -1192,31 +1174,16 @@ def filter_blocked_domains(
     blocklist, anti-join the matching doc ids back. The blocked-id set
     is corpus-derived and therefore NOT forced broadcast — one blocked
     popular domain could make it huge; AQE picks broadcast when it is
-    actually small, and the fallback is a plain key-hash anti-join.
-
-    ``domains``: an optional pre-derived (id, domains array) frame —
-    ``url_stats`` output (its ``domains`` column is the same distinct
-    registered-domain set, sorted; order is irrelevant to the explode).
-    Pass it when the caller already ran the URL→host→PSL extraction so
-    this filter does not re-run the whole regex pipeline over the
-    corpus (the ``tf=``/``grams=`` shared-derivation pattern; round-12
-    measure: x24's plan re-derived the extraction once per consumer)."""
+    actually small, and the fallback is a plain key-hash anti-join."""
     dom_col = blocklist.columns[0]
-    if domains is not None:
-        edges = domains.select(
-            F.col(id_col), F.explode("domains").alias("_domain")
-        )
-    else:
-        edges = df.select(
-            F.col(id_col),
-            F.explode(
-                F.array_distinct(
-                    F.transform(
-                        extract_url_hosts(text_col), registered_domain
-                    )
-                )
-            ).alias("_domain"),
-        )
+    edges = df.select(
+        F.col(id_col),
+        F.explode(
+            F.array_distinct(
+                F.transform(extract_url_hosts(text_col), registered_domain)
+            )
+        ).alias("_domain"),
+    )
     blocked_ids = edges.join(
         F.broadcast(blocklist.withColumnRenamed(dom_col, "_domain")),
         "_domain",
@@ -1224,12 +1191,12 @@ def filter_blocked_domains(
     return df.join(blocked_ids.distinct(), id_col, "left_anti")
 
 
-def _hashed_weight(token: Column, salt: str) -> Column:
+def _hashed_weight(token: Column) -> Column:
     """Deterministic per-token weight in [-1, 1): first 8 hex chars of
-    md5(salt:token) scaled — the sampling hash_fraction primitive mapped
+    md5("clf:" + token) scaled — the sampling hash_fraction primitive mapped
     onto a symmetric range. Portable (md5 + hex parse), so the hashed
     model mode is reproducible in any engine."""
-    digest = F.md5(F.concat(F.lit(f"{salt}:"), token).cast("binary"))
+    digest = F.md5(F.concat(F.lit("clf:"), token).cast("binary"))
     frac = F.conv(F.substring(digest, 1, 8), 16, 10).cast("double") / F.lit(
         float(16**8)
     )
@@ -1241,7 +1208,6 @@ def classifier_score(
     id_col: str,
     text_col: str,
     weights: DataFrame | None = None,
-    salt: str = "clf",
     tf: DataFrame | None = None,
 ) -> DataFrame:
     """fastText-shaped linear bag-of-words document classifier — the
@@ -1295,7 +1261,7 @@ def classifier_score(
             F.col(id_col), F.explode(tokens_array(text_col)).alias("token")
         ).withColumn("_n", F.lit(1).cast("bigint"))
     if weights is None:
-        w = _hashed_weight(F.col("token"), salt)
+        w = _hashed_weight(F.col("token"))
         scored = stream.select(
             id_col, "_n", w.alias("w"), F.lit(1).alias("hit")
         )

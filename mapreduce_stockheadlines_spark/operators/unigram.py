@@ -308,7 +308,6 @@ def unigram_encode_word_types(
     words: DataFrame,
     model: dict[str, int],
     word_col: str = "word",
-    max_piece_len: int | None = None,
     piece_ids: dict[str, int] | None = None,
 ) -> DataFrame:
     """Viterbi-encode DISTINCT word types under a trained table:
@@ -322,15 +321,11 @@ def unigram_encode_word_types(
     from pyspark.sql.functions import pandas_udf
 
     mdl = dict(model)
-    # default: derive the window from the model itself — a piece longer
-    # than every model piece can never match, and hard-coding the
+    # the window comes from the model itself — a piece longer than
+    # every model piece can never match, and hard-coding the
     # training-time default would silently dead-letter longer pieces in
     # a pretrained artifact (save_unigram round-trip)
-    mpl = (
-        int(max_piece_len)
-        if max_piece_len is not None
-        else max((len(p) for p in mdl), default=1)
-    )
+    mpl = max((len(p) for p in mdl), default=1)
     ids = dict(piece_ids) if piece_ids is not None else None
 
     @pandas_udf("array<string>")
@@ -398,7 +393,6 @@ def apply_unigram(
     id_col: str,
     text_col: str,
     model: dict[str, int],
-    max_piece_len: int | None = None,
     piece_ids: dict[str, int] | None = None,
 ) -> DataFrame:
     """Tokenize documents into unigram-LM piece sequences: (id, pieces
@@ -415,8 +409,7 @@ def apply_unigram(
         F.posexplode(tokens_array(text_col)).alias("pos", "word"),
     )
     enc = unigram_encode_word_types(
-        toks.select("word").distinct(), model,
-        max_piece_len=max_piece_len, piece_ids=piece_ids,
+        toks.select("word").distinct(), model, piece_ids=piece_ids
     )
     from .bpe import _apply_encoded_types
 

@@ -95,12 +95,8 @@ def read_csv_proper(
     return reader.csv(path)
 
 
-def read_json(spark: SparkSession, path: str,
-              schema: T.StructType | None = None) -> DataFrame:
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
+def read_json(spark: SparkSession, path: str) -> DataFrame:
+    return spark.read.json(path)
 
 
 def read_orc(spark: SparkSession, path: str) -> DataFrame:

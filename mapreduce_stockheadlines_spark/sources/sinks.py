@@ -3,7 +3,8 @@
 The reference writes a single text part via TextOutputFormat from its single
 reducer (/root/reference/src/StockCount.java:64,81). Engine default is
 partitioned parquet; single-file text output exists only for golden parity
-(explicit ``coalesce(1)`` — never the default at scale).
+(explicit ``coalesce(1)`` — never the default at scale). Every sink
+overwrites its target.
 """
 
 from __future__ import annotations
@@ -11,24 +12,24 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def write_parquet(df: DataFrame, path: str, mode: str = "overwrite",
+def write_parquet(df: DataFrame, path: str,
                   partition_by: list[str] | None = None) -> None:
-    writer = df.write.mode(mode)
+    writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
 
 
-def write_text_single(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+def write_text_single(df: DataFrame, path: str) -> None:
     """Golden-parity sink: one text file, one column. ``coalesce(1)`` is a
     deliberate scale anti-pattern confined to parity jobs."""
-    df.coalesce(1).write.mode(mode).text(path)
+    df.coalesce(1).write.mode("overwrite").text(path)
 
 
-def write_orc(df: DataFrame, path: str, mode: str = "overwrite",
+def write_orc(df: DataFrame, path: str,
               partition_by: list[str] | None = None) -> None:
     """ORC sink with the same partition layout semantics as parquet."""
-    writer = df.write.mode(mode)
+    writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.orc(path)
@@ -39,7 +40,6 @@ def write_clustered(
     path: str,
     cluster_by: str,
     num_files: int | None = None,
-    mode: str = "overwrite",
 ) -> None:
     """Cluster-by-column parquet layout: range-repartition on the column,
     sort within each partition, write one file per partition.
@@ -55,7 +55,7 @@ def write_clustered(
         *( [num_files] if num_files is not None else [] ),
         cluster_by,
     ).sortWithinPartitions(cluster_by)
-    out.write.mode(mode).parquet(path)
+    out.write.mode("overwrite").parquet(path)
 
 
 def write_parquet_partitioned_sized(
@@ -64,7 +64,6 @@ def write_parquet_partitioned_sized(
     partition_by: list[str],
     files_per_partition: int = 1,
     key: str | None = None,
-    mode: str = "overwrite",
     sort_within: list | None = None,
 ) -> None:
     """Hive-partitioned parquet with a BOUNDED file count per partition
@@ -120,4 +119,4 @@ def write_parquet_partitioned_sized(
         # insert its OWN (unstable) sort otherwise, scrambling the
         # caller's order within each file
         out = out.sortWithinPartitions(*part_cols, *sort_within)
-    out.write.mode(mode).partitionBy(*partition_by).parquet(path)
+    out.write.mode("overwrite").partitionBy(*partition_by).parquet(path)

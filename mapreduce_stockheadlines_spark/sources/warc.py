@@ -239,10 +239,10 @@ def register(spark) -> None:
 def warc_text_docs(
     spark,
     path: str,
-    record_types: str = "response,conversion",
     require_http_ok: bool = False,
 ):
-    """The WARC → curate() bridge: one row per text-bearing record with
+    """The WARC → curate() bridge: one row per text-bearing record
+    (``response`` and WET ``conversion`` records) with
     (doc_id, url, fetch_date, text) — record ids as doc ids, HTTP
     framing stripped (done record-locally in the reader task), payload
     decoded as UTF-8 with replacement. Markup survives; chain
@@ -258,7 +258,7 @@ def warc_text_docs(
     df = (
         spark.read.format("warc")
         .option("path", path)
-        .option("recordTypes", record_types)
+        .option("recordTypes", "response,conversion")
         .load()
     )
     if require_http_ok:

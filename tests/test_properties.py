@@ -550,7 +550,7 @@ def test_temperature_mix_subset_and_biggest_source_never_boosted(
     """For ANY corpus and alpha in [0,1]: the mix is a subset of the
     input, alpha=1 is the identity, and the SMALLEST source always
     keeps everything — rate ∝ n^(alpha-1) is maximized by the smallest
-    n when alpha < 1, and that maximum normalizes to max_rate=1 (the
+    n when alpha < 1, and that maximum normalizes to a rate of 1 (the
     'boost by keeping, never by adding' down-sampling contract)."""
     from collections import Counter
 

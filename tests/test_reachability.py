@@ -13,8 +13,14 @@ Roots:
 - ``scripts/``, ``bench.py``, ``perfbench/`` and ``__spark_entry__.py``;
 - ``streaming/`` (kept whole; its fate is an open ROADMAP item).
 
-Run as a script to print the unreached definitions:
-``python tests/test_reachability.py``.
+A second guard holds every defaulted parameter of a public function in
+``operators/``, ``functions/``, ``sources/``, ``jobs/`` and
+``session.py`` to one that some call in the package, ``scripts/``,
+``bench.py``, ``perfbench/``, ``__spark_entry__.py`` or ``tests/``
+passes; ``ALLOWED_OPTIONS`` names the exceptions.
+
+Run as a script to print the unreached definitions and the options no
+caller sets: ``python tests/test_reachability.py``.
 """
 
 from __future__ import annotations
@@ -89,7 +95,9 @@ class _Module:
         return ".".join(base + ([node.module] if node.module else []))
 
 
-def _load() -> dict[str, _Module]:
+def _load(tests: bool = False) -> dict[str, _Module]:
+    """The package and the external roots; with ``tests``, also the
+    test modules, as callers only (they are no roots)."""
     mods: dict[str, _Module] = {}
     pkg_dir = os.path.join(ROOT, PKG)
     for dirpath, _, files in os.walk(pkg_dir):
@@ -103,13 +111,21 @@ def _load() -> dict[str, _Module]:
             mods[name] = _Module(name, os.path.join(dirpath, fn), True)
     externals = [os.path.join(ROOT, "bench.py"),
                  os.path.join(ROOT, "__spark_entry__.py")]
-    for d in ("scripts", "perfbench"):
+    test_files = []
+    for d in ("scripts", "perfbench", "tests"):
         for fn in sorted(os.listdir(os.path.join(ROOT, d))):
-            if fn.endswith(".py") and not fn.startswith("test_"):
-                externals.append(os.path.join(ROOT, d, fn))
-    for path in externals:
-        name = "<ext>." + os.path.relpath(path, ROOT)[:-3].replace(os.sep, ".")
-        mods[name] = _Module(name, path, False)
+            if not fn.endswith(".py"):
+                continue
+            path = os.path.join(ROOT, d, fn)
+            if d == "tests" or fn.startswith("test_"):
+                test_files.append(path)
+            else:
+                externals.append(path)
+    for kind, paths in (("<ext>", externals),
+                        ("<test>", test_files if tests else [])):
+        for path in paths:
+            rel = os.path.relpath(path, ROOT)[:-3].replace(os.sep, ".")
+            mods[f"{kind}.{rel}"] = _Module(f"{kind}.{rel}", path, False)
     return mods
 
 
@@ -166,45 +182,47 @@ class _Graph:
                 self._bind(m, node, out)
         return out
 
+    def _resolve(self, m: _Module, aliases: dict,
+                 node: ast.AST) -> tuple[str, str] | None:
+        """The definition a Name or dotted Attribute expression denotes
+        (a bare imported-module name denotes that module), or None."""
+        if isinstance(node, ast.Name):
+            if node.id in aliases:
+                src, attr = aliases[node.id]
+                return self._target(src, attr) if attr else (src, _MODULE)
+            return (m.name, node.id) if node.id in m.defs else None
+        chain = []
+        cur = node
+        while isinstance(cur, ast.Attribute):
+            chain.append(cur.attr)
+            cur = cur.value
+        if not chain or not isinstance(cur, ast.Name):
+            return None
+        if cur.id in aliases:
+            src, attr = aliases[cur.id]
+            mod = f"{src}.{attr}" if attr else src
+        else:
+            mod = cur.id
+        # ``D.f``, ``pkg.sub.f``: walk the dotted chain.
+        *path, last = reversed(chain)
+        for part in path:
+            if f"{mod}.{part}" not in self.mods:
+                return None
+            mod = f"{mod}.{part}"
+        if mod not in self.mods or f"{mod}.{last}" in self.mods:
+            return None
+        return self._target(mod, last)
+
     def _refs(self, m: _Module, nodes: list[ast.AST],
               scope: ast.AST | None = None) -> set[tuple[str, str]]:
         out: set[tuple[str, str]] = set()
         aliases = self._aliases(m, scope)
         for root in nodes:
             for node in ast.walk(root):
-                if isinstance(node, ast.Name):
-                    if node.id in aliases:
-                        src, attr = aliases[node.id]
-                        t = (self._target(src, attr) if attr
-                             else (src, _MODULE))
-                    else:
-                        t = (m.name, node.id) if node.id in m.defs else None
+                if isinstance(node, (ast.Name, ast.Attribute)):
+                    t = self._resolve(m, aliases, node)
                     if t:
                         out.add(t)
-                elif isinstance(node, ast.Attribute):
-                    chain = []
-                    cur = node
-                    while isinstance(cur, ast.Attribute):
-                        chain.append(cur.attr)
-                        cur = cur.value
-                    if not isinstance(cur, ast.Name):
-                        continue
-                    head = cur.id
-                    if head in aliases:
-                        src, attr = aliases[head]
-                        mod = f"{src}.{attr}" if attr else src
-                    else:
-                        mod = head
-                    # ``D.f``, ``pkg.sub.f``: walk the dotted chain.
-                    for part in reversed(chain):
-                        if f"{mod}.{part}" in self.mods:
-                            mod = f"{mod}.{part}"
-                            continue
-                        if mod in self.mods:
-                            t = self._target(mod, part)
-                            if t:
-                                out.add(t)
-                        break
                 elif isinstance(node, (ast.Import, ast.ImportFrom)):
                     # Importing a module runs its module-level code.
                     if isinstance(node, ast.Import):
@@ -306,6 +324,121 @@ def test_allowlist_names_existing_unreached_definitions():
     assert not stale, f"allowlisted but reached from a root: {stale}"
 
 
+# Option guard: every defaulted parameter of a public package function
+# is one that some call passes. A default no call overrides is a fork
+# nobody runs; write the value at its use site instead.
+_OPTION_SCOPE = ("operators.", "functions.", "sources.", "jobs.", "session")
+# Parameters that bind a column of the caller's frame name data, not a
+# tuning value.
+_COLUMN_SUFFIXES = ("_col", "_cols", "_alias")
+_COLUMN_NAMES = {"alias", "left_ts", "right_ts"}
+
+# "module.function(param)" -> reason. Only values that must equal one a
+# caller sets on a paired operator.
+ALLOWED_OPTIONS = {
+    "operators.membership.bloom_lookup_join(salt)":
+        "must equal the salt of bloom_build, which the streaming ingest "
+        "sets when it builds the dedup bitmap",
+    "operators.pq.pq_refit(fp_dp)":
+        "must equal the fp_dp of pq_moment_partials, which the streaming "
+        "pq_ingest_sink sets when it writes the moment artifact",
+    "operators.similarity.kmeans_refit(fp_dp)":
+        "must equal the fp_dp of kmeans_moment_partials, which the "
+        "streaming kmeans_ingest_sink sets when it writes the moment "
+        "artifact",
+}
+
+
+def _options(mods: dict[str, _Module]) -> dict[str, tuple]:
+    """"module.function(param)" -> (module, function, param, positional
+    index or None for keyword-only) for every defaulted parameter in
+    scope."""
+    out = {}
+    for name, m in mods.items():
+        rel = name[len(PKG) + 1:]
+        if not m.in_package or not rel.startswith(_OPTION_SCOPE):
+            continue
+        for fn, node in m.defs.items():
+            if fn.startswith("_") or isinstance(node, ast.ClassDef):
+                continue
+            a = node.args
+            pos = a.posonlyargs + a.args
+            first = len(pos) - len(a.defaults)
+            params = [(p.arg, i) for i, p in enumerate(pos) if i >= first]
+            params += [(p.arg, None) for p, d in
+                       zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+            for p, i in params:
+                if not (p.endswith(_COLUMN_SUFFIXES) or p in _COLUMN_NAMES):
+                    out[f"{rel}.{fn}({p})"] = (name, fn, p, i)
+    return out
+
+
+def _unset(mods: dict[str, _Module]) -> list[str]:
+    """Options no call in the package, scripts, benchmarks or tests
+    passes, positionally or by keyword (``*args``/``**kwargs`` count as
+    passing every one). A call through a bare name the imports do not
+    bind (a local unpacked from a helper that returns imported
+    functions) counts for every public function of that name."""
+    graph = _Graph(mods)
+    opts = _options(mods)
+    by_name: dict[str, set[tuple[str, str]]] = {}
+    for mod, fn, _, _ in opts.values():
+        by_name.setdefault(fn, set()).add((mod, fn))
+    calls: dict[tuple[str, str], list[ast.Call]] = {}
+    for m in mods.values():
+        for top in m.tree.body:
+            scoped = isinstance(
+                top, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            )
+            aliases = graph._aliases(m, top if scoped else None)
+            for n in ast.walk(top):
+                if not isinstance(n, ast.Call):
+                    continue
+                t = graph._resolve(m, aliases, n.func)
+                if t:
+                    targets = {t}
+                elif isinstance(n.func, ast.Name):
+                    targets = by_name.get(n.func.id, ())
+                else:
+                    continue
+                for t in targets:
+                    calls.setdefault(t, []).append(n)
+
+    def passes(c: ast.Call, p: str, i: int | None) -> bool:
+        if any(k.arg in (p, None) for k in c.keywords):
+            return True
+        star = any(isinstance(a, ast.Starred) for a in c.args)
+        return i is not None and (star or len(c.args) > i)
+
+    return sorted(
+        opt for opt, (mod, fn, p, i) in opts.items()
+        if not any(passes(c, p, i) for c in calls.get((mod, fn), ()))
+    )
+
+
+def unset_options() -> list[str]:
+    """Options no caller sets that ``ALLOWED_OPTIONS`` does not name."""
+    return [o for o in _unset(_load(tests=True)) if o not in ALLOWED_OPTIONS]
+
+
+def test_every_option_is_set_by_a_caller():
+    unset = unset_options()
+    assert not unset, (
+        "defaulted parameters that no query, job, CLI, script, benchmark "
+        "or test sets (make each the fixed value it already has, or name "
+        "it in ALLOWED_OPTIONS with a reason):\n  " + "\n  ".join(unset)
+    )
+
+
+def test_option_allowlist_names_existing_unset_options():
+    mods = _load(tests=True)
+    missing = sorted(set(ALLOWED_OPTIONS) - set(_options(mods)))
+    assert not missing, f"allowlisted options that do not exist: {missing}"
+    # An allowlisted option that a caller sets anyway is stale.
+    stale = sorted(set(ALLOWED_OPTIONS) - set(_unset(mods)))
+    assert not stale, f"allowlisted but set by a caller: {stale}"
+
+
 def test_lineage_cuts_go_through_session_checkpoint():
     """Every lineage cut in the package calls ``session.checkpoint``, so
     one configured checkpoint dir decides local versus reliable for all
@@ -405,5 +538,9 @@ def test_slow_tests_names_exist():
 
 
 if __name__ == "__main__":
+    print("unreached definitions:")
     for qual in unreached():
-        print(qual)
+        print(f"  {qual}")
+    print("options no caller sets:")
+    for opt in unset_options():
+        print(f"  {opt}")
