@@ -1248,7 +1248,7 @@ def _run(spark: SparkSession, args: argparse.Namespace) -> None:
         if args.max_containment is not None:
             # decontaminate train against the held-out set: the test side
             # is small → its distinct gram set broadcasts
-            cont = TS.ngram_contamination(train, test, "doc_id", "text", n=3)
+            cont = TS.ngram_contamination(train, test, "doc_id", "text")
             dirty = cont.filter(
                 F.col("containment") > args.max_containment
             ).select("doc_id")

@@ -865,16 +865,15 @@ def remove_dup_windows(
     id_col: str,
     text_col: str,
     window_tokens: int = 8,
-    min_doc_occurrences: int = 2,
 ) -> DataFrame:
     """Cross-document duplicated-span REMOVAL — the ExactSubstr *cut*
     step of Lee et al. 2022 at token-window granularity, completing the
     detect (``duplicated_window_fraction``) → gate → remove progression:
-    every ``window_tokens``-token window that occurs in at least
-    ``min_doc_occurrences`` distinct documents is cut from every document
-    containing it, and the surviving tokens are rejoined in order.
-    Overlapping duplicated windows collapse into one removed span, so a
-    long shared passage disappears wholesale, not per-window. Output:
+    every ``window_tokens``-token window that occurs in at least two
+    distinct documents is cut from every document containing it, and
+    the surviving tokens are rejoined in order. Overlapping duplicated
+    windows collapse into one removed span, so a long shared passage
+    disappears wholesale, not per-window. Output:
     (id, text, n_tokens, n_removed_tokens); untouched documents keep
     their text byte-identical (rebuilt docs are single-space rejoined).
 
@@ -944,7 +943,7 @@ def remove_dup_windows(
         .distinct()
         .groupBy("_dig")
         .agg(F.count(F.lit(1)).alias("_nd"))
-        .filter(F.col("_nd") >= min_doc_occurrences)
+        .filter(F.col("_nd") >= 2)
         .select("_dig")
     )
     # covered token positions per doc; collect_set dedups overlap both

@@ -88,7 +88,6 @@ def pca_fit(
     df: DataFrame,
     vec_col: str,
     k: int,
-    moment_dp: int | None = 9,
     return_variance: bool = False,
     return_moments: bool = False,
 ):
@@ -115,14 +114,14 @@ def pca_fit(
     projection matrix then broadcasts back via ``pca_project``.
 
     Determinism (the pagerank/quantize trick, applied where magnitudes
-    are O(1)): the DERIVED mean and covariance — not the raw sums,
-    whose magnitude grows with corpus size and would outgrow any fixed
-    absolute quantum — are rounded to ``moment_dp`` decimals before
-    the eigensolve. Per-element mean/cov values stay O(1) for
-    normalized-ish embeddings at any corpus size, so the ~1e-16
-    relative summation noise stays far below the 1e-9 quantum and the
-    fit is reproducible across partitionings; eigenvector sign is
-    canonicalized (largest-magnitude entry positive).
+    are O(1)): the DERIVED mean and covariance — not the raw sums, whose
+    magnitude grows with corpus size and would outgrow any fixed
+    absolute quantum — are rounded to 9 decimals before the eigensolve.
+    Per-element mean/cov values stay O(1) for normalized-ish embeddings
+    at any corpus size, so the ~1e-16 relative summation noise stays far
+    below the 1e-9 quantum and the fit is reproducible across
+    partitionings; eigenvector sign is canonicalized (largest-magnitude
+    entry positive).
     ``numpy.linalg.eigh`` on the identical symmetric matrix is
     deterministic per platform.
     """
@@ -194,9 +193,8 @@ def pca_fit(
     s, g = flat[:d], flat[d:].reshape(d, d)
     mean = s / n
     cov = g / n - np.outer(mean, mean)
-    if moment_dp is not None:
-        mean = np.round(mean, moment_dp)
-        cov = np.round(cov, moment_dp)
+    mean = np.round(mean, 9)
+    cov = np.round(cov, 9)
     if k > d:
         raise ValueError(f"pca_fit: k={k} exceeds dimension {d}")
     evals, evecs = np.linalg.eigh((cov + cov.T) / 2.0)

@@ -340,9 +340,7 @@ def pq_adc_topk(
     queries = _nonempty_vecs(queries, vec_col)
     cb = np.asarray(codebooks, dtype="float64")
     mm, kk, ds = cb.shape
-    q_pdf = _collect_query_side(
-        queries, id_col, vec_col, 65536, "pq_adc_topk"
-    )
+    q_pdf = _collect_query_side(queries, id_col, vec_col, "pq_adc_topk")
     q_ids = q_pdf["query_id"].to_numpy()
     q_mat = _raw_matrix(q_pdf["qv"]).reshape(len(q_pdf), mm, ds)
     # |Q| x m x ksub fixed-point LUTs, built once on the driver and
@@ -422,7 +420,6 @@ def ivfpq_train(
     m: int = 4,
     ksub: int = 16,
     pq_iters: int = 2,
-    quantize_dp: int = 7,
     return_residuals: bool = False,
     init_vecs: np.ndarray | None = None,
 ) -> tuple[np.ndarray, np.ndarray] | tuple[np.ndarray, np.ndarray, DataFrame]:
@@ -459,14 +456,17 @@ def ivfpq_train(
     from .similarity import kmeans_centroids
 
     corpus = _nonempty_vecs(corpus, vec_col)
+    # both quantizers train under the 7dp quantized-Lloyd contract, so
+    # the index is the same at any partitioning
+    dp = 7
     coarse = kmeans_centroids(
         corpus, id_col, vec_col, k=n_centroids, n_iters=coarse_iters,
-        quantize_dp=quantize_dp, init_vecs=init_vecs,
+        quantize_dp=dp, init_vecs=init_vecs,
     )
     residuals = checkpoint(_ivfpq_residuals(corpus, coarse, id_col, vec_col))
     codebooks = pq_train(
         residuals, id_col, "residual", m=m, ksub=ksub, n_iters=pq_iters,
-        quantize_dp=quantize_dp,
+        quantize_dp=dp,
     )
     if return_residuals:
         return coarse, codebooks, residuals
@@ -590,9 +590,7 @@ def ivfpq_topk(
         as_double(vec_col).alias("cv"),
     ).mapInPandas(enc, "cell int, neighbor_id long, codes array<int>")
 
-    q_pdf = _collect_query_side(
-        queries, id_col, vec_col, 65536, "ivfpq_topk"
-    )
+    q_pdf = _collect_query_side(queries, id_col, vec_col, "ivfpq_topk")
     q_ids = q_pdf["query_id"].to_numpy()
     q_raw = np.array(list(q_pdf["qv"]), dtype=np.float64)
     norms = np.linalg.norm(q_raw, axis=1, keepdims=True)
@@ -831,14 +829,13 @@ def opq_cross_moment(
     codebooks: np.ndarray,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    moment_dp: int | None = 9,
 ) -> np.ndarray:
     """The Procrustes input: A = (1/n)·Σ x·ŷᵀ (d×d), where ŷ is the PQ
     reconstruction of the ROTATED vector R·x under the current
     codebooks. Accumulated DISTRIBUTEDLY (per-batch d×d partials →
     per-row-index zip_with fold, the pca_fit shape — the driver
     receives d² numbers however many partitions), then normalized and
-    rounded to ``moment_dp``: the 1/n-normalized entries are
+    rounded to 9 decimals: the 1/n-normalized entries are
     O(1)-magnitude at any corpus size, so distributed summation noise
     vanishes below the quantum and the matrix the SVD consumes is
     partitioning-invariant (the quantized-moment contract pca_fit
@@ -894,9 +891,7 @@ def opq_cross_moment(
     if n_total == 0:
         raise ValueError("opq_cross_moment: empty corpus")
     a /= n_total
-    if moment_dp is not None:
-        a = np.round(a, moment_dp)
-    return a
+    return np.round(a, 9)
 
 
 def opq_train(

@@ -135,18 +135,18 @@ def bm25_scores(
     id_col: str,
     text_col: str,
     query_terms: list[str],
-    k1: float = 1.2,
-    b: float = 0.75,
     tf: DataFrame | None = None,
 ) -> DataFrame:
     """BM25 relevance of every document against a bag of query terms.
 
     ``idf = ln(1 + (N - df + 0.5) / (df + 0.5))`` (Robertson-Spärck
     Jones, always positive), ``score = Σ idf * tf(k1+1) /
-    (tf + k1(1 - b + b·len/avglen))``. Documents matching no query term
+    (tf + k1(1 - b + b·len/avglen))`` at the standard k1 = 1.2,
+    b = 0.75. Documents matching no query term
     are omitted (a LEFT join + zero-fill would keep them; retrieval
     semantics drop them). ``tf=``: precomputed census, see
     ``tfidf_top_terms``."""
+    k1, b = 1.2, 0.75
     if tf is None:
         tf = term_frequencies(df, id_col, text_col)
     doclen = tf.groupBy(id_col).agg(F.sum("tf").cast("double").alias("dl"))
@@ -322,7 +322,6 @@ def train_bigram_lm(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    add_k: float = LM_ADD_K,
     grams: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame, int]:
     """Add-k-smoothed bigram LM over the corpus — the KenLM-filtering
@@ -333,8 +332,8 @@ def train_bigram_lm(
     Returns ``(lm, ctx, vocab_size)``:
 
     - ``lm``:  (bigram, w1, logp) with
-      ``logp = round(ln((c12 + k) / (c1 + k·V)), 4)`` — rounded so any
-      engine's libm agrees on the stored value;
+      ``logp = round(ln((c12 + k) / (c1 + k·V)), 4)``, k = ``LM_ADD_K``
+      — rounded so any engine's libm agrees on the stored value;
     - ``ctx``: (w1, c1) context counts, for scoring bigrams the model
       has never seen (held-out docs);
     - ``vocab_size``: the distinct predicted-token count, collected as
@@ -370,8 +369,8 @@ def train_bigram_lm(
         "w1",
         F.round(
             F.log(
-                (F.col("c12") + F.lit(add_k))
-                / (F.col("c1") + F.lit(add_k) * F.lit(vocab_size))
+                (F.col("c12") + F.lit(LM_ADD_K))
+                / (F.col("c1") + F.lit(LM_ADD_K) * F.lit(vocab_size))
             ),
             4,
         ).alias("logp"),
@@ -389,8 +388,7 @@ def lm_perplexity(
     backoff: bool = True,
     grams: DataFrame | None = None,
 ) -> DataFrame:
-    """Per-document perplexity under a bigram LM trained with the
-    default ``LM_ADD_K``:
+    """Per-document perplexity under a ``train_bigram_lm`` model:
     ``ppl = round(exp(-mean(logp)), 4)`` over the doc's BOS-padded
     bigrams. The standard CCNet quality signal — low perplexity ≈
     fluent text, extreme values flag junk.
@@ -570,7 +568,9 @@ def moore_lewis_scores(
 
 
 # Kneser-Ney absolute discount D and the add-k of its continuation
-# distribution: training and backoff scoring must use the same pair
+# distribution: training and backoff scoring must use the same pair. D
+# stays in (0, 1): D >= 1 would zero or negate singleton-bigram
+# probabilities
 KN_DISCOUNT, KN_CONT_K = 0.75, 0.5
 
 
@@ -578,8 +578,6 @@ def train_bigram_lm_kn(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    discount: float = KN_DISCOUNT,
-    cont_k: float = KN_CONT_K,
     grams: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame, int, int]:
     """Interpolated Kneser-Ney bigram LM (Kneser & Ney 1995; the
@@ -592,10 +590,11 @@ def train_bigram_lm_kn(
         P(w2|w1)  = (c12 − D)/c1  +  (D·N1+(w1·)/c1) · Pcont(w2)
         Pcont(w2) = (N1+(·w2) + k) / (T + k·V)
 
-    with D the absolute discount, N1+(w1·) the distinct followers of
-    w1, N1+(·w2) the distinct left-contexts of w2, T the total bigram
-    TYPE count and V the vocabulary — Pcont is add-k smoothed so unseen
-    words keep mass and every score stays finite. Per seen context the
+    with D = ``KN_DISCOUNT`` the absolute discount, N1+(w1·) the
+    distinct followers of w1, N1+(·w2) the distinct left-contexts of
+    w2, T the total bigram TYPE count and V the vocabulary — Pcont is
+    add-k smoothed (k = ``KN_CONT_K``) so unseen words keep mass and
+    every score stays finite. Per seen context the
     distribution sums to exactly 1 (the discounted mass D·N1+(w1·)/c1
     is redistributed through Pcont, which itself sums to 1 over the
     vocabulary) — property-pinned in tests.
@@ -615,12 +614,6 @@ def train_bigram_lm_kn(
 
     ``grams``: share a materialized (id, bigram) stream with scoring
     (see train_bigram_lm)."""
-    if not 0.0 < discount < 1.0:
-        # D >= 1 would zero or negate singleton-bigram probabilities →
-        # ln() of <= 0; a config error, not a row to drop
-        raise ValueError(
-            f"train_bigram_lm_kn: discount must be in (0, 1), got {discount}"
-        )
     if grams is None:
         grams = doc_bigrams(df, id_col, text_col)
     bg = grams.groupBy("bigram").agg(
@@ -646,9 +639,9 @@ def train_bigram_lm_kn(
         "w1",
         F.round(
             F.log(
-                (F.col("c12") - F.lit(discount)) / F.col("c1")
-                + F.lit(discount) * F.col("n1f") / F.col("c1")
-                * _kn_pcont(F.col("n1b"), n_types, vocab_size, cont_k)
+                (F.col("c12") - F.lit(KN_DISCOUNT)) / F.col("c1")
+                + F.lit(KN_DISCOUNT) * F.col("n1f") / F.col("c1")
+                * _kn_pcont(F.col("n1b"), n_types, vocab_size)
             ),
             4,
         ).alias("logp"),
@@ -656,12 +649,12 @@ def train_bigram_lm_kn(
     return lm, ctx, cont, n_types, vocab_size
 
 
-def _kn_pcont(n1b, n_types: int, vocab_size: int, cont_k: float):
+def _kn_pcont(n1b, n_types: int, vocab_size: int):
     """Add-k-smoothed continuation probability — one expression tree,
     shared by train and backoff scoring so both engines (and both call
     sites) evaluate the same double operations in the same order."""
-    return (n1b + F.lit(cont_k)) / (
-        F.lit(float(n_types)) + F.lit(cont_k) * F.lit(float(vocab_size))
+    return (n1b + F.lit(KN_CONT_K)) / (
+        F.lit(float(n_types)) + F.lit(KN_CONT_K) * F.lit(float(vocab_size))
     )
 
 
@@ -679,8 +672,8 @@ def lm_perplexity_kn(
 ) -> DataFrame:
     """Per-document perplexity under a Kneser-Ney bigram LM — the same
     fixed-point doc mean as lm_perplexity, with KN's three-tier unseen
-    handling instead of the add-k floor, at the default ``KN_DISCOUNT``
-    and ``KN_CONT_K`` the model was trained with:
+    handling instead of the add-k floor, at the ``KN_DISCOUNT`` and
+    ``KN_CONT_K`` the model was trained with:
 
     - unseen bigram, seen context:  P = (D·N1+(w1·)/c1) · Pcont(w2)
       (the interpolation term alone — exactly the mass training set
@@ -698,7 +691,7 @@ def lm_perplexity_kn(
     scored = grams.join(lm.select("bigram", "logp"), "bigram", "left")
     if backoff:
         pc = _kn_pcont(
-            F.coalesce("n1b", F.lit(0)), n_bigram_types, vocab_size, KN_CONT_K
+            F.coalesce("n1b", F.lit(0)), n_bigram_types, vocab_size
         )
         lam = F.when(
             F.col("c1").isNotNull(),

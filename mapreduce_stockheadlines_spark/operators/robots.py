@@ -173,21 +173,21 @@ def filter_robots_disallowed(
     rules: DataFrame,
     url_col: str = "url",
     domain_col: str = "domain",
-    agent: str = "engine-bot",
 ) -> DataFrame:
-    """Drop frontier URLs the publisher's robots.txt disallows for
-    ``agent``: select the most specific agent group per domain (exact
-    ``agent`` match beats ``*``; domains with neither — or with no
-    robots at all — allow everything), then longest-matching rule wins
-    with Allow winning length ties (the Google/RFC 9309 tiebreak; rule
-    length = the compiled matcher's literal). A rule matches per its
-    kind: ``prefix`` → path starts with lit, ``suffix`` → ends with
-    (a ``*LIT$`` pattern), ``contains`` → contains (``*LIT``).
+    """Drop frontier URLs the publisher's robots.txt disallows for this
+    crawler's agent ``engine-bot``: select the most specific agent group
+    per domain (exact agent match beats ``*``; domains with neither — or
+    with no robots at all — allow everything), then longest-matching
+    rule wins with Allow winning length ties (the Google/RFC 9309
+    tiebreak; rule length = the compiled matcher's literal). A rule
+    matches per its kind: ``prefix`` → path starts with lit, ``suffix``
+    → ends with (a ``*LIT$`` pattern), ``contains`` → contains
+    (``*LIT``).
 
     One frontier⋈rules equi-join on the domain + a per-URL max_by —
     rules-per-domain is file-bounded, so the fan-out per URL is the
     rule count, never corpus-sized."""
-    agent = agent.lower()
+    agent = "engine-bot"  # lowercase, as parse_robots stores agents
     r = rules.filter(
         (F.col("agent") == agent) | (F.col("agent") == "*")
     ).withColumn("_exact", (F.col("agent") == agent).cast("int"))

@@ -87,24 +87,35 @@ def _head_vecs(df: DataFrame, id_col: str, vec_col: str, n: int) -> pd.Series:
 
 
 def _collect_query_side(
-    queries: DataFrame, id_col: str, vec_col: str, max_query_rows: int, op: str
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    op: str,
+    max_query_rows: int | None = None,
 ) -> pd.DataFrame:
     """Driver-side collect of the query set, bounded. The query side plays
     the role of a broadcast build side and must be semantically small; the
     limit(max+1) bounds the collect itself so a mistakenly-huge query
-    DataFrame fails with a clear error instead of a driver OOM."""
+    DataFrame fails with a clear error instead of a driver OOM.
+    ``max_query_rows``: the caller's own bound, named in the error; without
+    one the bound is a fixed 65536 rows."""
+    limit = 65536 if max_query_rows is None else max_query_rows
     q_pdf = (
         queries.select(
             F.col(id_col).cast("long").alias("query_id"),
             as_double(vec_col).alias("qv"),
         )
-        .limit(max_query_rows + 1)
+        .limit(limit + 1)
         .toPandas()
     )
-    if len(q_pdf) > max_query_rows:
+    if len(q_pdf) > limit:
+        bound = (
+            f"{limit} rows" if max_query_rows is None
+            else f"max_query_rows={limit}"
+        )
         raise ValueError(
-            f"{op}: query side exceeds max_query_rows={max_query_rows}; it is "
-            "collected to the driver and broadcast like a join build side. "
+            f"{op}: query side exceeds {bound}; it is collected to the "
+            "driver and broadcast like a join build side. "
             "Reduce the query set."
         )
     return q_pdf.sort_values("query_id")
@@ -130,7 +141,9 @@ def cosine_topk(
     """
     corpus = _nonempty_vecs(corpus, vec_col)
     queries = _nonempty_vecs(queries, vec_col)
-    q_pdf = _collect_query_side(queries, id_col, vec_col, max_query_rows, "cosine_topk")
+    q_pdf = _collect_query_side(
+        queries, id_col, vec_col, "cosine_topk", max_query_rows
+    )
     q_ids = q_pdf["query_id"].to_numpy()
     q_mat = _to_matrix(q_pdf["qv"])
     bq = corpus.sparkSession.sparkContext.broadcast((q_ids, q_mat))
@@ -637,8 +650,8 @@ def ivf_topk(
     ).mapInPandas(assign, "cluster int, neighbor_id long, cv array<double>")
 
     q_pdf = _collect_query_side(
-        _nonempty_vecs(queries, vec_col), id_col, vec_col, max_query_rows,
-        "ivf_topk",
+        _nonempty_vecs(queries, vec_col), id_col, vec_col, "ivf_topk",
+        max_query_rows,
     )
     q_ids = q_pdf["query_id"].to_numpy()
     q_mat = _to_matrix(q_pdf["qv"])

@@ -764,10 +764,9 @@ def ngram_contamination(
     id_col: str,
     text_col: str,
     bench_text_col: str | None = None,
-    n: int = 3,
 ) -> DataFrame:
     """Benchmark-contamination check: per document, the fraction of its
-    DISTINCT word n-grams that also occur anywhere in a benchmark corpus
+    DISTINCT word 3-grams that also occur anywhere in a benchmark corpus
     (the standard decontamination signal for pretraining data — docs with
     high containment of an eval set's n-grams get dropped).
 
@@ -779,6 +778,7 @@ def ngram_contamination(
     by document length; keys are (doc, gram) → no corpus-level skew.
     """
     bench_text_col = bench_text_col or text_col
+    n = 3  # the gram size decontamination reports quote
     bench_grams = (
         benchmark.select(
             F.explode(

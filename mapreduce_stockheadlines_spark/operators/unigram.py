@@ -103,8 +103,6 @@ def train_unigram(
     df: DataFrame,
     text_col: str,
     vocab_size: int = 32,
-    n_rounds: int = 2,
-    max_piece_len: int = 4,
     seed_size: int = 512,
     max_word_types: int = 1 << 16,
     em: str = "hard",
@@ -117,7 +115,9 @@ def train_unigram(
     census, like ``bpe.train_bpe``.
 
     ``vocab_size`` counts MULTI-char pieces — every single character
-    survives unconditionally (coverage guarantee).
+    survives unconditionally (coverage guarantee). Training runs 2 EM
+    rounds over pieces of at most 4 characters, the sizes the x28
+    oracle re-derives.
 
     ``em="hard"`` (default) counts pieces along each word's Viterbi
     path — every decision integer/string-deterministic, which is what
@@ -136,8 +136,8 @@ def train_unigram(
     trainers. The x28 oracle re-derives it cross-ALGORITHM: DuckDB
     enumerates all segmentations per census word and folds
     exp(score/1e6) directly, vs this forward-backward lattice."""
-    if vocab_size < 1 or n_rounds < 1 or max_piece_len < 1:
-        raise ValueError("train_unigram: sizes/rounds must be >= 1")
+    if vocab_size < 1:
+        raise ValueError("train_unigram: vocab_size must be >= 1")
     if em not in ("hard", "soft"):
         raise ValueError(f"train_unigram: em must be hard|soft, got {em!r}")
     if count_dp is not None and em != "soft":
@@ -148,8 +148,8 @@ def train_unigram(
         rows = word_census(df, text_col, max_word_types).collect()
         census = [(r["word"], int(r["freq"])) for r in rows]
     return _train_unigram_census(
-        census, vocab_size, n_rounds, max_piece_len, seed_size, em=em,
-        count_dp=count_dp,
+        census, vocab_size, n_rounds=2, max_piece_len=4,
+        seed_size=seed_size, em=em, count_dp=count_dp,
     )
 
 

@@ -1292,7 +1292,7 @@ def x30_remove_dup_windows(spark: SparkSession, sf: str) -> DataFrame:
         .alias("text"),
     )
     return D.remove_dup_windows(
-        docs, "doc_id", "text", window_tokens=8, min_doc_occurrences=2
+        docs, "doc_id", "text", window_tokens=8
     ).orderBy("doc_id")
 
 
@@ -1358,7 +1358,7 @@ def x09_repetition_stats(spark: SparkSession, sf: str) -> DataFrame:
     docs = parallel_table(spark, sf, "documents")
     rep = TS.repetition_stats(docs, "doc_id", "text", ngram_ns=(1, 2, 3))
     cont = TS.ngram_contamination(
-        docs, docs.filter(F.col("doc_id") % 100 == 0), "doc_id", "text", n=3
+        docs, docs.filter(F.col("doc_id") % 100 == 0), "doc_id", "text"
     ).withColumn("mode", F.lit("3gram"))
     return rep.join(cont, ["doc_id", "mode"], "left").orderBy(
         "doc_id", "mode"
@@ -2919,7 +2919,6 @@ def x24_url_curation(spark: SparkSession, sf: str) -> DataFrame:
         RB.parse_robots(robots_pub),
         url_col="rurl",
         domain_col="rdomain",
-        agent="engine-bot",
     ).select("doc_id", F.lit(1).alias("robots_allowed"))
     return (
         flagged
@@ -3530,7 +3529,7 @@ def x27_quantize_embeddings(spark: SparkSession, sf: str) -> DataFrame:
 
     Round-7 zero-slot promotion: ``pca_fit``'s QUANTIZED MOMENTS — the
     exact (mean, covariance) pair the driver eigensolve consumes
-    (moment_dp=9: derived O(1)-magnitude moments rounded so distributed
+    (derived O(1)-magnitude moments rounded to 9 decimals so distributed
     partial-fold order noise vanishes below the quantum) — are now
     cross-engine pinned. Each row carries its residue dimension's mean
     (``pca_mean_i``), variance (``pca_var_i``), and one planted
@@ -3630,9 +3629,7 @@ def x27_quantize_embeddings(spark: SparkSession, sf: str) -> DataFrame:
         # (j = (17·m+3) mod 64 — never m, and a bijection over
         # columns). Runs INSIDE this stage group: it needs cbooks.
         with _stage("opq_moment"):
-            a_mom = PQO.opq_cross_moment(
-                emb, np.eye(len(q0)), cbooks, moment_dp=9
-            )
+            a_mom = PQO.opq_cross_moment(emb, np.eye(len(q0)), cbooks)
             om_rows = [
                 (
                     m,
@@ -3729,7 +3726,7 @@ def x27_quantize_embeddings(spark: SparkSession, sf: str) -> DataFrame:
         # this stage was 4.1 of x27's 12.8 s)
         coarse, rcb, res = PQO.ivfpq_train(
             emb, n_centroids=4, coarse_iters=2, m=4, ksub=4, pq_iters=2,
-            quantize_dp=7, return_residuals=True, init_vecs=head,
+            return_residuals=True, init_vecs=head,
         )
         # keep_cols passes `cell` through the encode batch, so the
         # per-row cell and the residual codes come from ONE scan of the
@@ -3767,7 +3764,7 @@ def x27_quantize_embeddings(spark: SparkSession, sf: str) -> DataFrame:
     @_stage("pca_moments")
     def _pca_stage():
         mean, cov, _comps = EB.pca_fit(
-            emb, "embedding", k=4, moment_dp=9, return_moments=True
+            emb, "embedding", k=4, return_moments=True
         )
         pm_rows = [
             (
@@ -4348,7 +4345,7 @@ def x28_lm_perplexity(spark: SparkSession, sf: str) -> DataFrame:
     def _addk_ml_stage():
         with _stage("addk_kn_lm"):
             lm, ctx, v = RV.train_bigram_lm(
-                docs, "doc_id", "text", add_k=0.5, grams=grams
+                docs, "doc_id", "text", grams=grams
             )
             ppl = RV.lm_perplexity(
                 docs, lm, ctx, v, "doc_id", "text", backoff=False, grams=grams
@@ -4389,7 +4386,7 @@ def x28_lm_perplexity(spark: SparkSession, sf: str) -> DataFrame:
     @_stage("kn_lm")
     def _kn_stage():
         knlm, knctx, kncont, knt, knv = RV.train_bigram_lm_kn(
-            docs, "doc_id", "text", discount=0.75, cont_k=0.5, grams=grams
+            docs, "doc_id", "text", grams=grams
         )
         knppl = RV.lm_perplexity_kn(
             docs, knlm, knctx, kncont, knt, knv, "doc_id", "text",
@@ -4507,8 +4504,8 @@ def x28_lm_perplexity(spark: SparkSession, sf: str) -> DataFrame:
         )
     with _stage("unigram_em"):
         uni = UG.train_unigram(
-            docs, "text", vocab_size=12, n_rounds=2, max_piece_len=4,
-            seed_size=64, max_word_types=4096, census=shared_census,
+            docs, "text", vocab_size=12, seed_size=64, max_word_types=4096,
+            census=shared_census,
         )
         ufp = UG.unigram_model_fp8(uni)
         # round 9: the TRUE soft-EM trainer under the gate too — expected
@@ -4519,8 +4516,8 @@ def x28_lm_perplexity(spark: SparkSession, sf: str) -> DataFrame:
         # lattice (uni_soft_fp8 breaks if any expected count, floor, prune
         # or M-step diverges)
         uni_soft = UG.train_unigram(
-            docs, "text", vocab_size=12, n_rounds=2, max_piece_len=4,
-            seed_size=64, max_word_types=4096, em="soft", count_dp=4,
+            docs, "text", vocab_size=12, seed_size=64, max_word_types=4096,
+            em="soft", count_dp=4,
             census=shared_census,
         )
         usfp = UG.unigram_model_fp8(uni_soft)

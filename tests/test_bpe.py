@@ -490,8 +490,7 @@ def test_x28_fertility_columns_match_census_recompute(spark, sf_dir):
     wp_vocab, _m, _a = WP.train_wordpiece(docs, "text", 8, census=census)
     wset = set(wp_vocab)
     uni = UG.train_unigram(
-        docs, "text", vocab_size=12, n_rounds=2, max_piece_len=4,
-        seed_size=64, census=census,
+        docs, "text", vocab_size=12, seed_size=64, census=census,
     )
     mpl = max((len(pc) for pc in uni), default=1)
     tot = sum(f for _, f in census)

@@ -1961,7 +1961,7 @@ def test_remove_dup_windows_duckdb_pin(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id int, text string")
     out = D.remove_dup_windows(
-        df, "doc_id", "text", window_tokens=4, min_doc_occurrences=2
+        df, "doc_id", "text", window_tokens=4
     )
     got = {
         r.doc_id: (r.text, r.n_tokens, r.n_removed_tokens)

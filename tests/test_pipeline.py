@@ -135,7 +135,7 @@ def test_pipeline_cli_decontaminate(spark, tmp_path):
     test = spark.read.parquet(f"{out}/test")
     # decontamination holds: no surviving train doc has >15% of its
     # distinct 3-grams inside the held-out set
-    cont = TS.ngram_contamination(train, test, "doc_id", "text", n=3)
+    cont = TS.ngram_contamination(train, test, "doc_id", "text")
     assert cont.filter(F.col("containment") > 0.15).count() == 0
     assert train.count() > 0 and test.count() > 0
 
@@ -308,7 +308,7 @@ def _curate_pinned_output(spark):
         strip_boilerplate=True,
     )
     train, test = SA.train_test_split(out, "doc_id", 0.2)
-    cont = TS.ngram_contamination(train, test, "doc_id", "text", n=3)
+    cont = TS.ngram_contamination(train, test, "doc_id", "text")
     dirty = cont.filter(F.col("containment") > 0.5).select("doc_id")
     train = train.join(dirty, "doc_id", "left_anti")
     return train, test

@@ -396,7 +396,7 @@ def test_opq_cross_moment_matches_numpy_reference(spark):
     df, x = _correlated(spark, n=30)
     cb = PQ.pq_train(df, m=4, ksub=4, n_iters=1)
     rot = np.eye(8)
-    got = PQ.opq_cross_moment(df, rot, cb, moment_dp=9)
+    got = PQ.opq_cross_moment(df, rot, cb)
     xr = x.reshape(len(x), 4, 2)
     yhat = np.empty_like(xr)
     for j in range(4):

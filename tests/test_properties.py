@@ -445,7 +445,7 @@ def test_lm_perplexity_recomputed_in_python(spark, texts):
 
     rows = [(i, t) for i, t in enumerate(texts)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    lm, ctx, v = RV.train_bigram_lm(df, "doc_id", "text", add_k=0.5)
+    lm, ctx, v = RV.train_bigram_lm(df, "doc_id", "text")
     got = {
         r.doc_id: r
         for r in RV.lm_perplexity(df, lm, ctx, v, "doc_id", "text").collect()
@@ -529,7 +529,7 @@ def test_remove_dup_windows_matches_brute_force(spark, texts):
     got = {
         r.doc_id: (r.text, r.n_tokens, r.n_removed_tokens)
         for r in remove_dup_windows(
-            df, "doc_id", "text", window_tokens=3, min_doc_occurrences=2
+            df, "doc_id", "text", window_tokens=3
         ).collect()
     }
     want = dict(enumerate(_brute_remove(texts, 3, 2)))

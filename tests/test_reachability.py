@@ -331,7 +331,8 @@ _OPTION_SCOPE = ("operators.", "functions.", "sources.", "jobs.", "session")
 # Parameters that bind a column of the caller's frame name data, not a
 # tuning value.
 _COLUMN_SUFFIXES = ("_col", "_cols", "_alias")
-_COLUMN_NAMES = {"alias", "left_ts", "right_ts"}
+_COLUMN_NAMES = {"alias", "left_ts", "right_ts", "left_id", "right_id",
+                 "left_text", "right_text"}
 
 # "module.function(param)" -> reason. Only values that must equal one a
 # caller sets on a paired operator.
@@ -349,40 +350,77 @@ ALLOWED_OPTIONS = {
 }
 
 
+_NO_VALUE = object()
+
+
+def _literal(node: ast.AST, consts: dict) -> object:
+    """The value of a literal or of a module constant bound to one,
+    else ``_NO_VALUE``."""
+    if isinstance(node, ast.Name):
+        return consts.get(node.id, _NO_VALUE)
+    try:
+        return ast.literal_eval(node)
+    except (ValueError, TypeError):
+        return _NO_VALUE
+
+
+def _constants(m: _Module) -> dict[str, object]:
+    """Module-level names bound to literals (``K = 0.5``, ``A, B = 1, 2``)."""
+    out = {}
+    for node in m.tree.body:
+        if not isinstance(node, ast.Assign) or len(node.targets) != 1:
+            continue
+        t, v = node.targets[0], node.value
+        pairs = [(t, v)]
+        if isinstance(t, ast.Tuple) and isinstance(v, ast.Tuple):
+            pairs = list(zip(t.elts, v.elts))
+        for name, value in pairs:
+            val = _literal(value, {})
+            if isinstance(name, ast.Name) and val is not _NO_VALUE:
+                out[name.id] = val
+    return out
+
+
 def _options(mods: dict[str, _Module]) -> dict[str, tuple]:
     """"module.function(param)" -> (module, function, param, positional
-    index or None for keyword-only) for every defaulted parameter in
-    scope."""
+    index or None for keyword-only, default value or ``_NO_VALUE`` when
+    it is no literal) for every defaulted parameter in scope."""
     out = {}
     for name, m in mods.items():
         rel = name[len(PKG) + 1:]
         if not m.in_package or not rel.startswith(_OPTION_SCOPE):
             continue
+        consts = _constants(m)
         for fn, node in m.defs.items():
             if fn.startswith("_") or isinstance(node, ast.ClassDef):
                 continue
             a = node.args
             pos = a.posonlyargs + a.args
             first = len(pos) - len(a.defaults)
-            params = [(p.arg, i) for i, p in enumerate(pos) if i >= first]
-            params += [(p.arg, None) for p, d in
+            params = [(p.arg, i, a.defaults[i - first])
+                      for i, p in enumerate(pos) if i >= first]
+            params += [(p.arg, None, d) for p, d in
                        zip(a.kwonlyargs, a.kw_defaults) if d is not None]
-            for p, i in params:
+            for p, i, d in params:
                 if not (p.endswith(_COLUMN_SUFFIXES) or p in _COLUMN_NAMES):
-                    out[f"{rel}.{fn}({p})"] = (name, fn, p, i)
+                    out[f"{rel}.{fn}({p})"] = (
+                        name, fn, p, i, _literal(d, consts)
+                    )
     return out
 
 
 def _unset(mods: dict[str, _Module]) -> list[str]:
     """Options no call in the package, scripts, benchmarks or tests
     passes, positionally or by keyword (``*args``/``**kwargs`` count as
-    passing every one). A call through a bare name the imports do not
-    bind (a local unpacked from a helper that returns imported
-    functions) counts for every public function of that name."""
+    passing every one). An argument that is a literal equal to the
+    default repeats it and sets nothing. A call through a bare name the
+    imports do not bind (a local unpacked from a helper that returns
+    imported functions) counts for every public function of that
+    name."""
     graph = _Graph(mods)
     opts = _options(mods)
     by_name: dict[str, set[tuple[str, str]]] = {}
-    for mod, fn, _, _ in opts.values():
+    for mod, fn, _, _, _ in opts.values():
         by_name.setdefault(fn, set()).add((mod, fn))
     calls: dict[tuple[str, str], list[ast.Call]] = {}
     for m in mods.values():
@@ -404,15 +442,24 @@ def _unset(mods: dict[str, _Module]) -> list[str]:
                 for t in targets:
                     calls.setdefault(t, []).append(n)
 
-    def passes(c: ast.Call, p: str, i: int | None) -> bool:
-        if any(k.arg in (p, None) for k in c.keywords):
-            return True
-        star = any(isinstance(a, ast.Starred) for a in c.args)
-        return i is not None and (star or len(c.args) > i)
+    def sets(arg: ast.AST, default: object) -> bool:
+        # type too: 1 == 1.0 == True, but each selects a different value
+        val = _literal(arg, {})
+        return val is _NO_VALUE or default is _NO_VALUE or (
+            type(val), val) != (type(default), default)
+
+    def passes(c: ast.Call, p: str, i: int | None, default: object) -> bool:
+        for k in c.keywords:
+            if k.arg is None or (k.arg == p and sets(k.value, default)):
+                return True
+        if i is None:
+            return False
+        star = any(isinstance(a, ast.Starred) for a in c.args[: i + 1])
+        return star or (len(c.args) > i and sets(c.args[i], default))
 
     return sorted(
-        opt for opt, (mod, fn, p, i) in opts.items()
-        if not any(passes(c, p, i) for c in calls.get((mod, fn), ()))
+        opt for opt, (mod, fn, p, i, d) in opts.items()
+        if not any(passes(c, p, i, d) for c in calls.get((mod, fn), ()))
     )
 
 

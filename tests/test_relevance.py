@@ -43,7 +43,7 @@ def test_tfidf_tie_broken_by_term_asc(spark):
 
 def test_bm25_hand_values(spark):
     out = R.bm25_scores(
-        tiny_docs(spark), "doc_id", "text", ["cherry", "banana"], k1=1.2, b=0.75
+        tiny_docs(spark), "doc_id", "text", ["cherry", "banana"]
     )
     rows = {r.doc_id: r for r in out.collect()}
     assert set(rows) == {0, 1, 2}  # doc 0 matches banana only
@@ -123,7 +123,7 @@ def test_ngram_contamination_values(spark):
     out = {
         r.doc_id: r
         for r in TS.ngram_contamination(
-            docs, bench, "doc_id", "text", n=3
+            docs, bench, "doc_id", "text"
         ).collect()
     }
     # doc 0 grams: 5 distinct; bench grams: {the quick brown, quick brown fox,
@@ -139,7 +139,7 @@ def test_ngram_contamination_duplicate_grams_counted_once(spark):
 
     docs = spark.createDataFrame([(0, "a b c a b c a b c")], ["doc_id", "text"])
     bench = spark.createDataFrame([(1, "a b c")], ["q_id", "text"])
-    r = TS.ngram_contamination(docs, bench, "doc_id", "text", n=3).first()
+    r = TS.ngram_contamination(docs, bench, "doc_id", "text").first()
     # distinct 3-grams of doc 0: {a b c, b c a, c a b} — "a b c" repeats
     assert r.n_distinct_grams == 3
     assert r.n_contaminated == 1
@@ -224,7 +224,7 @@ def test_bigram_lm_hand_values(spark):
     docs = spark.createDataFrame(
         [(0, "a b"), (1, "a b a")], ["doc_id", "text"]
     )
-    lm, ctx, v = R.train_bigram_lm(docs, "doc_id", "text", add_k=0.5)
+    lm, ctx, v = R.train_bigram_lm(docs, "doc_id", "text")
     # bigrams: doc0: <s> a, a b; doc1: <s> a, a b, b a
     # c12: '<s> a'=2, 'a b'=2, 'b a'=1; c1: <s>=2, a=2, b=1; V={a,b}=2
     assert v == 2
@@ -250,7 +250,7 @@ def test_lm_perplexity_unseen_bigram_backoff(spark):
     """Held-out doc: unseen bigram under a seen context uses the smoothed
     floor k/(c1+kV); an unseen context falls to the uniform 1/V floor."""
     train = spark.createDataFrame([(0, "a b")], ["doc_id", "text"])
-    lm, ctx, v = R.train_bigram_lm(train, "doc_id", "text", add_k=0.5)
+    lm, ctx, v = R.train_bigram_lm(train, "doc_id", "text")
     held = spark.createDataFrame([(9, "a a zz")], ["doc_id", "text"])
     out = R.lm_perplexity(held, lm, ctx, v, "doc_id", "text").collect()[0]
     assert v == 2
@@ -308,7 +308,7 @@ def test_lm_perplexity_matches_duckdb_on_documents(spark, sf_dir):
     """Full cross-engine pin of train + self-score over the real
     documents table: DuckDB re-derives the entire model."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    lm, ctx, v = R.train_bigram_lm(docs, "doc_id", "text", add_k=0.5)
+    lm, ctx, v = R.train_bigram_lm(docs, "doc_id", "text")
     got = [
         (r.doc_id, r.n_bigrams, r.avg_logp, r.ppl)
         for r in R.lm_perplexity(docs, lm, ctx, v, "doc_id", "text")
@@ -482,9 +482,7 @@ def test_kn_bigram_lm_hand_values(spark):
     docs = spark.createDataFrame(
         [(0, "a b"), (1, "a b a")], ["doc_id", "text"]
     )
-    lm, ctx, cont, t, v = R.train_bigram_lm_kn(
-        docs, "doc_id", "text", discount=0.75, cont_k=0.5
-    )
+    lm, ctx, cont, t, v = R.train_bigram_lm_kn(docs, "doc_id", "text")
     assert (t, v) == (3, 2)
     assert {r.w2: r.n1b for r in cont.collect()} == {"a": 2, "b": 1}
     assert {r.w1: (r.c1, r.n1f) for r in ctx.collect()} == {

@@ -124,9 +124,7 @@ def test_filter_robots_disallowed_semantics(spark):
     )
     kept = sorted(
         r.doc_id
-        for r in filter_robots_disallowed(
-            urls, rules, agent="engine-bot"
-        ).collect()
+        for r in filter_robots_disallowed(urls, rules).collect()
     )
     assert kept == [2, 3, 5, 6, 7, 11, 12]
 
