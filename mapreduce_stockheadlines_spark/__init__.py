@@ -4,7 +4,7 @@ capabilities of the reference repo ``clayouuz/MapReduce_StockHeadlines``
 
 The reference implements two Hadoop MapReduce jobs (StockCount.java,
 WordCount.java); this engine covers that surface (SURVEY.md §2.1 O1-O18)
-plus the declared relational/streaming/LLM-pipeline query set
+plus the declared relational/LLM-pipeline query set
 (SURVEY.md §2.2-§2.3) on the DataFrame/SQL API, letting Catalyst pick
 physical strategies.
 """

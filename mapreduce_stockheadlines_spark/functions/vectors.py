@@ -28,6 +28,3 @@ def dot(a: Column, b: Column) -> Column:
 def l2_norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
 
-
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))

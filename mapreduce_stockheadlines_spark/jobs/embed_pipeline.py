@@ -106,10 +106,10 @@ def build_index(
 
 
 def save_centroids(spark: SparkSession, cent, out_dir: str) -> None:
-    """ONE writer for the centroid artifact (build AND refit go through
-    it — two hand-synced copies of the schema would let a future change
-    make them write incompatible artifacts that load_centroids masks
-    until serve time)."""
+    """ONE writer for the centroid artifact (the IVF and IVFPQ builds
+    both go through it — two hand-synced copies of the schema would let
+    a future change make them write incompatible artifacts that
+    load_centroids masks until serve time)."""
     rows = [(int(i), [float(x) for x in c]) for i, c in enumerate(cent)]
     spark.createDataFrame(rows, "cell int, centroid array<double>").write.mode(
         "overwrite"
@@ -207,7 +207,7 @@ def _drop_rotation(out_dir: str) -> None:
 
 def main(argv: list[str] | None = None) -> None:
     ap = argparse.ArgumentParser(description=__doc__)
-    ap.add_argument("mode", choices=["build", "search", "eval", "refit"])
+    ap.add_argument("mode", choices=["build", "search", "eval"])
     ap.add_argument("out_dir")
     ap.add_argument("--sf-dir", default=DEFAULT_SF_DIR)
     ap.add_argument("--sem-threshold", type=float, default=None,
@@ -249,13 +249,6 @@ def main(argv: list[str] | None = None) -> None:
                          "Not applicable to an OPQ flat-ADC index — "
                          "passing it there prints a loud notice instead "
                          "of being silently ignored")
-    ap.add_argument("--moments-dir", default=None,
-                    help="refit mode: versioned (cell, dim) moment "
-                         "artifact maintained by kmeans_ingest_sink "
-                         "AGAINST the currently-served centroids; after "
-                         "the refit, point the sink at a fresh artifact "
-                         "dir (one artifact generation per index "
-                         "generation)")
     args = ap.parse_args(argv)
     # None = "not explicitly set" (the OPQ-path notice keys on it);
     # every probing path gets the historical default of 4
@@ -263,45 +256,6 @@ def main(argv: list[str] | None = None) -> None:
 
     spark = get_spark("embed-pipeline")
     spark.sparkContext.setLogLevel("ERROR")
-
-    if args.mode == "refit":
-        # roll the serving index to its next Lloyd update from the
-        # streaming moment artifact — k x dim numbers, the stream is
-        # never re-read; the new centroids overwrite <out>/centroids so
-        # search/eval serve the rolled index immediately
-        from ..operators.similarity import kmeans_refit
-        from ..sources.versioned import read_table
-
-        if not args.moments_dir:
-            raise SystemExit("refit mode requires --moments-dir")
-        if _rotation_dir_exists(args.out_dir):
-            raise SystemExit(
-                "refit mode rolls coarse CENTROIDS; an OPQ index has "
-                "none — its codebooks live in the rotated space and a "
-                "kmeans refit does not apply. Rebuild with "
-                "--index-type opq (or maintain the codebooks via "
-                "pq_ingest_sink + pq.pq_refit over rotated vectors)."
-            )
-        if _codebooks_dir_exists(args.out_dir):
-            raise SystemExit(
-                "refit mode would roll the coarse centroids under an "
-                "IVFPQ index, leaving pq_codebooks trained on residuals "
-                "of the RETIRED centroids — serving would silently rank "
-                "with a mismatched index. Rebuild with --index-type "
-                "ivfpq instead (or maintain the codebooks themselves "
-                "via pq_ingest_sink + pq.pq_refit and rebuild the "
-                "coarse level offline)."
-            )
-        cent = load_centroids(spark, args.out_dir)
-        moments = read_table(spark, args.moments_dir).select(
-            "cell_id", "dim", "s_fp", "n"
-        )
-        new = kmeans_refit(moments, cent)
-        save_centroids(spark, new, args.out_dir)
-        moved = int((new != cent).any(axis=1).sum())
-        print(f"refit: {moved}/{len(new)} centroids moved -> "
-              f"{args.out_dir}/centroids")
-        return
 
     if args.mode == "build":
         emb = table(spark, args.sf_dir, "embeddings")
@@ -419,7 +373,7 @@ def main(argv: list[str] | None = None) -> None:
         # a persisted pq_codebooks directory marks an IVFPQ index: serve
         # the ADC path (the artifact is the source of truth — no flag to
         # fall out of sync with what build actually trained; build's ivf
-        # branch and refit mode both guard against it going stale)
+        # branch guards against it going stale)
         elif _codebooks_dir_exists(args.out_dir):
             cent = load_centroids(spark, args.out_dir)
             from ..operators import pq as PQO

@@ -145,8 +145,8 @@ def corpus_report(
     # rates above miss it: a long copied span inside otherwise original
     # docs moves neither exact_dup_frac nor MinHash similarity.
     # Always-on like the dup-window branch (one more curation signal
-    # over the same corpus, staged-chars gram build), but BOUNDED like
-    # the streaming sink: max_per_doc caps the index at 256 smallest
+    # over the same corpus, staged-chars gram build), but BOUNDED:
+    # max_per_doc caps the index at 256 smallest
     # hashes per doc (the uncapped index is the operator's documented
     # corpus-scale hazard) and the max_df census guards the self-join.
     wpairs = TS.winnow_neardup_pairs(
@@ -314,8 +314,7 @@ def corpus_drift_report(
     explaining the drift as ``js_top_<term>`` rows. Built on
     ``profile.token_divergence`` — two censuses, one vocab-sized
     full-outer join, tiny aggregates; summary semantics come from the
-    shared ``profile.divergence_summary`` (one definition for this
-    report AND the streaming circuit breaker). Pass ``div`` (a prebuilt
+    shared ``profile.divergence_summary``. Pass ``div`` (a prebuilt
     divergence table, e.g. from a persisted census) to skip
     re-censusing the corpora."""
     from ..operators.profile import divergence_summary, token_divergence
@@ -365,8 +364,8 @@ def main(argv: list[str] | None = None) -> None:
         "--save-census",
         default=None,
         help="also persist this corpus's token census (term, freq) as "
-        "parquet at this path — the reference artifact for the "
-        "streaming drift circuit breaker (drift_census_dir)",
+        "parquet at this path; with --compare-dir the drift section "
+        "reads it back instead of re-tokenizing the corpus",
     )
     args = ap.parse_args(argv)
     spark = get_spark("corpus-report")

@@ -1,7 +1,7 @@
 """Train the linear quality-classifier weight table — the artifact the
-batch pipeline's ``--clf-weights`` and the streaming sink's
-``clf_weights`` consume (train offline on labeled docs, gate online:
-the same artifact split as the bigram-LM's ``--lm-dir``).
+batch pipeline's ``--clf-weights`` consumes (train offline on labeled
+docs, gate at curate time: the same artifact split as the bigram-LM's
+``--lm-dir``).
 
 Usage:
     python -m mapreduce_stockheadlines_spark.jobs.train_classifier \

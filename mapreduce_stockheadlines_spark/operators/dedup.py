@@ -204,11 +204,9 @@ def signature_bands(
     """(id, bucket) band-digest rows from a MinHash signature table:
     the signature splits into ``bands`` bands of ``num_hashes/bands``
     components, each digested (with its band index) to one fixed-width
-    bucket key. This is both the self-join side of
-    ``lsh_candidate_pairs`` and the persistent-index representation for
-    incremental near-dup (streaming/ingest.py): a band index stored as
-    (bucket, id, signature) rows is probed by equi-join on ``bucket``,
-    so day-N candidate generation shuffles digests, never text."""
+    bucket key — the equi-join side of ``lsh_candidate_pairs`` and
+    ``fuzzy_text_join``, so candidate generation shuffles digests,
+    never text."""
     rows_per_band = num_hashes // bands
     band_cols = [
         F.md5(
@@ -229,42 +227,6 @@ def signature_bands(
                 ]
             )
         ).alias("bucket"),
-    )
-
-
-def signature_agreement(
-    pairs: DataFrame,
-    sig_a: DataFrame,
-    sig_b: DataFrame,
-    num_hashes: int = 8,
-) -> DataFrame:
-    """Estimated Jaccard for candidate pairs from their MinHash
-    signatures alone: the fraction of agreeing signature components is
-    an unbiased Jaccard estimator (granularity 1/num_hashes — coarse at
-    8 hashes; raise num_hashes where the verdict matters). ``pairs``
-    has (id_a, id_b); ``sig_a``/``sig_b`` are signature tables keyed by
-    those ids. Nothing re-reads document text — the verify an
-    incremental pipeline can afford when historical text is cold."""
-    a = sig_a.select(
-        F.col(sig_a.columns[0]).alias("id_a"),
-        *[F.col(f"mh{i}").alias(f"_a{i}") for i in range(num_hashes)],
-    )
-    b = sig_b.select(
-        F.col(sig_b.columns[0]).alias("id_b"),
-        *[F.col(f"mh{i}").alias(f"_b{i}") for i in range(num_hashes)],
-    )
-    agree = sum(
-        F.when(F.col(f"_a{i}") == F.col(f"_b{i}"), 1).otherwise(0)
-        for i in range(num_hashes)
-    )
-    return (
-        pairs.join(a, "id_a")
-        .join(b, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(agree / F.lit(num_hashes), 4).alias("est_jaccard"),
-        )
     )
 
 
@@ -318,9 +280,8 @@ def simhash_bands(
 ) -> DataFrame:
     """Pigeonhole band rows (id, simhash, band, bits) for a 64-bit
     fingerprint table: ``max_hamming + 1`` bands, so any pair within
-    ``max_hamming`` bit flips shares at least one identical band. The
-    probe/index primitive shared by the self-join pairing below and the
-    streaming media ingest's persistent phash index."""
+    ``max_hamming`` bit flips shares at least one identical band — the
+    equi-join side of ``simhash_neardup_pairs``."""
     n_bands = max_hamming + 1
     width = 64 // n_bands
     return fp.select(

@@ -1,12 +1,12 @@
 """Broadcast Bloom-filter membership gate: day-N ingest dedup that
 never joins history.
 
-The persistent digest index (``streaming/ingest.py``) answers "have we
-seen this content before?" with an exact anti-join — day N pays a join
-of day-N digests against an index that GROWS with history. A Bloom
-filter is the scale complement: an m-bit bitmap summarizing the index
-(MBs for billions of keys at ~1% FPR) that is broadcast once and gates
-the corpus with ZERO shuffle and ZERO join. "Definitely new" rows (the
+A persistent digest index answers "have we seen this content before?"
+with an exact anti-join — day N pays a join of day-N digests against an
+index that GROWS with history. A Bloom filter is the scale complement:
+an m-bit bitmap summarizing the index (MBs for billions of keys at ~1%
+FPR) that is broadcast once and gates the corpus with ZERO shuffle and
+ZERO join. "Definitely new" rows (the
 overwhelming majority of a crawl day) bypass the exact join entirely;
 only might-contain rows (true dups plus the ~FPR sliver) probe the
 index. False negatives are impossible by construction, so
@@ -48,6 +48,9 @@ from pyspark.sql import functions as F
 
 DEFAULT_M_BITS = 1 << 23  # 1 MB bitmap: ~840 K keys at ~1% FPR with k=5
 DEFAULT_K = 5
+# one salt for every Bloom build and probe: a bitmap answers only for
+# positions hashed with the salt it was built with
+BLOOM_SALT = "bloom"
 _MAX_M_BITS = 1 << 28  # 32 MB driver/broadcast bitmap cap
 _WORD = 32  # bits packed per BIGINT word (positive masks in every engine)
 
@@ -61,7 +64,7 @@ def _check_m(m_bits: int) -> None:
 
 
 def bloom_positions(
-    value: Column | str, m_bits: int, k: int = DEFAULT_K, salt: str = "bloom"
+    value: Column | str, m_bits: int, k: int = DEFAULT_K, salt: str = BLOOM_SALT
 ) -> list[Column]:
     """The k md5-derived bit positions for one key (codegen, JVM-side).
 
@@ -97,7 +100,6 @@ def bloom_build(
     value_col: str,
     m_bits: int = DEFAULT_M_BITS,
     k: int = DEFAULT_K,
-    salt: str = "bloom",
 ) -> DataFrame:
     """Build the sparse bitmap: (word_idx int, bits bigint), ≤ m/32
     rows regardless of input size. ``bit_or`` partially aggregates
@@ -105,7 +107,7 @@ def bloom_build(
     """
     _check_m(m_bits)
     pos_rows = df.select(
-        F.explode(F.array(*bloom_positions(value_col, m_bits, k, salt))).alias("pos")
+        F.explode(F.array(*bloom_positions(value_col, m_bits, k))).alias("pos")
     )
     return _cells(pos_rows).groupBy("word_idx").agg(F.bit_or("mask").alias("bits"))
 
@@ -127,7 +129,6 @@ def bloom_lookup(
     bloom_df: DataFrame,
     m_bits: int = DEFAULT_M_BITS,
     k: int = DEFAULT_K,
-    salt: str = "bloom",
     out_col: str = "might_contain",
 ) -> DataFrame:
     """df + boolean ``out_col``: False means DEFINITELY absent from the
@@ -148,7 +149,7 @@ def bloom_lookup(
 
     return df.withColumn(
         out_col,
-        _all_bits_set(F.array(*bloom_positions(value_col, m_bits, k, salt))),
+        _all_bits_set(F.array(*bloom_positions(value_col, m_bits, k))),
     )
 
 
@@ -159,7 +160,6 @@ def bloom_lookup_join(
     bloom_df: DataFrame,
     m_bits: int = DEFAULT_M_BITS,
     k: int = DEFAULT_K,
-    salt: str = "bloom",
     out_col: str = "might_contain",
 ) -> DataFrame:
     """JVM-only codegen twin of ``bloom_lookup`` (pinned equal in
@@ -170,7 +170,7 @@ def bloom_lookup_join(
     _check_m(m_bits)
     pos_rows = df.select(
         id_col,
-        F.explode(F.array(*bloom_positions(value_col, m_bits, k, salt))).alias("pos"),
+        F.explode(F.array(*bloom_positions(value_col, m_bits, k))).alias("pos"),
     )
     tests = _cells(pos_rows, id_col).join(
         F.broadcast(bloom_df), "word_idx", "left"
@@ -191,17 +191,16 @@ def bloom_gated_anti_join(
     index_key_col: str | None = None,
     m_bits: int = DEFAULT_M_BITS,
     k: int = DEFAULT_K,
-    salt: str = "bloom",
 ) -> DataFrame:
     """Rows of ``new_df`` whose key is NOT in ``index_df`` — exactly
     ``new_df`` LEFT ANTI ``index_df`` (pinned), but the anti-join's
     probe side shrinks from all of day N to just the might-contain
     sliver. ``bloom_df`` must have been built (or unioned up) from the
-    index's keys with the same (m, k, salt); a stale-but-superset
+    index's keys with the same (m, k); a stale-but-superset
     bitmap stays correct, only less selective."""
     index_key_col = index_key_col or key_col
     flagged = bloom_lookup(
-        new_df, key_col, bloom_df, m_bits, k, salt, out_col="__mc"
+        new_df, key_col, bloom_df, m_bits, k, out_col="__mc"
     )
     fresh = flagged.filter(~F.col("__mc"))
     candidates = flagged.filter(F.col("__mc")).join(

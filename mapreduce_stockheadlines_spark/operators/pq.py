@@ -664,129 +664,6 @@ def ivfpq_topk(
     )
 
 
-def pq_moment_partials(
-    corpus: DataFrame,
-    codebooks: np.ndarray,
-    vec_col: str = "embedding",
-    fp_dp: int = 6,
-) -> DataFrame:
-    """Per-(subspace, cell, dim) FIXED-POINT coordinate sums + counts of
-    a corpus under FROZEN PQ codebooks — the additive moment census
-    behind streaming PQ index maintenance (``pq_ingest_sink``), the
-    ``similarity.kmeans_moment_partials`` algebra generalized over
-    subspaces: ``(sub, cell, dim, s_fp, n)`` with
-    ``s_fp = Σ round(x_sub_dim · 10^fp_dp)`` as BIGINT and ``n`` the
-    (sub, cell) population repeated per dim. Assignment is the shared
-    4dp-argmin contract. Integer sums make the fold ORDER-FREE and
-    exact: merge == build-of-union row-for-row, so the folded artifact
-    is a pure function of the row set however batches split, interleave
-    or replay. One Arrow pass; ≤ m×ksub×dsub rows per batch into a
-    (sub, cell, dim)-keyed aggregation — corpus never shuffled."""
-    spark = corpus.sparkSession
-    corpus = _nonempty_vecs(corpus, vec_col)
-    cb = np.asarray(codebooks, dtype="float64")
-    bc = spark.sparkContext.broadcast(cb)
-    scale = 10**fp_dp
-
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cbv = bc.value
-        mm, kk, ds = cbv.shape
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            x = _raw_matrix(pdf["cv"]).reshape(len(pdf), mm, ds)
-            subs, cells, dims, sfps, ns = [], [], [], [], []
-            for j in range(mm):
-                _, cl = _argmin_cells(x[:, j, :], cbv[j])
-                fp = np.round(x[:, j, :] * scale).astype(np.int64)
-                sums = np.zeros((kk, ds), dtype=np.int64)
-                np.add.at(sums, cl, fp)
-                counts = np.bincount(cl, minlength=kk)
-                nz = np.nonzero(counts)[0]
-                subs.append(np.full(len(nz) * ds, j, dtype=np.int32))
-                cells.append(np.repeat(nz, ds).astype(np.int32))
-                dims.append(np.tile(np.arange(ds, dtype=np.int32), len(nz)))
-                sfps.append(sums[nz].reshape(-1))
-                ns.append(np.repeat(counts[nz], ds).astype(np.int64))
-            yield pd.DataFrame(
-                {
-                    "sub": np.concatenate(subs),
-                    "cell": np.concatenate(cells),
-                    "dim": np.concatenate(dims),
-                    "s_fp": np.concatenate(sfps),
-                    "n": np.concatenate(ns),
-                }
-            )
-
-    return (
-        corpus.select(as_double(vec_col).alias("cv"))
-        .mapInPandas(partials, "sub int, cell int, dim int, s_fp long, n long")
-        .groupBy("sub", "cell", "dim")
-        .agg(F.sum("s_fp").alias("s_fp"), F.sum("n").alias("n"))
-    )
-
-
-def pq_refit(
-    moments: DataFrame,
-    prev_codebooks: np.ndarray,
-    fp_dp: int = 6,
-) -> np.ndarray:
-    """One Lloyd update of the PQ codebooks from a folded moment
-    artifact: per (sub, cell, dim),
-    ``round((s_fp / 10^fp_dp) / n, 7)`` — the ``pq_train``
-    raw-mean contract (NO normalization: PQ centroids live in residual/
-    coordinate space, unlike the spherical coarse quantizer) computed
-    from EXACT integer sums, so the rolled codebooks are a pure
-    function of (row set, frozen codebooks) regardless of batching or
-    replay. Cells with no mass keep the previous centroid verbatim.
-    Driver cost: m×ksub×dsub rows — bounded by the index size, never
-    the stream. Same operational contract as ``kmeans_refit``: one
-    artifact GENERATION per codebook generation, and foreign artifacts
-    fail loudly (two-sided shape + completeness + uniqueness checks)."""
-    cb = np.asarray(prev_codebooks, dtype="float64")
-    mm, kk, ds = cb.shape
-    pdf = moments.toPandas()
-    new = cb.copy()
-    if len(pdf) == 0:
-        return new
-    subs = pdf["sub"].to_numpy(dtype=np.int64)
-    cells = pdf["cell"].to_numpy(dtype=np.int64)
-    dims = pdf["dim"].to_numpy(dtype=np.int64)
-    if (
-        subs.max() >= mm or subs.min() < 0
-        or cells.max() >= kk or cells.min() < 0
-        or dims.max() != ds - 1 or dims.min() != 0
-    ):
-        raise ValueError(
-            f"pq_refit: moment artifact addresses (sub, cell, dim) up to "
-            f"({int(subs.max())}, {int(cells.max())}, {int(dims.max())}) "
-            f"but prev_codebooks is {mm}x{kk}x{ds} — the artifact was "
-            "built against a different index"
-        )
-    key = (subs * kk + cells) * ds + dims
-    if np.unique(key).size != len(pdf):
-        raise ValueError(
-            "pq_refit: duplicate (sub, cell, dim) rows in the moment "
-            "artifact — corrupt artifact"
-        )
-    pair = subs * kk + cells
-    per_pair = np.bincount(pair, minlength=mm * kk)
-    if (per_pair[np.unique(pair)] != ds).any():
-        raise ValueError(
-            "pq_refit: moment artifact has a partial dim set for some "
-            "(sub, cell) — corrupt or mixed-generation artifact"
-        )
-    s_fp = np.zeros((mm, kk, ds), dtype=np.int64)
-    n_by = np.zeros((mm, kk), dtype=np.int64)
-    s_fp[subs, cells, dims] = pdf["s_fp"].to_numpy(dtype=np.int64)
-    n_by[subs, cells] = pdf["n"].to_numpy(dtype=np.int64)
-    for j, c in zip(*np.nonzero(n_by > 0)):
-        new[j, c] = np.round(
-            (s_fp[j, c] / 10**fp_dp) / n_by[j, c], 7
-        )
-    return new
-
-
 # --- OPQ: Optimized Product Quantization (rotation-trained PQ) ---------------
 
 

@@ -104,8 +104,8 @@ def token_divergence(
 
 def token_census(df: DataFrame, text_col: str = "text") -> DataFrame:
     """(term, freq) unigram census — one tokenize+explode + one
-    term-keyed aggregation with map-side partials. Persist it
-    (parquet) as the reference artifact for streaming drift checks."""
+    term-keyed aggregation with map-side partials. ``report
+    --save-census`` persists it (parquet) for later drift checks."""
     from ..functions.text import tokens_array
 
     return (
@@ -118,7 +118,7 @@ def token_census(df: DataFrame, text_col: str = "text") -> DataFrame:
 def census_divergence(ca: DataFrame, cb: DataFrame) -> DataFrame:
     """``token_divergence`` from two PRE-BUILT censuses — (term, c_a)
     and (term, c_b) tables — for the artifact-vs-live comparisons where
-    one side is a persisted ``token_census`` (streaming drift gate).
+    one side is a persisted ``token_census`` (``report --save-census``).
     Same output contract and zero-measure semantics.
 
     Totals attach via a BUCKETED two-level sum: each census aggregates
@@ -181,10 +181,9 @@ def census_divergence(ca: DataFrame, cb: DataFrame) -> DataFrame:
 def divergence_summary(div: DataFrame) -> DataFrame:
     """One row (``js_divergence``, ``vocab_jaccard``) summarizing a
     ``token_divergence``/``census_divergence`` table, 4dp — the SINGLE
-    definition shared by the batch drift report and the streaming drift
-    circuit breaker (two copies would let the metric semantics drift
-    apart). Empty-join defaults: two token-less corpora are identical
-    nothing — 0 divergence, full overlap."""
+    definition of the drift report's summary metrics. Empty-join
+    defaults: two token-less corpora are identical nothing — 0
+    divergence, full overlap."""
     both = F.when((F.col("c_a") > 0) & (F.col("c_b") > 0), 1.0).otherwise(0.0)
     return div.agg(
         F.round(F.coalesce(F.sum("js_contrib"), F.lit(0.0)), 4).alias(

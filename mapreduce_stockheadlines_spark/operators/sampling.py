@@ -419,13 +419,13 @@ def temperature_mix(
 # divisions + one final rounding produce the score.
 
 _DSIR_FP = 10**6  # fixed-point quantum for per-bucket log ratios
-# feature-hash salt: the fitters, the scorers and the saved artifact's
-# meta row must bucket features alike
+# feature-hash salt: the fitters and the scorers must bucket features
+# alike
 DSIR_SALT = "dsir"
 
 
-def _dsir_bucket(feat: Column, n_buckets: int, salt: str) -> Column:
-    digest = F.md5(F.concat(F.lit(f"{salt}:"), feat).cast("binary"))
+def _dsir_bucket(feat: Column, n_buckets: int) -> Column:
+    digest = F.md5(F.concat(F.lit(f"{DSIR_SALT}:"), feat).cast("binary"))
     return (
         F.conv(F.substring(digest, 1, 8), 16, 10).cast("bigint")
         % F.lit(n_buckets)
@@ -437,7 +437,6 @@ def _dsir_feature_stream(
     lead: dict[str, Column],
     text_col: str,
     n_buckets: int,
-    salt: str,
 ) -> DataFrame:
     """THE feature definition, in one place: unigram + bigram
     occurrences of the cleaned token stream, hashed into ``n_buckets``.
@@ -455,7 +454,7 @@ def _dsir_feature_stream(
     )
     return exploded.select(
         *lead.keys(),
-        _dsir_bucket(F.col("_feat"), n_buckets, salt).alias("bucket"),
+        _dsir_bucket(F.col("_feat"), n_buckets).alias("bucket"),
     )
 
 
@@ -464,14 +463,13 @@ def dsir_features(
     id_col: str,
     text_col: str,
     n_buckets: int = 65536,
-    salt: str = DSIR_SALT,
 ) -> DataFrame:
     """(id, bucket) — one row per unigram/bigram OCCURRENCE, hashed into
     ``n_buckets`` (the hashing trick: fixed model size regardless of
     vocabulary; collisions are part of the estimator). Narrow explode of
     a single codegen expression; NULL text yields no rows."""
     return _dsir_feature_stream(
-        df, {id_col: F.col(id_col)}, text_col, n_buckets, salt
+        df, {id_col: F.col(id_col)}, text_col, n_buckets
     )
 
 
@@ -579,7 +577,6 @@ def dsir_scores(
     id_col: str,
     text_col: str,
     n_buckets: int = 65536,
-    salt: str = DSIR_SALT,
 ) -> DataFrame:
     """Per-document DSIR score: mean log importance ratio over the doc's
     feature occurrences, rounded to 4dp. The fold is an exact BIGINT sum
@@ -588,7 +585,7 @@ def dsir_scores(
     integer), divided once at the end — so scores hash-match across
     engines bit-for-bit. One broadcast join (ratio table <= n_buckets
     rows) + one groupBy(id) whose shuffle carries a row per doc."""
-    feats = dsir_features(raw_df, id_col, text_col, n_buckets, salt)
+    feats = dsir_features(raw_df, id_col, text_col, n_buckets)
     return _dsir_score_from_stream(feats, ratios, id_col)
 
 
@@ -617,7 +614,6 @@ def dsir_fit_scores(
             {id_col: F.col(id_col), "_t": target_filter},
             text_col,
             n_buckets,
-            DSIR_SALT,
         )
     )
     # census + totals: target ⊆ raw by construction, so the census's
@@ -677,29 +673,6 @@ def dsir_resample(
     return token_budget_filter(keyed, "_gk", "_one", n_keep).drop(
         "_gk", "_one"
     )
-
-
-def save_dsir_ratios(
-    ratios: DataFrame, path: str, n_buckets: int
-) -> None:
-    """Persist a DSIR log-ratio table as a parquet artifact — the
-    offline half of the deployment shape (fit target-vs-raw ratios once
-    on a reference pairing, gate many corpora/streams against them).
-    Layout: ``<path>/ratios`` (bucket, ratio_fp), ``<path>/meta`` (one
-    row: n_buckets, salt — scoring MUST bucket with the same pair, so
-    they travel with the table instead of trusting call sites)."""
-    ratios.write.mode("overwrite").parquet(f"{path}/ratios")
-    ratios.sparkSession.createDataFrame(
-        [(int(n_buckets), DSIR_SALT)], "n_buckets long, salt string"
-    ).write.mode("overwrite").parquet(f"{path}/meta")
-
-
-def load_dsir_ratios(spark, path: str) -> tuple[DataFrame, int, str]:
-    """Inverse of ``save_dsir_ratios``; the returned triple feeds
-    ``dsir_scores(raw, ratios, ..., n_buckets=n, salt=salt)``."""
-    ratios = spark.read.parquet(f"{path}/ratios")
-    meta = spark.read.parquet(f"{path}/meta").first()
-    return ratios, int(meta["n_buckets"]), meta["salt"]
 
 
 def doremi_weights(

@@ -51,7 +51,7 @@ def _to_matrix(series: pd.Series) -> np.ndarray:
 def _argmax_cells(m, cmat, sim_dp: int = 4):
     """THE trained-index assignment contract, shared by every consumer
     (kmeans training's quantized branch, kmeans_assign,
-    kmeans_moment_partials, semantic_neardup_pairs, ivf_topk): 4dp-
+    semantic_neardup_pairs, ivf_topk): 4dp-
     rounded dot of normalized rows against the centroid matrix, argmax
     taking the FIRST maximal centroid on ties. The x18 oracle pins
     exactly this decision — keep all callers on this one kernel so a
@@ -65,7 +65,7 @@ def _nonempty_vecs(df: DataFrame, vec_col: str) -> DataFrame:
     """Drop NULL/empty embeddings — they carry no geometry, and a stray
     NULL fails _to_matrix inside an executor. One helper shared by
     every vector consumer in this module (training, assignment,
-    moments, semantic pairing, IVF serving, brute-force top-k) so the
+    semantic pairing, IVF serving, brute-force top-k) so the
     guard cannot silently fork per call site."""
     return df.filter(F.col(vec_col).isNotNull() & (F.size(vec_col) > 0))
 
@@ -462,126 +462,6 @@ def kmeans_assign(
         .mapInPandas(assign, "vid long, cell_id int, cent_sim double")
         .select(F.col("vid").alias(id_col), "cell_id", "cent_sim")
     )
-
-
-def kmeans_moment_partials(
-    corpus: DataFrame,
-    centroids: np.ndarray,
-    vec_col: str = "embedding",
-    fp_dp: int = 6,
-) -> DataFrame:
-    """Per-cell per-dim FIXED-POINT coordinate sums + counts of a corpus
-    under FROZEN centroids — the additive moment census behind
-    streaming ANN index maintenance (``kmeans_ingest_sink``):
-    ``(cell_id, dim, s_fp, n)`` where ``s_fp = Σ round(x_norm·10^fp_dp)``
-    as BIGINT and ``n`` is the cell population (repeated per dim).
-    Assignment is the shared 4dp-argmax contract. Integer sums make the
-    fold ORDER-FREE and exact: merge == build-of-union row-for-row (the
-    census-sink algebra extended to vector moments), so the folded
-    artifact is a pure function of the row set however batches split,
-    interleave or replay. One Arrow pass; ≤ k×dim rows per batch into a
-    (cell, dim)-keyed aggregation — corpus never shuffled."""
-    spark = corpus.sparkSession
-    corpus = _nonempty_vecs(corpus, vec_col)
-    cmat = np.asarray(centroids, dtype="float64")
-    bc = spark.sparkContext.broadcast(cmat)
-    scale = 10**fp_dp
-
-    def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cm = bc.value
-        k, d = cm.shape
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            m = _to_matrix(pdf["cv"])
-            _, cl = _argmax_cells(m, cm)
-            fp = np.round(m * scale).astype(np.int64)
-            sums = np.zeros((k, d), dtype=np.int64)
-            np.add.at(sums, cl, fp)
-            counts = np.bincount(cl, minlength=k)
-            nz = np.nonzero(counts)[0]
-            yield pd.DataFrame(
-                {
-                    "cell_id": np.repeat(nz, d).astype("int32"),
-                    "dim": np.tile(np.arange(d, dtype="int32"), len(nz)),
-                    "s_fp": sums[nz].reshape(-1),
-                    "n": np.repeat(counts[nz], d).astype("int64"),
-                }
-            )
-
-    return (
-        corpus.select(as_double(vec_col).alias("cv"))
-        .mapInPandas(partials, "cell_id int, dim int, s_fp long, n long")
-        .groupBy("cell_id", "dim")
-        .agg(F.sum("s_fp").alias("s_fp"), F.sum("n").alias("n"))
-    )
-
-
-def kmeans_refit(
-    moments: DataFrame,
-    prev_centroids: np.ndarray,
-    fp_dp: int = 6,
-) -> np.ndarray:
-    """One Lloyd update from a folded moment artifact: per cell,
-    ``mean_j = round((s_fp / 10^fp_dp) / n, 7)``, L2-norm OF
-    the quantized mean, divide, round again — the ``kmeans_centroids``
-    quantized contract computed from EXACT integer sums, so the rolled
-    index is a pure function of (row set, frozen centroids) regardless
-    of how the stream was batched or replayed. Cells with no mass keep
-    the previous centroid verbatim. Driver cost: k×dim rows — bounded
-    by the index size, never the stream.
-
-    Operational contract: the artifact must have been accumulated by
-    assigning against EXACTLY ``prev_centroids`` (shape-validated here —
-    a foreign artifact fails loudly, not with a stray IndexError), and
-    after a refit the artifact belongs to the RETIRED index: point the
-    sink at a fresh ``artifact_dir`` for the rolled centroids (re-using
-    the old one would re-apply history that was assigned under the
-    previous index — one Lloyd step per artifact GENERATION, the same
-    discipline as any frozen-index quantizer rebuild)."""
-    cm = np.asarray(prev_centroids, dtype="float64")
-    k, d = cm.shape
-    pdf = moments.toPandas()
-    new = cm.copy()
-    if len(pdf) == 0:
-        return new
-    cells = pdf["cell_id"].to_numpy(dtype=np.int64)
-    dims = pdf["dim"].to_numpy(dtype=np.int64)
-    # two-sided shape validation: the partials emit EVERY dim 0..d-1 for
-    # each non-empty cell, so a foreign artifact (different k OR d —
-    # e.g. moments of a PCA-projected index) fails loudly instead of
-    # silently zero-filling missing dimensions into garbage centroids
-    if cells.max() >= k or dims.max() != d - 1 or dims.min() != 0:
-        raise ValueError(
-            f"kmeans_refit: moment artifact addresses cells up to "
-            f"{int(cells.max())} and dims [{int(dims.min())}, "
-            f"{int(dims.max())}] but prev_centroids is {k}x{d} — the "
-            "artifact was built against a different index"
-        )
-    counts = np.bincount(cells, minlength=k)
-    if (counts[np.unique(cells)] != d).any():
-        raise ValueError(
-            "kmeans_refit: moment artifact has a partial dim set for "
-            "some cell — corrupt or mixed-generation artifact"
-        )
-    # (cell, dim) uniqueness: a duplicated row OFFSETTING a missing dim in
-    # the same cell passes the per-cell count above, then last-write-wins
-    # in the scatter while the missing dim silently stays 0
-    if np.unique(cells * d + dims).size != len(pdf):
-        raise ValueError(
-            "kmeans_refit: duplicate (cell_id, dim) rows in the moment "
-            "artifact — corrupt artifact"
-        )
-    s_fp = np.zeros((k, d), dtype=np.int64)
-    n_by = np.zeros(k, dtype=np.int64)
-    s_fp[cells, dims] = pdf["s_fp"].to_numpy(dtype=np.int64)
-    n_by[cells] = pdf["n"].to_numpy(dtype=np.int64)
-    live = np.nonzero(n_by > 0)[0]
-    for cell in live:
-        mean = np.round((s_fp[cell] / 10**fp_dp) / n_by[cell], 7)
-        nrm = float(np.linalg.norm(mean)) or 1.0
-        new[cell] = np.round(mean / nrm, 7)
-    return new
 
 
 def ivf_topk(

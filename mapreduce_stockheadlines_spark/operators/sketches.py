@@ -7,8 +7,7 @@ dashboard refresh, backfill, or rolling-window query pays the full
 scan again. An HLL sketch is a tiny (~KB) MERGEABLE summary: build one
 per (group, period) as data lands, persist the sketch BYTES as an
 artifact table, and answer any later union-of-periods question by
-merging sketches — the same pattern as the streaming ingest indexes
-(history never re-read), applied to analytics. Merge is exact over the
+merging sketches (history never re-read). Merge is exact over the
 sketch algebra: union-of-sketches == sketch-of-union by construction,
 so an incrementally maintained artifact answers identically to a
 from-scratch build (property-pinned in tests).
@@ -36,16 +35,15 @@ def distinct_sketches(
     df: DataFrame,
     value_col: str,
     group_cols: list[str],
-    lgk: int = DEFAULT_LGK,
 ) -> DataFrame:
     """One HLL sketch of ``value_col``'s distinct values per group —
     the artifact-build step. Output: group_cols + ``sketch`` (binary)
     + ``n_rows`` (exact row count, free at agg time and useful for
     artifact sanity checks)."""
     return df.groupBy(*group_cols).agg(
-        F.hll_sketch_agg(F.col(value_col).cast("string"), F.lit(lgk)).alias(
-            "sketch"
-        ),
+        F.hll_sketch_agg(
+            F.col(value_col).cast("string"), F.lit(DEFAULT_LGK)
+        ).alias("sketch"),
         F.count(F.lit(1)).alias("n_rows"),
     )
 
@@ -92,8 +90,7 @@ def upsert_sketches(
 # (membership.bloom_positions), so DuckDB re-derives the entire
 # counter table AND every estimate bit-for-bit — the strongest pin the
 # sketch family has. Counters ADD, so per-period CMS artifacts fold by
-# summing cells (the streaming census sink does) and pair with
-# sources/versioned.py history.
+# summing cells and pair with sources/versioned.py history.
 #
 # Guarantees: estimate >= true count always (only hash collisions
 # inflate, never deflate — pinned against an exact census); overshoot
@@ -304,12 +301,12 @@ _KMV_SPACE = 1 << 60  # 15 md5 hex chars, the Bloom/CMS hash space
 _KMV_BUCKETS = 32  # pre-prune fan-out for the bucketed row_number
 
 
-def kmv_hash(value: Column | str, salt: str = "kmv") -> Column:
+def kmv_hash(value: Column | str) -> Column:
     """60-bit salted-md5 hash of a key (codegen, JVM-side). NULL keys
     hash as '' — the same stable-key convention as bloom_positions."""
     v = F.col(value) if isinstance(value, str) else value
     v = F.coalesce(v.cast("string"), F.lit(""))
-    digest = F.md5(F.concat(F.lit(f"{salt}:"), v).cast("binary"))
+    digest = F.md5(F.concat(F.lit("kmv:"), v).cast("binary"))
     return F.conv(F.substring(digest, 1, 15), 16, 10).cast("bigint")
 
 
@@ -318,7 +315,6 @@ def kmv_build(
     value_col: str,
     group_cols: list[str] | None = None,
     k: int = DEFAULT_KMV_K,
-    salt: str = "kmv",
 ) -> DataFrame:
     """KMV sketch per group: group_cols + ``hv`` rows, the <= k
     smallest distinct hash values. Two-level top-k (per-bucket then
@@ -331,7 +327,7 @@ def kmv_build(
         raise ValueError(f"kmv_build: k must be >= 2, got {k}")
     group_cols = list(group_cols or [])
     hv = df.select(
-        *group_cols, kmv_hash(value_col, salt).alias("hv")
+        *group_cols, kmv_hash(value_col).alias("hv")
     ).distinct()
     w_bucket = Window.partitionBy(
         *group_cols, F.pmod(F.col("hv"), F.lit(_KMV_BUCKETS))
@@ -355,7 +351,7 @@ def kmv_merge(
     group_cols: list[str] | None = None,
     k: int = DEFAULT_KMV_K,
 ) -> DataFrame:
-    """Fold two sketches built with the same (k, salt): union the hash
+    """Fold two sketches built with the same k: union the hash
     sets and keep the k smallest again. EXACTLY build-of-union
     (pinned) — the upsert for per-period KMV artifacts."""
     from pyspark.sql import Window

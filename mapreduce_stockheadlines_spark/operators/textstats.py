@@ -624,32 +624,15 @@ def winnow_neardup_pairs(
     # x04 registry query (schema inspection, explain, warm-up) must
     # not execute the full fingerprint pass.
     fp = checkpoint(fp, eager=False)
-    return winnow_pairs_from_fingerprints(
-        fp, min_shared, winnow_rare_hashes(fp, max_df)
-    )
-
-
-def winnow_rare_hashes(fp: DataFrame, max_df: int) -> DataFrame:
-    """The max_df census over a (id, whash) fingerprint index: the
-    (whash) rows occurring in at most ``max_df`` documents — the only
-    hashes any pairing join may touch (the LSH hot-bucket bound).
-    Bounded by the hash space (≤ ~1e6 rows), so it broadcasts."""
-    return (
+    # the max_df census: only hashes in at most max_df documents may
+    # reach the self-join (the LSH hot-bucket bound); bounded by the
+    # hash space (<= ~1e6 rows), so it broadcasts
+    rare = (
         fp.groupBy("whash")
         .agg(F.count(F.lit(1)).alias("_df"))
         .filter(F.col("_df") <= max_df)
         .select("whash")
     )
-
-
-def winnow_pairs_from_fingerprints(
-    fp: DataFrame, min_shared: int, rare: DataFrame
-) -> DataFrame:
-    """(id_a, id_b, n_shared) pairs from a (preferably checkpointed)
-    (id, whash) fingerprint index and its ``winnow_rare_hashes`` census
-    — the post-fingerprint half of ``winnow_neardup_pairs``, exposed so
-    callers that already hold the index (the streaming ingest) share
-    one implementation of the census-guarded self-join + threshold."""
     kept = fp.join(rare, "whash")
     a = kept.select(F.col("id").alias("id_a"), "whash")
     b = kept.select(F.col("id").alias("id_b"), "whash")

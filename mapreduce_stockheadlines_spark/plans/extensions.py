@@ -1,7 +1,7 @@
 """LLM-data-pipeline extension queries (§2.2 'Planned'; BASELINE.json
 north-star): dedup (exact / MinHash+LSH / SimHash / n-gram Jaccard /
 embedding near-dup), similarity search, multimodal plumbing, text analysis,
-streaming-analogue windows.
+batch analogues of streaming windows.
 
 Everything deterministic enough to cross-check runs against a DuckDB
 oracle, including MinHash (portable md5-lexmin construction) and SimHash

@@ -15,10 +15,9 @@ parquet lacks (a reader racing an overwrite sees missing/mixed files).
 Underscore-prefixed files are invisible to Spark's parquet discovery, so
 the pointer never pollutes a directory listing read.
 
-The streaming artifact sinks (``streaming/ingest.py``) write each
-folded artifact as version N+1, then readers flip atomically; failed
-writes leave an orphaned ``v=N`` dir that no pointer references —
-invisible and re-writable.
+A writer publishes each folded artifact as version N+1, then readers
+flip atomically; failed writes leave an orphaned ``v=N`` dir that no
+pointer references — invisible and re-writable.
 
 No reference counterpart (§2.2 incremental-maintenance surface).
 """
@@ -143,9 +142,9 @@ def write_table_version(
     file is older than the grace period — while the pointer still sits
     BELOW the claimed version, proving it never committed — is deleted
     and re-claimed. ``0.0`` means "any existing claim at my version is
-    stale": correct ONLY for a single-writer caller (e.g. a streaming
-    foreachBatch sink, where the sole possible claimant is this sink's
-    own crashed previous incarnation). Multi-writer callers should pass
+    stale": correct ONLY for a single-writer caller, where the sole
+    possible claimant is that writer's own crashed previous
+    incarnation. Multi-writer callers should pass
     a period comfortably above their longest snapshot write, or leave
     the default ``None`` (never reclaim, fail loudly)."""
     spark = df.sparkSession

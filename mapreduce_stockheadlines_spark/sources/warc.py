@@ -227,9 +227,6 @@ class WarcDataSource(DataSource):
     def reader(self, schema) -> WarcReader:
         return WarcReader(self.options)
 
-    def streamReader(self, schema) -> "WarcStreamReader":
-        return WarcStreamReader(self.options)
-
 
 def register(spark) -> None:
     """Idempotent registration: ``spark.read.format('warc')``."""
@@ -284,13 +281,8 @@ def warc_text_docs(
     )
 
 
-# --- streaming: micro-batch ingestion of landing WARC segments ---------------
-
-from pyspark.sql.datasource import DataSourceStreamReader
-
-
 def _warc_rows(path: str, record_types: set[str], strip_http: bool):
-    """Shared record→row projection for the batch and stream readers."""
+    """One row per WARC record of ``path`` whose type is selected."""
     fname = os.path.basename(path)
     for off, h, payload in iter_warc_records(path):
         wtype = h.get("warc-type", "").lower()
@@ -305,99 +297,3 @@ def _warc_rows(path: str, record_types: set[str], strip_http: bool):
             h.get("warc-target-uri"), ctype, int(h["content-length"]),
             status, payload,
         )
-
-
-class WarcStreamReader(DataSourceStreamReader):
-    """Micro-batch WARC ingestion: each trigger picks up the segment
-    files that landed since the last one — the
-    'crawler drops .warc.gz files, curation keeps up' loop that feeds
-    ``streaming/ingest``'s curated sinks.
-
-    Offsets are FILENAME WATERMARKS (``{"upto": "<last name>"}``), so a
-    restarted reader reconstructs any batch purely from a directory
-    listing — no reader-side state survives and none is needed. That
-    makes segment names part of the contract: they must sort AFTER all
-    names already committed (Common Crawl's timestamped segment layout
-    already does this; any lexicographically-monotone scheme works). A
-    file landing BELOW the watermark is late by naming and can never be
-    planned; ``partitions()`` prints a warn-once notice naming such
-    files rather than silently never reading them. Planning stays
-    file-granular — same gzip-imposed split unit as the batch reader,
-    one task per new segment per trigger.
-    """
-
-    def __init__(self, options: dict):
-        self.dir = options.get("path")
-        if not self.dir:
-            raise ValueError("warc stream source requires a path")
-        types = options.get("recordTypes", "")
-        self.record_types = {
-            t.strip().lower() for t in types.split(",") if t.strip()
-        }
-        self.strip_http = (
-            str(options.get("stripHttpHeaders", "true")).lower() == "true"
-        )
-        self.max_files_per_batch = int(options.get("maxFilesPerBatch", 64))
-        self.max_bytes_per_file = int(options.get("maxBytesPerFile", 0))
-        self._upto = ""  # watermark mirror for batch-size pacing only
-        self._seen_below: set[str] = set()  # late-by-naming warn-once
-
-    def _list(self) -> list[str]:
-        pats = ("*.warc", "*.warc.gz", "*.wet", "*.wet.gz")
-        return sorted(
-            os.path.basename(p)
-            for pat in pats
-            for p in _glob.glob(os.path.join(self.dir, pat))
-        )
-
-    def initialOffset(self) -> dict:
-        return {"upto": ""}
-
-    def latestOffset(self) -> dict:
-        # advance the watermark by at most maxFilesPerBatch names past
-        # the last planned/committed position — the cap must move the
-        # OFFSET, not trim partitions(): every name under a committed
-        # watermark is by contract already planned, so a partitions()-
-        # side trim would orphan the overflow files forever
-        fresh = [n for n in self._list() if n > self._upto]
-        if fresh:
-            self._upto = fresh[: self.max_files_per_batch][-1]
-        return {"upto": self._upto}
-
-    def partitions(self, start: dict, end: dict) -> list[InputPartition]:
-        lo, hi = start.get("upto", ""), end.get("upto", "")
-        # restart recovery: planning is
-        # the first call that shows a fresh reader the checkpointed
-        # offsets — adopt BOTH ends. After a clean-shutdown restart the
-        # first latestOffset() runs before any adoption and can emit a
-        # watermark BELOW the committed one (fresh reader, empty
-        # _upto); Spark then plans (committed, below] — an empty batch,
-        # since hi < lo selects nothing — and adopting lo here stops
-        # the next latestOffset() from re-planning (re-ingesting) the
-        # segments between them.
-        self._upto = max(self._upto, lo, hi)
-        names = self._list()
-        if lo:
-            below = [n for n in names if n <= lo]
-            late = set(below) - self._seen_below
-            if late and self._seen_below:
-                print(
-                    f"warc stream: {len(late)} file(s) landed at or below "
-                    f"the committed watermark {lo!r} and will never be "
-                    f"planned (segment names must be monotone): "
-                    f"{sorted(late)[:5]}"
-                )
-            self._seen_below.update(below)
-        batch = [os.path.join(self.dir, n) for n in names if lo < n <= hi]
-        _check_file_sizes(batch, self.max_bytes_per_file)
-        return [_WarcFile(p) for p in batch]
-
-    def read(self, partition: _WarcFile):
-        yield from _warc_rows(
-            partition.path, self.record_types, self.strip_http
-        )
-
-    def commit(self, end: dict) -> None:
-        # watermarks need no bookkeeping to stay correct, but pacing
-        # does: adopt committed positions (restart recovery, part 2)
-        self._upto = max(self._upto, end.get("upto", ""))

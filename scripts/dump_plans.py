@@ -68,7 +68,10 @@ def _normalize(plan: str) -> str:
 
 
 def render(sf_dir: str) -> str:
-    spark = get_spark("plan-dump")
+    # plan shapes (scan splits, shuffle partitions) follow the session's
+    # parallelism, so the dump pins the size PLANS.md was generated at
+    # rather than following $SPARK_GRAFT_CPUS
+    spark = get_spark("plan-dump", master="local[32]")
     spark.sparkContext.setLogLevel("ERROR")
 
     out = [

@@ -133,20 +133,10 @@ SLOW_TESTS = frozenset((
     "test_curate_with_quantile_gate_and_chunking",  # 9.2s
     "test_curate_wordpiece_encode_stage",  # 9.9s
     "test_curate_wordpiece_frozen_vocab_matches_self_trained",  # 13.7s
-    "test_curated_ingest_bloom_gate_matches_plain",  # 26.4s
-    "test_curated_ingest_drift_gate_quarantines_shifted_batch",  # 6.1s
-    "test_curated_ingest_dsir_gate_with_pretrained_ratios",  # 5.2s
-    "test_curated_ingest_incremental_neardup",  # 9.9s
-    "test_curated_ingest_incremental_winnow",  # 16.2s
-    "test_curated_ingest_perplexity_gate_with_pretrained_lm",  # 6.4s
-    "test_curated_ingest_unigram_encode_with_pretrained_artifact",  # 5.0s
     "test_dedup_by_pairs_keep_by_policy",  # 10.6s
     "test_embed_pipeline_build_and_search",  # 5.4s
     "test_embed_pipeline_ivfpq_cli",  # 5.4s
     "test_embed_pipeline_opq_build_search_eval",  # 29.2s
-    "test_embed_pipeline_refit_cli",  # 5.5s
-    "test_embedding_ingest_incremental_neardup",  # 6.9s
-    "test_embedding_ingest_replay_is_idempotent",  # 12.8s
     "test_hits_matches_numpy_reference",  # 6.1s
     "test_hits_single_edge_fixed_point_and_quantized_invariance",  # 15.2s
     "test_ivfpq_deterministic_across_partitionings",  # 11.7s
@@ -154,10 +144,8 @@ SLOW_TESTS = frozenset((
     "test_ivfpq_trains_residual_codebooks_and_recalls",  # 7.4s
     "test_kmeans_family_ignores_null_embeddings",  # 5.7s
     "test_kmeans_quantized_partitioning_invariant",  # 6.0s
-    "test_kmv_ingest_sink_folds_batches_idempotently",  # 5.0s
     "test_lm_perplexity_recomputed_in_python",  # 12.6s
     "test_lsh_bucketed_block_decomposition_is_invisible",  # 6.4s
-    "test_media_ingest_phash_index",  # 6.3s
     "test_neardup_clusters_end_to_end_lsh",  # 19.2s
     "test_neardup_clusters_equal_union_find",  # 16.7s
     "test_opq_alternation_nonincreasing_and_partition_invariant",  # 24.3s
@@ -201,16 +189,11 @@ SLOW_TESTS = frozenset((
     "test_semi_and_anti_partition_the_input",  # 21.6s
     "test_simhash_neardup_banding",  # 14.0s
     "test_stopword_removal_only_removes_stopwords",  # 5.3s
-    "test_stream_stream_join_matches_batch_range_join",  # 6.3s
     "test_token_budget_filter",  # 7.2s
     "test_token_divergence_identical_and_disjoint",  # 7.2s
     "test_train_classifier_cli_roundtrip",  # 6.7s
     "test_train_classifier_matches_reference_and_learns",  # 35.8s
     "test_train_matches_naive_reference",  # 9.8s
-    "test_warc_stream_fix_mojibake_exact_dedup",  # 6.1s
-    "test_warc_stream_ingests_landing_segments",  # 9.1s
-    "test_warc_stream_restart_does_not_reingest",  # 13.0s
-    "test_warc_stream_to_curated_ingest_exactly_once",  # 12.6s
     "test_warc_to_curate_end_to_end",  # 17.3s
     "test_x08_gopher_c4_columns_nondegenerate",  # 11.0s
     "test_x13_audio_columns_nondegenerate",  # 6.7s

@@ -9,7 +9,11 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from mapreduce_stockheadlines_spark.functions.vectors import as_double, cosine
+from mapreduce_stockheadlines_spark.functions.vectors import (
+    as_double,
+    dot,
+    l2_norm,
+)
 from mapreduce_stockheadlines_spark.operators import dedup as D
 from mapreduce_stockheadlines_spark.operators import multimodal as M
 from mapreduce_stockheadlines_spark.operators import similarity as S
@@ -139,10 +143,11 @@ def test_cosine_expression(spark):
     df = spark.createDataFrame(
         [([1.0, 0.0], [1.0, 0.0]), ([1.0, 0.0], [0.0, 1.0])], ["a", "b"]
     )
+    a, b = as_double("a"), as_double("b")
     sims = [
         r.s
         for r in df.select(
-            cosine(as_double("a"), as_double("b")).alias("s")
+            (dot(a, b) / (l2_norm(a) * l2_norm(b))).alias("s")
         ).collect()
     ]
     assert math.isclose(sims[0], 1.0)
@@ -2160,8 +2165,8 @@ def test_pca_fit_project_reference_and_invariance(spark, sf_dir):
 
 
 def test_kmeans_family_ignores_null_embeddings(spark, sf_dir):
-    """NULL/empty embedding rows carry no geometry: training, assignment,
-    moment partials and semantic pairing all drop them up front instead
+    """NULL/empty embedding rows carry no geometry: training, assignment
+    and semantic pairing all drop them up front instead
     of failing inside an executor, and results equal the clean-corpus
     run exactly."""
     import numpy as np
@@ -2169,7 +2174,6 @@ def test_kmeans_family_ignores_null_embeddings(spark, sf_dir):
     from mapreduce_stockheadlines_spark.operators.similarity import (
         kmeans_assign,
         kmeans_centroids,
-        kmeans_moment_partials,
         semantic_neardup_pairs,
     )
     from mapreduce_stockheadlines_spark.plans.catalog import table
@@ -2187,9 +2191,6 @@ def test_kmeans_family_ignores_null_embeddings(spark, sf_dir):
 
     a = kmeans_assign(dirty, cent_clean)
     assert a.count() == emb.count()  # null rows dropped, not scored
-    m_clean = sorted(map(tuple, kmeans_moment_partials(emb, cent_clean).collect()))
-    m_dirty = sorted(map(tuple, kmeans_moment_partials(dirty, cent_clean).collect()))
-    assert m_clean == m_dirty
     p_clean = semantic_neardup_pairs(emb, threshold=0.5, centroids=cent_clean)
     p_dirty = semantic_neardup_pairs(dirty, threshold=0.5, centroids=cent_clean)
     assert sorted(map(tuple, p_clean.collect())) == sorted(

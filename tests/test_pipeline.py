@@ -857,50 +857,6 @@ def test_embed_pipeline_eval_cli(spark, tmp_path, sf_dir, capsys):
     assert all("recall=1.0" in ln for ln in lines)
 
 
-def test_embed_pipeline_refit_cli(spark, tmp_path, sf_dir, capsys):
-    """refit mode rolls the served index from a streaming moment
-    artifact: build an index, fold two embedding micro-batches through
-    kmeans_ingest_sink, refit, and (a) the persisted centroids equal a
-    driver-side kmeans_refit of the same artifact, (b) search still
-    serves from the rolled index."""
-    import numpy as np
-
-    from mapreduce_stockheadlines_spark.jobs.embed_pipeline import (
-        load_centroids,
-        main,
-    )
-    from mapreduce_stockheadlines_spark.operators.similarity import (
-        kmeans_refit,
-    )
-    from mapreduce_stockheadlines_spark.plans.catalog import table
-    from mapreduce_stockheadlines_spark.sources.versioned import read_table
-    from mapreduce_stockheadlines_spark.streaming.ingest import (
-        kmeans_ingest_sink,
-    )
-
-    out_dir = str(tmp_path / "vec")
-    main(["build", out_dir, "--sf-dir", sf_dir, "--build-index",
-          "--n-centroids", "4", "--train-iters", "1"])
-    cent0 = load_centroids(spark, out_dir)
-
-    emb = table(spark, sf_dir, "embeddings")
-    art = str(tmp_path / "moments")
-    sink = kmeans_ingest_sink(cent0, art)
-    sink(emb.filter(F.col("vec_id") % 2 == 0), 0)
-    sink(emb.filter(F.col("vec_id") % 2 == 1), 1)
-
-    main(["refit", out_dir, "--moments-dir", art])
-    assert "centroids moved" in capsys.readouterr().out
-    rolled = load_centroids(spark, out_dir)
-    want = kmeans_refit(
-        read_table(spark, art).select("cell_id", "dim", "s_fp", "n"), cent0
-    )
-    assert np.array_equal(rolled, want)
-
-    main(["search", out_dir, "--query-ids", "0", "--k", "3"])
-    assert len(capsys.readouterr().out.splitlines()) == 3
-
-
 def test_report_cli_save_census(spark, tmp_path, sf_dir, capsys):
     """--save-census persists the (term, freq) census whose token total
     equals the report's own total_ws_tokens row."""
@@ -1153,11 +1109,8 @@ def test_embed_pipeline_ivfpq_cli(spark, tmp_path, sf_dir, capsys):
 def test_embed_pipeline_ivfpq_artifact_lifecycle(spark, tmp_path, sf_dir):
     """Round-8 review findings: a rebuilt plain-IVF index drops the
     stale pq_codebooks artifact (serving must not auto-detect residual
-    codebooks trained under retired centroids), and refit mode refuses
-    to roll the coarse centroids underneath an IVFPQ index."""
+    codebooks trained under retired centroids)."""
     import os
-
-    import pytest
 
     from mapreduce_stockheadlines_spark.jobs.embed_pipeline import main
 
@@ -1166,8 +1119,6 @@ def test_embed_pipeline_ivfpq_artifact_lifecycle(spark, tmp_path, sf_dir):
           "--index-type", "ivfpq", "--n-centroids", "4",
           "--train-iters", "1", "--pq-m", "4", "--pq-ksub", "4"])
     assert os.path.isdir(f"{out_dir}/pq_codebooks")
-    with pytest.raises(SystemExit, match="mismatched index"):
-        main(["refit", out_dir, "--moments-dir", str(tmp_path / "mom")])
     main(["build", out_dir, "--sf-dir", sf_dir, "--build-index",
           "--n-centroids", "4", "--train-iters", "1"])
     assert not os.path.isdir(f"{out_dir}/pq_codebooks")
@@ -1340,9 +1291,8 @@ def test_apply_wordpiece_reassembles_in_order_and_restores_empty(spark):
 def test_embed_pipeline_opq_build_search_eval(spark, tmp_path, sf_dir, capsys):
     """--index-type opq persists rotation + codebooks; serving
     auto-detects the rotation artifact (rotated flat ADC, banner
-    printed), eval runs end-to-end, refit refuses the OPQ index
-    loudly, and a plain-IVF rebuild drops the stale rotation so
-    serving falls back to IVF."""
+    printed), eval runs end-to-end, and a plain-IVF rebuild drops the
+    stale rotation so serving falls back to IVF."""
     import numpy as np
 
     from mapreduce_stockheadlines_spark.jobs.embed_pipeline import (
@@ -1375,11 +1325,6 @@ def test_embed_pipeline_opq_build_search_eval(spark, tmp_path, sf_dir, capsys):
     main(["eval", out_dir, "--query-ids", "0,1", "--k", "5"])
     ev = capsys.readouterr().out
     assert "macro\trecall=" in ev
-
-    import pytest
-
-    with pytest.raises(SystemExit, match="OPQ index"):
-        main(["refit", out_dir, "--moments-dir", str(tmp_path / "m")])
 
     main(["build", out_dir, "--sf-dir", sf_dir, "--build-index",
           "--n-centroids", "4", "--train-iters", "1"])

@@ -454,14 +454,9 @@ def test_plans_md_regenerated_at_head():
     import subprocess
     import sys
 
-    # the dump was produced at the default local[32] session config and
-    # plan shapes (scan splits, shuffle partitions) depend on it, so the
-    # core-count override a caller may export must not reach the dump
-    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_CPUS"}
     proc = subprocess.run(
         [sys.executable, "scripts/dump_plans.py", "--verify"],
         cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        env=env,
         capture_output=True,
         text=True,
         timeout=900,

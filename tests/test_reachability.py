@@ -10,8 +10,7 @@ name.
 Roots:
 - the query registry (``plans/registry.py``);
 - the ``__main__`` block of every ``jobs/`` CLI;
-- ``scripts/``, ``bench.py``, ``perfbench/`` and ``__spark_entry__.py``;
-- ``streaming/`` (kept whole; its fate is an open ROADMAP item).
+- ``scripts/``, ``bench.py``, ``perfbench/`` and ``__spark_entry__.py``.
 
 A second guard holds every defaulted parameter of a public function in
 ``operators/``, ``functions/``, ``sources/``, ``jobs/`` and
@@ -39,6 +38,9 @@ ALLOWED = {
     "operators.sampling.dsir_log_ratios":
         "two-census reference that tests/test_sampling.py pins "
         "dsir_fit_scores (the curate CLI's DSIR stage) against",
+    "operators.sampling.dsir_scores":
+        "separate-target scorer that tests/test_sampling.py pins "
+        "dsir_fit_scores against",
     "operators.textstats.winnow_gram_col":
         "one-expression semantic reference the staged winnow grams "
         "(x08, curate) are pinned equal to; the plan-guard test builds "
@@ -51,12 +53,19 @@ ALLOWED = {
     "operators.wordpiece.save_wordpiece":
         "writes what curate --wordpiece-dir reads",
     "operators.relevance.save_bigram_lm": "writes what curate --lm-dir reads",
-    "operators.sampling.save_dsir_ratios":
-        "writes what the streaming ingest DSIR gate (dsir_ratios_dir) "
-        "reads; its error message names it",
-    "operators.pq.pq_refit":
-        "embed_pipeline --mode refit's messages name it as the path "
-        "for OPQ artifacts",
+    # Reached only by their own unit tests since the streaming ingest
+    # that called them was deleted: ROADMAP item 5 stage 2 decides
+    # their fate with those tests.
+    "sources.versioned.write_table_version": "ROADMAP item 5 stage 2",
+    "sources.versioned.read_table": "ROADMAP item 5 stage 2",
+    "sources.versioned._reclaim_stale_claim": "ROADMAP item 5 stage 2",
+    "operators.sketches.distinct_sketches": "ROADMAP item 5 stage 2",
+    "operators.sketches.upsert_sketches": "ROADMAP item 5 stage 2",
+    "operators.sketches.kmv_merge": "ROADMAP item 5 stage 2",
+    "operators.membership.bloom_lookup":
+        "ROADMAP item 5 stage 2; the Arrow twin of bloom_lookup_join "
+        "(x01), pinned equal to it",
+    "operators.membership.bloom_gated_anti_join": "ROADMAP item 5 stage 2",
 }
 
 _MODULE = "<module>"
@@ -267,11 +276,7 @@ class _Graph:
 def _roots(mods: dict[str, _Module]) -> set[tuple[str, str]]:
     roots: set[tuple[str, str]] = set()
     for name, m in mods.items():
-        whole = (
-            not m.in_package
-            or name.startswith(f"{PKG}.streaming")
-        )
-        if whole:
+        if not m.in_package:
             roots |= {(name, _MODULE), (name, _MAIN)}
             roots |= {(name, d) for d in m.defs}
         elif name.startswith(f"{PKG}.jobs."):
@@ -301,8 +306,8 @@ def unreached() -> list[str]:
 def test_every_package_definition_is_reached_from_a_root():
     dead = unreached()
     assert not dead, (
-        "package definitions that no query, job, CLI or streaming module "
-        "reaches (delete them, or name them in ALLOWED with a reason):\n  "
+        "package definitions that no query, job, CLI or script reaches "
+        "(delete them, or name them in ALLOWED with a reason):\n  "
         + "\n  ".join(dead)
     )
 
@@ -334,19 +339,17 @@ _COLUMN_SUFFIXES = ("_col", "_cols", "_alias")
 _COLUMN_NAMES = {"alias", "left_ts", "right_ts", "left_id", "right_id",
                  "left_text", "right_text"}
 
-# "module.function(param)" -> reason. Only values that must equal one a
-# caller sets on a paired operator.
+# "module.function(param)" -> reason. Only parameters that a caller
+# outside the package passes by keyword, with the default value (which
+# the guard does not count as setting it), so removing them would break
+# that caller.
 ALLOWED_OPTIONS = {
-    "operators.membership.bloom_lookup_join(salt)":
-        "must equal the salt of bloom_build, which the streaming ingest "
-        "sets when it builds the dedup bitmap",
-    "operators.pq.pq_refit(fp_dp)":
-        "must equal the fp_dp of pq_moment_partials, which the streaming "
-        "pq_ingest_sink sets when it writes the moment artifact",
-    "operators.similarity.kmeans_refit(fp_dp)":
-        "must equal the fp_dp of kmeans_moment_partials, which the "
-        "streaming kmeans_ingest_sink sets when it writes the moment "
-        "artifact",
+    "operators.dedup.lsh_candidate_pairs(num_hashes)":
+        "perfbench's curate workload passes num_hashes=8; it must also "
+        "equal the signature width that callers set through "
+        "minhash_signature(num_hashes=)",
+    "operators.dedup.lsh_candidate_pairs(bands)":
+        "perfbench's curate workload passes bands=4",
 }
 
 
@@ -489,13 +492,11 @@ def test_option_allowlist_names_existing_unset_options():
 def test_lineage_cuts_go_through_session_checkpoint():
     """Every lineage cut in the package calls ``session.checkpoint``, so
     one configured checkpoint dir decides local versus reliable for all
-    of them. ``streaming/`` is outside the rule for now, like its
-    reachability."""
+    of them."""
     calls = sorted(
         f"{name}:{n.lineno} .{n.func.attr}("
         for name, m in _load().items()
         if m.in_package and name != f"{PKG}.session"
-        and not name.startswith(f"{PKG}.streaming")
         for n in ast.walk(m.tree)
         if isinstance(n, ast.Call)
         and isinstance(n.func, ast.Attribute)

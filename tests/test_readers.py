@@ -466,232 +466,6 @@ def test_warc_to_curate_end_to_end(spark, tmp_path):
     assert "<urn:uuid:w2>" not in texts  # 'Not found' fails the gates
 
 
-def test_warc_stream_ingests_landing_segments(spark, tmp_path):
-    """Streaming WARC: segments landing between triggers are picked up
-    in filename-watermark order, each exactly once; a batch-size cap
-    paces multi-segment backlogs through successive batches."""
-    import time
-
-    from mapreduce_stockheadlines_spark.sources import warc as W
-
-    land = tmp_path / "land"
-    land.mkdir()
-    out, ck = str(tmp_path / "out"), str(tmp_path / "ck")
-
-    def _drop(name, rid):
-        (land / name).write_bytes(
-            _warc_record(
-                "conversion", rid, f"http://x/{rid}",
-                f"text of {rid}".encode(),
-                extra=[b"Content-Type: text/plain"],
-            )
-        )
-
-    _drop("seg-001.warc", "a")
-    _drop("seg-002.warc", "b")
-    W.register(spark)
-    stream = (
-        spark.readStream.format("warc")
-        .option("path", str(land))
-        .option("maxFilesPerBatch", 1)  # force pacing across triggers
-        .load()
-    )
-    q = (
-        stream.select("record_id", "file").writeStream.format("parquet")
-        .option("path", out).option("checkpointLocation", ck)
-        .trigger(processingTime="1 seconds").start()
-    )
-    try:
-        deadline = time.time() + 90
-        dropped_late = False
-        while time.time() < deadline:
-            try:
-                n = spark.read.parquet(out).count()
-            except Exception:
-                n = 0
-            if n >= 2 and not dropped_late:
-                _drop("seg-003.warc", "c")  # lands mid-stream
-                dropped_late = True
-            if n >= 3:
-                break
-            time.sleep(1)
-    finally:
-        q.stop()
-    got = spark.read.parquet(out).collect()
-    assert sorted(r.record_id for r in got) == [
-        "<urn:uuid:a>", "<urn:uuid:b>", "<urn:uuid:c>"
-    ]
-    assert len(got) == 3  # exactly once each, despite the 1-file pacing
-
-
-def test_warc_stream_to_curated_ingest_exactly_once(spark, tmp_path):
-    """VERDICT r5 #8: the full crawl-to-corpus loop in one pinned test —
-    ``readStream.format('warc')`` over a live landing directory feeds
-    ``curated_ingest_sink`` via foreachBatch. Cross-segment duplicate
-    text is dropped by the persistent digest index, and a stop/restart
-    from the same checkpoint admits later segments EXACTLY ONCE (the
-    filename-watermark offsets + the sink's replayed-batch guard
-    together give end-to-end exactly-once doc admission)."""
-    import time
-
-    from pyspark.sql import functions as F
-
-    from mapreduce_stockheadlines_spark.sources import warc as W
-    from mapreduce_stockheadlines_spark.streaming.ingest import (
-        curated_ingest_sink,
-    )
-
-    land = tmp_path / "land"
-    land.mkdir()
-    out, idx = str(tmp_path / "out"), str(tmp_path / "idx")
-    ck = str(tmp_path / "ck")
-
-    def _drop(name, recs):
-        (land / name).write_bytes(
-            b"".join(
-                _warc_record(
-                    "conversion", rid, f"http://x/{rid}", text.encode(),
-                    extra=[b"Content-Type: text/plain"],
-                )
-                for rid, text in recs
-            )
-        )
-
-    _drop("seg-001.warc", [("a", "alpha document one"), ("b", "beta two")])
-    # c duplicates a's text across segments; d is fresh
-    _drop("seg-002.warc", [("c", "alpha document one"), ("d", "delta four")])
-    W.register(spark)
-
-    def start():
-        stream = (
-            spark.readStream.format("warc")
-            .option("path", str(land))
-            .option("recordTypes", "conversion")
-            .load()
-            .select(
-                F.col("record_id").alias("doc_id"),
-                F.make_valid_utf8(F.col("payload").cast("string")).alias(
-                    "text"
-                ),
-            )
-        )
-        return (
-            stream.writeStream.foreachBatch(curated_ingest_sink(out, idx))
-            .option("checkpointLocation", ck)
-            .trigger(processingTime="1 seconds")
-            .start()
-        )
-
-    def _count(path=None):
-        try:
-            return spark.read.parquet(path or out).count()
-        except Exception:
-            return 0
-
-    # the wait gates on the INDEX count: the index append is the LAST
-    # write of each batch, so stopping after it cannot catch a batch
-    # between its output and index writes (that window is the sink's
-    # crash-replay contract, pinned separately — not this test's target)
-    q = start()
-    try:
-        deadline = time.time() + 90
-        while time.time() < deadline and _count(idx) < 3:
-            time.sleep(1)
-    finally:
-        q.stop()
-    assert _count() == 3  # a, b, d — c's duplicate text deduped
-
-    # segment lands while the pipeline is DOWN; e fresh, f repeats b
-    _drop("seg-003.warc", [("e", "epsilon five"), ("f", "beta two")])
-    q = start()  # same checkpoint: resumes past committed segments
-    try:
-        deadline = time.time() + 90
-        while time.time() < deadline and _count(idx) < 4:
-            time.sleep(1)
-    finally:
-        q.stop()
-    got = sorted(r.doc_id for r in spark.read.parquet(out).collect())
-    assert got == [  # each admitted exactly once across the restart
-        "<urn:uuid:a>", "<urn:uuid:b>", "<urn:uuid:d>", "<urn:uuid:e>"
-    ]
-    assert spark.read.parquet(idx).count() == 4
-
-
-def test_warc_stream_fix_mojibake_exact_dedup(spark, tmp_path):
-    """VERDICT r6 #7: --fix-mojibake through the WARC path end-to-end.
-    A landing segment carries a clean UTF-8 page, its cp1252-mojibake
-    re-fetch (the raw on-the-wire bytes ARE the UTF-8 encoding of the
-    mojibake string — exactly what a crawler that mis-labeled the
-    charset re-serves), and one unrelated page. With fix_mojibake=True
-    the sink repairs the re-fetch BEFORE digesting, so it collapses
-    against its clean twin via the EXACT digest index — near-dup is OFF
-    in this sink, proving the repair (not similarity) did the dedup —
-    and the admitted text is byte-identical to the clean original."""
-    import time
-
-    from pyspark.sql import functions as F
-
-    from mapreduce_stockheadlines_spark.sources import warc as W
-    from mapreduce_stockheadlines_spark.streaming.ingest import (
-        curated_ingest_sink,
-    )
-
-    clean = "the naïve café crew met again — the best of the day"
-    broken = clean.encode("utf-8").decode("cp1252")
-    assert broken != clean
-    land = tmp_path / "land"
-    land.mkdir()
-    (land / "seg-001.warc").write_bytes(
-        b"".join(
-            _warc_record(
-                "conversion", rid, f"http://x/{rid}", text.encode("utf-8"),
-                extra=[b"Content-Type: text/plain"],
-            )
-            for rid, text in [
-                ("a", clean), ("b", broken), ("c", "unrelated page text")
-            ]
-        )
-    )
-    out, idx, ck = (
-        str(tmp_path / "out"), str(tmp_path / "idx"), str(tmp_path / "ck")
-    )
-    W.register(spark)
-    stream = (
-        spark.readStream.format("warc")
-        .option("path", str(land))
-        .option("recordTypes", "conversion")
-        .load()
-        .select(
-            F.col("record_id").alias("doc_id"),
-            F.make_valid_utf8(F.col("payload").cast("string")).alias("text"),
-        )
-    )
-    q = (
-        stream.writeStream.foreachBatch(
-            curated_ingest_sink(out, idx, fix_mojibake=True)
-        )
-        .option("checkpointLocation", ck)
-        .trigger(processingTime="1 seconds")
-        .start()
-    )
-    try:
-        deadline = time.time() + 90
-        while time.time() < deadline:
-            try:
-                if spark.read.parquet(idx).count() >= 2:
-                    break
-            except Exception:
-                pass
-            time.sleep(1)
-    finally:
-        q.stop()
-    got = {r.doc_id: r.text for r in spark.read.parquet(out).collect()}
-    # b repaired to clean's exact bytes → same digest → deduped away
-    assert sorted(got) == ["<urn:uuid:a>", "<urn:uuid:c>"]
-    assert got["<urn:uuid:a>"] == clean
-    assert spark.read.parquet(idx).count() == 2
-
-
 def test_pipeline_cli_warc_input(spark, tmp_path):
     """--warc-dir: the curate CLI runs straight off WARC segments —
     numeric ids derived from record ids, markup stripped, output
@@ -771,81 +545,6 @@ def test_warc_text_docs_missing_record_id_gets_synthetic_id(spark, tmp_path):
     assert len(rows) == 1
     assert rows[0].doc_id == "noid.warc:0"
     assert rows[0].text == "payload!"
-
-
-def test_warc_stream_restart_does_not_reingest(spark, tmp_path):
-    """Clean-shutdown restart of the WARC stream: a fresh reader's
-    first latestOffset() knows nothing (empty watermark mirror) and can
-    emit a watermark below the committed one — the planned batch must
-    come up EMPTY (hi < lo selects nothing) and adoption of the
-    committed start in partitions() must stop later triggers from
-    re-planning already-ingested segments."""
-    import time
-
-    from mapreduce_stockheadlines_spark.sources import warc as W
-
-    land = tmp_path / "land"
-    land.mkdir()
-    out, ck = str(tmp_path / "out"), str(tmp_path / "ck")
-    for i, rid in enumerate(["a", "b", "c"]):
-        (land / f"seg-{i:03d}.warc").write_bytes(
-            _warc_record(
-                "conversion", rid, f"http://x/{rid}",
-                f"text of {rid}".encode(),
-                extra=[b"Content-Type: text/plain"],
-            )
-        )
-    W.register(spark)
-
-    def make_query():
-        stream = (
-            spark.readStream.format("warc")
-            .option("path", str(land))
-            .option("maxFilesPerBatch", 1)
-            .load()
-        )
-        return (
-            stream.select("record_id", "file").writeStream.format("parquet")
-            .option("path", out).option("checkpointLocation", ck)
-            .trigger(processingTime="1 seconds").start()
-        )
-
-    def drain_to(n, q):
-        deadline = time.time() + 90
-        while time.time() < deadline:
-            try:
-                if spark.read.parquet(out).count() >= n:
-                    return
-            except Exception:
-                pass
-            time.sleep(0.5)
-
-    q = make_query()
-    try:
-        drain_to(3, q)
-    finally:
-        q.stop()
-    assert spark.read.parquet(out).count() == 3
-
-    # restart with the same checkpoint, drop one NEW segment: only it
-    # may be ingested — committed segments must not reappear
-    (land / "seg-900.warc").write_bytes(
-        _warc_record(
-            "conversion", "d", "http://x/d", b"text of d",
-            extra=[b"Content-Type: text/plain"],
-        )
-    )
-    q2 = make_query()
-    try:
-        drain_to(4, q2)
-        time.sleep(3)  # a few extra triggers: any re-ingest would land now
-    finally:
-        q2.stop()
-    got = spark.read.parquet(out).collect()
-    assert len(got) == 4  # exactly one new row, zero re-ingested
-    assert sorted(r.record_id for r in got) == [
-        "<urn:uuid:a>", "<urn:uuid:b>", "<urn:uuid:c>", "<urn:uuid:d>"
-    ]
 
 
 def test_pipeline_cli_warc_dedup_urls(spark, tmp_path):

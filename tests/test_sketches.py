@@ -123,55 +123,6 @@ def test_sketch_estimates_partitioning_invariant(spark, sf_dir):
     assert got_a == got_b
 
 
-def test_sketch_ingest_sink_folds_batches_idempotently(spark, tmp_path):
-    """Streaming artifact maintenance: batches fold incrementally into
-    a versioned sketch table, a replayed batch is a no-op, the final
-    estimates equal a from-scratch batch build, and the version history
-    time-travels."""
-    from mapreduce_stockheadlines_spark.sources.versioned import read_table
-    from mapreduce_stockheadlines_spark.streaming.ingest import (
-        sketch_ingest_sink,
-    )
-
-    art = str(tmp_path / "artifact")
-    sink = sketch_ingest_sink(["g"], "v", art)
-    b0 = spark.createDataFrame(
-        [("x", i) for i in range(40)] + [("y", i) for i in range(10)],
-        "g string, v int",
-    )
-    b1 = spark.createDataFrame(
-        [("x", i) for i in range(20, 60)] + [("z", i) for i in range(5)],
-        "g string, v int",
-    )
-    sink(b0, 0)
-    sink(b1, 1)
-    sink(b1, 1)  # at-least-once replay: must not fold twice
-
-    got = {
-        r.g: (r.distinct_estimate, r.n_rows)
-        for r in merge_sketches(
-            read_table(spark, art).select("g", "sketch", "n_rows"), ["g"]
-        ).collect()
-    }
-    want = {
-        r.g: (r.distinct_estimate, r.n_rows)
-        for r in merge_sketches(
-            distinct_sketches(b0.unionAll(b1), "v", ["g"]), ["g"]
-        ).collect()
-    }
-    assert got == want  # incremental == batch, replay included
-    assert got["x"][1] == 80 and abs(got["x"][0] - 60) <= 3
-    # version history: v1 holds only batch 0's state
-    v1 = {
-        r.g: r.n_rows
-        for r in merge_sketches(
-            read_table(spark, art, version=1).select("g", "sketch", "n_rows"),
-            ["g"],
-        ).collect()
-    }
-    assert v1 == {"x": 40, "y": 10}
-
-
 # --- Count-Min frequency sketches -------------------------------------------
 
 
@@ -395,166 +346,6 @@ def test_qsk_handles_negatives_and_is_partition_invariant(spark):
     assert -10 <= q[0.5] <= 0  # rank ceil(0.5*7)=4 → value 0's bucket
 
 
-def test_census_ingest_sink_folds_cms_and_qsk_idempotently(spark, tmp_path):
-    """One streaming sink serves every additive census artifact: CMS
-    counter tables and quantile-sketch bucket tables fold per batch
-    into versioned artifacts, a replayed batch is a no-op, and the
-    final state equals a from-scratch batch build row-for-row (the
-    merge == build-of-union property, now across micro-batches)."""
-    from mapreduce_stockheadlines_spark.operators.sketches import (
-        cms_build,
-        qsk_build,
-    )
-    from mapreduce_stockheadlines_spark.sources.versioned import read_table
-    from mapreduce_stockheadlines_spark.streaming.ingest import (
-        census_ingest_sink,
-    )
-
-    b0 = spark.createDataFrame(
-        [("x", "tok%d" % (i % 7), i) for i in range(60)], "g string, t string, v int"
-    )
-    b1 = spark.createDataFrame(
-        [("y", "tok%d" % (i % 5), i * 3) for i in range(40)],
-        "g string, t string, v int",
-    )
-    cms_dir = str(tmp_path / "cms")
-    qsk_dir = str(tmp_path / "qsk")
-    cms_sink = census_ingest_sink(
-        lambda b: cms_build(b, "t", ["g"], width=256), ["g", "d", "w"], cms_dir
-    )
-    qsk_sink = census_ingest_sink(
-        lambda b: qsk_build(b, "v", ["g"]), ["g", "qb"], qsk_dir
-    )
-    for sink in (cms_sink, qsk_sink):
-        sink(b0, 0)
-        sink(b1, 1)
-        sink(b1, 1)  # at-least-once replay: must not double-count
-
-    whole = b0.unionAll(b1)
-    got_cms = sorted(
-        map(tuple, read_table(spark, cms_dir).select("g", "d", "w", "cnt").collect())
-    )
-    want_cms = sorted(map(tuple, cms_build(whole, "t", ["g"], width=256).collect()))
-    assert got_cms == want_cms
-    got_qsk = sorted(
-        map(tuple, read_table(spark, qsk_dir).select("g", "qb", "cnt").collect())
-    )
-    want_qsk = sorted(map(tuple, qsk_build(whole, "v", ["g"]).collect()))
-    assert got_qsk == want_qsk
-    # version history time-travels: v1 holds only batch 0's census
-    v1 = sorted(
-        map(tuple,
-            read_table(spark, qsk_dir, version=1).select("g", "qb", "cnt").collect())
-    )
-    assert v1 == sorted(map(tuple, qsk_build(b0, "v", ["g"]).collect()))
-
-
-def test_census_sink_artifact_content_vs_duckdb(spark, sf_dir, tmp_path):
-    """VERDICT r6 #8: the streaming census artifacts' on-disk CONTENT
-    after a replayed-batch fold is compared against an INDEPENDENT
-    DuckDB re-derivation of the same folded batches — the existing
-    idempotence test pins fold == from-scratch SPARK build; this one
-    removes Spark from the expectation side entirely. CMS: salted-md5
-    cell positions re-derived in SQL over the union of both batches'
-    tokens. QSK: the log2-magnitude bucket table re-derived over the
-    union's n_chars. Both compare the artifact parquet row set
-    (including the stamped last_batch_id) value-for-value."""
-    import duckdb
-
-    from mapreduce_stockheadlines_spark.operators.sketches import (
-        cms_build,
-        qsk_build,
-    )
-    from mapreduce_stockheadlines_spark.sources.versioned import read_table
-    from mapreduce_stockheadlines_spark.streaming.ingest import (
-        census_ingest_sink,
-    )
-
-    docs = table(spark, sf_dir, "documents")
-    b0 = docs.filter(F.col("doc_id") % 2 == 0)
-    b1 = docs.filter(F.col("doc_id") % 2 == 1)
-
-    from mapreduce_stockheadlines_spark.functions.text import tokens_array
-
-    def toks(b):
-        return b.select(
-            "source", F.explode(tokens_array("text")).alias("token")
-        )
-
-    D, W, prec = 4, 256, 8
-    cms_dir, qsk_dir = str(tmp_path / "cms"), str(tmp_path / "qsk")
-    cms_sink = census_ingest_sink(
-        lambda b: cms_build(toks(b), "token", ["source"], depth=D, width=W),
-        ["source", "d", "w"],
-        cms_dir,
-    )
-    qsk_sink = census_ingest_sink(
-        lambda b: qsk_build(b, "n_chars", ["source"], prec_bits=prec),
-        ["source", "qb"],
-        qsk_dir,
-    )
-    for sink in (cms_sink, qsk_sink):
-        sink(b0, 0)
-        sink(b1, 1)
-        sink(b1, 1)  # at-least-once replay: must not double-count
-
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM '{sf_dir}/documents.parquet'"
-    )
-    # the union of folded batches IS the whole table (parity split)
-    duck_cms = con.execute(
-        f"""
-        WITH toks AS (
-          SELECT source, unnest(
-            list_filter(string_split(regexp_replace(lower(coalesce(text,'')),
-              '[^a-z ]', ' ', 'g'), ' '), t -> t <> '')) AS token
-          FROM documents)
-        SELECT source, CAST(i.i AS INT) AS d,
-               CAST(CAST(('0x' || substr(md5('cms:' || i.i || ':' || token),
-                                         1, 15)) AS BIGINT) % {W} AS INT)
-                 AS w,
-               CAST(count(*) AS BIGINT) AS cnt,
-               CAST(1 AS BIGINT) AS last_batch_id
-        FROM toks CROSS JOIN (SELECT unnest(range({D})) AS i) i
-        GROUP BY 1, 2, 3 ORDER BY 1, 2, 3
-        """
-    ).fetchall()
-    got_cms = sorted(
-        map(
-            tuple,
-            read_table(spark, cms_dir)
-            .select("source", "d", "w", "cnt", "last_batch_id")
-            .collect(),
-        )
-    )
-    assert got_cms == [tuple(r) for r in duck_cms]
-
-    duck_qsk = con.execute(
-        f"""
-        SELECT source,
-               CASE WHEN v < 0 THEN -((abs(v) >> s) << s)
-                    ELSE (abs(v) >> s) << s END AS qb,
-               CAST(count(*) AS BIGINT) AS cnt,
-               CAST(1 AS BIGINT) AS last_batch_id
-        FROM (SELECT source, CAST(n_chars AS BIGINT) AS v,
-                     greatest(length(bin(abs(CAST(n_chars AS BIGINT))))
-                              - {prec}, 0) AS s
-              FROM documents WHERE n_chars IS NOT NULL)
-        GROUP BY 1, 2 ORDER BY 1, 2
-        """
-    ).fetchall()
-    got_qsk = sorted(
-        map(
-            tuple,
-            read_table(spark, qsk_dir)
-            .select("source", "qb", "cnt", "last_batch_id")
-            .collect(),
-        )
-    )
-    assert got_qsk == [tuple(r) for r in duck_qsk]
-
-
 def test_qsk_quantiles_rejects_out_of_range_q(spark):
     import pytest
 
@@ -567,114 +358,6 @@ def test_qsk_quantiles_rejects_out_of_range_q(spark):
     for bad in ([], [1.5], [-0.1, 0.5]):
         with pytest.raises(ValueError, match="quantiles"):
             qsk_quantiles(sk, bad)
-
-
-def test_kmeans_ingest_sink_moment_fold_and_refit(spark, sf_dir, tmp_path):
-    """Streaming ANN index maintenance: the (cell, dim) fixed-point
-    moment artifact folds batches by exact BIGINT addition — replay is
-    a no-op, merge == build-of-union row-for-row — and kmeans_refit
-    rolls the frozen serving centroids to their next Lloyd update
-    BIT-identically from the folded artifact and from a from-scratch
-    single-batch build. The refit also matches the float trainer's
-    quantized round within fixed-point resolution."""
-    import numpy as np
-
-    from mapreduce_stockheadlines_spark.operators.similarity import (
-        kmeans_centroids,
-        kmeans_moment_partials,
-        kmeans_refit,
-    )
-    from mapreduce_stockheadlines_spark.sources.versioned import read_table
-    from mapreduce_stockheadlines_spark.streaming.ingest import (
-        kmeans_ingest_sink,
-    )
-
-    emb = table(spark, sf_dir, "embeddings")
-    cent = kmeans_centroids(emb, k=8, n_iters=1, quantize_dp=7)
-    art = str(tmp_path / "kmoments")
-    sink = kmeans_ingest_sink(cent, art)
-    b0 = emb.filter(F.col("vec_id") % 2 == 0)
-    b1 = emb.filter(F.col("vec_id") % 2 == 1)
-    sink(b0, 0)
-    sink(b1, 1)
-    sink(b1, 1)  # at-least-once replay: must not double-count
-
-    folded = sorted(
-        map(
-            tuple,
-            read_table(spark, art)
-            .select("cell_id", "dim", "s_fp", "n")
-            .collect(),
-        )
-    )
-    whole = sorted(
-        map(tuple, kmeans_moment_partials(emb, cent).collect())
-    )
-    assert folded == whole  # merge == build-of-union, exactly
-
-    r_stream = kmeans_refit(
-        read_table(spark, art).select("cell_id", "dim", "s_fp", "n"), cent
-    )
-    r_batch = kmeans_refit(kmeans_moment_partials(emb, cent), cent)
-    assert np.array_equal(r_stream, r_batch)  # bit-identical roll
-    # and within fixed-point resolution of the float trainer's next
-    # quantized Lloyd round (same assignment contract, float sums)
-    r_float = kmeans_centroids(emb, k=8, n_iters=2, quantize_dp=7)
-    assert np.allclose(r_stream, r_float, atol=5e-5)
-
-
-def test_pq_ingest_sink_moment_fold_and_refit(spark, sf_dir, tmp_path):
-    """Streaming PQ index maintenance (the kmeans moment-sink algebra
-    generalized over subspaces): the (sub, cell, dim) fixed-point
-    artifact folds batches by exact BIGINT addition — replay is a
-    no-op, merge == build-of-union row-for-row — and pq_refit rolls
-    the frozen codebooks to their next Lloyd update BIT-identically
-    from the folded artifact and from a from-scratch single-shot
-    build; the roll also lands within fixed-point resolution of the
-    float trainer's next quantized round. Foreign/corrupt artifacts
-    fail loudly."""
-    import numpy as np
-    import pytest
-
-    from mapreduce_stockheadlines_spark.operators.pq import (
-        pq_moment_partials,
-        pq_refit,
-        pq_train,
-    )
-    from mapreduce_stockheadlines_spark.sources.versioned import read_table
-    from mapreduce_stockheadlines_spark.streaming.ingest import (
-        pq_ingest_sink,
-    )
-
-    emb = table(spark, sf_dir, "embeddings")
-    cb = pq_train(emb, m=4, ksub=4, n_iters=1, quantize_dp=7)
-    art = str(tmp_path / "pqmoments")
-    sink = pq_ingest_sink(cb, art)
-    sink(emb.filter(F.col("vec_id") % 2 == 0), 0)
-    sink(emb.filter(F.col("vec_id") % 2 == 1), 1)
-    sink(emb.filter(F.col("vec_id") % 2 == 1), 1)  # replay: no-op
-
-    cols = ["sub", "cell", "dim", "s_fp", "n"]
-    folded = sorted(
-        map(tuple, read_table(spark, art).select(*cols).collect())
-    )
-    whole = sorted(map(tuple, pq_moment_partials(emb, cb).collect()))
-    assert folded == whole  # merge == build-of-union, exactly
-
-    r_stream = pq_refit(read_table(spark, art).select(*cols), cb)
-    r_batch = pq_refit(pq_moment_partials(emb, cb), cb)
-    assert np.array_equal(r_stream, r_batch)  # bit-identical roll
-    r_float = pq_train(emb, m=4, ksub=4, n_iters=2, quantize_dp=7)
-    assert np.allclose(r_stream, r_float, atol=5e-5)
-
-    # foreign artifact (different geometry) fails loudly, not garbage
-    cb_other = pq_train(emb, m=2, ksub=4, n_iters=1)
-    with pytest.raises(ValueError, match="different index"):
-        pq_refit(read_table(spark, art).select(*cols), cb_other)
-    # corrupt artifact: duplicated (sub, cell, dim) row
-    dup = read_table(spark, art).select(*cols)
-    with pytest.raises(ValueError, match="duplicate|partial"):
-        pq_refit(dup.unionByName(dup.limit(1)), cb)
 
 
 # --- KMV / theta sketches ----------------------------------------------------
@@ -913,68 +596,3 @@ def test_x16_kmv_columns_nondegenerate(spark, sf_dir):
     finally:
         x16.unpersist()
 
-
-def test_kmv_ingest_sink_folds_batches_idempotently(spark, tmp_path):
-    """Streaming KMV artifact maintenance: batches fold incrementally,
-    a replayed batch is a no-op, the final sketch equals a from-scratch
-    build over the union (kmv_merge == build-of-union), and the version
-    history time-travels. Set algebra works ACROSS artifacts: the
-    maintained sketch intersects exactly with a second sketch when both
-    are unsaturated."""
-    from mapreduce_stockheadlines_spark.operators.sketches import (
-        kmv_build,
-        kmv_estimate,
-        kmv_set_estimates,
-    )
-    from mapreduce_stockheadlines_spark.sources.versioned import read_table
-    from mapreduce_stockheadlines_spark.streaming.ingest import (
-        kmv_ingest_sink,
-    )
-
-    art = str(tmp_path / "kmv_artifact")
-    k = 16
-    sink = kmv_ingest_sink(["g"], "v", art, k=k)
-    b0 = spark.createDataFrame(
-        [("x", i) for i in range(40)] + [("y", i) for i in range(10)],
-        "g string, v int",
-    )
-    b1 = spark.createDataFrame(
-        [("x", i) for i in range(20, 60)] + [("z", i) for i in range(5)],
-        "g string, v int",
-    )
-    sink(b0, 0)
-    sink(b1, 1)
-    sink(b1, 1)  # at-least-once replay: must not fold twice
-
-    got = sorted(
-        map(tuple, read_table(spark, art).select("g", "hv").collect())
-    )
-    want = sorted(
-        map(tuple, kmv_build(b0.unionAll(b1), "v", ["g"], k=k).collect())
-    )
-    assert got == want  # incremental == batch, replay included
-    # version history: v1 holds only batch 0's state
-    v1 = sorted(
-        map(
-            tuple,
-            read_table(spark, art, version=1).select("g", "hv").collect(),
-        )
-    )
-    assert v1 == sorted(
-        map(tuple, kmv_build(b0, "v", ["g"], k=k).collect())
-    )
-    # cross-artifact set algebra: z (5 values, unsaturated) vs a fresh
-    # sketch over an overlapping set → exact intersection
-    fresh = kmv_build(
-        spark.createDataFrame(
-            [("z", i) for i in range(3, 8)], "g string, v int"
-        ),
-        "v",
-        ["g"],
-        k=k,
-    )
-    maintained = read_table(spark, art).select("g", "hv").filter("g = 'z'")
-    est = kmv_set_estimates(maintained, fresh, ["g"], k=k).collect()[0]
-    assert est["intersect_estimate"] == 2  # {3, 4} of {0..4} ∩ {3..7}
-    assert est["union_estimate"] == 8
-    assert est["diff_estimate"] == 3
